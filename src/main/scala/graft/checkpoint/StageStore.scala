@@ -1,20 +1,23 @@
 package graft.checkpoint
 
-import org.apache.spark.sql.{Row, SaveMode, SparkSession}
-import org.apache.spark.sql.types._
+import com.fasterxml.jackson.databind.JsonNode
+import graft.io.MetaFile
+import org.apache.spark.sql.SparkSession
 
 /** Content-addressed commit log for multi-stage pipeline state (the
   * stage-level analogue of [[CheckpointedRunner]]'s per-bucket manifest).
   *
   * Each stage owns two locations under one `workDir`:
-  *   - `workDir/<stage>/`       — the stage's persisted DATA (a parquet
+  *   - `workDir/<stage>/`      — the stage's persisted DATA (a parquet
   *     corpus checkpoint or a small loser-id set); absent for counts-only
   *     stages.
-  *   - `workDir/_meta/<stage>/` — a 1-row parquet: the stage's content KEY
-  *     (chained fingerprint of input + every upstream parameter) and its
-  *     report counts. Written strictly AFTER the data, so the meta row is the
-  *     commit point: a kill mid-stage leaves no meta and the stage recomputes
-  *     from scratch (overwriting any partial data) on the next invocation.
+  *   - `workDir/_meta/<stage>` — one small JSON file, written on the driver
+  *     ([[graft.io.MetaFile]]: temp file + rename, no Spark job): the stage's
+  *     content KEY (chained fingerprint of input + every upstream parameter)
+  *     and its report counts. Written strictly AFTER the data, so this file
+  *     is the commit point: a kill mid-stage leaves no meta and the stage
+  *     recomputes from scratch (overwriting any partial data) on the next
+  *     invocation. Hadoop's `_SUCCESS` plays no part in it.
   *
   * Completion is content-addressed, never positional: [[load]] returns the
   * committed counts only when the stored key equals the caller's key, so a
@@ -27,40 +30,29 @@ import org.apache.spark.sql.types._
   */
 object StageStore {
 
-  private val metaSchema: StructType = StructType(Seq(
-    StructField("stage", StringType, nullable = false),
-    StructField("key", StringType, nullable = false),
-    StructField("counts", MapType(StringType, LongType), nullable = false)))
-
   /** Where a stage persists its data (callers write/read this themselves). */
   def dataDir(workDir: String, stage: String): String = s"$workDir/$stage"
 
-  private def metaDir(workDir: String, stage: String): String =
-    s"$workDir/_meta/$stage"
+  private def metaFile(workDir: String, stage: String) = s"$workDir/_meta/$stage"
 
-  /** Committed counts for `stage`, iff a meta row exists AND its key matches
-    * (same input content, same upstream parameters). Any read problem —
-    * missing dir, partial write without _SUCCESS, schema drift — means "not
-    * committed": the safe direction is always recompute, never a stale load. */
-  def load(spark: SparkSession, workDir: String, stage: String, key: String): Option[Map[String, Long]] = {
-    val dir = new org.apache.hadoop.fs.Path(metaDir(workDir, stage))
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"))) None
-    else
-      try {
-        spark.read.schema(metaSchema).parquet(dir.toString).collect().headOption
-          .filter(r => r.getString(0) == stage && r.getString(1) == key)
-          .map(_.getMap[String, Long](2).toMap)
-      } catch { case scala.util.control.NonFatal(_) => None }
-  }
+  /** Committed counts for `stage`, iff its meta file exists AND its key
+    * matches (same input content, same upstream parameters). Any read
+    * problem — missing file, torn write, a pre-change parquet meta directory —
+    * means "not committed": the safe direction is always recompute, never a
+    * stale load. */
+  def load(spark: SparkSession, workDir: String, stage: String, key: String): Option[Map[String, Long]] =
+    try {
+      import scala.jdk.CollectionConverters._
+      MetaFile.readJson(spark, metaFile(workDir, stage), "", classOf[JsonNode])
+        .filter(m => m.get("stage").asText() == stage && m.get("key").asText() == key)
+        .map(_.get("counts").properties().asScala
+          .map(e => e.getKey -> e.getValue.longValue()).toMap)
+    } catch { case scala.util.control.NonFatal(_) => None }
 
   /** Commit `stage` under `key`. Call strictly after the stage's data write
-    * (if any) — this row is what makes the data trustworthy on resume. */
+    * (if any) — this file is what makes the data trustworthy on resume. */
   def commit(spark: SparkSession, workDir: String, stage: String, key: String,
-      counts: Map[String, Long]): Unit = {
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(Seq(Row(stage, key, counts)).asJava, metaSchema)
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(metaDir(workDir, stage))
-  }
+      counts: Map[String, Long]): Unit =
+    MetaFile.writeJson(spark, metaFile(workDir, stage),
+      Map("stage" -> stage, "key" -> key, "counts" -> counts))
 }

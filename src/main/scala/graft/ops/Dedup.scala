@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.io.MetaFile
 import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -600,18 +601,27 @@ object Dedup {
   // (CheckpointedRunner sets it) would make a whole-layout rebuild keep any
   // bucket partition absent from the new data — stale rows surviving an
   // "overwrite" silently (the CLAUDE.md staging bug, index edition)
+  // one partition per bucket, spread over every core: an AQE-coalesced
+  // exchange would funnel a small append into ONE task writing every bucket
+  // file in turn; a fixed count equal to the bucket fan-out (capped at the
+  // slot count) keeps exactly one file per bucket per write either way
+  private def byBucket(df: DataFrame, bucketCol: String, p: MinhashIndexParams): DataFrame =
+    df.repartition(math.min(p.numBuckets, df.sparkSession.sparkContext.defaultParallelism),
+      col(bucketCol))
+
+  /** Writes the signature rows; returns how many (counted on the write job). */
   private def writeSigs(sigs: DataFrame, dir: String, p: MinhashIndexParams,
-      mode: String): Unit =
-    sigs.withColumn("id_bucket", idBucket(p))
-      .repartition(col("id_bucket")).sortWithinPartitions("id_bucket", "id")
-      .write.mode(mode).option("partitionOverwriteMode", "static")
-      .partitionBy("id_bucket").parquet(dir)
+      mode: String): Long =
+    countingWrite(byBucket(sigs.withColumn("id_bucket", idBucket(p)), "id_bucket", p)
+      .sortWithinPartitions("id_bucket", "id"))(
+      _.write.mode(mode).option("partitionOverwriteMode", "static")
+        .partitionBy("id_bucket").parquet(dir))
 
   private def writeBands(bands: DataFrame, dir: String, p: MinhashIndexParams,
       mode: String): Unit =
-    bands.select(col("id"), col("band_idx"), col("band_hash"))
-      .withColumn("band_bucket", bandBucket(p))
-      .repartition(col("band_bucket")).sortWithinPartitions("band_bucket", "band_hash")
+    byBucket(bands.select(col("id"), col("band_idx"), col("band_hash"))
+      .withColumn("band_bucket", bandBucket(p)), "band_bucket", p)
+      .sortWithinPartitions("band_bucket", "band_hash")
       .write.mode(mode).option("partitionOverwriteMode", "static")
       .partitionBy("band_bucket").parquet(dir)
 
@@ -624,40 +634,43 @@ object Dedup {
     *    band buckets. Persisting the band rows means a delta NEVER recomputes
     *    band hashes over the corpus, and the candidate scan never drags the
     *    ~`numHashes`×8 B signature column through the bucket join;
-    *  - `_params/` one-row sidecar (all MinhashIndexParams fields + the id
-    *    column's type, so empty layouts read back typed).
+    *  - `_params` JSON sidecar, written on the driver (all
+    *    MinhashIndexParams fields + the id column's type, so empty layouts
+    *    read back typed).
     * Append later deltas with [[minhashIndexAppend]]; dedup deltas with
     * [[deltaDedupIndexed]]. */
   def minhashIndexBuild(
       df: DataFrame, idCol: String, textCol: String, indexDir: String,
       p: MinhashIndexParams = MinhashIndexParams(), epoch: Long = 0L): Unit = {
     val spark = df.sparkSession
-    import spark.implicits._
     val before = spark.sparkContext.getPersistentRDDs.keySet
     try {
       // written twice (sigs + bands) — checkpoint so the signature scan of a
       // possibly-expensive input lineage runs once
       val sigs = minhashSignatures(df, idCol, textCol, p).localCheckpoint(true)
-      writeSigs(sigs, s"$indexDir/sigs", p, "overwrite")
+      val n = writeSigs(sigs, s"$indexDir/sigs", p, "overwrite")
       writeBands(bandRows(sigs, p), s"$indexDir/bands", p, "overwrite")
-      val idType = df.schema(idCol).dataType.sql
-      Seq((p.shingleN, p.numHashes, p.bands, p.seed, p.portable, p.numBuckets, idType))
-        .toDF("shingle_n", "num_hashes", "bands", "seed", "portable", "num_buckets", "id_type")
-        .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/_params")
+      MetaFile.writeJson(spark, s"$indexDir/_params", Map(
+        "shingle_n" -> p.shingleN, "num_hashes" -> p.numHashes, "bands" -> p.bands,
+        "seed" -> p.seed, "portable" -> p.portable, "num_buckets" -> p.numBuckets,
+        "id_type" -> df.schema(idCol).dataType.sql))
       // pass `epoch` = the corpus manifest epoch when building under a corpus
       // that already saw deletion passes — a fresh index is NOT stale
-      IndexVersions.record(spark, indexDir, epoch, "build", sigs.count())
+      IndexVersions.record(spark, indexDir, epoch, "build", n)
     } finally releaseCheckpointsSince(spark.sparkContext, before)
   }
 
-  /** (params, id column type) of a persisted index. */
+  /** (params, id column type) of a persisted index, read on the driver. */
   private def loadIndexMeta(
       spark: org.apache.spark.sql.SparkSession, indexDir: String): (MinhashIndexParams, DataType) = {
-    val m = spark.read.parquet(s"$indexDir/_params").collect().head
-    val p = MinhashIndexParams(m.getAs[Int]("shingle_n"), m.getAs[Int]("num_hashes"),
-      m.getAs[Int]("bands"), m.getAs[Long]("seed"), m.getAs[Boolean]("portable"),
-      m.getAs[Int]("num_buckets"))
-    (p, DataType.fromDDL(m.getAs[String]("id_type")))
+    val m = MetaFile.readJson(spark, s"$indexDir/_params",
+      s"rebuild the index at $indexDir with Dedup.minhashIndexBuild",
+      classOf[com.fasterxml.jackson.databind.JsonNode])
+      .getOrElse(throw new IllegalArgumentException(s"no MinHash index at $indexDir"))
+    val p = MinhashIndexParams(m.get("shingle_n").intValue(), m.get("num_hashes").intValue(),
+      m.get("bands").intValue(), m.get("seed").longValue(), m.get("portable").booleanValue(),
+      m.get("num_buckets").intValue())
+    (p, DataType.fromDDL(m.get("id_type").asText()))
   }
 
   private def recoverIndex(
@@ -694,10 +707,10 @@ object Dedup {
       // under-dedup for ONE delta, healed when the at-least-once redelivery
       // re-appends; duplicate rows are collapsed at the delta's sig fetch
       // and compaction restores exactly-one on disk)
-      writeSigs(sigs, s"$indexDir/sigs", p, "append")
+      val n = writeSigs(sigs, s"$indexDir/sigs", p, "append")
       writeBands(bandRows(sigs, p), s"$indexDir/bands", p, "append")
       IndexVersions.record(spark, indexDir,
-        IndexVersions.epoch(spark, indexDir), "append", sigs.count())
+        IndexVersions.epoch(spark, indexDir), "append", n)
     } finally releaseCheckpointsSince(spark.sparkContext, before)
   }
 
@@ -1035,11 +1048,17 @@ object Dedup {
         // re-expand every candidate pair after the sig join
         .dropDuplicates("id")
         .select(col("id"), col("sig"))
-    val sigOf = stage(newSigs.select(col("id"), col("sig")).unionAll(oldSigsNeeded))
+    // keyed on (id, is_new): a resubmitted id has BOTH a delta and an index
+    // signature, and each candidate side names which copy it paired — an
+    // id-only key would join both and emit the pair twice
+    val sigOf = stage(newSigs.select(col("id"), lit(true).as("is_new"), col("sig"))
+      .unionAll(oldSigsNeeded.select(col("id"), lit(false).as("is_new"), col("sig"))))
       // staged: joined twice (side a, side b)
+    def side(s: String) = sigOf.select(col("id").as(s"id_$s"),
+      col("is_new").as(s"${s}_is_new"), col("sig").as(s"sig_$s"))
     val pairs = cand
-      .join(sigOf.select(col("id").as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
-      .join(sigOf.select(col("id").as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
+      .join(side("a"), Seq("id_a", "a_is_new"))
+      .join(side("b"), Seq("id_b", "b_is_new"))
       .select(col("id_a"), col("id_b"),
         sigMatchCount(col("sig_a"), col("sig_b"), p.numHashes).as("matches"),
         col("a_is_new"), col("b_is_new"))

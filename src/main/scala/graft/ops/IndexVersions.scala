@@ -1,13 +1,14 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import graft.io.{MetaFile, PreChangeLayoutException}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.SparkSession
 
 /** Append-only lifecycle log for the persisted dedup indexes (`_versions/`
-  * inside the index dir, underscore-prefixed so data reads skip it): one row
-  * per build / append / compact event with the index's compaction EPOCH and
-  * the row count after the event.
+  * inside the index dir, underscore-prefixed so data reads skip it): one
+  * small driver-written file per build / append / compact event
+  * ([[graft.io.MetaFile]], no Spark job), named by the index's compaction
+  * EPOCH and holding the row count after the event.
   *
   * The epoch is the staleness contract between an index and the corpus it
   * shadows: every corpus deletion pass bumps the corpus manifest epoch and
@@ -23,38 +24,35 @@ object IndexVersions {
 
   val Sidecar = "_versions"
 
-  private val schema = StructType(Seq(
-    StructField("epoch", LongType, nullable = false),
-    StructField("event", StringType, nullable = false),
-    StructField("rows", LongType, nullable = false)))
+  /** Event files: `e<epoch>-<event>-<unique>.json`, so the epoch is read off
+    * the listing without opening a file. */
+  private val EventName = """e(\d+)-\w+-[\w-]+\.json""".r
 
-  private def path(indexDir: String) = s"$indexDir/$Sidecar"
+  private def dir(indexDir: String) = new Path(s"$indexDir/$Sidecar")
 
-  private def exists(spark: SparkSession, indexDir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path(indexDir))
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  /** The full (epoch, event, rows) history — empty (typed) if the index
-    * predates versioning. */
-  def read(spark: SparkSession, indexDir: String): DataFrame =
-    if (exists(spark, indexDir)) spark.read.schema(schema).parquet(path(indexDir))
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-
-  /** Current compaction epoch: max recorded, 0 for a pre-versioning index. */
+  /** Current compaction epoch: max recorded, 0 for a pre-versioning index.
+    * A log written by an earlier graft version (parquet files) is refused
+    * with a [[graft.io.PreChangeLayoutException]]. */
   def epoch(spark: SparkSession, indexDir: String): Long = {
-    val r = read(spark, indexDir).agg(max(col("epoch"))).collect().head
-    if (r.isNullAt(0)) 0L else r.getLong(0)
+    val fs = MetaFile.fs(spark, indexDir)
+    if (!fs.exists(dir(indexDir))) 0L
+    else fs.listStatus(dir(indexDir)).map(_.getPath.getName)
+      .filterNot(_.endsWith(".tmp"))
+      .map {
+        case EventName(e) => e.toLong
+        case other => throw new PreChangeLayoutException(s"${dir(indexDir)}/$other",
+          s"rebuild the index at $indexDir (Dedup.minhashIndexBuild, " +
+            "Similarity.ivfBuildIndex or ivfPqBuildIndex) to start a new log")
+      }.maxOption.getOrElse(0L)
   }
 
-  /** Record one lifecycle event (one-row append — the log is tiny and the
-    * sidecar is never rewritten, so a concurrent reader can't lose history). */
+  /** Record one lifecycle event: a new file, never a rewrite, so a
+    * concurrent reader can't lose history. */
   def record(spark: SparkSession, indexDir: String, epoch: Long, event: String,
-      rows: Long): Unit = {
-    import spark.implicits._
-    Seq((epoch, event, rows)).toDF("epoch", "event", "rows")
-      .coalesce(1).write.mode("append").parquet(path(indexDir))
-  }
+      rows: Long): Unit =
+    MetaFile.writeJson(spark,
+      s"${dir(indexDir)}/e$epoch-$event-${java.util.UUID.randomUUID()}.json",
+      Map("epoch" -> epoch, "event" -> event, "rows" -> rows))
 
   /** Refuse an index whose compaction epoch is behind the corpus manifest
     * epoch — see the class doc for why using it anyway silently over-drops. */

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.io.MetaFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -228,27 +229,24 @@ object Similarity {
     val n = Dedup.countingWrite(ivfAssign(df, idCol, embCol, centroids))(
       _.write.mode("overwrite").option("partitionOverwriteMode", "static")
         .partitionBy("cell").parquet(s"$indexDir/cells"))
-    writeCentroidsJson(df.sparkSession, s"$indexDir/centroids", centroids)
+    MetaFile.writeJson(df.sparkSession, s"$indexDir/centroids", centroids)
     IndexVersions.record(df.sparkSession, indexDir, epoch, "build", n)
   }
 
-  /** Persist centroids in the [[ivfLoadCentroids]] JSON layout. */
-  private[ops] def writeCentroidsJson(
-      spark: SparkSession, dir: String, centroids: Seq[Seq[Double]]): Unit = {
-    import spark.implicits._
-    val json = centroids.map(_.mkString("[", ",", "]")).mkString("[", ",", "]")
-    Seq(json).toDF("centroids").coalesce(1).write.mode("overwrite").json(dir)
-  }
+  /** Quantizer vectors (centroids, PQ codebooks) persist as one JSON file
+    * each, read and written on the driver ([[graft.io.MetaFile]], no Spark
+    * job); a pre-change Spark-written directory is refused, naming the
+    * rebuild. */
+  private def readQuantizer[T](spark: SparkSession, file: String, cls: Class[T]): T =
+    MetaFile.readJson(spark, file,
+      "rebuild the index with Similarity.ivfBuildIndex or ivfPqBuildIndex", cls)
+      .getOrElse(throw new IllegalArgumentException(s"no IVF quantizer at $file"))
 
   def ivfLoadCentroids(spark: SparkSession, indexDir: String): Seq[Seq[Double]] =
-    readCentroidsJson(spark, s"$indexDir/centroids")
+    readCentroids(spark, s"$indexDir/centroids")
 
-  /** Read a [[writeCentroidsJson]] directory back. */
-  private[ops] def readCentroidsJson(spark: SparkSession, dir: String): Seq[Seq[Double]] = {
-    val json = spark.read.json(dir).select("centroids").head().getString(0)
-    json.stripPrefix("[[").stripSuffix("]]").split("\\],\\[")
-      .map(_.split(",").map(_.toDouble).toSeq).toSeq
-  }
+  private[ops] def readCentroids(spark: SparkSession, file: String): Seq[Seq[Double]] =
+    readQuantizer(spark, file, classOf[Array[Array[Double]]]).map(_.toSeq).toSeq
 
   /** Which nprobe cells to scan for a query: centroids ranked by dot with the
     * unit query, descending (== nearest by angle; unit-norm both sides). */
@@ -306,7 +304,7 @@ object Similarity {
     * partition-prune to their nprobe cells AND read 8-byte codes instead of
     * vectors — the two compressions compose on disk too), coarse centroids
     * as JSON (same layout [[ivfLoadCentroids]] reads), and the PQ codebooks
-    * as a tiny (m x kSub)-row parquet. Train once, query forever.
+    * as one more small JSON file. Train once, query forever.
     *
     * The cell files ALSO carry the raw vector column, sorted by id within
     * each cell partition: parquet is columnar, so scans that select `codes`
@@ -338,12 +336,8 @@ object Similarity {
       _.write.mode("overwrite").option("partitionOverwriteMode", "static")
         .partitionBy("cell").parquet(s"$indexDir/cells"))
     val spark = df.sparkSession
-    import spark.implicits._
-    writeCentroidsJson(spark, s"$indexDir/centroids", centroids)
-    codebooks.zipWithIndex.flatMap { case (cents, mi) =>
-      cents.zipWithIndex.map { case (c, j) => (mi, j, c) }
-    }.toDF("mi", "j", "centroid").coalesce(1)
-      .write.mode("overwrite").parquet(s"$indexDir/codebooks")
+    MetaFile.writeJson(spark, s"$indexDir/centroids", centroids)
+    MetaFile.writeJson(spark, s"$indexDir/codebooks", codebooks)
     IndexVersions.record(spark, indexDir, epoch, "build", n)
   }
 
@@ -361,12 +355,9 @@ object Similarity {
     require(isPqIndex(spark, indexDir),
       s"index at $indexDir is plain IVF (no codebooks) — use the raw-vector " +
         "operators (semanticDeltaDedupIndexed / ivfIndexAppend / usePqCodes=false)")
-    val centroids = ivfLoadCentroids(spark, indexDir)
-    val codebooks = spark.read.parquet(s"$indexDir/codebooks")
-      .collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2)))
-      .groupBy(_._1).toSeq.sortBy(_._1)
-      .map(_._2.sortBy(_._2).map(_._3.toSeq).toSeq)
-    (centroids, codebooks)
+    val codebooks = readQuantizer(spark, s"$indexDir/codebooks",
+      classOf[Array[Array[Array[Double]]]])
+    (ivfLoadCentroids(spark, indexDir), codebooks.map(_.map(_.toSeq).toSeq).toSeq)
   }
 
   /** Top-k over an [[ivfPqEncode]]d corpus: cell-prune, then ADC. */

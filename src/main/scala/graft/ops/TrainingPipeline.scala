@@ -1,8 +1,11 @@
 package graft.ops
 
+import graft.checkpoint.StageStore
 import graft.dsl.SchemaSpec
+import graft.io.MetaFile
 import graft.run.Validator
-import org.apache.spark.sql.{DataFrame, Observation, SaveMode}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType}
 
@@ -277,6 +280,44 @@ object TrainingPipeline {
     }
   }
 
+  /** One resumable run's stage bookkeeping over [[StageStore]]:
+    * load-or-compute, the per-stage manifest, and the one stage-data writer
+    * ([[runResumable]] and [[runDelta]] share it). */
+  private final class Stages(spark: SparkSession, workDir: String,
+      onStageComputed: String => Unit) {
+    private val fs = MetaFile.fs(spark, workDir)
+    val records = Seq.newBuilder[StageRecord]
+
+    /** Load-or-compute one stage. `dataDir` (when the stage persists data)
+      * must ALSO carry graft's commit marker for a load — meta without data
+      * means recompute. */
+    def apply(name: String, key: String, dataDir: Option[String] = None)(
+        compute: => Map[String, Long]): Map[String, Long] =
+      StageStore.load(spark, workDir, name, key)
+        .filter(_ => dataDir.forall(d => fs.exists(new Path(d, Dedup.CommitMarker)))) match {
+        case Some(c) => records += StageRecord(name, loaded = true, c); c
+        case None =>
+          val c = compute
+          StageStore.commit(spark, workDir, name, key, c)
+          records += StageRecord(name, loaded = false, c)
+          onStageComputed(name)
+          c
+      }
+
+    /** Persist a stage's rows at `dir` (overwrite), then graft's commit
+      * marker; returns the row count, observed on the write job itself — no
+      * re-read. The exchange names no partition count: AQE sizes it from the
+      * data (one file for a small delta; at scale the fan-out follows
+      * `spark.sql.shuffle.partitions`), and the id sort keeps per-file id
+      * stats tight and the layout deterministic across recomputes. */
+    def write(df: DataFrame, idCol: String, dir: String): Long = {
+      val n = Dedup.countingWrite(df.repartition(col(idCol)).sortWithinPartitions(idCol))(
+        _.write.mode(SaveMode.Overwrite).parquet(dir))
+      Dedup.writeCommitMarker(fs, dir)
+      n
+    }
+  }
+
   // ---- resumable variant ----------------------------------------------------
 
   /** [[run]] with pipeline-level resume — the north_rule's checkpoint mandate
@@ -312,10 +353,14 @@ object TrainingPipeline {
     * closures); encode schema changes in `paramsKey` or use a fresh workDir —
     * the same contract CheckpointedRunner documents for its `process`.
     *
+    * Stage data (the corpus checkpoint, the loser-id sets) is written
+    * id-hash-partitioned and id-sorted with no fixed fan-out: AQE sizes the
+    * exchange from the data, so a small corpus writes one file and a large
+    * one follows `spark.sql.shuffle.partitions`. Each stage's commit record
+    * is one small driver-written file (see [[graft.checkpoint.StageStore]]).
+    *
     * @param paramsKey       caller-owned version string folded into every
     *                        stage key (bump when `schema` changes)
-    * @param checkpointShards hash-shard count for the corpus checkpoint and
-    *                        loser-set writes (deterministic layout)
     * @param onStageComputed invoked after a stage computes AND commits (not on
     *                        load) — a progress hook; throwing from it aborts
     *                        the run at a committed stage boundary, which is
@@ -335,37 +380,10 @@ object TrainingPipeline {
       mixWeights: Map[String, Double] = Map.empty, mixDefaultWeight: Double = 1.0,
       splits: Seq[(String, Double)] = Seq("train" -> 1.0), splitSalt: String = "",
       packBudget: Option[Long] = None, packShards: Int = 64,
-      paramsKey: String = "", checkpointShards: Int = 64,
+      paramsKey: String = "",
       onStageComputed: String => Unit = _ => ()): PipelineResult = {
-    import graft.checkpoint.StageStore
     val spark = docs.sparkSession
-    val records = Seq.newBuilder[StageRecord]
-
-    // graft's own marker OR Hadoop's _SUCCESS (object-store deployments
-    // commonly disable marksuccessfuljobs — see Dedup.CommitMarker)
-    def committedData(dir: String): Boolean = {
-      val fsOf = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fsOf.exists(new org.apache.hadoop.fs.Path(dir, Dedup.CommitMarker)) ||
-        fsOf.exists(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"))
-    }
-    def markData(dir: String): Unit =
-      Dedup.writeCommitMarker(new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration), dir)
-    /** Load-or-compute one stage. `dataDir` (when the stage persists data)
-      * must ALSO be committed for a load — meta without data means recompute. */
-    def stage(name: String, key: String, dataDir: Option[String] = None)(
-        compute: => Map[String, Long]): Map[String, Long] =
-      StageStore.load(spark, workDir, name, key)
-        .filter(_ => dataDir.forall(committedData)) match {
-        case Some(c) => records += StageRecord(name, loaded = true, c); c
-        case None =>
-          val c = compute
-          StageStore.commit(spark, workDir, name, key, c)
-          records += StageRecord(name, loaded = false, c)
-          onStageComputed(name)
-          c
-      }
+    val stage = new Stages(spark, workDir, onStageComputed)
 
     val inFp = contentFp(docs, Seq(idCol, textCol))
 
@@ -398,17 +416,11 @@ object TrainingPipeline {
         case Some(_) => observed.drop("violations", "valid")
         case None    => observed.drop("valid")
       }
-      // the checkpoint write IS the observation's materializing action;
-      // hash-sharded + sorted layout => the same bytes on every recompute
-      Dedup.exactDedup(valid, idCol, textCol)
-        .repartition(checkpointShards, col(idCol))
-        .sortWithinPartitions(idCol)
-        .write.mode(SaveMode.Overwrite).parquet(corpusDir)
-      markData(corpusDir)
+      // the checkpoint write IS the observation's materializing action
+      val nExact = stage.write(Dedup.exactDedup(valid, idCol, textCol), idCol, corpusDir)
       val (nInput, nValid) = intakeCounts(intake, annotated)
       if (maxLineFreq.isDefined) cleaned0.unpersist()
       if (spanScrubN.isDefined) preSpan.unpersist()
-      val nExact = spark.read.parquet(corpusDir).count() // footer-stat count
       Map("n_input" -> nInput, "n_valid" -> nValid, "n_exact" -> nExact)
     }
     val corpus = spark.read.parquet(corpusDir)
@@ -422,13 +434,10 @@ object TrainingPipeline {
       val audited = Dedup.minhashNearDupsAudited(
         corpus, idCol, textCol, shingleN = shingleN, threshold = minhashThreshold,
         maxBucket = maxBucket)
-      Components.nearDupGroups(audited.pairs)
+      val losers = Components.nearDupGroups(audited.pairs)
         .filter(col("id") =!= col("component"))
         .select(col("id").as(idCol))
-        .repartition(checkpointShards, col(idCol)).sortWithinPartitions(idCol)
-        .write.mode(SaveMode.Overwrite).parquet(nearDir)
-      markData(nearDir)
-      Map("n_near" -> idSet(nearDir).count(),
+      Map("n_near" -> stage.write(losers, idCol, nearDir),
         "drop_buckets" -> audited.droppedBuckets, "drop_ids" -> audited.droppedIds)
     }
     val near = corpus.join(idSet(nearDir), Seq(idCol), "left_anti")
@@ -439,13 +448,9 @@ object TrainingPipeline {
         val key = s"$nearKey|probe=${contentFp(p, Seq(pid, ptext))}|n=$decontamN|minHits=$decontamMinHits"
         val c = stage("decontam", key, Some(contamDir)) {
           val probeHashed = Decontaminate.probeHashes(p, pid, ptext, decontamN)
-          Decontaminate
+          Map("n_contam" -> stage.write(Decontaminate
             .ngramCollisionsAgainst(near, idCol, textCol, probeHashed, decontamN, decontamMinHits)
-            .select(col("id").as(idCol)).distinct()
-            .repartition(checkpointShards, col(idCol)).sortWithinPartitions(idCol)
-            .write.mode(SaveMode.Overwrite).parquet(contamDir)
-          markData(contamDir)
-          Map("n_contam" -> idSet(contamDir).count())
+            .select(col("id").as(idCol)).distinct(), idCol, contamDir))
         }
         (key, (near.join(idSet(contamDir), Seq(idCol), "left_anti"), c("n_contam")))
       case None => (s"$nearKey|probe=none", (near, 0L))
@@ -480,7 +485,7 @@ object TrainingPipeline {
       nearDupDroppedBuckets = nearC("drop_buckets"),
       nearDupDroppedIds = nearC("drop_ids"),
       mixedRows = nMixedRows),
-      stages = records.result())
+      stages = stage.records.result())
   }
 
   // ---- incremental (delta) variant ------------------------------------------
@@ -501,7 +506,12 @@ object TrainingPipeline {
     * and never re-trained — appends assign with the stored centroids), and
     * one StageStore chain per distinct delta content. Stages per delta:
     * prepare (delta corpus checkpoint), lexdedup (survivor-id set), mhappend,
-    * decontam, quality, semdedup (survivor-id set), semappend. A kill
+    * decontam, quality, semdedup (survivor-id set), semappend. Stage data is
+    * written with no fixed fan-out (AQE sizes each write from the delta —
+    * one file for a small one), and every piece of tiny metadata — stage
+    * commit records, index params and quantizers, lifecycle events, the
+    * corpus epoch — is a driver-written file, so a delta's Spark jobs are
+    * the ones its data needs. A kill
     * mid-stage resumes from the last committed stage; the appends are
     * EFFECT stages — a kill between an append's write and its commit can
     * redeliver it, leaving duplicate index rows (harmless for dedup
@@ -556,7 +566,7 @@ object TrainingPipeline {
       pqAdcMargin: Double = 0.2, pqMaxRefineIds: Int = 1 << 14,
       splits: Seq[(String, Double)] = Seq("train" -> 1.0), splitSalt: String = "",
       packBudget: Option[Long] = None, packShards: Int = 64,
-      paramsKey: String = "", checkpointShards: Int = 64,
+      paramsKey: String = "",
       // columns beyond (id, text, emb) whose VALUES the run's verdict depends
       // on (e.g. schema-validated fields): they join the content fingerprint,
       // so a data correction in them is a NEW snapshot, not a stale replay.
@@ -565,39 +575,25 @@ object TrainingPipeline {
       // id's previous generation from the indexes.
       extraFingerprintCols: Seq[String] = Nil,
       onStageComputed: String => Unit = _ => ()): DeltaPipelineResult = {
-    import graft.checkpoint.StageStore
     val spark = delta.sparkSession
     val sc = spark.sparkContext
-    val records = Seq.newBuilder[StageRecord]
-    val fs = new org.apache.hadoop.fs.Path(workDir)
-      .getFileSystem(sc.hadoopConfiguration)
-    def exists(p: String) = fs.exists(new org.apache.hadoop.fs.Path(p))
+    val stage = new Stages(spark, workDir, onStageComputed)
+    val fs = MetaFile.fs(spark, workDir)
+    def exists(p: String) = fs.exists(new Path(p))
     val mhDir = s"$workDir/mhidx"
     val ivfDir = s"$workDir/ivfidx"
 
     // corpus manifest epoch: bumped by every deletion pass, and the floor
-    // every index must have been compacted to before a delta may trust it
-    val epochFile = new org.apache.hadoop.fs.Path(workDir, "_corpus_epoch")
-    // epoch bumps land via temp-file + rename: an in-place overwrite could
-    // be killed mid-write, leaving a truncated file that dead-ends every
-    // later runDelta in toLong. The tmp is only auto-committed when the
-    // LIVE file is gone (the kill landed between delete and rename — the
-    // bump's compaction already ran, persist order guarantees it); a tmp
-    // next to a live file is an uncommitted leftover and is dropped, and
-    // the redelivered deletion pass redoes the idempotent compaction.
-    val epochTmp = new org.apache.hadoop.fs.Path(workDir, "_corpus_epoch.tmp")
-    def readCorpusEpoch(): Long = {
-      if (!fs.exists(epochFile) && fs.exists(epochTmp))
-        require(fs.rename(epochTmp, epochFile),
-          s"epoch swap recovery failed: $epochTmp -> $epochFile")
-      else if (fs.exists(epochTmp)) fs.delete(epochTmp, false)
-      if (!fs.exists(epochFile)) 0L
-      else {
-        val in = fs.open(epochFile)
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong
-        finally in.close()
-      }
-    }
+    // every index must have been compacted to before a delta may trust it.
+    // Bumps land via MetaFile's temp-file + rename: an in-place overwrite
+    // could be killed mid-write, leaving a truncated file that dead-ends
+    // every later runDelta in toLong; a tmp left next to the live file is
+    // dropped, and the redelivered deletion pass redoes the idempotent
+    // compaction.
+    val epochFile = new Path(workDir, "_corpus_epoch")
+    def readCorpusEpoch(): Long =
+      MetaFile.read(fs, epochFile, "expected the one-line corpus epoch file")
+        .map(_.trim.toLong).getOrElse(0L)
 
     // withdrawals first: compact both indexes to the surviving ids so stale
     // entries of deleted documents can no longer win against this delta.
@@ -618,34 +614,9 @@ object TrainingPipeline {
           .join(delIds, Seq("id"), "left_anti")
         Similarity.ivfIndexCompact(keep, "id", ivfDir, Some(target))
       }
-      val out = fs.create(epochTmp, true)
-      try out.write(s"$target\n".getBytes("UTF-8")) finally out.close()
-      if (fs.exists(epochFile)) fs.delete(epochFile, false)
-      require(fs.rename(epochTmp, epochFile),
-        s"epoch rename failed: $epochTmp -> $epochFile")
+      MetaFile.write(fs, epochFile, s"$target\n")
     }
     val corpusEpoch = readCorpusEpoch()
-
-    // graft's own marker OR Hadoop's _SUCCESS: object-store deployments
-    // commonly disable marksuccessfuljobs (the whole reason Dedup.CommitMarker
-    // exists) — keying the stage gate off _SUCCESS alone would recompute
-    // committed stages against indexes that already hold their survivors
-    def markData(dir: String): Unit = Dedup.writeCommitMarker(fs, dir)
-    def committedData(dir: String): Boolean =
-      exists(new org.apache.hadoop.fs.Path(dir, Dedup.CommitMarker).toString) ||
-        exists(new org.apache.hadoop.fs.Path(dir, "_SUCCESS").toString)
-    def stage(name: String, key: String, dataDir: Option[String] = None)(
-        compute: => Map[String, Long]): Map[String, Long] =
-      StageStore.load(spark, workDir, name, key)
-        .filter(_ => dataDir.forall(committedData)) match {
-        case Some(c) => records += StageRecord(name, loaded = true, c); c
-        case None =>
-          val c = compute
-          StageStore.commit(spark, workDir, name, key, c)
-          records += StageRecord(name, loaded = false, c)
-          onStageComputed(name)
-          c
-      }
 
     // the fingerprint covers the EMBEDDING column too when one is in play: a
     // re-embedded snapshot (same ids and text, new vectors) must recompute
@@ -678,14 +649,9 @@ object TrainingPipeline {
         case Some(_) => observed.drop("violations", "valid")
         case None    => observed.drop("valid")
       }
-      Dedup.exactDedup(valid, idCol, textCol)
-        .repartition(checkpointShards, col(idCol))
-        .sortWithinPartitions(idCol)
-        .write.mode(SaveMode.Overwrite).parquet(prepDir)
-      markData(prepDir)
+      val nExact = stage.write(Dedup.exactDedup(valid, idCol, textCol), idCol, prepDir)
       val (nInput, nValid) = intakeCounts(intake, annotated)
-      Map("n_input" -> nInput, "n_valid" -> nValid,
-        "n_exact" -> spark.read.parquet(prepDir).count())
+      Map("n_input" -> nInput, "n_valid" -> nValid, "n_exact" -> nExact)
     }
     val prepared = spark.read.parquet(prepDir)
     val idType = prepared.schema(idCol).dataType
@@ -709,14 +675,11 @@ object TrainingPipeline {
         val audited = Dedup.deltaNearDupsIndexedAudited(
           prepared, idCol, textCol, mhDir, minhashThreshold, maxBucket)
         val pairs = audited.pairs.localCheckpoint(true)
-        prepared
+        val kept = prepared
           .join(Dedup.deltaLosers(pairs).withColumnRenamed("id", idCol),
             Seq(idCol), "left_anti")
           .select(col(idCol))
-          .repartition(checkpointShards, col(idCol)).sortWithinPartitions(idCol)
-          .write.mode(SaveMode.Overwrite).parquet(lexDir)
-        markData(lexDir)
-        Map("n_keep" -> idSet(lexDir).count(),
+        Map("n_keep" -> stage.write(kept, idCol, lexDir),
           "drop_buckets" -> audited.droppedBuckets, "drop_ids" -> audited.droppedIds)
       } finally Dedup.releaseCheckpointsSince(sc, before)
     }
@@ -738,14 +701,10 @@ object TrainingPipeline {
         val key = s"$lexKey|probe=${contentFp(p, Seq(pid, ptext))}|n=$decontamN|minHits=$decontamMinHits"
         val c = stage(sname("decontam"), key, Some(contamDir)) {
           val probeHashed = Decontaminate.probeHashes(p, pid, ptext, decontamN)
-          Decontaminate
+          Map("n_contam" -> stage.write(Decontaminate
             .ngramCollisionsAgainst(lexKept, idCol, textCol, probeHashed,
               decontamN, decontamMinHits)
-            .select(col("id").as(idCol)).distinct()
-            .repartition(checkpointShards, col(idCol)).sortWithinPartitions(idCol)
-            .write.mode(SaveMode.Overwrite).parquet(contamDir)
-          markData(contamDir)
-          Map("n_contam" -> idSet(contamDir).count())
+            .select(col("id").as(idCol)).distinct(), idCol, contamDir))
         }
         (key, (lexKept.join(idSet(contamDir), Seq(idCol), "left_anti"), c("n_contam")))
       case None => (s"$lexKey|probe=none", (lexKept, 0L))
@@ -787,17 +746,15 @@ object TrainingPipeline {
                    Similarity.semanticDeltaDedupIndexed(kept, idCol, ec, ivfDir,
                      semanticThreshold, maxCell), None)
               }
-            survivors.select(col(idCol))
-              .repartition(checkpointShards, col(idCol)).sortWithinPartitions(idCol)
-              .write.mode(SaveMode.Overwrite).parquet(semDir)
+            val n = stage.write(survivors.select(col(idCol)), idCol, semDir)
             // sidecar the trained centroids under the stage data dir (AFTER
             // the overwrite, which clears the dir; underscore-prefixed so the
-            // parquet reader ignores it): semappend builds with the EXACT
-            // quantizer this dedup used, no second training sample scan
+            // parquet reader ignores it; before the stage's commit record):
+            // semappend builds with the EXACT quantizer this dedup used, no
+            // second training sample scan
             bootstrapCents.foreach(c =>
-              Similarity.writeCentroidsJson(spark, s"$semDir/_centroids", c))
-            markData(semDir)
-            Map("n_sem_keep" -> idSet(semDir).count(),
+              MetaFile.writeJson(spark, s"$semDir/_centroids", c))
+            Map("n_sem_keep" -> n,
               "bootstrapped" -> (if (bootstrapCents.isDefined) 1L else 0L))
           } finally Dedup.releaseCheckpointsSince(sc, before)
         }
@@ -817,20 +774,16 @@ object TrainingPipeline {
           // instead (first-come order semantics, like the append-only
           // lexical index; any cross-snapshot dups are kept — the
           // conservative direction).
-          val ownerFile = new org.apache.hadoop.fs.Path(ivfDir, "_bootstrap_owner")
-          def ownedByUs: Boolean = exists(ownerFile.toString) && {
-            val in = fs.open(ownerFile)
-            (try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-             finally in.close()) == tag
-          }
+          val ownerFile = new Path(ivfDir, "_bootstrap_owner")
+          def ownedByUs: Boolean =
+            MetaFile.read(fs, ownerFile, "rebuild the IVF index").exists(_.trim == tag)
           if (semC("bootstrapped") == 1L &&
               (!exists(s"$ivfDir/centroids") || ownedByUs)) {
-            val out = fs.create(ownerFile, true) // claim BEFORE building: a
-            try out.write(s"$tag\n".getBytes("UTF-8")) // kill mid-build
-            finally out.close()                        // recomputes our build
+            // claim BEFORE building: a kill mid-build recomputes our build
+            MetaFile.write(fs, ownerFile, s"$tag\n")
             val cents =
               if (exists(s"$semDir/_centroids"))
-                Similarity.readCentroidsJson(spark, s"$semDir/_centroids")
+                Similarity.readCentroids(spark, s"$semDir/_centroids")
               else Similarity.ivfTrain(kept, idCol, ec, numCells,
                 ivfIters, ivfSampleSize)
             if (usePqCodes) {
@@ -864,7 +817,7 @@ object TrainingPipeline {
       output = nSemKeep,
       nearDupDroppedBuckets = lexC("drop_buckets"),
       nearDupDroppedIds = lexC("drop_ids")),
-      stages = records.result(), tag = tag)
+      stages = stage.records.result(), tag = tag)
   }
 
   /** Order-independent, multiset-robust content address over `cols`:

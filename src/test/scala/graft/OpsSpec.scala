@@ -1674,17 +1674,18 @@ class OpsSpec extends SparkSpec {
     val tB = (1 to 30).map(t => s"rb_$t").mkString(" ")
     val oldDocs = Seq((1L, tA), (2L, tB)).toDF("doc_id", "text")
     val delta = Seq((1L, tA), (3L, tA)).toDF("doc_id", "text")
-    def flagsOf(pairs: org.apache.spark.sql.DataFrame): Map[(Long, Long), (Boolean, Boolean)] =
+    // every emitted ROW, not a deduplicating Map: the pair must appear
+    // exactly once, though id 1 has two signatures (index entry + delta row)
+    def rowsOf(pairs: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Boolean, Boolean)] =
       pairs.select($"id_a", $"id_b", $"a_is_new", $"b_is_new")
-        .as[(Long, Long, Boolean, Boolean)].collect()
-        .map { case (a, b, fa, fb) => ((a, b), (fa, fb)) }.toMap
-    val raw = flagsOf(Dedup.deltaNearDups(delta, "doc_id", "text",
+        .as[(Long, Long, Boolean, Boolean)].collect().toSeq
+    val raw = rowsOf(Dedup.deltaNearDups(delta, "doc_id", "text",
       Dedup.minhashSignatures(oldDocs, "doc_id", "text", p), p, threshold = 0.8))
-    assert(raw((1L, 3L)) === ((false, true)), raw.toString)
+    assert(raw === Seq((1L, 3L, false, true)), raw.toString)
     val idx = java.nio.file.Files.createTempDirectory("graft-flagdet").toString
     Dedup.minhashIndexBuild(oldDocs, "doc_id", "text", idx, p)
-    val indexed = flagsOf(Dedup.deltaNearDupsIndexed(delta, "doc_id", "text", idx, threshold = 0.8))
-    assert(indexed((1L, 3L)) === ((false, true)), indexed.toString)
+    val indexed = rowsOf(Dedup.deltaNearDupsIndexed(delta, "doc_id", "text", idx, threshold = 0.8))
+    assert(indexed === Seq((1L, 3L, false, true)), indexed.toString)
   }
 
   test("corpus epoch survives a kill between delete and rename; an uncommitted tmp is dropped") {
