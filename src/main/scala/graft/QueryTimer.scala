@@ -37,7 +37,8 @@ object QueryTimer {
         df.write.mode("overwrite").format("noop").save()
         ((System.nanoTime() - t0) / 1e9, df.count())
       }
-      println(f"[timer] $name%-22s min=${secs.map(_._1).min}%.3fs rows=${secs.head._2}")
+      println(f"[timer] $name%-22s min=${secs.map(_._1).min}%.3fs rows=${secs.head._2}" +
+        secs.map(s => f"${s._1}%.3f").mkString(" samples=", ",", ""))
     }
     spark.stop()
   }

@@ -532,7 +532,8 @@ object SparkEntry {
 
     // ---- dedup: SimHash (md5-derived 120-bit signature => the DuckDB oracle recomputes it bit-for-bit) -------------------
     "q_dedup_simhash" -> ((s, dir) =>
-      Dedup.simhashNearDups(t(s, dir, "documents"), "doc_id", "text", maxHamming = SimhashMaxHamming)),
+      Dedup.simhashNearDupsAudited(t(s, dir, "documents"), "doc_id", "text",
+        maxHamming = SimhashMaxHamming).pairs),
 
     // ---- dedup: duplicated-span scrub (exact substring dedup, token 8-gram granularity) -----------------------------------
     // The engine counts/joins 8-byte xxhash64 gram hashes; the oracle joins
@@ -563,8 +564,8 @@ object SparkEntry {
       val corpus = e.select(col("vec_id"), col("embedding"))
         .unionAll(e.filter(col("vec_id") % 50 === 0)
           .select((col("vec_id") + 100000).as("vec_id"), col("embedding")))
-      Similarity.cosineNearDupPairsLsh(corpus, "vec_id", "embedding", 0.9999)
-        .select("id_a", "id_b")
+      Similarity.cosineNearDupPairsLshAudited(corpus, "vec_id", "embedding", 0.9999)
+        .pairs.select("id_a", "id_b")
     }),
 
     // ---- dedup: SemDeDup (semantic near-dup clusters via the IVF coarse quantizer) ---------------------------------------
@@ -577,8 +578,8 @@ object SparkEntry {
       val e = t(s, dir, "embeddings")
       val centroids = Similarity.ivfTrain(e, "vec_id", "embedding", k = 64, iters = 0,
         sampleSize = 64, sampleByHash = false)
-      val pairs = Similarity.semanticNearDupPairs(e, "vec_id", "embedding", centroids,
-        threshold = 0.35, maxCell = 4096)
+      val pairs = Similarity.semanticNearDupPairsAudited(e, "vec_id", "embedding", centroids,
+        threshold = 0.35, maxCell = 4096).pairs
       Components.nearDupGroups(pairs).select(col("id").as("vec_id"), col("component"))
     }),
 
@@ -592,10 +593,10 @@ object SparkEntry {
       val nw = e.filter(col("vec_id") % 3 === 0)
       val centroids = Similarity.ivfTrain(old, "vec_id", "embedding", k = 64, iters = 0,
         sampleSize = 64, sampleByHash = false)
-      Similarity.semanticDeltaPairs(
+      Similarity.semanticDeltaPairsAudited(
         Similarity.ivfAssign(nw, "vec_id", "embedding", centroids),
         Similarity.ivfAssign(old, "vec_id", "embedding", centroids),
-        threshold = 0.35, maxCell = 4096)
+        threshold = 0.35, maxCell = 4096).pairs
     }),
 
     // ---- dedup: PQ-coded semantic delta (ADC candidates + exact refine) --------------------------------------------------

@@ -705,23 +705,12 @@ object Similarity {
     * capped + audited. Shared by the LSH-bucketed and SemDeDup cell-bucketed
     * pair generators. */
   private def pairsWithinBuckets(
-      v: DataFrame, threshold: Double, maxBucket: Int): AuditedPairs = {
-    val grouped = v.groupBy("sig")
-      .agg(sort_array(collect_list(struct(col("id"), col("emb")))).as("xs"))
-    val (observed, obs, recompute) = Dedup.observeDrops(grouped, "xs", maxBucket)
-    val pairs = observed
-      .filter(size(col("xs")).between(2, maxBucket))
-      .select(explode(expr(
-        """flatten(transform(xs, (x, i) ->
-           transform(slice(xs, i+2, size(xs)),
-             y -> struct(x.id AS id_a, x.emb AS emb_a, y.id AS id_b, y.emb AS emb_b))))"""))
-        .as("p"))
-      .select(col("p.id_a"), col("p.id_b"),
-        cosine(col("p.emb_a"), col("p.emb_b")).as("cosine"))
-      .filter(col("cosine") >= threshold)
-      .select("id_a", "id_b", "cosine")
-    AuditedPairs(pairs, obs, recompute)
-  }
+      v: DataFrame, threshold: Double, maxBucket: Int): AuditedPairs =
+    Dedup.bucketPairs(v.groupBy("sig")
+      .agg(sort_array(collect_list(struct(col("id"), col("emb")))).as("xs")), maxBucket)(
+      _.select(col("p.a.id").as("id_a"), col("p.b.id").as("id_b"),
+        cosine(col("p.a.emb"), col("p.b.emb")).as("cosine"))
+        .filter(col("cosine") >= threshold))
 
   // --------------------------------------------------------------------------
   // SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic deduplication —
@@ -750,19 +739,13 @@ object Similarity {
     pairsWithinBuckets(v, threshold, maxCell)
   }
 
-  /** [[semanticNearDupPairsAudited]] without the audit handle. */
-  def semanticNearDupPairs(
-      df: DataFrame, idCol: String, embCol: String, centroids: Seq[Seq[Double]],
-      threshold: Double, maxCell: Int = Dedup.DefaultMaxBucket): DataFrame =
-    semanticNearDupPairsAudited(df, idCol, embCol, centroids, threshold, maxCell).pairs
-
   /** Full SemDeDup: keep one representative (the component-minimum id) per
     * semantic cluster — pairs -> connected components -> anti-join losers,
     * the same keep discipline as the pipeline's lexical near-dup stage. */
   def semanticDedup(
       df: DataFrame, idCol: String, embCol: String, centroids: Seq[Seq[Double]],
       threshold: Double, maxCell: Int = Dedup.DefaultMaxBucket): DataFrame = {
-    val pairs = semanticNearDupPairs(df, idCol, embCol, centroids, threshold, maxCell)
+    val pairs = semanticNearDupPairsAudited(df, idCol, embCol, centroids, threshold, maxCell).pairs
     val losers = Components.nearDupGroups(pairs)
       .filter(col("id") =!= col("component"))
       .select(col("id").as(idCol))
@@ -790,33 +773,19 @@ object Similarity {
     val cols = Seq(col("id"), col("emb"), col("cell"), col("is_new"))
     val tagged = oldAssigned.withColumn("is_new", lit(false)).select(cols: _*)
       .unionAll(newAssigned.withColumn("is_new", lit(true)).select(cols: _*))
-    val grouped = tagged.groupBy("cell")
-      .agg(sort_array(collect_list(struct(col("id"), col("is_new"), col("emb")))).as("xs"))
-    val (observed, obs, recompute) = Dedup.observeDrops(grouped, "xs", maxCell)
-    val pairs = observed
-      .filter(size(col("xs")).between(2, maxCell))
-      .select(explode(expr(
-        """flatten(transform(xs, (x, i) ->
-           transform(slice(xs, i+2, size(xs)),
-             y -> struct(x.id AS id_a, x.is_new AS a_is_new, x.emb AS emb_a,
-                         y.id AS id_b, y.is_new AS b_is_new, y.emb AS emb_b))))"""))
-        .as("q"))
-      .filter(col("q.a_is_new") || col("q.b_is_new"))
-      // a resubmitted id never pairs with its own index entry (cosine 1 with
-      // itself) — an at-least-once redelivery that recomputes after its
-      // survivors were appended must keep those survivors, not drop every
-      // one as a dup of itself (same contract as the PQ path)
-      .filter(col("q.id_a") =!= col("q.id_b"))
-      .filter(cosine(col("q.emb_a"), col("q.emb_b")) >= threshold)
-      .select(col("q.id_a"), col("q.id_b"), col("q.a_is_new"), col("q.b_is_new"))
-    AuditedPairs(pairs, obs, recompute)
+    Dedup.bucketPairs(tagged.groupBy("cell")
+      .agg(sort_array(collect_list(struct(col("id"), col("is_new"), col("emb")))).as("xs")),
+      maxCell)(
+      _.filter(col("p.a.is_new") || col("p.b.is_new"))
+        // a resubmitted id never pairs with its own index entry (cosine 1
+        // with itself) — an at-least-once redelivery that recomputes after
+        // its survivors were appended must keep those survivors, not drop
+        // every one as a dup of itself (same contract as the PQ path)
+        .filter(col("p.a.id") =!= col("p.b.id"))
+        .filter(cosine(col("p.a.emb"), col("p.b.emb")) >= threshold)
+        .select(col("p.a.id").as("id_a"), col("p.b.id").as("id_b"),
+          col("p.a.is_new").as("a_is_new"), col("p.b.is_new").as("b_is_new")))
   }
-
-  /** [[semanticDeltaPairsAudited]] without the audit handle. */
-  def semanticDeltaPairs(
-      newAssigned: DataFrame, oldAssigned: DataFrame,
-      threshold: Double, maxCell: Int = Dedup.DefaultMaxBucket): DataFrame =
-    semanticDeltaPairsAudited(newAssigned, oldAssigned, threshold, maxCell).pairs
 
   /** Delta pairs against a PERSISTED IVF index ([[ivfBuildIndex]] layout):
     * the delta assigns against the index's own centroids, the touched cell
@@ -838,34 +807,15 @@ object Similarity {
     semanticDeltaPairsAudited(newAssigned, old, threshold, maxCell)
   }
 
-  private val pqAuditSeq = new java.util.concurrent.atomic.AtomicLong()
-
   /** Delta pairs against a PERSISTED IVF-PQ index ([[ivfPqBuildIndex]]
     * layout) — the 32x-cheaper old side: the CANDIDATE scan reads the
     * corpus as 8-byte PQ `codes` partition-pruned to the delta's cells,
-    * never raw vectors (PlanSpec pins the pruned ReadSchema). Per delta
-    * row, ONE projection builds its ADC lookup table
-    * ([[graft.functions.PqAdcTableExpr]]); each (new, old) candidate in a
-    * shared cell then costs m table lookups instead of a dim-element dot
-    * ([[graft.functions.PqAdcScorePair]]).
-    *
-    * Two-stage precision contract (FAISS-refine shape): ADC is a RECALL
-    * stage — candidates are pairs scoring ≥ `threshold - adcMargin` (ADC
-    * under-estimates true cosine by up to the quantization error; the
-    * margin buys recall, the refine restores precision). Candidates then
-    * re-check at FULL precision: the delta's raw vector against the index's
-    * raw `emb`, fetched for just the candidate old ids — by literal id
-    * list when ≤ `maxRefineIds` distinct ids (parquet min/max row-group
-    * skipping over the id-sorted cell files), by semi-join above it. Every
-    * emitted pair is therefore exact-cosine-verified; ADC only decides what
-    * is NEVER compared, so recall is bounded by the margin (planted-twin
-    * recall pinned in OpsSpec), precision is exact. New-new pairs (both
-    * vectors ride the delta) skip ADC entirely and compare exactly within
-    * shared cells.
-    *
-    * Audit: OLD cells larger than `maxCell` are dropped from candidate
-    * generation and counted (buckets + old rows), mirroring the grouped
-    * path's cap; the delta side is never dropped. */
+    * never raw vectors (PlanSpec pins the pruned ReadSchema). The refine
+    * fetches the index's raw `emb` for just the candidate old ids — by
+    * literal id list when ≤ `maxRefineIds` distinct ids (parquet min/max
+    * row-group skipping over the id-sorted cell files), by semi-join above
+    * it. The pair semantics (ADC recall stage, exact refine, new-new pairs,
+    * old-cell audit) live in [[pqDeltaPairs]]. */
   def semanticDeltaPairsPqIndexed(
       newDf: DataFrame, idCol: String, embCol: String, indexDir: String,
       threshold: Double, maxCell: Int = Dedup.DefaultMaxBucket,
@@ -880,86 +830,42 @@ object Similarity {
       if (eagerCheckpoints) df.localCheckpoint(true) else df
     val spark = newDf.sparkSession
     val (centroids, codebooks) = ivfPqLoadIndex(spark, indexDir)
-    // delta: cell + per-row ADC table, one checkpoint read by the cell
-    // collect, the candidate join, the refine, and the within-delta pairs
-    val newAssigned = cp(ivfAssign(newDf, idCol, embCol, centroids)
-      .withColumn("adc", graft.functions.PqAdcTableExpr(col("emb"), codebooks)))
+    // one checkpoint read by the cell collect, the candidate join, the
+    // refine, and the within-delta pairs
+    val newAssigned = cp(pqAssign(newDf, idCol, embCol, centroids, codebooks))
     val cells = newAssigned.select("cell").distinct().collect().map(_.getInt(0)).toSeq
     Dedup.completeSwap(spark, s"$indexDir/cells", s"$indexDir/cells_compacting")
     // dropDuplicates("id"): repair-at-read for duplicate rows a
     // crashed-then-redelivered append left (the lexical indexed path's
     // convention) — duplicates would emit duplicate pairs and inflate the
     // maxCell audit until the next compaction
-    val old = spark.read.parquet(s"$indexDir/cells")
-      .filter(col("cell").isin(cells: _*))
-      .select(col("id"), col("codes"), col("cell"))
-      .dropDuplicates("id")
-    // old-side cell-size cap + audit (the grouped path's discipline, join-shaped)
-    def aggs: Seq[Column] = Seq(
-      coalesce(sum(when(col("n") > maxCell, 1L).otherwise(0L)), lit(0L)).as("dropped_buckets"),
-      coalesce(sum(when(col("n") > maxCell, col("n")).otherwise(0L)), lit(0L)).as("dropped_ids"))
-    val sizes = old.groupBy("cell").agg(count(lit(1)).as("n"))
-    val obs = org.apache.spark.sql.Observation(
-      s"graft_pq_delta_audit_${pqAuditSeq.incrementAndGet()}")
-    val keptCells = sizes.observe(obs, aggs.head, aggs.tail: _*)
-      .filter(col("n") <= maxCell).select("cell")
-    val recompute = () => {
-      val r = sizes.agg(aggs.head, aggs.tail: _*).collect().head
-      (r.getLong(0), r.getLong(1))
-    }
-    // candidate stage: join on cell (delta is the small side — AQE
-    // broadcasts it), ADC-floored; a resubmitted id never pairs with itself.
-    // Checkpointed: read by the refine join AND the id-collect below.
-    val newSide = newAssigned.select(
-      col("cell"), col("id").as("id_new"), col("adc"), col("emb").as("emb_new"))
-    val cand = old.join(keptCells, Seq("cell"), "left_semi")
-      .join(newSide, Seq("cell"))
-      .filter(col("id") =!= col("id_new"))
-      .filter(graft.functions.PqAdcScorePair(col("codes"), col("adc")) >= threshold - adcMargin)
-      .select(col("cell"), col("id").as("id_old"), col("id_new"), col("emb_new"))
-    val candCp = cp(cand)
-    // refine stage: full-precision cosine against the index's raw vectors,
-    // fetched for candidate ids only (literal pushdown -> row-group skipping
-    // when the id set is small; semi-join fallback keeps it distributed)
-    val candIds = candCp.select(col("id_old")).distinct()
-    val pushdown = candIds.limit(maxRefineIds + 1).count() <= maxRefineIds
-    val oldEmbAll = spark.read.parquet(s"$indexDir/cells")
-      .filter(col("cell").isin(cells: _*))
-      .select(col("id").as("id_old"), col("emb").as("emb_old"))
-      .dropDuplicates("id_old") // same repair-at-read as the codes scan
-    val oldEmb =
-      if (pushdown) {
-        val ids = candIds.collect().map(_.get(0))
-        oldEmbAll.filter(col("id_old").isin(ids: _*))
-      } else oldEmbAll.join(candIds, Seq("id_old"), "left_semi")
-    val newOld = candCp.join(oldEmb, Seq("id_old"))
-      .filter(cosine(col("emb_new"), col("emb_old")) >= threshold)
-      .select(col("id_new").as("id_a"), col("id_old").as("id_b"),
-        lit(true).as("a_is_new"), lit(false).as("b_is_new"))
-    // new-new: exact cosine within shared cells (both raw vectors on board)
-    val a = newAssigned.select(col("cell"), col("id").as("id_a"), col("emb").as("emb_a"))
-    val b = newAssigned.select(col("cell"), col("id").as("id_b"), col("emb").as("emb_b"))
-    val newNew = a.join(b, Seq("cell"))
-      .filter(col("id_a") < col("id_b"))
-      .filter(cosine(col("emb_a"), col("emb_b")) >= threshold)
-      .select(col("id_a"), col("id_b"), lit(true).as("a_is_new"), lit(true).as("b_is_new"))
-    AuditedPairs(newOld.unionAll(newNew), obs, recompute)
+    def touched(cols: Column*): DataFrame = spark.read.parquet(s"$indexDir/cells")
+      .filter(col("cell").isin(cells: _*)).select(cols: _*).dropDuplicates("id")
+    pqDeltaPairs(newAssigned, touched(col("id"), col("codes"), col("cell")),
+      candIds => {
+        val oldEmb = touched(col("id"), col("emb"))
+          .select(col("id").as("id_old"), col("emb").as("emb_old"))
+        // one capped collect decides: literal pushdown (row-group skipping)
+        // when the id set is small, a distributed semi-join above the cap
+        val ids = candIds.limit(maxRefineIds + 1).collect()
+        if (ids.length <= maxRefineIds) oldEmb.filter(col("id_old").isin(ids.map(_.get(0)): _*))
+        else oldEmb.join(candIds, Seq("id_old"), "left_semi")
+      },
+      threshold, maxCell, adcMargin, cp)
   }
 
-  /** In-memory twin of [[semanticDeltaPairsPqIndexed]] — identical two-stage
-    * ADC-candidate + exact-refine semantics with caller-supplied quantizers
-    * over a raw old frame (encoded on the fly, no persisted index): the
-    * oracle/verification path (q_dedup_semantic_delta_pq rebuilds every
-    * stage in SQL; OpsSpec pins equality with the indexed path under the
-    * same quantizers). The persisted-index path is the 100 TB one. */
+  /** In-memory twin of [[semanticDeltaPairsPqIndexed]] — the same
+    * [[pqDeltaPairs]] body with caller-supplied quantizers over a raw old
+    * frame (encoded on the fly, no persisted index): the oracle/verification
+    * path (q_dedup_semantic_delta_pq rebuilds every stage in SQL; OpsSpec
+    * pins equality with the indexed path under the same quantizers). The
+    * persisted-index path is the 100 TB one. */
   def semanticDeltaPairsPq(
       newDf: DataFrame, idCol: String, embCol: String, old: DataFrame,
       centroids: Seq[Seq[Double]], codebooks: Seq[Seq[Seq[Double]]],
       threshold: Double, maxCell: Int = Dedup.DefaultMaxBucket,
       adcMargin: Double = 0.2): AuditedPairs = {
-    val newAssigned = ivfAssign(newDf, idCol, embCol, centroids)
-      .withColumn("adc", graft.functions.PqAdcTableExpr(col("emb"), codebooks))
-      .localCheckpoint(true)
+    val newAssigned = pqAssign(newDf, idCol, embCol, centroids, codebooks).localCheckpoint(true)
     // scope the old side to the delta's cells BEFORE sizing, so the audit
     // counts the same universe the indexed twin sees (it partition-prunes
     // first and can never observe an untouched oversized cell); pair output
@@ -967,28 +873,56 @@ object Similarity {
     val oldEnc = ivfPqEncodeWithEmb(old, idCol, embCol, centroids, codebooks)
       .join(broadcast(newAssigned.select("cell").distinct()), Seq("cell"), "left_semi")
       .localCheckpoint(true) // read by the size audit, candidates, and refine
-    val oldCodes = oldEnc.select(col("id"), col("codes"), col("cell"))
-    def aggs: Seq[Column] = Seq(
-      coalesce(sum(when(col("n") > maxCell, 1L).otherwise(0L)), lit(0L)).as("dropped_buckets"),
-      coalesce(sum(when(col("n") > maxCell, col("n")).otherwise(0L)), lit(0L)).as("dropped_ids"))
-    val sizes = oldCodes.groupBy("cell").agg(count(lit(1)).as("n"))
-    val obs = org.apache.spark.sql.Observation(
-      s"graft_pq_delta_audit_${pqAuditSeq.incrementAndGet()}")
-    val keptCells = sizes.observe(obs, aggs.head, aggs.tail: _*)
-      .filter(col("n") <= maxCell).select("cell")
-    val recompute = () => {
-      val r = sizes.agg(aggs.head, aggs.tail: _*).collect().head
-      (r.getLong(0), r.getLong(1))
-    }
+    pqDeltaPairs(newAssigned, oldEnc.select(col("id"), col("codes"), col("cell")),
+      _ => oldEnc.select(col("id").as("id_old"), col("emb").as("emb_old")),
+      threshold, maxCell, adcMargin, identity)
+  }
+
+  /** (id, emb, cell, adc): the delta assigned to its cells, with the per-row
+    * ADC lookup table ([[graft.functions.PqAdcTableExpr]]) built in ONE
+    * projection. */
+  private def pqAssign(newDf: DataFrame, idCol: String, embCol: String,
+      centroids: Seq[Seq[Double]], codebooks: Seq[Seq[Seq[Double]]]): DataFrame =
+    ivfAssign(newDf, idCol, embCol, centroids)
+      .withColumn("adc", graft.functions.PqAdcTableExpr(col("emb"), codebooks))
+
+  /** The one PQ delta body — audit -> candidate -> refine -> new-new — over
+    * the delta's `newAssigned` ([[pqAssign]]) and the old side's
+    * (id, codes, cell) rows scoped to the delta's cells:
+    *  - audit: OLD cells larger than `maxCell` are dropped from candidate
+    *    generation and counted (buckets + old rows), the grouped paths' cap;
+    *    the delta side is never dropped;
+    *  - candidate: each (new, old) pair in a shared cell costs m ADC table
+    *    lookups ([[graft.functions.PqAdcScorePair]]), not a dim-element dot.
+    *    ADC is a RECALL stage — it under-estimates true cosine by up to the
+    *    quantization error, so pairs scoring ≥ `threshold - adcMargin` pass
+    *    (the margin buys recall; the refine restores precision). A
+    *    resubmitted id never pairs with itself;
+    *  - refine: candidates re-check at FULL precision against the raw old
+    *    `emb` that `oldEmbOf(candidate old ids)` returns as (id_old,
+    *    emb_old). Every emitted pair is exact-cosine-verified; ADC only
+    *    decides what is NEVER compared (planted-twin recall pinned in
+    *    OpsSpec);
+    *  - new-new: both raw vectors ride the delta — exact cosine within
+    *    shared cells, no ADC.
+    * `stage` marks the candidate boundary (read by the refine join and the
+    * candidate-id fetch). */
+  private def pqDeltaPairs(
+      newAssigned: DataFrame, old: DataFrame, oldEmbOf: DataFrame => DataFrame,
+      threshold: Double, maxCell: Int, adcMargin: Double,
+      stage: DataFrame => DataFrame): AuditedPairs = {
+    val (sizes, obs, recompute) = Dedup.observeDrops(
+      old.groupBy("cell").agg(count(lit(1)).as("n")), col("n"), maxCell)
+    val keptCells = sizes.filter(col("n") <= maxCell).select("cell")
+    // join on cell: the delta is the small side — AQE broadcasts it
     val newSide = newAssigned.select(
       col("cell"), col("id").as("id_new"), col("adc"), col("emb").as("emb_new"))
-    val cand = oldCodes.join(keptCells, Seq("cell"), "left_semi")
+    val cand = stage(old.join(keptCells, Seq("cell"), "left_semi")
       .join(newSide, Seq("cell"))
       .filter(col("id") =!= col("id_new"))
       .filter(graft.functions.PqAdcScorePair(col("codes"), col("adc")) >= threshold - adcMargin)
-      .select(col("id").as("id_old"), col("id_new"), col("emb_new"))
-    val newOld = cand
-      .join(oldEnc.select(col("id").as("id_old"), col("emb").as("emb_old")), Seq("id_old"))
+      .select(col("id").as("id_old"), col("id_new"), col("emb_new")))
+    val newOld = cand.join(oldEmbOf(cand.select(col("id_old")).distinct()), Seq("id_old"))
       .filter(cosine(col("emb_new"), col("emb_old")) >= threshold)
       .select(col("id_new").as("id_a"), col("id_old").as("id_b"),
         lit(true).as("a_is_new"), lit(false).as("b_is_new"))
@@ -1007,13 +941,9 @@ object Similarity {
   def semanticDeltaDedupPqIndexed(
       newDf: DataFrame, idCol: String, embCol: String, indexDir: String,
       threshold: Double, maxCell: Int = Dedup.DefaultMaxBucket,
-      adcMargin: Double = 0.2, maxRefineIds: Int = 1 << 14): DataFrame = {
-    val pairs = semanticDeltaPairsPqIndexed(newDf, idCol, embCol, indexDir,
-      threshold, maxCell, adcMargin, maxRefineIds)
-      .pairs.localCheckpoint(true)
-    newDf.join(Dedup.deltaLosers(pairs).withColumnRenamed("id", idCol),
-      Seq(idCol), "left_anti")
-  }
+      adcMargin: Double = 0.2, maxRefineIds: Int = 1 << 14): DataFrame =
+    Dedup.deltaSurvivors(newDf, idCol, semanticDeltaPairsPqIndexed(newDf, idCol, embCol,
+      indexDir, threshold, maxCell, adcMargin, maxRefineIds).pairs)
 
   /** Append vectors to a persisted IVF-PQ index, assigned AND encoded with
     * the index's own stored quantizers (an append can never fork either);
@@ -1037,12 +967,9 @@ object Similarity {
     * [[ivfIndexAppend]] to complete the round. */
   def semanticDeltaDedupIndexed(
       newDf: DataFrame, idCol: String, embCol: String, indexDir: String,
-      threshold: Double, maxCell: Int = Dedup.DefaultMaxBucket): DataFrame = {
-    val pairs = semanticDeltaPairsIndexed(newDf, idCol, embCol, indexDir, threshold, maxCell)
-      .pairs.localCheckpoint(true)
-    newDf.join(Dedup.deltaLosers(pairs).withColumnRenamed("id", idCol),
-      Seq(idCol), "left_anti")
-  }
+      threshold: Double, maxCell: Int = Dedup.DefaultMaxBucket): DataFrame =
+    Dedup.deltaSurvivors(newDf, idCol,
+      semanticDeltaPairsIndexed(newDf, idCol, embCol, indexDir, threshold, maxCell).pairs)
 
   /** Append vectors to a persisted IVF index, assigned with the index's OWN
     * centroids (an append can never fork the quantizer) and written into
@@ -1090,11 +1017,4 @@ object Similarity {
       s"compact swap failed: could not rename $tmp to $live")
     IndexVersions.record(spark, indexDir, target, "compact", n)
   }
-
-  /** [[cosineNearDupPairsLshAudited]] without the audit handle. */
-  def cosineNearDupPairsLsh(
-      df: DataFrame, idCol: String, embCol: String, threshold: Double,
-      numPlanes: Int = 8, dim: Int = -1, seed: Long = 42L,
-      maxBucket: Int = Dedup.DefaultMaxBucket): DataFrame =
-    cosineNearDupPairsLshAudited(df, idCol, embCol, threshold, numPlanes, dim, seed, maxBucket).pairs
 }

@@ -674,11 +674,7 @@ object TrainingPipeline {
       try {
         val audited = Dedup.deltaNearDupsIndexedAudited(
           prepared, idCol, textCol, mhDir, minhashThreshold, maxBucket)
-        val pairs = audited.pairs.localCheckpoint(true)
-        val kept = prepared
-          .join(Dedup.deltaLosers(pairs).withColumnRenamed("id", idCol),
-            Seq(idCol), "left_anti")
-          .select(col(idCol))
+        val kept = Dedup.deltaSurvivors(prepared, idCol, audited.pairs).select(col(idCol))
         Map("n_keep" -> stage.write(kept, idCol, lexDir),
           "drop_buckets" -> audited.droppedBuckets, "drop_ids" -> audited.droppedIds)
       } finally Dedup.releaseCheckpointsSince(sc, before)
@@ -839,27 +835,14 @@ object TrainingPipeline {
 
   private val seq = new java.util.concurrent.atomic.AtomicLong()
 
-  /** Intake counts from the observation, with the repo's standard grace-wait +
-    * explicit-recompute fallback (AQE empty-relation pruning or a lagging
-    * listener bus — see Dedup.AuditedPairs). */
-  private def intakeCounts(obs: Observation, annotated: DataFrame): (Long, Long) = {
-    val waitSec = java.lang.Long.getLong("spark.graft.auditWaitSec", 2L)
-    val completed =
-      try {
-        scala.concurrent.Await.ready(obs.future,
-          scala.concurrent.duration.Duration(waitSec, "s")); true
-      } catch { case _: java.util.concurrent.TimeoutException => false }
-    val m = if (completed) obs.get else Map.empty[String, Any]
-    if (m.contains("n_input"))
-      (m("n_input").asInstanceOf[Long], m("n_valid").asInstanceOf[Long])
-    else {
-      System.err.println(
-        s"[graft] pipeline intake observation not delivered within ${waitSec}s — " +
-          "recomputing input/valid counts with an explicit aggregate pass")
+  /** Intake counts from the observation, via the one observation resolver
+    * (grace wait + loud explicit recompute — see Dedup.observedLongs). */
+  private def intakeCounts(obs: Observation, annotated: DataFrame): (Long, Long) =
+    Dedup.observedLongs(obs, ("n_input", "n_valid"), "pipeline intake",
+      "input/valid counts") {
       val row = annotated.agg(count(lit(1)).as("n_input"),
         coalesce(sum(when(col("valid"), 1L).otherwise(0L)), lit(0L)).as("n_valid"))
         .collect().head
       (row.getLong(0), row.getLong(1))
     }
-  }
 }

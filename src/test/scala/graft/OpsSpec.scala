@@ -78,7 +78,7 @@ class OpsSpec extends SparkSpec {
       .select(($"doc_id" - 10000).as("a"), $"sig".as("sb"))
     val joined = orig.join(copy, "a")
     assert(joined.filter($"sa" =!= $"sb").count() === 0)
-    val pairs = Dedup.simhashNearDups(dupDocs, "doc_id", "text", maxHamming = 3)
+    val pairs = Dedup.simhashNearDupsAudited(dupDocs, "doc_id", "text", maxHamming = 3).pairs
     val exactPairs = docs.filter($"doc_id" % 5 === 0)
       .select($"doc_id", $"doc_id" + 10000).as[(Long, Long)].collect().toSet
     val found = pairs.select("id_a", "id_b").as[(Long, Long)].collect().toSet
@@ -88,7 +88,7 @@ class OpsSpec extends SparkSpec {
   test("oversizeBuckets audits what candidatePairs drops at the same cap") {
     val bands = Dedup.simhashBands(dupDocs, "doc_id", "text", maxHamming = 3)
     // a cap of 1 makes EVERY >=2 bucket oversize: pairs empty, audit non-empty
-    assert(Dedup.candidatePairs(bands, maxBucket = 1).count() === 0)
+    assert(Dedup.candidatePairsAudited(bands, maxBucket = 1).pairs.count() === 0)
     val over = Dedup.oversizeBuckets(bands, maxBucket = 1)
     assert(over.count() > 0)
     assert(over.agg(min($"bucket_size")).as[Long].collect().head >= 2)
@@ -105,8 +105,8 @@ class OpsSpec extends SparkSpec {
       .withColumn("h", Dedup.hammingDistance($"sa", $"sb"))
       .filter($"h" <= maxH)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val banded = Dedup.simhashNearDups(dupDocs, "doc_id", "text", maxHamming = maxH)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+    val banded = Dedup.simhashNearDupsAudited(dupDocs, "doc_id", "text", maxHamming = maxH)
+      .pairs.select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(banded === brute)
     assert(brute.nonEmpty) // the planted near-dups actually land within radius
     sigs.unpersist()
@@ -130,8 +130,8 @@ class OpsSpec extends SparkSpec {
     val brute = a.join(b, $"id_a" < $"id_b")
       .withColumn("h", Dedup.hammingDistance($"sa", $"sb", 4))
       .filter($"h" <= maxH).select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val banded = Dedup.simhashNearDups(dupDocs, "doc_id", "text", maxHamming = maxH, words = 4)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+    val banded = Dedup.simhashNearDupsAudited(dupDocs, "doc_id", "text", maxHamming = maxH, words = 4)
+      .pairs.select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(banded === brute)
     assert(brute.nonEmpty) // exact-dup plants sit at hamming 0 in any width
   }
@@ -167,7 +167,7 @@ class OpsSpec extends SparkSpec {
     val exact = Similarity.cosineNearDupPairs(dupEmbs, "vec_id", "embedding", 0.9999)
     val planted = embs.filter($"vec_id" % 50 === 0).count()
     assert(exact.count() === planted)
-    val lsh = Similarity.cosineNearDupPairsLsh(dupEmbs, "vec_id", "embedding", 0.9999)
+    val lsh = Similarity.cosineNearDupPairsLshAudited(dupEmbs, "vec_id", "embedding", 0.9999).pairs
     assert(lsh.count() === planted) // identical vectors share every signature
   }
 
@@ -377,8 +377,8 @@ class OpsSpec extends SparkSpec {
     val cents = Similarity.ivfTrain(dupEmbs, "vec_id", "embedding", k = 16, iters = 3)
     // identical vectors always share an argmax cell, so at ~1.0 threshold the
     // cell structure loses nothing: semantic pairs == unbucketed brute force
-    val semPairs = Similarity.semanticNearDupPairs(dupEmbs, "vec_id", "embedding", cents, 0.9999)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+    val semPairs = Similarity.semanticNearDupPairsAudited(dupEmbs, "vec_id", "embedding", cents, 0.9999)
+      .pairs.select("id_a", "id_b").as[(Long, Long)].collect().toSet
     val brute = Similarity.cosineNearDupPairs(dupEmbs, "vec_id", "embedding", 0.9999)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(semPairs === brute && brute.nonEmpty)
@@ -414,10 +414,10 @@ class OpsSpec extends SparkSpec {
     assert(pairsIdx.droppedBuckets === 0L)
     // indexed path == inline-assigned path with the same centroids
     val cents = Similarity.ivfLoadCentroids(spark, idx)
-    val inline = Similarity.semanticDeltaPairs(
+    val inline = Similarity.semanticDeltaPairsAudited(
       Similarity.ivfAssign(delta, "vec_id", "embedding", cents),
       Similarity.ivfAssign(old, "vec_id", "embedding", cents), threshold = 0.9)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+      .pairs.select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(inline === got)
     // old wins; min-id twin survives
     val kept = Similarity.semanticDeltaDedupIndexed(delta, "vec_id", "embedding", idx,
@@ -465,10 +465,10 @@ class OpsSpec extends SparkSpec {
     // refine is exact: every emitted pair also passes the raw-vector path
     // assigned with the SAME centroids
     val cents = Similarity.ivfLoadCentroids(spark, idx)
-    val exact = norm(Similarity.semanticDeltaPairs(
+    val exact = norm(Similarity.semanticDeltaPairsAudited(
       Similarity.ivfAssign(delta, "vec_id", "embedding", cents),
       Similarity.ivfAssign(old, "vec_id", "embedding", cents), threshold = 0.9)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet)
+      .pairs.select("id_a", "id_b").as[(Long, Long)].collect().toSet)
     assert(got.subsetOf(exact) && exact.nonEmpty)
     // the semi-join refine path (no id pushdown) emits identical pairs
     assert(norm(pairsOf(0.55, refine = 0).pairs
@@ -1686,6 +1686,24 @@ class OpsSpec extends SparkSpec {
     Dedup.minhashIndexBuild(oldDocs, "doc_id", "text", idx, p)
     val indexed = rowsOf(Dedup.deltaNearDupsIndexed(delta, "doc_id", "text", idx, threshold = 0.8))
     assert(indexed === Seq((1L, 3L, false, true)), indexed.toString)
+    // changed-text resubmission: the index holds id 1 as tA plus one word.
+    // The old-flagged copy wins the collapse, so both paths must score the
+    // pair with THAT copy's signature — identical rows, matches included
+    val editedOld = Seq((1L, s"$tA ra_31"), (2L, tB)).toDF("doc_id", "text")
+    def scoredOf(pairs: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Long, Boolean, Boolean)] =
+      pairs.select($"id_a", $"id_b", $"matches", $"a_is_new", $"b_is_new")
+        .as[(Long, Long, Long, Boolean, Boolean)].collect().toSeq
+    val rawEdited = scoredOf(Dedup.deltaNearDups(delta, "doc_id", "text",
+      Dedup.minhashSignatures(editedOld, "doc_id", "text", p), p, threshold = 0.8))
+    val idxEdited = java.nio.file.Files.createTempDirectory("graft-flagdet-edit").toString
+    Dedup.minhashIndexBuild(editedOld, "doc_id", "text", idxEdited, p)
+    val indexedEdited = scoredOf(
+      Dedup.deltaNearDupsIndexed(delta, "doc_id", "text", idxEdited, threshold = 0.8))
+    assert(rawEdited === indexedEdited, s"raw $rawEdited vs indexed $indexedEdited")
+    assert(rawEdited.map(r => (r._1, r._2, r._4, r._5)) === Seq((1L, 3L, false, true)))
+    // the edit is visible to the signature: scoring the delta copy instead
+    // would read all numHashes positions as matching
+    assert(rawEdited.head._3 < p.numHashes, rawEdited.toString)
   }
 
   test("corpus epoch survives a kill between delete and rename; an uncommitted tmp is dropped") {

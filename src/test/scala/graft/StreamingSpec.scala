@@ -93,10 +93,10 @@ class StreamingSpec extends SparkSpec {
       q.processAllAvailable()
       // a pair matching in several bands is emitted once per band — set-compare
       val got = spark.table("nd_sink").select("id_a", "id_b").as[(Long, Long)].collect().toSet
-      val batch = graft.ops.Dedup.simhashNearDups(
+      val batch = graft.ops.Dedup.simhashNearDupsAudited(
         Seq((1L, t1), (2L, t2), (3L, t1), (4L, t3)).toDF("doc_id", "text"),
         "doc_id", "text", maxHamming = maxH)
-        .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+        .pairs.select("id_a", "id_b").as[(Long, Long)].collect().toSet
       assert(got === batch)
       assert(got.contains((1L, 3L))) // identical texts: hamming 0, cross-batch
     } finally q.stop()
