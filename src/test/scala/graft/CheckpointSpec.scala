@@ -20,6 +20,37 @@ class CheckpointSpec extends SparkSpec {
     Validator.validate(CodeTable.codeSchema,
       in.withColumn("sha_fixture", col("content_sha256"))).violations
 
+  private val keys = Seq("repo", "path")
+  private val sortCols = Seq("repo", "path", "constraint_id")
+  /** The caller fingerprint RunValidation stages with: it skips `id`. */
+  private val narrowHash =
+    Some(xxhash64((keys ++ Seq("commit", "lang", "content_sha256")).map(col): _*))
+  private def bucketOf = CheckpointedRunner.bucketExpr(keys, numBuckets)
+
+  /** Buckets listed in the staging commit record (a driver-side JSON file). */
+  private def stagingRecordBuckets(staging: String): Seq[Int] = {
+    import scala.jdk.CollectionConverters._
+    val text = new String(Files.readAllBytes(
+      java.nio.file.Paths.get(staging, CheckpointedRunner.StagingRecord)), "UTF-8")
+    graft.io.MetaFile.json.readTree(text).get("buckets").elements().asScala
+      .map(_.get(0).intValue()).toSeq
+  }
+
+  /** Every file under `dir` (relative path -> modification time). */
+  private def listing(dir: String): Map[String, Long] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(dir)
+    val walk = Files.walk(root)
+    try walk.iterator().asScala.filter(Files.isRegularFile(_))
+      .map(f => root.relativize(f).toString -> Files.getLastModifiedTime(f).toMillis).toMap
+    finally walk.close()
+  }
+
+  /** Data files under `dir`, by bucket directory. */
+  private def dataFiles(dir: String): Map[String, Set[String]] =
+    listing(dir).keys.filter(_.endsWith(".parquet")).toSeq
+      .groupBy(_.takeWhile(_ != '/')).view.mapValues(_.toSet).toMap
+
   test("kill after k buckets, resume processes exactly the complement; outputs identical") {
     val root = tmp()
     val staging = s"$root/staging"; val out1 = s"$root/out1"; val m1 = s"$root/m1"
@@ -206,15 +237,16 @@ class CheckpointSpec extends SparkSpec {
     val df = CodeTable.generate(spark, 2000)
     val rh = Some(xxhash64(col("repo"), col("path"), col("commit"), col("content_sha256")))
     CheckpointedRunner.stage(df, keys, numBuckets, staging, rh)
-    // sidecar exists: one row per occupied bucket, hidden from data reads
-    val sidecar = spark.read.parquet(s"$staging/${CheckpointedRunner.FingerprintSidecar}")
-    assert(sidecar.count() === sidecar.select("bucket").distinct().count())
-    assert(!spark.read.parquet(staging).columns.contains("n_rows"))
+    // record exists: one entry per occupied bucket, hidden from data reads
+    val occupied = spark.read.parquet(staging).select("bucket").distinct()
+      .collect().map(_.getInt(0)).sorted.toSeq
+    assert(stagingRecordBuckets(staging).sorted === occupied)
+    assert(!spark.read.parquet(staging).columns.contains("num_buckets"))
     assert(CheckpointedRunner.incrementalRun(spark, staging, m, out, numBuckets,
       process, sortCols, runId = "sc-a", keyCols = keys) === (0 until numBuckets))
     assert(CheckpointedRunner.incrementalRun(spark, staging, m, out, numBuckets,
       process, sortCols, runId = "sc-b", keyCols = keys).isEmpty)
-    // change one key's content; the sidecar-selected pending set matches the
+    // change one key's content; the record-selected pending set matches the
     // direct fingerprint computation over the new staged data
     val df2 = df.withColumn("content",
         when(col("id") % 13 === 0, concat(col("content"), lit("!"))).otherwise(col("content")))
@@ -226,9 +258,9 @@ class CheckpointSpec extends SparkSpec {
     val got = CheckpointedRunner.incrementalRun(spark, staging, m, out, numBuckets,
       process, sortCols, runId = "sc-c", keyCols = keys)
     assert(got.toSet === expect)
-    // a plain (no-rowHash) re-stage wipes the sidecar — it can never go stale
+    // a plain (no-rowHash) re-stage wipes the record — it can never go stale
     CheckpointedRunner.stage(df2, keys, numBuckets, staging)
-    assert(!new java.io.File(s"$staging/${CheckpointedRunner.FingerprintSidecar}").exists())
+    assert(!new java.io.File(s"$staging/${CheckpointedRunner.StagingRecord}").exists())
   }
 
   test("run history: one lineage+metrics row per invocation over the append-only manifest") {
@@ -276,5 +308,139 @@ class CheckpointSpec extends SparkSpec {
     assert(plan.contains("PartitionFilters: [isnotnull(bucket"), plan)
     val total = spark.read.parquet(staging).count()
     assert(one.count() < total)
+  }
+
+  test("identical restage writes nothing and runs one aggregate; the replay's selection is one job") {
+    val root = tmp()
+    val staging = s"$root/staging"; val out = s"$root/out"; val m = s"$root/m"
+    val df = CodeTable.generate(spark, 2000)
+    CheckpointedRunner.stage(df, keys, numBuckets, staging, narrowHash)
+    assert(CheckpointedRunner.incrementalRun(spark, staging, m, out, numBuckets,
+      process, sortCols, runId = "id-a", keyCols = keys) === (0 until numBuckets))
+    val before = listing(staging)
+    val (jobs, queries) = jobsDuring {
+      CheckpointedRunner.stage(df, keys, numBuckets, staging, narrowHash)
+    }
+    // one query: the input aggregate (AQE runs its shuffle map stage as a
+    // job of its own) — no write, no read-back, no schema inference
+    assert(queries === 1 && jobs <= 2, s"$jobs job(s) in $queries query execution(s)")
+    assert(listing(staging) === before)
+    var pending = Seq.empty[Int]
+    val (runJobs, _) = jobsDuring {
+      pending = CheckpointedRunner.incrementalRun(spark, staging, m, out, numBuckets,
+        process, sortCols, runId = "id-b", keyCols = keys)
+    }
+    assert(pending.isEmpty)
+    assert(runJobs === 1, s"replay selection ran $runJobs jobs (the manifest scan is the one)")
+  }
+
+  test("change-only restage: a changed bucket rewrites only its directory, a removed one is deleted; staged table equals a full restage") {
+    val root = tmp()
+    val staging = s"$root/staging"
+    val df = CodeTable.generate(spark, 2000)
+    CheckpointedRunner.stage(df, keys, numBuckets, staging, narrowHash)
+    def touchedDirs(before: Map[String, Long]): Set[String] = {
+      val after = listing(staging)
+      (before.keySet ++ after.keySet).filter(f => before.get(f) != after.get(f))
+        .map(_.takeWhile(_ != '/')).filter(_.startsWith("bucket="))
+    }
+    def sameAsFullRestage(snapshot: DataFrame): Unit = {
+      val full = s"$root/full-${java.util.UUID.randomUUID()}"
+      CheckpointedRunner.stage(snapshot, keys, numBuckets, full)
+      val (a, b) = (spark.read.parquet(staging), spark.read.parquet(full))
+      assert(a.exceptAll(b).count() === 0 && b.exceptAll(a).count() === 0)
+    }
+    // content edit inside bucket 3: the caller fingerprint moves with it
+    val df2 = df.withColumn("content",
+        when(bucketOf === 3, concat(col("content"), lit(" v2"))).otherwise(col("content")))
+      .withColumn("content_sha256", sha2(col("content"), 256))
+    val before2 = listing(staging)
+    CheckpointedRunner.stage(df2, keys, numBuckets, staging, narrowHash)
+    assert(touchedDirs(before2) === Set("bucket=3"))
+    sameAsFullRestage(df2)
+    // an edit only to `id`, a column the caller fingerprint skips: the
+    // layout fingerprint covers every staged column, so bucket 6 is rewritten
+    val df3 = df2.withColumn("id", when(bucketOf === 6, col("id") + 100000L).otherwise(col("id")))
+    val before3 = listing(staging)
+    CheckpointedRunner.stage(df3, keys, numBuckets, staging, narrowHash)
+    assert(touchedDirs(before3) === Set("bucket=6"))
+    sameAsFullRestage(df3)
+    // every row of bucket 5 gone: its directory is deleted, nothing rewritten
+    val df4 = df3.filter(bucketOf =!= 5)
+    val before4 = listing(staging)
+    CheckpointedRunner.stage(df4, keys, numBuckets, staging, narrowHash)
+    assert(!new java.io.File(s"$staging/bucket=5").exists())
+    assert(touchedDirs(before4) === Set("bucket=5"))
+    assert(!stagingRecordBuckets(staging).contains(5))
+    sameAsFullRestage(df4)
+  }
+
+  test("an added column or a different bucket count restages fully") {
+    val root = tmp()
+    val staging = s"$root/staging"
+    val df = CodeTable.generate(spark, 1500)
+    CheckpointedRunner.stage(df, keys, numBuckets, staging, narrowHash)
+    val first = dataFiles(staging)
+    val wider = df.withColumn("license", lit("mit"))
+    CheckpointedRunner.stage(wider, keys, numBuckets, staging, narrowHash)
+    val second = dataFiles(staging)
+    assert(second.keySet === first.keySet)
+    assert(second.values.flatten.toSet.intersect(first.values.flatten.toSet).isEmpty,
+      "a file of the narrower layout survived the schema change")
+    assert(spark.read.parquet(staging).columns.contains("license"))
+    CheckpointedRunner.stage(wider, keys, 2 * numBuckets, staging, narrowHash)
+    val third = dataFiles(staging)
+    assert(third.keySet === (0 until 2 * numBuckets).map(b => s"bucket=$b").toSet)
+    assert(third.values.flatten.toSet.intersect(second.values.flatten.toSet).isEmpty)
+    assert(stagingRecordBuckets(staging).toSet === (0 until 2 * numBuckets).toSet)
+  }
+
+  test("a lost staging record (kill between uncommit and commit): selection scans and stays exact, the next restage is full") {
+    val root = tmp()
+    val staging = s"$root/staging"; val out = s"$root/out"; val m = s"$root/m"
+    val df = CodeTable.generate(spark, 2000)
+    CheckpointedRunner.stage(df, keys, numBuckets, staging, narrowHash)
+    CheckpointedRunner.incrementalRun(spark, staging, m, out, numBuckets,
+      process, sortCols, runId = "lr-a", keyCols = keys, rowHash = narrowHash)
+    val df2 = df.withColumn("content",
+        when(bucketOf === 2, concat(col("content"), lit(" v2"))).otherwise(col("content")))
+      .withColumn("content_sha256", sha2(col("content"), 256))
+    CheckpointedRunner.stage(df2, keys, numBuckets, staging, narrowHash)
+    // the state a kill leaves after the bucket rewrite, before the commit
+    assert(new java.io.File(s"$staging/${CheckpointedRunner.StagingRecord}").delete())
+    assert(CheckpointedRunner.incrementalRun(spark, staging, m, out, numBuckets,
+      process, sortCols, runId = "lr-b", keyCols = keys, rowHash = narrowHash) === Seq(2))
+    val before = dataFiles(staging)
+    CheckpointedRunner.stage(df2, keys, numBuckets, staging, narrowHash)
+    assert(dataFiles(staging).values.flatten.toSet.intersect(before.values.flatten.toSet).isEmpty,
+      "a restage without a record kept files it could not vouch for")
+    assert(stagingRecordBuckets(staging).toSet === (0 until numBuckets).toSet)
+    assert(CheckpointedRunner.incrementalRun(spark, staging, m, out, numBuckets,
+      process, sortCols, runId = "lr-c", keyCols = keys).isEmpty)
+  }
+
+  test("bucket fingerprints count multiplicity: editing both copies of a planted duplicate revalidates its bucket") {
+    val root = tmp()
+    val staging = s"$root/staging"; val out = s"$root/out"; val m = s"$root/m"
+    val rows = 2000L
+    val df = CodeTable.withPlantedDuplicates(CodeTable.generate(spark, rows), rows)
+    CheckpointedRunner.stage(df, keys, numBuckets, staging, narrowHash)
+    CheckpointedRunner.incrementalRun(spark, staging, m, out, numBuckets,
+      process, sortCols, runId = "dup-a", keyCols = keys)
+    // ids 101 and 2101 are the two copies of one key; the caller hash skips
+    // `id`, so the bucket goes {A.., B, B} -> {A.., C, C}: same row count,
+    // and a bit_xor alone cancels both pairs
+    val both = col("id") % rows === 101
+    val df2 = df.withColumn("content",
+        when(both, concat(col("content"), lit(" edited twice"))).otherwise(col("content")))
+      .withColumn("content_sha256", sha2(col("content"), 256))
+    val dupBucket = df.filter(col("id") === 101).select(bucketOf).head().getInt(0)
+    assert(CheckpointedRunner.snapshotDiff(df2, df, bucketOf, narrowHash.get)
+      .collect().map(r => r.getInt(0) -> r.getString(1)).toSeq === Seq(dupBucket -> "changed"))
+    CheckpointedRunner.stage(df2, keys, numBuckets, staging, narrowHash)
+    assert(CheckpointedRunner.incrementalRun(spark, staging, m, out, numBuckets,
+      process, sortCols, runId = "dup-b", keyCols = keys) === Seq(dupBucket))
+    assert(spark.read.parquet(staging).filter(both)
+      .filter(col("content").endsWith(" edited twice")).count() === 2)
   }
 }

@@ -4,7 +4,6 @@ import graft.checkpoint.StageStore
 import graft.io.PreChangeLayoutException
 import graft.ops.{Adaptive, Dedup, IndexVersions, Similarity, TrainingPipeline}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** graft's small metadata (stage commit records, index params, quantizers,
   * lifecycle events) is driver-side file I/O: no Spark job, no dependence on
@@ -15,28 +14,6 @@ class MetadataSpec extends SparkSpec {
 
   private def tmp(): String = java.nio.file.Files.createTempDirectory("graft-meta").toString
   private def fs = new Path("/").getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Spark jobs submitted while `body` ran. Listener events arrive
-    * asynchronously but in order, so a sentinel job submitted afterwards
-    * marks the point by which every earlier job start has been seen. */
-  private def jobsDuring(body: => Unit): Int = {
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        seen.add(String.valueOf(js.properties.getProperty("spark.job.description")))
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setJobDescription("graft-sentinel")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      val deadline = System.nanoTime() + 20L * 1000 * 1000 * 1000
-      while (!seen.contains("graft-sentinel") && System.nanoTime() < deadline) Thread.sleep(20)
-      assert(seen.contains("graft-sentinel"), "listener never saw the sentinel job")
-      seen.toArray.indexOf("graft-sentinel")
-    } finally sc.removeSparkListener(listener)
-  }
 
   private def doc(i: Long) = (i, (1 to 25).map(t => s"m${i}_$t").mkString(" "))
   private def delta(ids: Long*) = ids.map(doc).toDF("doc_id", "text")
@@ -50,7 +27,7 @@ class MetadataSpec extends SparkSpec {
 
     var loaded: Option[Map[String, Long]] = None
     var epochAfter = -1L
-    val jobs = jobsDuring {
+    val (jobs, _) = jobsDuring {
       StageStore.commit(spark, w, "stage_a", "key|with=odd \"chars\"\n", Map("n" -> 7L, "m" -> 0L))
       loaded = StageStore.load(spark, w, "stage_a", "key|with=odd \"chars\"\n")
       assert(StageStore.load(spark, w, "stage_a", "another key").isEmpty)
@@ -69,7 +46,7 @@ class MetadataSpec extends SparkSpec {
     delta(1L, 2L, 3L).write.parquet(small)
     val agg = spark.read.parquet(small).groupBy("doc_id").count()
     var spreadAgg: org.apache.spark.sql.DataFrame = null
-    assert(jobsDuring { spreadAgg = Adaptive.spread(agg) } === 0)
+    assert(jobsDuring { spreadAgg = Adaptive.spread(agg) }._1 === 0)
     assert(spreadAgg.count() === 3L)
     // the contract is unchanged: a single-split scan spreads to every slot
     val target = spark.sparkContext.defaultParallelism

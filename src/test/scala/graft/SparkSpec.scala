@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -21,4 +22,30 @@ object TestSpark {
 
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
+
+  /** (jobs, SQL executions) submitted while `body` ran. Listener events
+    * arrive asynchronously but in order, so a sentinel job submitted
+    * afterwards marks the point by which every earlier job start was seen. */
+  protected def jobsDuring(body: => Unit): (Int, Int) = {
+    import scala.jdk.CollectionConverters._
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        seen.add((String.valueOf(js.properties.getProperty("spark.job.description")),
+          String.valueOf(js.properties.getProperty("spark.sql.execution.id"))))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobDescription("graft-sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 20L * 1000 * 1000 * 1000
+      def sentinelSeen = seen.iterator().asScala.exists(_._1 == "graft-sentinel")
+      while (!sentinelSeen && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(sentinelSeen, "listener never saw the sentinel job")
+      val jobs = seen.iterator().asScala.takeWhile(_._1 != "graft-sentinel").toSeq
+      (jobs.size, jobs.map(_._2).distinct.size)
+    } finally sc.removeSparkListener(listener)
+  }
 }
