@@ -4,6 +4,9 @@ import com.fasterxml.jackson.databind.JsonNode
 import graft.io.MetaFile
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.UserDefinedExpression
+import org.apache.spark.sql.catalyst.plans.logical.{AppendColumns, LeafNode, ObjectConsumer, ObjectProducer, TypedFilter}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -19,16 +22,19 @@ import org.apache.spark.sql.types._
   * idempotent (dynamic partition overwrite + deterministic sort), so a kill at
   * any point resumes to identical final output.
   *
-  * Staging cost model: a fingerprinted re-stage of a new snapshot pays one
-  * aggregate over the input that hashes every column (the layout
-  * fingerprint), plus — only when buckets changed — a second read of the
-  * input for the write of THOSE buckets and a full-width read-back of them
-  * for the record. An identical snapshot writes nothing; a snapshot that
-  * moved k of n buckets rewrites k bucket directories, not the table. With
-  * no committed record (the first fingerprinted stage, another identity, a
-  * crash between uncommit and commit) it is a static full overwrite plus a
-  * full-width read-back of every bucket — wider than the caller's `rowHash`
-  * columns, since the layout fingerprint covers them all.
+  * Staging cost model: a fingerprinted re-stage of a snapshot whose input
+  * identity (see below) equals the committed record's costs a file listing
+  * and a plan print on the driver: no job, no write, no read-back. Any other
+  * re-stage pays one aggregate over the input that hashes every column (the
+  * layout fingerprint), plus — only when buckets changed — a second read of
+  * the input for the write of THOSE buckets and a full-width read-back of
+  * them for the record. An unchanged snapshot under a new identity writes
+  * nothing but the record; a snapshot that moved k of n buckets rewrites k
+  * bucket directories, not the table. With no committed record (the first
+  * fingerprinted stage, another staging identity, a crash between uncommit
+  * and commit) it is a static full overwrite plus a full-width read-back of
+  * every bucket — wider than the caller's `rowHash` columns, since the
+  * layout fingerprint covers them all.
   *
   * The gain rests on k being small: edits clustered by bucket key. Edits
   * scattered over keys touch nearly every bucket (a few dozen over 16
@@ -40,13 +46,26 @@ import org.apache.spark.sql.types._
   * dynamic one in that case measured no faster, so there is one path.
   *
   * Staging commit record ([[StagingRecord]], one driver-written JSON file):
-  * identity (format version, key columns, `numBuckets`, staged schema) plus
-  * per-bucket (rows, caller fingerprint, layout fingerprint) describing the
-  * files on disk. Every staged-data change runs uncommit (delete the record)
-  * -> change files -> commit (write the record from a read of the written
+  * identity (format version, key columns, `numBuckets`, staged schema),
+  * the input identity of the stage that committed it, plus per-bucket
+  * (rows, caller fingerprint, layout fingerprint) describing the files on
+  * disk. Every staged-data change runs uncommit (delete the record) ->
+  * change files -> commit (write the record from a read of the written
   * files), so a kill in between leaves no record: the next
   * [[incrementalRun]] falls back to scanning the staged data and the next
   * re-stage rewrites everything. No path can skip a changed bucket.
+  *
+  * Input identity: a SHA-256 over the canonical optimized plan of the
+  * bucketed input with the caller's `rowHash` (printed untruncated), the
+  * options of its file relations, the session time zone, and the sorted
+  * (path, length, modification time) of every file those relations listed.
+  * It is defined only for a deterministic plan whose every leaf is a listed
+  * file relation and which runs no user code (UDFs, typed Dataset
+  * functions); otherwise the record carries none and every re-stage takes
+  * the aggregate. Contract: input files are immutable once listed, which
+  * is every table format's contract. An in-place rewrite that keeps path,
+  * length and modification time is not detected; any other change to the
+  * files, the plan or the hash falls back to the aggregate.
   */
 object CheckpointedRunner {
 
@@ -79,14 +98,17 @@ object CheckpointedRunner {
     * changed buckets from the record on the driver instead of scanning the
     * table — the role Iceberg manifest stats play.
     *
-    * With `rowHash`, a compare-then-write: one aggregate job computes per
-    * bucket (rows, `rowHash` fingerprint, layout fingerprint over EVERY
-    * staged column — a kept bucket's files must equal what a full restage
-    * would write, and `rowHash` may skip columns). Buckets whose (rows,
-    * layout) match the committed record keep their files; only added or
-    * changed buckets are rewritten (per-write dynamic overwrite) and removed
-    * buckets' directories deleted. No committed record, or one for other
-    * keys, bucket count or schema, means a full static overwrite. */
+    * With `rowHash`, a compare-then-write: when the committed record's input
+    * identity equals the input's (same listed files through the same plan
+    * and `rowHash`), the committed layout stands and nothing runs. Otherwise
+    * one aggregate job computes per bucket (rows, `rowHash` fingerprint,
+    * layout fingerprint over EVERY staged column — a kept bucket's files
+    * must equal what a full restage would write, and `rowHash` may skip
+    * columns). Buckets whose (rows, layout) match the committed record keep
+    * their files; only added or changed buckets are rewritten (per-write
+    * dynamic overwrite) and removed buckets' directories deleted. No
+    * committed record, or one for other keys, bucket count or schema, means
+    * a full static overwrite. */
   def stage(
       df: DataFrame, keyCols: Seq[String], numBuckets: Int, stagingDir: String,
       rowHash: Option[Column]): Unit = {
@@ -107,12 +129,21 @@ object CheckpointedRunner {
 
   private final case class BucketStats(rows: Long, fingerprint: Long, layout: Long)
 
-  private final case class StagingIdentity(keyCols: Seq[String], numBuckets: Int, schema: String)
+  private final case class StagingIdentity(keyCols: Seq[String], numBuckets: Int, schema: String) {
+    /** The staged table as a parquet read sees it, partition column last. */
+    def readSchema: StructType =
+      DataType.fromJson(schema).asInstanceOf[StructType].add("bucket", IntegerType)
+  }
+
+  /** A committed staging record; `input` is None when the stage that
+    * committed it had no input identity (or predates the field). */
+  private final case class Record(
+      identity: StagingIdentity, buckets: Map[Int, BucketStats], input: Option[String])
 
   private def writeStaged(bucketed: DataFrame, stagingDir: String, overwriteMode: String): Unit =
     bucketed.write.mode(SaveMode.Overwrite)
-      // per-write mode: run() sets the session to dynamic, which a full
-      // snapshot must not inherit (it would leave disappeared buckets' old
+      // per-write mode: a whole-layout stage must not inherit a caller's
+      // session-wide dynamic mode (it would leave disappeared buckets' old
       // partitions in place)
       .option("partitionOverwriteMode", overwriteMode)
       .partitionBy("bucket").parquet(stagingDir)
@@ -126,27 +157,33 @@ object CheckpointedRunner {
       case f if f.name != "bucket" => f.copy(nullable = true)
     })
     val identity = StagingIdentity(keyCols, numBuckets, dataSchema.json)
+    val input = inputIdentity(bucketed, h)
     val fs = MetaFile.fs(spark, stagingDir)
     val recordPath = new Path(stagingDir, StagingRecord)
     // the files on disk, read with the recorded schema (no inference job);
     // built after a write so its file listing is current. The record's
     // stats come from here, never from a second evaluation of the input.
-    def onDisk(): DataFrame =
-      spark.read.schema(dataSchema.add("bucket", IntegerType)).parquet(stagingDir)
-    readRecord(spark, stagingDir).filter(_._1 == identity) match {
+    def onDisk(): DataFrame = spark.read.schema(identity.readSchema).parquet(stagingDir)
+    readRecord(spark, stagingDir).filter(_.identity == identity) match {
+      case Some(r) if input.isDefined && r.input == input =>
+        // the committed files were staged from these very input files
+        // through this plan and hash: they stand, and so does the record
       case None =>
         fs.delete(recordPath, false)
         writeStaged(bucketed, stagingDir, "static")
-        writeRecord(spark, stagingDir, identity, bucketStats(onDisk(), h))
-      case Some((_, committed)) =>
+        writeRecord(spark, stagingDir, identity, bucketStats(onDisk(), h), input)
+      case Some(r) =>
+        val committed = r.buckets
         val current = bucketStats(bucketed, h)
         val changed = current.filter { case (b, s) =>
           !committed.get(b).exists(c => c.rows == s.rows && c.layout == s.layout)
         }.keys.toSeq.sorted
         val removed = committed.keySet -- current.keySet
         if (changed.isEmpty && removed.isEmpty) {
-          // same files; only a moved caller fingerprint rewrites the record
-          if (current != committed) writeRecord(spark, stagingDir, identity, current)
+          // same files; a moved caller fingerprint or input identity only
+          // rewrites the record
+          if (current != committed || r.input != input)
+            writeRecord(spark, stagingDir, identity, current, input)
         } else {
           fs.delete(recordPath, false)
           removed.foreach(b => fs.delete(new Path(stagingDir, s"bucket=$b"), true))
@@ -157,8 +194,44 @@ object CheckpointedRunner {
               writeStaged(bucketed.filter(isChanged), stagingDir, "dynamic")
               bucketStats(onDisk().filter(isChanged), h)
             }
-          writeRecord(spark, stagingDir, identity, current -- changed ++ rewritten)
+          writeRecord(spark, stagingDir, identity, current -- changed ++ rewritten, input)
         }
+    }
+  }
+
+  /** SHA-256 identity of `bucketed` with row hash `h` (see the object doc),
+    * computed on the driver from the plan and its relations' file listings;
+    * None when the plan's output could change while both stay the same. */
+  private def inputIdentity(bucketed: DataFrame, h: Column): Option[String] = {
+    // Spark 4.1's Column has no `.expr`: `h` enters through the plan
+    val plan = bucketed.withColumn("__graft_h", h).queryExecution.optimizedPlan
+    val nodes = plan.collectWithSubqueries { case p => p }
+    val userCode = nodes.exists {
+      case _: ObjectProducer | _: ObjectConsumer | _: TypedFilter | _: AppendColumns => true
+      case n => n.expressions.exists(_.exists(_.isInstanceOf[UserDefinedExpression]))
+    }
+    val relations = nodes.collect { case l: LeafNode => l }.map {
+      case LogicalRelation(r: HadoopFsRelation, _, _, false, _) => r.location match {
+        case index: PartitioningAwareFileIndex => Some(r -> index.allFiles())
+        case _ => None
+      }
+      case _ => None
+    }
+    if (userCode || !nodes.forall(_.deterministic) || relations.contains(None)) None
+    else {
+      val digest = java.security.MessageDigest.getInstance("SHA-256")
+      def add(s: String): Unit = digest.update((s + "\n").getBytes("UTF-8"))
+      // untruncated: a default treeString elides fields past 25 and would
+      // let two plans differing only there share an identity
+      add(plan.canonicalized.treeString(
+        verbose = true, addSuffix = false, maxFields = Int.MaxValue, printOperatorId = false))
+      add(bucketed.sparkSession.conf.get("spark.sql.session.timeZone"))
+      relations.flatten.map { case (r, _) => r.options.toSeq.sorted.mkString(",") }
+        .sorted.foreach(add)
+      relations.flatten.flatMap(_._2)
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).distinct.sorted
+        .foreach { case (p, len, mtime) => add(s"$p\t$len\t$mtime") }
+      Some(digest.digest().map("%02x".format(_)).mkString)
     }
   }
 
@@ -170,8 +243,7 @@ object CheckpointedRunner {
 
   /** The committed staging record, None when absent or unreadable (the safe
     * direction: a missing record means scan and rewrite, never skip). */
-  private def readRecord(
-      spark: SparkSession, stagingDir: String): Option[(StagingIdentity, Map[Int, BucketStats])] =
+  private def readRecord(spark: SparkSession, stagingDir: String): Option[Record] =
     try {
       import scala.jdk.CollectionConverters._
       MetaFile.readJson(spark, s"$stagingDir/$StagingRecord", "", classOf[JsonNode])
@@ -179,19 +251,29 @@ object CheckpointedRunner {
         .map { m =>
           val identity = StagingIdentity(m.get("keys").elements().asScala.map(_.asText()).toSeq,
             m.get("num_buckets").intValue(), m.get("schema").asText())
-          identity -> m.get("buckets").elements().asScala.map { b =>
-            b.get(0).intValue() -> BucketStats(b.get(1).longValue(), b.get(2).longValue(),
-              b.get(3).longValue())
-          }.toMap
+          Record(identity,
+            m.get("buckets").elements().asScala.map { b =>
+              b.get(0).intValue() -> BucketStats(b.get(1).longValue(), b.get(2).longValue(),
+                b.get(3).longValue())
+            }.toMap,
+            Option(m.get("input")).filter(_.isTextual).map(_.asText()))
         }
     } catch { case scala.util.control.NonFatal(_) => None }
 
+  /** The committed record when it describes a layout of `keyCols` over
+    * `numBuckets` buckets. */
+  private def recordFor(
+      spark: SparkSession, stagingDir: String, keyCols: Seq[String], numBuckets: Int): Option[Record] =
+    readRecord(spark, stagingDir)
+      .filter(r => r.identity.keyCols == keyCols && r.identity.numBuckets == numBuckets)
+
   private def writeRecord(
       spark: SparkSession, stagingDir: String, identity: StagingIdentity,
-      buckets: Map[Int, BucketStats]): Unit =
+      buckets: Map[Int, BucketStats], input: Option[String]): Unit =
     MetaFile.writeJson(spark, s"$stagingDir/$StagingRecord", Map(
       "version" -> StagingRecordVersion, "keys" -> identity.keyCols,
       "num_buckets" -> identity.numBuckets, "schema" -> identity.schema,
+      "input" -> input.orNull,
       "buckets" -> buckets.toSeq.sortBy(_._1).map { case (b, s) =>
         Seq(b.toLong, s.rows, s.fingerprint, s.layout)
       }))
@@ -273,7 +355,8 @@ object CheckpointedRunner {
     val done = completedBuckets(spark, manifestDir)
     val pending = (0 until numBuckets).filterNot(done).take(maxBuckets)
     runCore(spark, stagingDir, manifestDir, outDir, numBuckets, process,
-      sortCols, runId, keyCols, pending, statsByBucket = None)
+      sortCols, runId, keyCols, pending, statsByBucket = None,
+      stagedSchema = recordFor(spark, stagingDir, keyCols, numBuckets).map(_.identity.readSchema))
   }
 
   private def runCore(
@@ -287,11 +370,12 @@ object CheckpointedRunner {
       runId: String,
       keyCols: Seq[String],
       pending: Seq[Int],
-      statsByBucket: Option[Map[Int, (Long, Long)]]): Seq[Int] = {
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+      statsByBucket: Option[Map[Int, (Long, Long)]],
+      stagedSchema: Option[StructType]): Seq[Int] = {
     if (pending.isEmpty) return Seq.empty
     val t0 = System.nanoTime()
-    val staged = spark.read.parquet(stagingDir)
+    // a committed staging record names the staged schema: no inference job
+    val staged = stagedSchema.fold(spark.read)(spark.read.schema).parquet(stagingDir)
     // partition-pruned scan: only pending bucket directories are read
     val in = staged.filter(col("bucket").isin(pending: _*))
     val bucketOf =
@@ -329,7 +413,10 @@ object CheckpointedRunner {
     out
       .repartition(math.max(pending.size, 1), col("bucket"))
       .sortWithinPartitions((col("bucket") +: sortCols.map(col)): _*)
-      .write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(outDir)
+      // per-write dynamic overwrite: only the pending buckets' partitions
+      // are replaced, and the caller's session conf is left as it was
+      .write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
+      .partitionBy("bucket").parquet(outDir)
     // manifest metrics from column-pruned aggregates over the SAME data the
     // job touched (input buckets + the small sink), not per-bucket rescans;
     // incremental callers already hold per-bucket (rows, fingerprint) from
@@ -342,15 +429,19 @@ object CheckpointedRunner {
     val fpByBucket: Map[Int, java.lang.Long] =
       statsByBucket.fold(Map.empty[Int, java.lang.Long])(
         _.view.mapValues(v => java.lang.Long.valueOf(v._2)).toMap)
+    // read with the written frame's schema (as a parquet read sees it:
+    // every field nullable), so the count costs no inference job
+    val sinkSchema = StructType(out.schema.map(_.copy(nullable = true)))
     val violsByBucket =
-      try spark.read.parquet(outDir)
+      try spark.read.schema(sinkSchema).parquet(outDir)
         .filter(col("bucket").isin(pending: _*))
         .groupBy("bucket").agg(count(lit(1)).as("n"))
         .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
       catch {
-        // a sink with no rows at all has no parquet footers to infer a
-        // schema from (every pending bucket validated clean and any stale
-        // partitions were pre-deleted) — that IS the zero-violations case
+        // a sink without files (every pending bucket validated clean and
+        // any stale partitions were pre-deleted) reads as empty under the
+        // given schema; a missing sink directory raises — both are the
+        // zero-violations case
         case _: org.apache.spark.sql.AnalysisException => Map.empty[Int, Long]
       }
     val wallMs = (System.nanoTime() - t0) / 1000000
@@ -366,7 +457,10 @@ object CheckpointedRunner {
       spark: SparkSession, manifestDir: String,
       rows: Seq[org.apache.spark.sql.Row]): Unit = {
     import scala.jdk.CollectionConverters._
-    spark.createDataFrame(rows.asJava, manifestSchema)
+    // one file per commit: a local relation is otherwise split over up to
+    // leafNodeDefaultParallelism partitions, and every later manifest scan
+    // pays for each file
+    spark.createDataFrame(rows.asJava, manifestSchema).coalesce(1)
       .write.mode(SaveMode.Append).parquet(manifestDir)
   }
 
@@ -475,10 +569,9 @@ object CheckpointedRunner {
     // fingerprint scan. Mixing hash functions across snapshots degrades to
     // one full revalidation (fingerprints mismatch => everything pending),
     // never to a false skip.
+    val record = recordFor(spark, stagingDir, keyCols, numBuckets)
     val current: Map[Int, (Long, Long)] =
-      readRecord(spark, stagingDir)
-        .filter { case (id, _) => id.keyCols == keyCols && id.numBuckets == numBuckets }
-        .map(_._2.view.mapValues(s => (s.rows, s.fingerprint)).toMap)
+      record.map(_.buckets.view.mapValues(s => (s.rows, s.fingerprint)).toMap)
         .getOrElse {
           val staged = spark.read.parquet(stagingDir)
           bucketFingerprints(staged, rowHash.getOrElse(defaultRowHash(staged)))
@@ -511,6 +604,7 @@ object CheckpointedRunner {
       current.get(b).exists { case (n, fp) => !done.contains((b, n, fp)) })
       .take(maxBuckets)
     runCore(spark, stagingDir, manifestDir, outDir, numBuckets, process,
-      sortCols, runId, keyCols, pending, statsByBucket = Some(current))
+      sortCols, runId, keyCols, pending, statsByBucket = Some(current),
+      stagedSchema = record.map(_.identity.readSchema))
   }
 }

@@ -570,8 +570,8 @@ object Dedup {
     StructField("id", idType), StructField("band_idx", IntegerType),
     StructField("band_hash", LongType), StructField("band_bucket", IntegerType)))
 
-  // per-write static overwrite: a session-wide partitionOverwriteMode=dynamic
-  // (CheckpointedRunner sets it) would make a whole-layout rebuild keep any
+  // per-write static overwrite: a caller's session-wide
+  // partitionOverwriteMode=dynamic would make a whole-layout rebuild keep any
   // bucket partition absent from the new data — stale rows surviving an
   // "overwrite" silently (the CLAUDE.md staging bug, index edition)
   // one partition per bucket, spread over every core: an AQE-coalesced

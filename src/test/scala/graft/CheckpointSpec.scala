@@ -27,12 +27,14 @@ class CheckpointSpec extends SparkSpec {
     Some(xxhash64((keys ++ Seq("commit", "lang", "content_sha256")).map(col): _*))
   private def bucketOf = CheckpointedRunner.bucketExpr(keys, numBuckets)
 
+  /** The staging commit record's raw JSON text. */
+  private def recordText(staging: String): String = new String(Files.readAllBytes(
+    java.nio.file.Paths.get(staging, CheckpointedRunner.StagingRecord)), "UTF-8")
+
   /** Buckets listed in the staging commit record (a driver-side JSON file). */
   private def stagingRecordBuckets(staging: String): Seq[Int] = {
     import scala.jdk.CollectionConverters._
-    val text = new String(Files.readAllBytes(
-      java.nio.file.Paths.get(staging, CheckpointedRunner.StagingRecord)), "UTF-8")
-    graft.io.MetaFile.json.readTree(text).get("buckets").elements().asScala
+    graft.io.MetaFile.json.readTree(recordText(staging)).get("buckets").elements().asScala
       .map(_.get(0).intValue()).toSeq
   }
 
@@ -50,6 +52,32 @@ class CheckpointSpec extends SparkSpec {
   private def dataFiles(dir: String): Map[String, Set[String]] =
     listing(dir).keys.filter(_.endsWith(".parquet")).toSeq
       .groupBy(_.takeWhile(_ != '/')).view.mapValues(_.toSet).toMap
+
+  /** The record's input identity, None when it carries none. */
+  private def recordInput(staging: String): Option[String] =
+    Option(graft.io.MetaFile.json.readTree(recordText(staging)).get("input"))
+      .filter(_.isTextual).map(_.asText())
+
+  /** A generated code table written as parquet in `files` files, read back. */
+  private def parquetInput(root: String, rows: Long, files: Int): String = {
+    val dir = s"$root/input"
+    CodeTable.generate(spark, rows).repartition(files).write.parquet(dir)
+    dir
+  }
+
+  /** Bucket directories whose files differ between two listings. */
+  private def touchedDirs(before: Map[String, Long], after: Map[String, Long]): Set[String] =
+    (before.keySet ++ after.keySet).filter(f => before.get(f) != after.get(f))
+      .map(_.takeWhile(_ != '/')).filter(_.startsWith("bucket="))
+
+  /** Asserts the staged table at `staging` equals a static full restage of
+    * `snapshot`. */
+  private def sameAsFullRestage(staging: String, snapshot: DataFrame): Unit = {
+    val full = s"${tmp()}/full"
+    CheckpointedRunner.stage(snapshot, keys, numBuckets, full)
+    val (a, b) = (spark.read.parquet(staging), spark.read.parquet(full))
+    assert(a.exceptAll(b).count() === 0 && b.exceptAll(a).count() === 0)
+  }
 
   test("kill after k buckets, resume processes exactly the complement; outputs identical") {
     val root = tmp()
@@ -109,10 +137,11 @@ class CheckpointSpec extends SparkSpec {
         process, Seq("repo", "path", "constraint_id"), runId = "one-job",
         keyCols = Seq("repo", "path"))
       Thread.sleep(500) // let queued listener events drain
-      // write + rows-per-bucket agg + sink agg + manifest write, plus AQE
-      // sub-jobs and parquet footer jobs — bounded (~9), NOT proportional to
+      // the staged table's schema inference (a plain stage keeps no
+      // record), then write, rows-per-bucket agg and sink agg (each with its
+      // AQE shuffle-map job) and the manifest write: 8, NOT proportional to
       // the 8 buckets (the round-1 loop launched ~4 jobs x 8 buckets = 32)
-      assert(jobs.get() <= 12, s"expected a bounded job count, got ${jobs.get()}")
+      assert(jobs.get() <= 8, s"expected a bounded job count, got ${jobs.get()}")
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
@@ -339,40 +368,29 @@ class CheckpointSpec extends SparkSpec {
     val staging = s"$root/staging"
     val df = CodeTable.generate(spark, 2000)
     CheckpointedRunner.stage(df, keys, numBuckets, staging, narrowHash)
-    def touchedDirs(before: Map[String, Long]): Set[String] = {
-      val after = listing(staging)
-      (before.keySet ++ after.keySet).filter(f => before.get(f) != after.get(f))
-        .map(_.takeWhile(_ != '/')).filter(_.startsWith("bucket="))
-    }
-    def sameAsFullRestage(snapshot: DataFrame): Unit = {
-      val full = s"$root/full-${java.util.UUID.randomUUID()}"
-      CheckpointedRunner.stage(snapshot, keys, numBuckets, full)
-      val (a, b) = (spark.read.parquet(staging), spark.read.parquet(full))
-      assert(a.exceptAll(b).count() === 0 && b.exceptAll(a).count() === 0)
-    }
     // content edit inside bucket 3: the caller fingerprint moves with it
     val df2 = df.withColumn("content",
         when(bucketOf === 3, concat(col("content"), lit(" v2"))).otherwise(col("content")))
       .withColumn("content_sha256", sha2(col("content"), 256))
     val before2 = listing(staging)
     CheckpointedRunner.stage(df2, keys, numBuckets, staging, narrowHash)
-    assert(touchedDirs(before2) === Set("bucket=3"))
-    sameAsFullRestage(df2)
+    assert(touchedDirs(before2, listing(staging)) === Set("bucket=3"))
+    sameAsFullRestage(staging, df2)
     // an edit only to `id`, a column the caller fingerprint skips: the
     // layout fingerprint covers every staged column, so bucket 6 is rewritten
     val df3 = df2.withColumn("id", when(bucketOf === 6, col("id") + 100000L).otherwise(col("id")))
     val before3 = listing(staging)
     CheckpointedRunner.stage(df3, keys, numBuckets, staging, narrowHash)
-    assert(touchedDirs(before3) === Set("bucket=6"))
-    sameAsFullRestage(df3)
+    assert(touchedDirs(before3, listing(staging)) === Set("bucket=6"))
+    sameAsFullRestage(staging, df3)
     // every row of bucket 5 gone: its directory is deleted, nothing rewritten
     val df4 = df3.filter(bucketOf =!= 5)
     val before4 = listing(staging)
     CheckpointedRunner.stage(df4, keys, numBuckets, staging, narrowHash)
     assert(!new java.io.File(s"$staging/bucket=5").exists())
-    assert(touchedDirs(before4) === Set("bucket=5"))
+    assert(touchedDirs(before4, listing(staging)) === Set("bucket=5"))
     assert(!stagingRecordBuckets(staging).contains(5))
-    sameAsFullRestage(df4)
+    sameAsFullRestage(staging, df4)
   }
 
   test("an added column or a different bucket count restages fully") {
@@ -442,5 +460,145 @@ class CheckpointSpec extends SparkSpec {
       process, sortCols, runId = "dup-b", keyCols = keys) === Seq(dupBucket))
     assert(spark.read.parquet(staging).filter(both)
       .filter(col("content").endsWith(" edited twice")).count() === 2)
+  }
+
+  test("a redelivered parquet input skips its stage: no job, no write, the record unchanged") {
+    val root = tmp()
+    val staging = s"$root/staging"
+    val input = parquetInput(root, 2000, 4)
+    CheckpointedRunner.stage(spark.read.parquet(input), keys, numBuckets, staging, narrowHash)
+    assert(recordInput(staging).isDefined)
+    val before = listing(staging)
+    val record = recordText(staging)
+    val redelivered = spark.read.parquet(input) // the listing (and inference) happen here
+    val (jobs, _) = jobsDuring {
+      CheckpointedRunner.stage(redelivered, keys, numBuckets, staging, narrowHash)
+    }
+    assert(jobs === 0, s"a redelivered input ran $jobs job(s)")
+    assert(listing(staging) === before)
+    assert(recordText(staging) === record)
+  }
+
+  test("an input file rewritten in place runs the aggregate and restages only the buckets it touched") {
+    val root = tmp()
+    val staging = s"$root/staging"
+    val input = parquetInput(root, 2000, 4)
+    CheckpointedRunner.stage(spark.read.parquet(input), keys, numBuckets, staging, narrowHash)
+    // rewrite one input file under its own path: bucket 3's rows in it get
+    // new content, and the file a new modification time
+    val file = new java.io.File(input).listFiles().filter(_.getName.startsWith("part-")).head
+    val edited = s"$root/edited"
+    spark.read.parquet(file.getPath)
+      .withColumn("content",
+        when(bucketOf === 3, concat(col("content"), lit(" v2"))).otherwise(col("content")))
+      .withColumn("content_sha256", sha2(col("content"), 256))
+      .coalesce(1).write.parquet(edited)
+    val replacement = new java.io.File(edited).listFiles().filter(_.getName.startsWith("part-")).head
+    val mtime = file.lastModified()
+    Files.copy(replacement.toPath, file.toPath, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    // the local file system's checksum of the old content would fail reads
+    Files.deleteIfExists(java.nio.file.Paths.get(file.getParent, s".${file.getName}.crc"))
+    assert(file.setLastModified(mtime + 5000))
+    val snapshot = spark.read.parquet(input)
+    assert(snapshot.filter(col("content").endsWith(" v2")).count() > 0)
+    val before = listing(staging)
+    val (jobs, _) = jobsDuring {
+      CheckpointedRunner.stage(snapshot, keys, numBuckets, staging, narrowHash)
+    }
+    assert(jobs > 0, "the rewritten file was trusted without the aggregate")
+    assert(touchedDirs(before, listing(staging)) === Set("bucket=3"))
+    sameAsFullRestage(staging, snapshot)
+  }
+
+  test("the same input files through another plan or another row hash do not skip") {
+    val root = tmp()
+    val staging = s"$root/staging"
+    val input = parquetInput(root, 2000, 4)
+    CheckpointedRunner.stage(spark.read.parquet(input), keys, numBuckets, staging, narrowHash)
+    val first = recordInput(staging)
+    // a filter that keeps every row: same files, same staged data, new plan
+    val filtered = spark.read.parquet(input).filter(col("id") >= 0)
+    val (filterJobs, _) = jobsDuring {
+      CheckpointedRunner.stage(filtered, keys, numBuckets, staging, narrowHash)
+    }
+    assert(filterJobs > 0, "another plan over the same files skipped the aggregate")
+    val second = recordInput(staging)
+    assert(second.isDefined && second != first)
+    // another caller hash over the same files and plan
+    val otherHash = Some(xxhash64(col("repo"), col("path")))
+    val (hashJobs, _) = jobsDuring {
+      CheckpointedRunner.stage(spark.read.parquet(input).filter(col("id") >= 0), keys,
+        numBuckets, staging, otherHash)
+    }
+    assert(hashJobs > 0, "another row hash skipped the aggregate")
+    assert(recordInput(staging).isDefined && recordInput(staging) != second)
+  }
+
+  test("a plan with a UDF or a non-file leaf never records an input identity") {
+    val root = tmp()
+    val input = parquetInput(root, 1000, 2)
+    val upper = udf((s: String) => s.toUpperCase)
+    val withUdf = spark.read.parquet(input).withColumn("lang", upper(col("lang")))
+    val udfStaging = s"$root/udf"
+    CheckpointedRunner.stage(withUdf, keys, numBuckets, udfStaging, narrowHash)
+    assert(recordInput(udfStaging).isEmpty)
+    val (udfJobs, _) = jobsDuring {
+      CheckpointedRunner.stage(withUdf, keys, numBuckets, udfStaging, narrowHash)
+    }
+    assert(udfJobs > 0, "a UDF plan skipped the aggregate")
+    val generated = s"$root/generated"
+    CheckpointedRunner.stage(CodeTable.generate(spark, 1000), keys, numBuckets, generated, narrowHash)
+    assert(recordInput(generated).isEmpty)
+  }
+
+  test("a record without an input identity takes the aggregate once, then skips") {
+    val root = tmp()
+    val staging = s"$root/staging"
+    val input = parquetInput(root, 2000, 4)
+    CheckpointedRunner.stage(spark.read.parquet(input), keys, numBuckets, staging, narrowHash)
+    // the record as a stage before the input identity existed wrote it
+    val record = graft.io.MetaFile.json.readTree(recordText(staging))
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    record.remove("input")
+    graft.io.MetaFile.writeJson(spark, s"$staging/${CheckpointedRunner.StagingRecord}", record)
+    val before = dataFiles(staging)
+    val once = spark.read.parquet(input)
+    val (firstJobs, _) = jobsDuring {
+      CheckpointedRunner.stage(once, keys, numBuckets, staging, narrowHash)
+    }
+    assert(firstJobs > 0, "a record without an input identity was trusted")
+    assert(dataFiles(staging) === before)
+    assert(recordInput(staging).isDefined)
+    val twice = spark.read.parquet(input)
+    val (secondJobs, _) = jobsDuring {
+      CheckpointedRunner.stage(twice, keys, numBuckets, staging, narrowHash)
+    }
+    assert(secondJobs === 0)
+  }
+
+  test("the runner leaves the session's partitionOverwriteMode as it found it") {
+    val conf = "spark.sql.sources.partitionOverwriteMode"
+    val saved = spark.conf.getOption(conf)
+    spark.conf.set(conf, "static")
+    try {
+      val root = tmp()
+      val staging = s"$root/staging"
+      CheckpointedRunner.stage(CodeTable.generate(spark, 1000), keys, numBuckets, staging, narrowHash)
+      CheckpointedRunner.run(spark, staging, s"$root/m1", s"$root/out1", numBuckets,
+        process, sortCols, runId = "conf-a", keyCols = keys)
+      assert(spark.conf.get(conf) === "static")
+      CheckpointedRunner.incrementalRun(spark, staging, s"$root/m2", s"$root/out2", numBuckets,
+        process, sortCols, runId = "conf-b", keyCols = keys)
+      assert(spark.conf.get(conf) === "static")
+    } finally saved.fold(spark.conf.unset(conf))(spark.conf.set(conf, _))
+  }
+
+  test("a run commits its manifest rows as one file") {
+    val root = tmp()
+    val staging = s"$root/staging"; val m = s"$root/m"
+    CheckpointedRunner.stage(CodeTable.generate(spark, 1000), keys, numBuckets, staging)
+    assert(CheckpointedRunner.run(spark, staging, m, s"$root/out", numBuckets,
+      process, sortCols, runId = "one-file", keyCols = keys).size === numBuckets)
+    assert(new java.io.File(m).list().count(_.startsWith("part-")) === 1)
   }
 }
