@@ -2,11 +2,19 @@ package graft.checkpoint
 
 import com.fasterxml.jackson.databind.JsonNode
 import graft.io.MetaFile
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
+import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
+import org.apache.parquet.hadoop.metadata.{CompressionCodecName, ParquetMetadata}
+import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.UserDefinedExpression
 import org.apache.spark.sql.catalyst.plans.logical.{AppendColumns, LeafNode, ObjectConsumer, ObjectProducer, TypedFilter}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, SparkToParquetSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -27,10 +35,13 @@ import org.apache.spark.sql.types._
   * and a plan print on the driver: no job, no write, no read-back. Any other
   * re-stage pays one aggregate over the input that hashes every column (the
   * layout fingerprint), plus — only when buckets changed — a second read of
-  * the input for the write of THOSE buckets and a full-width read-back of
-  * them for the record. An unchanged snapshot under a new identity writes
-  * nothing but the record; a snapshot that moved k of n buckets rewrites k
-  * bucket directories, not the table. With no committed record (the first
+  * the input for the write of THOSE buckets. The record takes the rewritten
+  * buckets' stats from the aggregate when the input has an identity (the
+  * write evaluated the same plan over the same files); without one it pays
+  * a full-width read-back of them. An unchanged snapshot under a new
+  * identity writes nothing but the record; a snapshot that moved k of n
+  * buckets rewrites k bucket directories, not the table. With no committed
+  * record (the first
   * fingerprinted stage, another staging identity, a crash between uncommit
   * and commit) it is a static full overwrite plus a full-width read-back of
   * every bucket — wider than the caller's `rowHash` columns, since the
@@ -38,20 +49,22 @@ import org.apache.spark.sql.types._
   *
   * The gain rests on k being small: edits clustered by bucket key. Edits
   * scattered over keys touch nearly every bucket (a few dozen over 16
-  * buckets do), and then the aggregate and the wide read-back come on top
-  * of a full write: on a 50k-row code table on 4 cores such a restage's
-  * stage costs about 1.1 s against 0.9 s for a plain write with a narrow
-  * read-back, though the whole incremental call (which revalidates every
-  * touched bucket) moves by under 5%. A static overwrite instead of the
-  * dynamic one in that case measured no faster, so there is one path.
+  * buckets do), and then the aggregate comes on top of a full write (plus
+  * the wide read-back for an input without an identity): on a 50k-row code
+  * table on 4 cores such a restage's stage, read-back included, cost about
+  * 1.1 s against 0.9 s for a plain write with a narrow read-back, though the
+  * whole incremental call (which revalidates every touched bucket) moved by
+  * under 5%. A static overwrite instead of the dynamic one in that case
+  * measured no faster, so there is one path.
   *
   * Staging commit record ([[StagingRecord]], one driver-written JSON file):
   * identity (format version, key columns, `numBuckets`, staged schema),
   * the input identity of the stage that committed it, plus per-bucket
   * (rows, caller fingerprint, layout fingerprint) describing the files on
   * disk. Every staged-data change runs uncommit (delete the record) ->
-  * change files -> commit (write the record from a read of the written
-  * files), so a kill in between leaves no record: the next
+  * change files -> commit (write the record from the aggregate when the
+  * input has an identity, else from a read of the written files), so a kill
+  * in between leaves no record: the next
   * [[incrementalRun]] falls back to scanning the staged data and the next
   * re-stage rewrites everything. No path can skip a changed bucket.
   *
@@ -66,13 +79,25 @@ import org.apache.spark.sql.types._
   * is every table format's contract. An in-place rewrite that keeps path,
   * length and modification time is not detected; any other change to the
   * files, the plan or the hash falls back to the aggregate.
+  *
+  * Manifest format: an append-only directory of parquet files with rows of
+  * [[manifestSchema]], one file per commit, written and read on the driver
+  * through parquet-hadoop (no Spark job). A commit lands in a hidden temp
+  * file that is renamed to a `part-` name, and its footer carries Spark's
+  * row-schema key (`org.apache.spark.sql.parquet.row.metadata`), so Spark
+  * reads it — schema-given or inferred — exactly like the Spark-written
+  * files of earlier versions, which stay readable beside it. One file per
+  * commit means the directory grows by one small file per run; nothing
+  * compacts it yet.
   */
 object CheckpointedRunner {
 
   /** Manifest row per completed bucket. `wall_ms` is the wall time of the
     * (multi-bucket) JOB that completed the bucket — shared by every row of one
     * run invocation, NOT per-bucket work (buckets complete together in one
-    * write job; summing wall_ms across rows double-counts). `fingerprint` is
+    * write job; summing wall_ms across rows double-counts). `violations` is
+    * the bucket's row count in the sink after the run, from the sink files'
+    * footers: exact, and 0 for a bucket validated clean. `fingerprint` is
     * the order-independent content fingerprint of the bucket's INPUT at the
     * time it was validated (null for runs launched without one) — the
     * content-addressed completion key [[incrementalRun]] matches against. */
@@ -161,8 +186,9 @@ object CheckpointedRunner {
     val fs = MetaFile.fs(spark, stagingDir)
     val recordPath = new Path(stagingDir, StagingRecord)
     // the files on disk, read with the recorded schema (no inference job);
-    // built after a write so its file listing is current. The record's
-    // stats come from here, never from a second evaluation of the input.
+    // built after a write so its file listing is current. Unless the input
+    // has an identity, the record's stats for written buckets come from
+    // here, never from a second evaluation of the input.
     def onDisk(): DataFrame = spark.read.schema(identity.readSchema).parquet(stagingDir)
     readRecord(spark, stagingDir).filter(_.identity == identity) match {
       case Some(r) if input.isDefined && r.input == input =>
@@ -187,14 +213,17 @@ object CheckpointedRunner {
         } else {
           fs.delete(recordPath, false)
           removed.foreach(b => fs.delete(new Path(stagingDir, s"bucket=$b"), true))
-          val rewritten =
-            if (changed.isEmpty) Map.empty[Int, BucketStats]
-            else {
-              val isChanged = col("bucket").isin(changed: _*)
-              writeStaged(bucketed.filter(isChanged), stagingDir, "dynamic")
-              bucketStats(onDisk().filter(isChanged), h)
-            }
-          writeRecord(spark, stagingDir, identity, current -- changed ++ rewritten, input)
+          if (changed.nonEmpty)
+            writeStaged(bucketed.filter(memberOf(changed, col("bucket"))), stagingDir, "dynamic")
+          // with an input identity the write evaluated the aggregate's plan
+          // over the aggregate's files, so the aggregate's stats describe the
+          // written buckets. Without one (generated frames, user code) the
+          // written files are the only truth: read them back.
+          val stats =
+            if (changed.isEmpty || input.isDefined) current
+            else current -- changed ++
+              bucketStats(onDisk().filter(col("bucket").isin(changed: _*)), h)
+          writeRecord(spark, stagingDir, identity, stats, input)
         }
     }
   }
@@ -300,18 +329,20 @@ object CheckpointedRunner {
     doneRows(spark, manifestDir).map(_._1)
 
   /** Distinct done manifest rows as (bucket, rows, fingerprint — None for
-    * runs launched without one). One schema-given scan collected and
-    * deduplicated on the driver: the manifest holds a few rows per bucket
-    * per snapshot, so a distributed distinct() would only add an exchange
-    * and a second job. */
-  private def doneRows(spark: SparkSession, manifestDir: String): Set[(Int, Long, Option[Long])] =
-    if (!MetaFile.fs(spark, manifestDir).exists(new Path(manifestDir))) Set.empty
-    else spark.read.schema(manifestSchema).parquet(manifestDir)
-      .filter(col("status") === "done")
-      .select("bucket", "rows", "fingerprint")
-      .collect().iterator
-      .map(r => (r.getInt(0), r.getLong(1), Option.when(!r.isNullAt(2))(r.getLong(2))))
+    * runs launched without one), read from the manifest's files on the
+    * driver: no job. The manifest holds a few rows per bucket per snapshot
+    * in one file per commit, Spark-written or driver-written alike. */
+  private def doneRows(spark: SparkSession, manifestDir: String): Set[(Int, Long, Option[Long])] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    // a null (or, in an old file, absent) field has no value
+    def has(g: Group, field: String) =
+      g.getType.containsField(field) && g.getFieldRepetitionCount(field) > 0
+    parquetFiles(conf, new Path(manifestDir)).iterator.flatMap(readGroups(conf, _))
+      .filter(g => has(g, "status") && g.getString("status", 0) == "done")
+      .map(g => (g.getInteger("bucket", 0), g.getLong("rows", 0),
+        Option.when(has(g, "fingerprint"))(g.getLong("fingerprint", 0))))
       .toSet
+  }
 
   /** Process ALL pending buckets in ONE write job (the round-1 version looped
     * buckets on the driver with a coalesce(1) write and two rescans per bucket
@@ -327,9 +358,16 @@ object CheckpointedRunner {
     * Shape: one partition-pruned scan of the pending buckets -> process ->
     * re-derive each output row's bucket from its key columns -> one
     * dynamic-overwrite write hash-clustered by bucket (each bucket lands
-    * contiguous + sorted in exactly one task => byte-stable resume), then TWO
-    * cheap aggregate jobs (input rows per bucket, sink rows per bucket) feed
-    * the manifest — never a per-bucket rescan.
+    * contiguous + sorted in exactly one task => byte-stable resume).
+    *
+    * Cost model: the manifest, the staged schema (a staged file's footer
+    * when no staging record names it) and the sink's per-bucket violation
+    * counts (its footers: each pending bucket is one task's files) are read
+    * on the driver, and the manifest commit is a driver write. The jobs are
+    * the write (with AQE's shuffle-map job) and one column-pruned count of
+    * the pending input buckets' rows (with its shuffle-map job) — never a
+    * per-bucket rescan. [[incrementalRun]] already holds the rows, so it
+    * runs the write alone.
     *
     * Kill semantics: the manifest commits strictly after the write job, so a
     * kill anywhere re-processes only uncommitted buckets on resume and the
@@ -374,9 +412,13 @@ object CheckpointedRunner {
       stagedSchema: Option[StructType]): Seq[Int] = {
     if (pending.isEmpty) return Seq.empty
     val t0 = System.nanoTime()
-    // a committed staging record names the staged schema: no inference job
-    val staged = stagedSchema.fold(spark.read)(spark.read.schema).parquet(stagingDir)
-    // partition-pruned scan: only pending bucket directories are read
+    val conf = spark.sparkContext.hadoopConfiguration
+    // a committed staging record names the staged schema, else a staged
+    // file's footer does: no inference job either way
+    val staged = stagedSchema.orElse(footerSchema(conf, new Path(stagingDir)))
+      .fold(spark.read)(spark.read.schema).parquet(stagingDir)
+    // partition-pruned scan: only pending bucket directories are read (a
+    // partition-only filter is never codegen'd, so `isin` compiles nothing)
     val in = staged.filter(col("bucket").isin(pending: _*))
     val bucketOf =
       pmod(xxhash64(keyCols.map(col): _*), lit(numBuckets)).cast(IntegerType)
@@ -386,7 +428,7 @@ object CheckpointedRunner {
     // replace a COMPLETED bucket's committed output with partial data. A
     // per-row raise_error fails the write job before its commit (and before
     // the manifest append), so completed buckets stay intact.
-    val guardedBucket = when(bucketOf.isin(pending: _*), bucketOf)
+    val guardedBucket = when(memberOf(pending, bucketOf), bucketOf)
       .otherwise(raise_error(concat(
         lit("CheckpointedRunner: process() emitted a row whose keys map to non-pending bucket "),
         bucketOf.cast(StringType),
@@ -395,7 +437,7 @@ object CheckpointedRunner {
     // Delete pending buckets' EXISTING output partitions before the write:
     // dynamic overwrite only replaces partitions that receive rows, so a
     // re-validated bucket whose new output is EMPTY (all violations fixed)
-    // would otherwise keep its stale rows forever — and the sink aggregate
+    // would otherwise keep its stale rows forever — and the footer counts
     // below would even count them into the manifest. Pre-delete is
     // kill-idempotent: a pending bucket is by definition uncommitted or
     // stale, and a kill after the delete leaves it pending for the resume.
@@ -417,10 +459,9 @@ object CheckpointedRunner {
       // are replaced, and the caller's session conf is left as it was
       .write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
       .partitionBy("bucket").parquet(outDir)
-    // manifest metrics from column-pruned aggregates over the SAME data the
-    // job touched (input buckets + the small sink), not per-bucket rescans;
-    // incremental callers already hold per-bucket (rows, fingerprint) from
-    // their pending-selection scan, so the input aggregate is skipped there
+    // manifest metrics: incremental callers already hold per-bucket (rows,
+    // fingerprint) from their pending selection; a plain run pays one
+    // column-pruned count over the pending input buckets
     val rowsByBucket = statsByBucket match {
       case Some(stats) => stats.view.mapValues(_._1).toMap
       case None => in.groupBy("bucket").agg(count(lit(1)).as("n"))
@@ -429,40 +470,111 @@ object CheckpointedRunner {
     val fpByBucket: Map[Int, java.lang.Long] =
       statsByBucket.fold(Map.empty[Int, java.lang.Long])(
         _.view.mapValues(v => java.lang.Long.valueOf(v._2)).toMap)
-    // read with the written frame's schema (as a parquet read sees it:
-    // every field nullable), so the count costs no inference job
-    val sinkSchema = StructType(out.schema.map(_.copy(nullable = true)))
-    val violsByBucket =
-      try spark.read.schema(sinkSchema).parquet(outDir)
-        .filter(col("bucket").isin(pending: _*))
-        .groupBy("bucket").agg(count(lit(1)).as("n"))
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      catch {
-        // a sink without files (every pending bucket validated clean and
-        // any stale partitions were pre-deleted) reads as empty under the
-        // given schema; a missing sink directory raises — both are the
-        // zero-violations case
-        case _: org.apache.spark.sql.AnalysisException => Map.empty[Int, Long]
-      }
+    // violations per bucket from the sink's footers, on the driver: each
+    // pending bucket landed in one task of the write, so O(pending) footers;
+    // a bucket validated clean has no directory (pre-deleted above) and 0
     val wallMs = (System.nanoTime() - t0) / 1000000
     appendManifest(spark, manifestDir, pending.map { b =>
-      org.apache.spark.sql.Row(b, runId, stagingDir,
-        rowsByBucket.getOrElse(b, 0L), violsByBucket.getOrElse(b, 0L), wallMs,
-        "done", fpByBucket.getOrElse(b, null))
+      Row(b, runId, stagingDir, rowsByBucket.getOrElse(b, 0L),
+        rowCount(conf, new Path(outDir, s"bucket=$b")),
+        wallMs, "done", fpByBucket.getOrElse(b, null))
     })
     pending
   }
 
-  private def appendManifest(
-      spark: SparkSession, manifestDir: String,
-      rows: Seq[org.apache.spark.sql.Row]): Unit = {
+  /** Commits `rows` as one new manifest file, written on the driver: a
+    * hidden temp file renamed to a `part-` name, so a reader sees the whole
+    * file or none of it (a kill before the rename leaves a hidden file no
+    * reader lists). Its footer carries Spark's row schema, so every
+    * Spark read of the manifest, schema-given or inferred, sees the same
+    * table as over the Spark-written files of earlier versions. */
+  private def appendManifest(spark: SparkSession, manifestDir: String, rows: Seq[Row]): Unit = {
     import scala.jdk.CollectionConverters._
-    // one file per commit: a local relation is otherwise split over up to
-    // leafNodeDefaultParallelism partitions, and every later manifest scan
-    // pays for each file
-    spark.createDataFrame(rows.asJava, manifestSchema).coalesce(1)
-      .write.mode(SaveMode.Append).parquet(manifestDir)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dir = new Path(manifestDir)
+    val name = s"part-00000-${java.util.UUID.randomUUID()}-c000.snappy.parquet"
+    val tmp = new Path(dir, s".$name.tmp")
+    val schema = new SparkToParquetSchemaConverter().convert(manifestSchema)
+    val writer = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(tmp, conf))
+      .withConf(conf).withType(schema)
+      .withCompressionCodec(CompressionCodecName.SNAPPY)
+      .withExtraMetaData(Map(
+        ParquetReadSupport.SPARK_METADATA_KEY -> manifestSchema.json,
+        "org.apache.spark.version" -> org.apache.spark.SPARK_VERSION_SHORT).asJava)
+      .build()
+    val groups = new SimpleGroupFactory(schema)
+    try rows.foreach { r =>
+      val g = groups.newGroup()
+      manifestSchema.fields.zipWithIndex.filterNot { case (_, i) => r.isNullAt(i) }.foreach {
+        case (f, i) => f.dataType match {
+          case IntegerType => g.append(f.name, r.getInt(i))
+          case LongType => g.append(f.name, r.getLong(i))
+          case _ => g.append(f.name, r.getString(i))
+        }
+      }
+      writer.write(g)
+    } finally writer.close()
+    require(dir.getFileSystem(conf).rename(tmp, new Path(dir, name)),
+      s"manifest commit failed: $tmp -> $name")
   }
+
+  // --------------------------------------------------------------------------
+  // Driver-side parquet metadata reads
+  // --------------------------------------------------------------------------
+
+  /** The data files of a parquet directory as Spark's reader lists them
+    * (names starting with `_` or `.` are hidden); none when it is absent. */
+  private def parquetFiles(conf: Configuration, dir: Path): Seq[FileStatus] = {
+    val fs = dir.getFileSystem(conf)
+    if (!fs.exists(dir)) Seq.empty
+    else fs.listStatus(dir).toSeq.filter { s =>
+      val name = s.getPath.getName
+      s.isFile && !name.startsWith("_") && !name.startsWith(".")
+    }
+  }
+
+  private def footer(conf: Configuration, file: FileStatus): ParquetMetadata = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
+    try reader.getFooter finally reader.close()
+  }
+
+  /** Rows of a parquet directory's files, from their footers. */
+  private def rowCount(conf: Configuration, dir: Path): Long = {
+    import scala.jdk.CollectionConverters._
+    parquetFiles(conf, dir).map(footer(conf, _).getBlocks.asScala.map(_.getRowCount).sum).sum
+  }
+
+  /** Every record of one parquet file, as parquet-hadoop's example groups. */
+  private def readGroups(conf: Configuration, file: FileStatus): Seq[Group] = {
+    val reader = ParquetReader.builder(new GroupReadSupport(), file.getPath).withConf(conf).build()
+    try Iterator.continually(reader.read()).takeWhile(_ != null).toVector
+    finally reader.close()
+  }
+
+  /** The staged table's schema (partition column included) from one staged
+    * file's footer, as Spark wrote it; None when there is no staged file or
+    * its footer lacks Spark's row schema (then the read infers it). */
+  private def footerSchema(conf: Configuration, stagingDir: Path): Option[StructType] = {
+    val fs = stagingDir.getFileSystem(conf)
+    val buckets =
+      if (!fs.exists(stagingDir)) Iterator.empty
+      else fs.listStatus(stagingDir).iterator
+        .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
+    buckets.flatMap(b => parquetFiles(conf, b.getPath)).nextOption()
+      .flatMap(f => Option(footer(conf, f).getFileMetaData.getKeyValueMetaData
+        .get(ParquetReadSupport.SPARK_METADATA_KEY)))
+      .map { json =>
+        val data = DataType.fromJson(json).asInstanceOf[StructType]
+        StructType(data.map(_.copy(nullable = true))).add("bucket", IntegerType)
+      }
+  }
+
+  /** `c IN ids` for an expression inside generated code: a literal array is
+    * a reference object of the generated class, so every id set runs the
+    * same class, where `isin` over ints inlines the ids as Java literals and
+    * compiles one class per set. Partition-only filters are never codegen'd
+    * and keep `isin`. */
+  private def memberOf(ids: Seq[Int], c: Column): Column = array_contains(typedLit(ids.toArray), c)
 
   // --------------------------------------------------------------------------
   // Incremental (snapshot-diff) revalidation
@@ -544,9 +656,14 @@ object CheckpointedRunner {
     * Cost model: selection reads the staging commit record on the driver
     * (no job) when a fingerprinted [[stage]] committed one, else pays one
     * column-pruned fingerprint scan of the staged table (only `rowHash`'s
-    * columns are read); then one manifest scan + the validation job over
-    * changed buckets only. The per-bucket (rows, fingerprint) from selection
-    * is reused for the manifest — no second input aggregate.
+    * columns are read). The manifest is read on the driver, so a replay
+    * with a record runs no job at all. Changed buckets then cost the
+    * validation write alone (one job plus AQE's shuffle-map job): the
+    * per-bucket (rows, fingerprint) from selection is reused for the
+    * manifest, violations come from the sink's footers, and the manifest
+    * commit is a driver write. The pending set enters the generated code as
+    * a reference object, so every delta after the first reuses its classes
+    * while they stay in Spark's codegen cache.
     *
     * @param rowHash 64-bit row hash for the fallback scan (a committed
     *                staging record carries the stage's own fingerprints);
@@ -596,7 +713,7 @@ object CheckpointedRunner {
         fs.delete(new org.apache.hadoop.fs.Path(outRoot, s"bucket=$b"), true)
       }
       appendManifest(spark, manifestDir, removed.map { b =>
-        org.apache.spark.sql.Row(b, runId, stagingDir, 0L, 0L, 0L, "done",
+        Row(b, runId, stagingDir, 0L, 0L, 0L, "done",
           java.lang.Long.valueOf(0L))
       })
     }

@@ -3,7 +3,7 @@ package graft
 import graft.checkpoint.CheckpointedRunner
 import graft.run.Validator
 import graft.suite.CodeTable
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -65,6 +65,18 @@ class CheckpointSpec extends SparkSpec {
     dir
   }
 
+  /** `from`'s rows with bucket `b`'s content edited, written as parquet at
+    * `root/name`. */
+  private def editedInput(root: String, name: String, from: String, b: Int): String = {
+    val dir = s"$root/$name"
+    spark.read.parquet(from)
+      .withColumn("content",
+        when(bucketOf === b, concat(col("content"), lit(s" $name"))).otherwise(col("content")))
+      .withColumn("content_sha256", sha2(col("content"), 256))
+      .write.parquet(dir)
+    dir
+  }
+
   /** Bucket directories whose files differ between two listings. */
   private def touchedDirs(before: Map[String, Long], after: Map[String, Long]): Set[String] =
     (before.keySet ++ after.keySet).filter(f => before.get(f) != after.get(f))
@@ -120,7 +132,7 @@ class CheckpointSpec extends SparkSpec {
     assert(row.getAs[String]("status") === "done")
   }
 
-  test("multi-bucket run is ONE write job (+2 metric aggregates), not one per bucket") {
+  test("multi-bucket run is ONE write job plus one rows aggregate, not one per bucket") {
     // the round-1 runner launched 4 jobs PER bucket (process, count, write,
     // rescan) with coalesce(1) writes — serial and single-task at 100 TB scale
     val root = tmp()
@@ -137,11 +149,13 @@ class CheckpointSpec extends SparkSpec {
         process, Seq("repo", "path", "constraint_id"), runId = "one-job",
         keyCols = Seq("repo", "path"))
       Thread.sleep(500) // let queued listener events drain
-      // the staged table's schema inference (a plain stage keeps no
-      // record), then write, rows-per-bucket agg and sink agg (each with its
-      // AQE shuffle-map job) and the manifest write: 8, NOT proportional to
-      // the 8 buckets (the round-1 loop launched ~4 jobs x 8 buckets = 32)
-      assert(jobs.get() <= 8, s"expected a bounded job count, got ${jobs.get()}")
+      // the write and the rows-per-bucket aggregate, each with its AQE
+      // shuffle-map job: 4, NOT proportional to the 8 buckets (the round-1
+      // loop launched ~4 jobs x 8 buckets = 32). The staged schema comes
+      // from a staged file's footer (a plain stage keeps no record), the
+      // sink counts from the sink's footers and the manifest is written on
+      // the driver: none of them is a job.
+      assert(jobs.get() <= 4, s"expected a bounded job count, got ${jobs.get()}")
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
@@ -339,7 +353,7 @@ class CheckpointSpec extends SparkSpec {
     assert(one.count() < total)
   }
 
-  test("identical restage writes nothing and runs one aggregate; the replay's selection is one job") {
+  test("identical restage writes nothing; the replay's selection runs no job") {
     val root = tmp()
     val staging = s"$root/staging"; val out = s"$root/out"; val m = s"$root/m"
     val df = CodeTable.generate(spark, 2000)
@@ -360,7 +374,9 @@ class CheckpointSpec extends SparkSpec {
         process, sortCols, runId = "id-b", keyCols = keys)
     }
     assert(pending.isEmpty)
-    assert(runJobs === 1, s"replay selection ran $runJobs jobs (the manifest scan is the one)")
+    // the record, the manifest and the output listing are all read on the
+    // driver
+    assert(runJobs === 0, s"replay selection ran $runJobs job(s)")
   }
 
   test("change-only restage: a changed bucket rewrites only its directory, a removed one is deleted; staged table equals a full restage") {
@@ -600,5 +616,180 @@ class CheckpointSpec extends SparkSpec {
     assert(CheckpointedRunner.run(spark, staging, m, s"$root/out", numBuckets,
       process, sortCols, runId = "one-file", keyCols = keys).size === numBuckets)
     assert(new java.io.File(m).list().count(_.startsWith("part-")) === 1)
+  }
+
+  test("a parquet-input restage of one changed bucket runs the aggregate and the write, no read-back") {
+    val root = tmp()
+    val staging = s"$root/staging"
+    val input = parquetInput(root, 2000, 4)
+    CheckpointedRunner.stage(spark.read.parquet(input), keys, numBuckets, staging, narrowHash)
+    val snapshot = spark.read.parquet(editedInput(root, "v2", input, 3))
+    val before = listing(staging)
+    val (jobs, queries) = jobsDuring {
+      CheckpointedRunner.stage(snapshot, keys, numBuckets, staging, narrowHash)
+    }
+    // the input aggregate and bucket 3's write: the record takes the
+    // aggregate's stats for the rewritten bucket
+    assert(queries === 2, s"$jobs job(s) in $queries query execution(s)")
+    assert(touchedDirs(before, listing(staging)) === Set("bucket=3"))
+    sameAsFullRestage(staging, snapshot)
+    // the record a static full restage writes from a read of its own files
+    val full = s"$root/full"
+    CheckpointedRunner.stage(snapshot, keys, numBuckets, full, narrowHash)
+    assert(recordText(staging) === recordText(full))
+  }
+
+  test("a restage of a generated input (no input identity) reads its rewritten bucket back") {
+    val root = tmp()
+    val staging = s"$root/staging"
+    val df = CodeTable.generate(spark, 2000)
+    CheckpointedRunner.stage(df, keys, numBuckets, staging, narrowHash)
+    val df2 = df.withColumn("content",
+        when(bucketOf === 3, concat(col("content"), lit(" v2"))).otherwise(col("content")))
+      .withColumn("content_sha256", sha2(col("content"), 256))
+    val (jobs, queries) = jobsDuring {
+      CheckpointedRunner.stage(df2, keys, numBuckets, staging, narrowHash)
+    }
+    // the aggregate, bucket 3's write and its read-back
+    assert(queries === 3, s"$jobs job(s) in $queries query execution(s)")
+    assert(recordInput(staging).isEmpty)
+    val full = s"$root/full"
+    CheckpointedRunner.stage(df2, keys, numBuckets, full, narrowHash)
+    assert(recordText(staging) === recordText(full))
+  }
+
+  test("a one-bucket incremental run runs only its write") {
+    val root = tmp()
+    val staging = s"$root/staging"; val out = s"$root/out"; val m = s"$root/m"
+    val input = parquetInput(root, 2000, 4)
+    CheckpointedRunner.stage(spark.read.parquet(input), keys, numBuckets, staging, narrowHash)
+    CheckpointedRunner.incrementalRun(spark, staging, m, out, numBuckets,
+      process, sortCols, runId = "w-a", keyCols = keys)
+    CheckpointedRunner.stage(spark.read.parquet(editedInput(root, "v2", input, 3)), keys,
+      numBuckets, staging, narrowHash)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = plans.add(qe.executedPlan.toString)
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    var pending = Seq.empty[Int]
+    val (jobs, queries) =
+      try jobsDuring {
+        pending = CheckpointedRunner.incrementalRun(spark, staging, m, out, numBuckets,
+          process, sortCols, runId = "w-b", keyCols = keys)
+      } finally spark.listenerManager.unregister(listener)
+    assert(pending === Seq(3))
+    // the write's job and its AQE shuffle-map job; selection, the sink
+    // counts and the manifest commit are driver reads and writes
+    assert(queries === 1 && jobs === 2, s"$jobs job(s) in $queries query execution(s)")
+    // the write's scan is pruned to bucket 3 (a partition filter, which is
+    // never codegen'd, so its literal compiles nothing)
+    assert(plans.size === 1)
+    assert(plans.peek().contains("PartitionFilters: [isnotnull(bucket"), plans.peek())
+  }
+
+  test("manifest violations are the sink's per-bucket counts, 0 for a bucket validated clean") {
+    val root = tmp()
+    val staging = s"$root/staging"; val out = s"$root/out"; val m = s"$root/m"
+    val proc: DataFrame => DataFrame =
+      in => in.filter(col("lang") === "klingon").select("repo", "path", "lang")
+    val df = CodeTable.generate(spark, 2000) // id%89 rows carry lang=klingon
+    CheckpointedRunner.stage(df, keys, numBuckets, staging, narrowHash)
+    def manifestViolations(runId: String): Map[Int, Long] =
+      spark.read.schema(CheckpointedRunner.manifestSchema).parquet(m)
+        .filter(col("run_id") === runId).collect()
+        .map(r => r.getAs[Int]("bucket") -> r.getAs[Long]("violations")).toMap
+    def sinkCounts(): Map[Int, Long] = spark.read.parquet(out).groupBy("bucket").count()
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    CheckpointedRunner.incrementalRun(spark, staging, m, out, numBuckets,
+      proc, Seq("repo", "path"), runId = "v-a", keyCols = keys)
+    val first = sinkCounts()
+    assert(first.size > 1, first.toString)
+    assert(manifestViolations("v-a") === (0 until numBuckets).map(b => b -> first.getOrElse(b, 0L)).toMap)
+    // every violation of one bucket fixed
+    val fixed = first.keys.min
+    val df2 = df.withColumn("lang",
+      when(bucketOf === fixed && col("lang") === "klingon", lit("python")).otherwise(col("lang")))
+    CheckpointedRunner.stage(df2, keys, numBuckets, staging, narrowHash)
+    assert(CheckpointedRunner.incrementalRun(spark, staging, m, out, numBuckets,
+      proc, Seq("repo", "path"), runId = "v-b", keyCols = keys) === Seq(fixed))
+    assert(manifestViolations("v-b") === Map(fixed -> 0L))
+    assert(sinkCounts() === first - fixed)
+  }
+
+  test("a manifest mixing Spark-written and driver-written files reads the same everywhere") {
+    import scala.jdk.CollectionConverters._
+    val root = tmp()
+    val staging = s"$root/staging"; val out = s"$root/out"; val m = s"$root/m"
+    CheckpointedRunner.stage(CodeTable.generate(spark, 1500), keys, numBuckets, staging)
+    val staged = spark.read.parquet(staging)
+    val fps = CheckpointedRunner.bucketFingerprints(staged, CheckpointedRunner.defaultRowHash(staged))
+      .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
+    // a commit as earlier versions wrote it, through a Spark job: bucket 0
+    // done with its current fingerprint, bucket 1 done without one, bucket
+    // 2 failed
+    val old = Seq(
+      Row(0, "old", staging, fps(0)._1, 1L, 5L, "done", fps(0)._2),
+      Row(1, "old", staging, fps(1)._1, 2L, 5L, "done", null),
+      Row(2, "old", staging, fps(2)._1, 3L, 5L, "failed", fps(2)._2))
+    spark.createDataFrame(old.asJava, CheckpointedRunner.manifestSchema).coalesce(1)
+      .write.mode("append").parquet(m)
+    // selection reads the Spark-written file on the driver: bucket 0 alone
+    // is done for this content ...
+    assert(CheckpointedRunner.incrementalRun(spark, staging, m, out, numBuckets,
+      process, sortCols, runId = "new", keyCols = keys) === (1 until numBuckets))
+    // ... and then the driver-written one too
+    assert(CheckpointedRunner.incrementalRun(spark, staging, m, out, numBuckets,
+      process, sortCols, runId = "again", keyCols = keys).isEmpty)
+    assert(CheckpointedRunner.completedBuckets(spark, m) === (0 until numBuckets).toSet)
+    val files = new java.io.File(m).listFiles().filter(_.getName.startsWith("part-")).map(_.getPath)
+    assert(files.length === 2)
+    assert(files.map(spark.read.parquet(_).schema).distinct.length === 1)
+    // Spark reads: schema-given, schema-less and the run history agree
+    def key(r: Row) = (r.getInt(0), r.getString(1), r.getString(6),
+      if (r.isNullAt(7)) None else Some(r.getLong(7)))
+    val given = spark.read.schema(CheckpointedRunner.manifestSchema).parquet(m)
+    assert(given.collect().map(key).toSet ===
+      old.map(key).toSet ++ (1 until numBuckets).map(b => (b, "new", "done", Some(fps(b)._2))))
+    val inferred = spark.read.parquet(m)
+    assert(inferred.schema === given.schema)
+    assert(inferred.collect().toSet === given.collect().toSet)
+    assert(CheckpointedRunner.runHistory(spark, m).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap === Map("old" -> 3L, "new" -> (numBuckets - 1L)))
+    // a plain run commits rows without a fingerprint: read back as null
+    val m2 = s"$root/m2"
+    CheckpointedRunner.run(spark, staging, m2, s"$root/out2", numBuckets,
+      process, sortCols, runId = "plain", keyCols = keys, maxBuckets = 2)
+    val plain = spark.read.schema(CheckpointedRunner.manifestSchema).parquet(m2).collect()
+    assert(plain.map(_.getInt(0)).sorted.toSeq === Seq(0, 1))
+    assert(plain.forall(_.isNullAt(7)))
+    assert(CheckpointedRunner.completedBuckets(spark, m2) === Set(0, 1))
+  }
+
+  test("an incremental run over another changed bucket compiles no class") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val root = tmp()
+    val staging = s"$root/staging"; val out = s"$root/out"; val m = s"$root/m"
+    val input = parquetInput(root, 2000, 4)
+    def restage(dir: String): Unit =
+      CheckpointedRunner.stage(spark.read.parquet(dir), keys, numBuckets, staging, narrowHash)
+    def incremental(runId: String): Seq[Int] = CheckpointedRunner.incrementalRun(
+      spark, staging, m, out, numBuckets, process, sortCols, runId, keyCols = keys)
+    restage(input)
+    incremental("cg-all")
+    val v3 = editedInput(root, "v3", input, 3)
+    restage(v3)
+    assert(incremental("cg-3") === Seq(3))
+    restage(editedInput(root, "v5", v3, 5))
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val pending = incremental("cg-5")
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    assert(pending === Seq(5))
+    // the pending set is a reference object of the generated classes, not
+    // Java literals: the previous delta's classes serve this one
+    assert(compiled === 0, s"$compiled class(es) compiled for another bucket set")
   }
 }
