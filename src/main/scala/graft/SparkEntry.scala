@@ -804,7 +804,7 @@ object SparkEntry {
     "q_multimodal_meta" -> ((s, dir) => {
       val media = Multimodal.ingest(t(s, dir, "documents"), "doc_id", col("text"), "image/fake")
       media.select(col("doc_id"),
-        Multimodal.fakeDecodeImageMeta(col("media"), col("meta")).as("meta"))
+        Multimodal.decodeImageMeta(col("media"), col("meta")).as("meta"))
         .select(col("doc_id"),
           col("meta.byte_size").as("byte_size"),
           col("meta.width").cast("long").as("width"),

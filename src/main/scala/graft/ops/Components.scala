@@ -199,13 +199,12 @@ object Components {
   def nearDupGroups(pairs: DataFrame): DataFrame =
     connectedComponents(pairs, "id_a", "id_b")
 
-  /** Corpus minus near-duplicates: keeps each cluster's minimum-id
-    * representative plus every document in no cluster. The anti-join ships
-    * only the loser-id set — never documents. */
-  def dedupByPairs(df: DataFrame, idCol: String, pairs: DataFrame): DataFrame = {
-    val losers = nearDupGroups(pairs)
+  /** The near-dup LOSERS of a pair DataFrame, as one `idCol` column: every
+    * clustered id except its cluster's minimum-id representative. A corpus
+    * anti-joined with this keeps one document per cluster plus every
+    * document in no cluster, and the join ships only the loser-id set. */
+  def nearDupLosers(pairs: DataFrame, idCol: String): DataFrame =
+    nearDupGroups(pairs)
       .filter(col("id") =!= col("component"))
       .select(col("id").as(idCol))
-    df.join(losers, Seq(idCol), "left_anti")
-  }
 }

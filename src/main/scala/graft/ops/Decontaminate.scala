@@ -32,10 +32,10 @@ object Decontaminate {
       .select(col(idOut),
         explode(graft.functions.NgramHashes(col("__t"), n)).as("__h"))
 
-  /** The probe side's hashed n-grams (probe_id, __h) — compute ONCE and
-    * persist when the same probe set screens many corpora or micro-batches
-    * (the streaming flavor re-plans per batch; without this the benchmark
-    * set would re-shingle every trigger). */
+  /** The probe side's hashed n-grams (probe_id, __h) — compute ONCE, and
+    * persist when the same probe set screens a corpus more than once (the
+    * batch pipeline counts the flagged set and then anti-joins it; without
+    * this the benchmark set would re-shingle per use). */
   def probeHashes(probe: DataFrame, probeIdCol: String, probeTextCol: String, n: Int): DataFrame =
     hashedNgrams(probe, probeIdCol, probeTextCol, "probe_id", n)
 
@@ -65,23 +65,13 @@ object Decontaminate {
       .groupBy("id", "probe_id").agg(count(lit(1)).as("hits"))
       .filter(col("hits") >= minHits)
 
-  /** Corpus minus every document colliding with the probe set. The anti-join
-    * ships the flagged-id set only, never documents. */
-  def decontaminate(
+  /** The distinct ids (one `corpusIdCol` column) of corpus documents
+    * colliding with a precomputed [[probeHashes]] frame. The corpus minus
+    * these is the decontaminated corpus: the anti-join ships the flagged-id
+    * set only, never documents. */
+  def flaggedIds(
       corpus: DataFrame, corpusIdCol: String, corpusTextCol: String,
-      probe: DataFrame, probeIdCol: String, probeTextCol: String,
-      n: Int = 13, minHits: Long = 1L): DataFrame =
-    decontaminateAgainst(corpus, corpusIdCol, corpusTextCol,
-      probeHashes(probe, probeIdCol, probeTextCol, n), n, minHits)
-
-  /** [[decontaminate]] against a precomputed [[probeHashes]] frame (the
-    * streaming flavor reuses this per micro-batch). */
-  def decontaminateAgainst(
-      corpus: DataFrame, corpusIdCol: String, corpusTextCol: String,
-      probeHashed: DataFrame, n: Int, minHits: Long): DataFrame = {
-    val flagged =
-      ngramCollisionsAgainst(corpus, corpusIdCol, corpusTextCol, probeHashed, n, minHits)
-        .select(col("id").as(corpusIdCol)).distinct()
-    corpus.join(flagged, Seq(corpusIdCol), "left_anti")
-  }
+      probeHashed: DataFrame, n: Int, minHits: Long): DataFrame =
+    ngramCollisionsAgainst(corpus, corpusIdCol, corpusTextCol, probeHashed, n, minHits)
+      .select(col("id").as(corpusIdCol)).distinct()
 }

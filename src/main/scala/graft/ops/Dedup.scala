@@ -101,16 +101,6 @@ object Dedup {
       .select(col("id"), col("b.band_idx"), col("b.band_hash"))
   }
 
-  /** Oversize LSH buckets that [[candidatePairsAudited]] excludes at the
-    * same `maxBucket` cap: (band_idx, band_hash, bucket_size). No-silent-caps
-    * companion — run it alongside the pair generator to audit what was
-    * dropped (shares the same banded aggregate shape, so it's one extra
-    * cheap pass). */
-  def oversizeBuckets(bands: DataFrame, maxBucket: Int = DefaultMaxBucket): DataFrame =
-    bands.groupBy("band_idx", "band_hash")
-      .agg(count(lit(1)).as("bucket_size"))
-      .filter(col("bucket_size") > maxBucket)
-
   private val auditSeq = new java.util.concurrent.atomic.AtomicLong()
 
   /** Observe dropped-bucket metrics on a per-bucket frame whose bucket size
@@ -805,7 +795,7 @@ object Dedup {
     * snapshotted. Eager `localCheckpoint(true)` blocks are NOT in the
     * CacheManager — `Dataset.unpersist` can't reach them, and the
     * ContextCleaner only frees them when the driver GCs the frame references.
-    * Callers that loop (streaming micro-batches, snapshot loops) should
+    * Callers that loop (snapshot-delta loops, benchmark reps) should
     * snapshot `sc.getPersistentRDDs.keySet` before the dedup call and release
     * here once the batch's results are fully materialized — the checkpointed
     * data is unrecoverable afterwards (lineage was truncated). Only safe when

@@ -4,176 +4,10 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** The codec seam for [[Multimodal]]: implementations supply the actual
-  * media decode/feature/resize logic; the operators own the Spark-side
-  * mechanics (schema, batching, partitioning) and take a codec as a
-  * parameter — swapping in a real decoder is dependency injection, not an
-  * operator edit. The default instance is [[FakeMediaCodec]] (this container
-  * ships no image/audio libraries).
-  *
-  * Column-level hooks return expressions (header parses compile to Catalyst
-  * trees); [[decodeOne]] is the row-level hook the batched `mapPartitions`
-  * stage calls — a real implementation amortizes native handles / model
-  * sessions across each batch.
-  */
-trait MediaCodec extends Serializable {
-  /** Meta struct (shape [[Multimodal.mediaMetaType]]) with decoded dimensions. */
-  def decodeImageMeta(media: Column, meta: Column): Column
-  /** Fixed-length feature vector (array<double>, values in [-1, 1]). */
-  def features(media: Column, dim: Int): Column
-  /** Meta struct after a bounded-box resize (byte_size bookkeeping exact). */
-  def resize(meta: Column, maxW: Int, maxH: Int): Column
-  /** Row-level decode for the batched stage. */
-  def decodeOne(id: Long, bytes: Array[Byte], featureDim: Int): Multimodal.DecodedMedia
-}
-
-/** DETERMINISTIC FAKE codec — a stand-in so the Spark-side plumbing is real
-  * and tested end-to-end without codec libraries: dimensions derive from the
-  * byte size, features from byte-window hashes. Every output is a pure
-  * function of the payload bytes, so tests and oracles reproduce it. */
-object FakeMediaCodec extends MediaCodec {
-
-  /** FAKE DECODE (stand-in for an image codec): derives plausible dimensions
-    * from the byte size. Real impl: decode header bytes. */
-  def decodeImageMeta(media: Column, meta: Column): Column = {
-    val size = meta.getField("byte_size")
-    struct(
-      meta.getField("media_type").as("media_type"),
-      size.as("byte_size"),
-      ((size * 37L) % 1920L + 16L).cast(IntegerType).as("width"),
-      ((size * 91L) % 1080L + 16L).cast(IntegerType).as("height"),
-      meta.getField("duration_ms").as("duration_ms"))
-  }
-
-  /** FAKE FEATURE EXTRACT: deterministic byte-window hashes in [-1, 1].
-    * Real impl: a model forward pass via mapInArrow with batched tensors. */
-  def features(media: Column, dim: Int): Column =
-    transform(sequence(lit(0), lit(dim - 1)), i =>
-      (pmod(xxhash64(media, i), lit(2000001L)).cast(DoubleType) - 1000000.0) / 1000000.0)
-
-  /** Resize (FAKE): deterministic downsample marker — keeps byte_size
-    * bookkeeping exact so partition sizing logic is testable. */
-  def resize(meta: Column, maxW: Int, maxH: Int): Column = {
-    val w = meta.getField("width"); val h = meta.getField("height")
-    val scaleNum = least(lit(maxW) * 1000 / greatest(w, lit(1)), lit(maxH) * 1000 / greatest(h, lit(1)), lit(1000))
-    // floor+cast back to LongType: Column `/` is DOUBLE division, and a double
-    // byte_size would break schema equality with mediaMetaType / ingest structs
-    struct(
-      meta.getField("media_type").as("media_type"),
-      floor(meta.getField("byte_size") * scaleNum * scaleNum / 1000000L).cast(LongType).as("byte_size"),
-      floor(w * scaleNum / 1000).cast(IntegerType).as("width"),
-      floor(h * scaleNum / 1000).cast(IntegerType).as("height"),
-      meta.getField("duration_ms").as("duration_ms"))
-  }
-
-  /** FAKE single-record decode — deterministic function of the payload bytes. */
-  def decodeOne(id: Long, bytes: Array[Byte], featureDim: Int): Multimodal.DecodedMedia = {
-    val size = bytes.length.toLong
-    val features = Array.tabulate(featureDim) { i =>
-      // cheap deterministic byte-window hash in [-1, 1]
-      var h = 1125899906842597L + i
-      var j = i % math.max(bytes.length, 1)
-      val end = math.min(j + 16, bytes.length)
-      while (j < end) { h = 31 * h + bytes(j); j += 1 }
-      ((h % 2000001L).toDouble / 2000000.0)
-    }
-    Multimodal.DecodedMedia(id, size,
-      ((size * 37) % 1920 + 16).toInt, ((size * 91) % 1080 + 16).toInt, features)
-  }
-}
-
-/** Pure-JVM REAL-header codec: parses actual dimensions from BMP and netpbm
-  * PPM/PGM/PBM payloads with no image libraries — the proof that the
-  * [[MediaCodec]] seam carries a real decoder, not only the fake.
-  *
-  *  - BMP: magic "BM"; width/height are little-endian int32 at byte offsets
-  *    18/22 of the BITMAPINFOHEADER (height may be negative for top-down
-  *    rows — absolute value taken).
-  *  - netpbm "P1".."P6": ASCII magic then whitespace-separated width and
-  *    height (comment lines between header tokens are not supported — the
-  *    rare-in-practice case documents itself by returning null/0 dims).
-  *
-  * The COLUMN hook compiles the parse to Catalyst expressions (hex + conv
-  * for the endian swap, regexp for the ASCII header) so it runs inside the
-  * scan projection; the ROW hook parses the same bytes with ByteBuffer/regex.
-  * Unrecognized payloads keep null (column) / 0 (row) dimensions rather than
-  * inventing them. Feature extraction and resize delegate to
-  * [[FakeMediaCodec]]: features need a model, not a header — this codec
-  * proves the decode half of the seam. */
-object HeaderMediaCodec extends MediaCodec {
-
-  /** Unsigned little-endian int32 read as a long: hex() yields the bytes in
-    * storage order, so the endian swap is a hex-pair reorder + base-16 parse. */
-  private def leUInt32(media: Column, off1: Int): Column = {
-    val h = hex(substring(media, off1, 4))
-    conv(concat(substring(h, 7, 2), substring(h, 5, 2), substring(h, 3, 2), substring(h, 1, 2)),
-      16, 10).cast(LongType)
-  }
-  private def signed32(v: Column): Column =
-    when(v >= 2147483648L, v - 4294967296L).otherwise(v)
-
-  private val PpmHeader = "^P[1-6]\\s+(\\d{1,9})\\s+(\\d{1,9})"
-
-  def decodeImageMeta(media: Column, meta: Column): Column = {
-    val magic = hex(substring(media, 1, 2))
-    val isBmp = magic === lit("424D") && octet_length(media) >= 26
-    // ISO-8859-1, NOT UTF-8: the 64-byte window reaches into binary pixel
-    // data on P4-P6, and Spark 4's decode() THROWS on malformed UTF-8
-    // (MALFORMED_CHARACTER_CODING) instead of replacing. Latin-1 maps every
-    // byte to a char, and the header tokens the regex reads are ASCII either
-    // way.
-    val isPpm = magic.isin((1 to 6).map(d => f"503$d"): _*)
-    val head = decode(substring(media, 1, 64), "ISO-8859-1")
-    // signed32 on BOTH dims: corrupt headers (e.g. FFFFFFFF) must parse to
-    // the same wrapped int the row-level ByteBuffer.getInt yields, never hit
-    // the ANSI cast-to-int overflow; abs() mirrors java's Math.abs wrap at
-    // Int.MinValue for the same reason
-    val hRaw = signed32(leUInt32(media, 23))
-    val w = when(isBmp, signed32(leUInt32(media, 19)))
-      .when(isPpm, nullif(regexp_extract(head, PpmHeader, 1), lit("")).cast(LongType))
-    val h = when(isBmp, when(hRaw === -2147483648L, hRaw).otherwise(abs(hRaw)))
-      .when(isPpm, nullif(regexp_extract(head, PpmHeader, 2), lit("")).cast(LongType))
-    struct(
-      meta.getField("media_type").as("media_type"),
-      meta.getField("byte_size").as("byte_size"),
-      w.cast(IntegerType).as("width"),
-      h.cast(IntegerType).as("height"),
-      meta.getField("duration_ms").as("duration_ms"))
-  }
-
-  def features(media: Column, dim: Int): Column = FakeMediaCodec.features(media, dim)
-
-  def resize(meta: Column, maxW: Int, maxH: Int): Column =
-    FakeMediaCodec.resize(meta, maxW, maxH)
-
-  /** Row-level parse of the same headers (the batched-stage hook). */
-  private[ops] def parseDims(bytes: Array[Byte]): Option[(Int, Int)] =
-    if (bytes.length >= 26 && bytes(0) == 'B'.toByte && bytes(1) == 'M'.toByte) {
-      val bb = java.nio.ByteBuffer.wrap(bytes, 18, 8)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      Some((bb.getInt, math.abs(bb.getInt)))
-    } else if (bytes.length >= 2 && bytes(0) == 'P'.toByte &&
-        bytes(1) >= '1'.toByte && bytes(1) <= '6'.toByte) {
-      val head = new String(bytes, 0, math.min(64, bytes.length),
-        java.nio.charset.StandardCharsets.US_ASCII) // header tokens are ASCII
-      PpmHeader.r.findFirstMatchIn(head).map(m => (m.group(1).toInt, m.group(2).toInt))
-    } else None
-
-  def decodeOne(id: Long, bytes: Array[Byte], featureDim: Int): Multimodal.DecodedMedia = {
-    val fake = FakeMediaCodec.decodeOne(id, bytes, featureDim)
-    parseDims(bytes) match {
-      case Some((w, h)) => fake.copy(width = w, height = h)
-      case None         => fake.copy(width = 0, height = 0) // honest "unknown"
-    }
-  }
-}
-
 /** Multimodal-column plumbing: image/audio/video travel as opaque `binary`
-  * columns with a typed metadata struct. The Spark-side mechanics — schema,
-  * binary slicing, per-partition batch shape, partitioning by media size —
-  * are real and tested; the decode itself comes from the injected
-  * [[MediaCodec]], defaulting to the DETERMINISTIC FAKE [[FakeMediaCodec]]
-  * (this container ships no image/audio libraries).
+  * columns with a typed metadata struct. The Spark-side mechanics — schema
+  * and binary ingest — are real and tested; the decode is a DETERMINISTIC
+  * FAKE (graft depends on no image/audio libraries).
   */
 object Multimodal {
 
@@ -196,67 +30,16 @@ object Multimodal {
         lit(null).cast(IntegerType).as("height"),
         lit(null).cast(LongType).as("duration_ms")).as("meta"))
 
-  /** Decoded meta struct via the codec's column-level header parse. */
-  def decodeImageMeta(media: Column, meta: Column, codec: MediaCodec = FakeMediaCodec): Column =
-    codec.decodeImageMeta(media, meta)
-
-  /** Fixed-length feature vector via the codec. */
-  def features(media: Column, dim: Int, codec: MediaCodec = FakeMediaCodec): Column =
-    codec.features(media, dim)
-
-  /** Resized meta struct via the codec. */
-  def resize(meta: Column, maxW: Int, maxH: Int, codec: MediaCodec = FakeMediaCodec): Column =
-    codec.resize(meta, maxW, maxH)
-
-  /** Explicitly-named fake flavors (the historical entry points — every call
-    * site of these knows it is on the deterministic stand-in). */
-  def fakeDecodeImageMeta(media: Column, meta: Column): Column =
-    FakeMediaCodec.decodeImageMeta(media, meta)
-  def fakeFeatures(media: Column, dim: Int): Column = FakeMediaCodec.features(media, dim)
-  def fakeResize(meta: Column, maxW: Int, maxH: Int): Column =
-    FakeMediaCodec.resize(meta, maxW, maxH)
-
-  /** Frame-sampling plumbing: n evenly spaced byte windows of `frameBytes`
-    * bytes as array<struct<frame_idx,bytes>> — real byte-slicing on the binary
-    * column (a real video codec would seek keyframes instead). */
-  def frames(df: DataFrame, idCol: String, mediaCol: String, n: Int, frameBytes: Int): DataFrame = {
-    val total = octet_length(col(mediaCol)).cast(LongType)
-    val idxs = (0 until n).map { i =>
-      val off = when(total > frameBytes,
-        (total - frameBytes) * i / math.max(n - 1, 1)).otherwise(lit(0L)).cast(IntegerType)
-      struct(lit(i).as("frame_idx"),
-        col(mediaCol).substr(off + 1, lit(frameBytes)).as("bytes"))
-    }
-    df.select(col(idCol), array(idxs: _*).as("frames"))
-  }
-
-  /** One decoded media record produced by the batched decode stage. */
-  case class DecodedMedia(
-      id: Long, byte_size: Long, width: Int, height: Int, features: Array[Double])
-
-  /** Batched decode plumbing — the Scala analog of a Pandas-UDF/mapInPandas
-    * stage: one partition is processed as a stream of fixed-size BATCHES so a
-    * real codec/model can amortize per-call setup (native handles, model
-    * weights) across `batchSize` records, exactly like an Arrow batch. The
-    * decode is whatever the injected codec's [[MediaCodec.decodeOne]] does
-    * (default: the deterministic fake); the partitioning, batch shape, and
-    * Encoder plumbing are real and tested either way.
-    */
-  def decodeBatched(
-      df: DataFrame, idCol: String, mediaCol: String, featureDim: Int,
-      batchSize: Int = 64,
-      codec: MediaCodec = FakeMediaCodec): org.apache.spark.sql.Dataset[DecodedMedia] = {
-    import org.apache.spark.sql.Encoders
-    implicit val enc = Encoders.product[DecodedMedia]
-    df.select(org.apache.spark.sql.functions.col(idCol).cast("long"),
-        org.apache.spark.sql.functions.col(mediaCol))
-      .map(r => (r.getLong(0), r.getAs[Array[Byte]](1)))(
-        Encoders.tuple(Encoders.scalaLong, Encoders.BINARY))
-      .mapPartitions { rows =>
-        rows.grouped(batchSize).flatMap { batch =>
-          // per-batch setup would happen here (codec init / model session)
-          batch.map { case (id, bytes) => codec.decodeOne(id, bytes, featureDim) }
-        }
-      }
+  /** FAKE DECODE (stand-in for an image codec): a meta struct with plausible
+    * dimensions derived from the byte size — a pure function of the payload,
+    * so tests and oracles reproduce it. Real impl: decode header bytes. */
+  def decodeImageMeta(media: Column, meta: Column): Column = {
+    val size = meta.getField("byte_size")
+    struct(
+      meta.getField("media_type").as("media_type"),
+      size.as("byte_size"),
+      ((size * 37L) % 1920L + 16L).cast(IntegerType).as("width"),
+      ((size * 91L) % 1080L + 16L).cast(IntegerType).as("height"),
+      meta.getField("duration_ms").as("duration_ms"))
   }
 }

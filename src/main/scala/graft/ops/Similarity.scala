@@ -280,19 +280,10 @@ object Similarity {
 
   /** IVF-PQ: the standard billion-scale layout — coarse cells prune the scan
     * (only nprobe of numCells partitions read), PQ codes shrink what is
-    * scanned 32x, ADC scores the survivors with m lookups/adds per row. Pure
-    * composition of [[ivfAssign]] + [[pqEncode]] + [[pqTopKCosine]]'s scoring,
-    * so each part keeps its documented contract; persist the returned frame
-    * partitioned by `cell` for the on-disk index (queries partition-prune). */
-  def ivfPqEncode(
-      df: DataFrame, idCol: String, embCol: String, centroids: Seq[Seq[Double]],
-      codebooks: Seq[Seq[Seq[Double]]]): DataFrame =
-    df.select(col(idCol).as("id"),
-      nearestCentroid(col(embCol), centroids).as("cell"),
-      graft.functions.PqEncode(col(embCol), codebooks).as("codes"))
-
-  /** [[ivfPqEncode]] that keeps the raw vector alongside the codes — the
-    * persisted-index projection (columnar storage: `codes` scans skip it). */
+    * scanned 32x, ADC scores the survivors with m lookups/adds per row. The
+    * persisted-index projection: (id, emb, cell, codes) — the raw vector
+    * rides alongside the codes for exact refinement (columnar storage:
+    * `codes` scans skip it). */
   private def ivfPqEncodeWithEmb(
       df: DataFrame, idCol: String, embCol: String, centroids: Seq[Seq[Double]],
       codebooks: Seq[Seq[Seq[Double]]]): DataFrame =
@@ -358,19 +349,6 @@ object Similarity {
     val codebooks = readQuantizer(spark, s"$indexDir/codebooks",
       classOf[Array[Array[Array[Double]]]])
     (ivfLoadCentroids(spark, indexDir), codebooks.map(_.map(_.toSeq).toSeq).toSeq)
-  }
-
-  /** Top-k over an [[ivfPqEncode]]d corpus: cell-prune, then ADC. */
-  def ivfPqTopKCosine(
-      encoded: DataFrame, centroids: Seq[Seq[Double]], codebooks: Seq[Seq[Seq[Double]]],
-      query: Seq[Double], k: Int, nprobe: Int = 4): DataFrame = {
-    val cells = probeCells(centroids, query, nprobe)
-    rankTopK(
-      encoded.filter(col("cell").isin(cells: _*))
-        .select(col("id"),
-          graft.functions.PqAdcScore(col("codes"), pqAdcTable(codebooks, query)).as("cosine"))
-        .orderBy(col("cosine").desc, col("id").asc)
-        .limit(k))
   }
 
   /** Batch k-NN join: top-k cosine neighbors in `corpus` for EVERY query row
@@ -746,10 +724,7 @@ object Similarity {
       df: DataFrame, idCol: String, embCol: String, centroids: Seq[Seq[Double]],
       threshold: Double, maxCell: Int = Dedup.DefaultMaxBucket): DataFrame = {
     val pairs = semanticNearDupPairsAudited(df, idCol, embCol, centroids, threshold, maxCell).pairs
-    val losers = Components.nearDupGroups(pairs)
-      .filter(col("id") =!= col("component"))
-      .select(col("id").as(idCol))
-    df.join(losers, Seq(idCol), "left_anti")
+    df.join(Components.nearDupLosers(pairs, idCol), Seq(idCol), "left_anti")
   }
 
   // --------------------------------------------------------------------------

@@ -176,9 +176,7 @@ object TrainingPipeline {
     val audited = Dedup.minhashNearDupsAudited(
       exact, idCol, textCol, shingleN = shingleN, threshold = minhashThreshold,
       maxBucket = maxBucket)
-    val nearLosers = Components.nearDupGroups(audited.pairs)
-      .filter(col("id") =!= col("component"))
-      .select(col("id").as(idCol))
+    val nearLosers = Components.nearDupLosers(audited.pairs, idCol)
     val nNearRemoved = nearLosers.count()
     val near = exact.join(nearLosers, Seq(idCol), "left_anti")
     // CC's checksum actions already ran on `pairs`, so the audit observation
@@ -192,8 +190,7 @@ object TrainingPipeline {
       case Some((p, pid, ptext)) =>
         val probeHashed = Decontaminate.probeHashes(p, pid, ptext, decontamN).persist()
         val flagged = Decontaminate
-          .ngramCollisionsAgainst(near, idCol, textCol, probeHashed, decontamN, decontamMinHits)
-          .select(col("id").as(idCol)).distinct().persist()
+          .flaggedIds(near, idCol, textCol, probeHashed, decontamN, decontamMinHits).persist()
         val n = flagged.count()
         (near.join(flagged, Seq(idCol), "left_anti"), n, Seq(flagged, probeHashed))
       case None => (near, 0L, Nil)
@@ -434,10 +431,8 @@ object TrainingPipeline {
       val audited = Dedup.minhashNearDupsAudited(
         corpus, idCol, textCol, shingleN = shingleN, threshold = minhashThreshold,
         maxBucket = maxBucket)
-      val losers = Components.nearDupGroups(audited.pairs)
-        .filter(col("id") =!= col("component"))
-        .select(col("id").as(idCol))
-      Map("n_near" -> stage.write(losers, idCol, nearDir),
+      Map("n_near" -> stage.write(Components.nearDupLosers(audited.pairs, idCol),
+        idCol, nearDir),
         "drop_buckets" -> audited.droppedBuckets, "drop_ids" -> audited.droppedIds)
     }
     val near = corpus.join(idSet(nearDir), Seq(idCol), "left_anti")
@@ -449,8 +444,8 @@ object TrainingPipeline {
         val c = stage("decontam", key, Some(contamDir)) {
           val probeHashed = Decontaminate.probeHashes(p, pid, ptext, decontamN)
           Map("n_contam" -> stage.write(Decontaminate
-            .ngramCollisionsAgainst(near, idCol, textCol, probeHashed, decontamN, decontamMinHits)
-            .select(col("id").as(idCol)).distinct(), idCol, contamDir))
+            .flaggedIds(near, idCol, textCol, probeHashed, decontamN, decontamMinHits),
+            idCol, contamDir))
         }
         (key, (near.join(idSet(contamDir), Seq(idCol), "left_anti"), c("n_contam")))
       case None => (s"$nearKey|probe=none", (near, 0L))
@@ -698,9 +693,8 @@ object TrainingPipeline {
         val c = stage(sname("decontam"), key, Some(contamDir)) {
           val probeHashed = Decontaminate.probeHashes(p, pid, ptext, decontamN)
           Map("n_contam" -> stage.write(Decontaminate
-            .ngramCollisionsAgainst(lexKept, idCol, textCol, probeHashed,
-              decontamN, decontamMinHits)
-            .select(col("id").as(idCol)).distinct(), idCol, contamDir))
+            .flaggedIds(lexKept, idCol, textCol, probeHashed, decontamN, decontamMinHits),
+            idCol, contamDir))
         }
         (key, (lexKept.join(idSet(contamDir), Seq(idCol), "left_anti"), c("n_contam")))
       case None => (s"$lexKey|probe=none", (lexKept, 0L))

@@ -12,9 +12,9 @@ import org.apache.spark.sql.types._
   */
 object Checks {
 
-  /** Histogram key for null category values, shared by batch [[driftCheck]]
-    * and [[graft.streaming.StreamingDrift]] so a baseline built by one scores
-    * correctly in the other. The NUL (U+0000) prefix cannot collide with any real
+  /** Category key for null values in [[driftCheck]]'s histograms,
+    * [[compositeKey]] and the FD checks, so a null counts as one category
+    * like any other. The NUL (U+0000) prefix cannot collide with any real
     * string value Spark surfaces (NUL never survives a cast-to-string of a
     * non-string, and a genuine NUL-prefixed string would hash to itself).
     */

@@ -1,19 +1,7 @@
 package graft
 
-import graft.ops.{Components, Dedup, FakeMediaCodec, MediaCodec, Multimodal, Sharding, Similarity, TextOps, TrainingPipeline}
-import org.apache.spark.sql.Column
+import graft.ops.{Components, Dedup, Multimodal, Sharding, Similarity, TextOps, TrainingPipeline}
 import org.apache.spark.sql.functions._
-
-/** Row-level codec stub for the injection test — top-level so the
-  * mapPartitions closure serializes it without an outer test-class ref. */
-object StubCodec extends MediaCodec {
-  def decodeImageMeta(media: Column, meta: Column): Column = meta
-  def features(media: Column, dim: Int): Column =
-    array((0 until dim).map(_ => lit(0.5)): _*)
-  def resize(meta: Column, maxW: Int, maxH: Int): Column = meta
-  def decodeOne(id: Long, bytes: Array[Byte], featureDim: Int): Multimodal.DecodedMedia =
-    Multimodal.DecodedMedia(id, bytes.length.toLong, 42, 24, Array.fill(featureDim)(0.25))
-}
 
 /** Training-data pipeline operators: dedup family, similarity search, text
   * analysis, multimodal plumbing — over the driver-provided documents and
@@ -85,13 +73,13 @@ class OpsSpec extends SparkSpec {
     assert(exactPairs.subsetOf(found))
   }
 
-  test("oversizeBuckets audits what candidatePairs drops at the same cap") {
+  test("a cap of 1 drops every candidate bucket and the drop audit counts them") {
     val bands = Dedup.simhashBands(dupDocs, "doc_id", "text", maxHamming = 3)
     // a cap of 1 makes EVERY >=2 bucket oversize: pairs empty, audit non-empty
-    assert(Dedup.candidatePairsAudited(bands, maxBucket = 1).pairs.count() === 0)
-    val over = Dedup.oversizeBuckets(bands, maxBucket = 1)
-    assert(over.count() > 0)
-    assert(over.agg(min($"bucket_size")).as[Long].collect().head >= 2)
+    val audited = Dedup.candidatePairsAudited(bands, maxBucket = 1)
+    assert(audited.pairs.count() === 0)
+    assert(audited.droppedBuckets > 0)
+    assert(audited.droppedIds >= 2 * audited.droppedBuckets) // every dropped bucket has >= 2 ids
   }
 
   test("simhash banding guarantee: banded pairs == brute-force pairs (maxHamming=15)") {
@@ -196,29 +184,19 @@ class OpsSpec extends SparkSpec {
   test("multimodal plumbing: ingest/meta/features/frames over binary payloads") {
     val media = Multimodal.ingest(docs, "doc_id", $"text", "image/fake")
     val m = media.select($"doc_id", $"media",
-      Multimodal.fakeDecodeImageMeta($"media", $"meta").as("meta"))
+      Multimodal.decodeImageMeta($"media", $"meta").as("meta"))
     val row = m.orderBy("doc_id").collect().head
     val meta = row.getAs[org.apache.spark.sql.Row]("meta")
     assert(meta.getAs[Long]("byte_size") > 0)
     assert(meta.getAs[Int]("width") >= 16 && meta.getAs[Int]("width") < 1936)
-    // fakeResize keeps the struct schema EQUAL to mediaMetaType (byte_size must
-    // stay LongType — Column `/` is double division) and never upscales
-    val resized = m.select($"doc_id", Multimodal.fakeResize($"meta", 64, 64).as("meta"))
-    // compare field names + types (nullability differs only via lit() inputs)
-    val resizedMeta = resized.schema("meta").dataType.asInstanceOf[org.apache.spark.sql.types.StructType]
-    assert(resizedMeta.fields.map(f => (f.name, f.dataType)).toSeq ===
-      Multimodal.mediaMetaType.fields.map(f => (f.name, f.dataType)).toSeq)
-    val rrow = resized.orderBy("doc_id").collect().head.getAs[org.apache.spark.sql.Row]("meta")
-    assert(rrow.getAs[Int]("width") <= 64 && rrow.getAs[Int]("height") <= 64)
-    assert(rrow.getAs[Long]("byte_size") <= meta.getAs[Long]("byte_size"))
-    val feats = media.select(Multimodal.fakeFeatures($"media", 16).as("f"))
-      .select(size($"f"), array_min($"f"), array_max($"f"))
-      .as[(Int, Double, Double)].collect()
-    assert(feats.forall { case (n, lo, hi) => n == 16 && lo >= -1.0 && hi <= 1.0 })
-    val fr = Multimodal.frames(media, "doc_id", "media", 4, 16).collect().head
-    val frames = fr.getAs[scala.collection.Seq[org.apache.spark.sql.Row]]("frames")
-    assert(frames.length === 4)
-    assert(frames.forall(_.getAs[Array[Byte]]("bytes").length <= 16))
+    // ingest's and the decoded meta struct's schema EQUAL mediaMetaType on
+    // field names + types (nullability differs only via lit() inputs)
+    def fields(df: org.apache.spark.sql.DataFrame) =
+      df.schema("meta").dataType.asInstanceOf[org.apache.spark.sql.types.StructType]
+        .fields.map(f => (f.name, f.dataType)).toSeq
+    val expected = Multimodal.mediaMetaType.fields.map(f => (f.name, f.dataType)).toSeq
+    assert(fields(media) === expected)
+    assert(fields(m) === expected)
   }
 
   test("IVF ANN: train once (driver k-means on a sample), query many; persisted index reuse") {
@@ -309,29 +287,14 @@ class OpsSpec extends SparkSpec {
     // zero vector encodes without NaN/exception
     val z = Seq((1L, Seq.fill(64)(0.0))).toDF("vec_id", "embedding")
     assert(Similarity.pqEncode(z, "vec_id", "embedding", books).collect().length === 1)
-    // IVF-PQ composition: cell pruning + ADC agrees with flat PQ on the
-    // query's own vector and scans only the probed cells
+    // persisted IVF-PQ index round-trip: the build trains the same quantizers
+    // as in memory, and loading reads both back unchanged
     val cents = Similarity.ivfTrain(embs, "vec_id", "embedding", k = 16, iters = 3)
-    val ivfpq = Similarity.ivfPqEncode(embs, "vec_id", "embedding", cents, books)
-    assert(ivfpq.select("cell").distinct().count() <= 16)
-    val topIvf = Similarity.ivfPqTopKCosine(ivfpq, cents, books, q, 10, nprobe = 16)
-      .select("id").as[Long].collect()
-    assert(topIvf.toSeq === top.toSeq) // nprobe = all cells == flat PQ exactly
-    val pruned = Similarity.ivfPqTopKCosine(ivfpq, cents, books, q, 10, nprobe = 4)
-      .select("id").as[Long].collect()
-    assert(pruned.take(3).contains(7L))
-    // persisted index round-trip: loaded quantizers reproduce the in-memory
-    // result, and the cell scan partition-prunes to the probed cells
     val idxDir = java.nio.file.Files.createTempDirectory("graft-ivfpq").toString
     val (cents2, books2) = Similarity.ivfPqBuildIndex(embs, "vec_id", "embedding", idxDir)
     assert(cents2 === cents && books2 === books) // same deterministic training
     val (centsL, booksL) = Similarity.ivfPqLoadIndex(spark, idxDir)
     assert(centsL === cents && booksL === books)
-    val fromDisk = Similarity.ivfPqTopKCosine(
-      spark.read.parquet(s"$idxDir/cells"), centsL, booksL, q, 10, nprobe = 4)
-    assert(fromDisk.select("id").as[Long].collect().toSeq === pruned.toSeq)
-    val plan = fromDisk.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [cell"), plan) // pruned scan, 8-byte codes
     enc.unpersist()
   }
 
@@ -688,73 +651,6 @@ class OpsSpec extends SparkSpec {
     val again = df.filter($"id" === 4).select(Dedup.simhash($"text")).collect().head
     assert(again.getAs[scala.collection.Seq[Long]](0) ===
       r(3).getAs[scala.collection.Seq[Long]]("sim"))
-  }
-
-  test("multimodal batched decode: mapPartitions batch shape, deterministic output") {
-    val media = Multimodal.ingest(docs, "doc_id", $"text", "image/fake")
-    val decoded = Multimodal.decodeBatched(media, "doc_id", "media", featureDim = 8, batchSize = 32)
-    val rows = decoded.collect()
-    assert(rows.length === nDocs)
-    val byId = rows.map(r => r.id -> r).toMap
-    val chars = docs.select($"doc_id", $"n_chars").as[(Long, Long)].collect().toMap
-    // byte_size == n_chars (ASCII) and dims follow the deterministic fake
-    byId.foreach { case (id, d) =>
-      assert(d.byte_size === chars(id))
-      assert(d.width === ((d.byte_size * 37) % 1920 + 16).toInt)
-      assert(d.features.length === 8)
-      assert(d.features.forall(f => f >= -1.0 && f <= 1.0))
-    }
-    // deterministic across runs
-    val again = Multimodal.decodeBatched(media, "doc_id", "media", 8, 32).collect()
-      .map(r => r.id -> r.features.toSeq).toMap
-    assert(byId.forall { case (id, d) => again(id) == d.features.toSeq })
-  }
-
-  test("HeaderMediaCodec: handcrafted BMP and PPM parse to exact dimensions through column and batched hooks") {
-    import graft.ops.HeaderMediaCodec
-    // BMP: "BM" magic, width=640 at offset 18, height=-480 (top-down) at 22
-    val bmp = new Array[Byte](54)
-    bmp(0) = 'B'.toByte; bmp(1) = 'M'.toByte
-    val bb = java.nio.ByteBuffer.wrap(bmp).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    bb.putInt(18, 640); bb.putInt(22, -480)
-    // P6 PPM: ASCII header then BINARY pixel bytes (0x80-0xFF sequences that
-    // are malformed UTF-8 — real images hit this; the column hook must decode
-    // latin-1, since Spark 4's decode() THROWS on malformed UTF-8)
-    val ppm = "P6\n320 240\n255\n".getBytes("US-ASCII") ++
-      Array[Byte](0x80.toByte, 0xff.toByte, 0xc0.toByte) ++ Array.fill(9)(0xfe.toByte)
-    // corrupt BMP: width bytes FFFFFFFF must wrap like ByteBuffer.getInt,
-    // never crash the ANSI cast to int
-    val badBmp = new Array[Byte](54)
-    badBmp(0) = 'B'.toByte; badBmp(1) = 'M'.toByte
-    java.nio.ByteBuffer.wrap(badBmp).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      .putInt(18, -1).putInt(22, 77)
-    val junk = Array[Byte](1, 2, 3, 4, 5)
-    val df = Seq((1L, bmp), (2L, ppm), (3L, junk), (4L, badBmp)).toDF("doc_id", "payload")
-    val ingested = Multimodal.ingest(df, "doc_id", $"payload", "image")
-    // column hook: the parse compiles to Catalyst expressions
-    val cols = ingested.select($"doc_id",
-      Multimodal.decodeImageMeta($"media", $"meta", HeaderMediaCodec).as("m"))
-      .select($"doc_id", $"m.width", $"m.height").collect()
-      .map(r => r.getLong(0) -> (Option(r.get(1)), Option(r.get(2)))).toMap
-    assert(cols(1L) === (Some(640), Some(480)))
-    assert(cols(2L) === (Some(320), Some(240)))
-    assert(cols(3L) === (None, None)) // unknown format: null, never invented
-    assert(cols(4L) === (Some(-1), Some(77))) // wrapped like getInt, no ANSI crash
-    // batched (mapPartitions) hook parses the same bytes row-level
-    val batched = Multimodal.decodeBatched(ingested, "doc_id", "media", 4, 2, HeaderMediaCodec)
-      .collect().map(d => d.id -> (d.width, d.height)).toMap
-    assert(batched(1L) === ((640, 480)))
-    assert(batched(2L) === ((320, 240)))
-    assert(batched(3L) === ((0, 0)))
-    assert(batched(4L) === ((-1, 77))) // column and row hooks agree on corrupt headers
-    // meta schema is unchanged by the real codec (field name/type parity with
-    // ingest — nullability differs only because ingest's media_type literal
-    // is provably non-null)
-    val m = ingested.select(
-      Multimodal.decodeImageMeta($"media", $"meta", HeaderMediaCodec).as("m")).schema("m")
-      .dataType.asInstanceOf[org.apache.spark.sql.types.StructType]
-    assert(m.fields.map(f => (f.name, f.dataType)).toSeq ===
-      Multimodal.mediaMetaType.fields.map(f => (f.name, f.dataType)).toSeq)
   }
 
   test("training pipeline end-to-end: every stage removes exactly its planted artifacts") {
@@ -1180,10 +1076,12 @@ class OpsSpec extends SparkSpec {
     shingleCounts.foreach { case (pid, n) =>
       assert(got.get((pid + 10000, pid)).contains(n), s"planted copy of $pid")
     }
-    // decontaminate removes exactly the flagged ids, nothing else
+    // flaggedIds is exactly the colliding ids; the anti-join removes them, nothing else
     val flagged = hits.select($"id").distinct().as[Long].collect().toSet
-    val kept = Decontaminate.decontaminate(
-      corpus, "doc_id", "text", probe, "pid", "ptext", n = 3, minHits = 10L)
+    val flaggedIds = Decontaminate.flaggedIds(corpus, "doc_id", "text",
+      Decontaminate.probeHashes(probe, "pid", "ptext", 3), n = 3, minHits = 10L)
+    assert(flaggedIds.as[Long].collect().toSet === flagged)
+    val kept = corpus.join(flaggedIds, Seq("doc_id"), "left_anti")
       .select($"doc_id").as[Long].collect().toSet
     assert(kept === corpus.select($"doc_id").as[Long].collect().toSet -- flagged)
     assert(shingleCounts.keySet.forall(pid => !kept.contains(pid + 10000)))
@@ -1247,7 +1145,7 @@ class OpsSpec extends SparkSpec {
     assert(drv.values.toSet === Set("�")) // UTF-8 byte order: U+FFFD < U+10000
   }
 
-  test("near-dup groups + dedupByPairs: planted dup clusters collapse to one representative") {
+  test("near-dup groups + losers: planted dup clusters collapse to one representative") {
     val pairs = Dedup.minhashNearDups(dupDocs, "doc_id", "text", threshold = 0.8)
     val groups = Components.nearDupGroups(pairs)
     val expected = ufComponents(pairs.select($"id_a", $"id_b").as[(Long, Long)].collect().toSeq)
@@ -1257,7 +1155,8 @@ class OpsSpec extends SparkSpec {
     docs.filter($"doc_id" % 5 === 0).select($"doc_id").as[Long].collect().foreach { id =>
       assert(comp.get(id + 10000).contains(comp.getOrElse(id, id)))
     }
-    val deduped = Components.dedupByPairs(dupDocs, "doc_id", pairs)
+    val deduped =
+      dupDocs.join(Components.nearDupLosers(pairs, "doc_id"), Seq("doc_id"), "left_anti")
     // survivors: one representative per cluster + all unclustered docs
     val losers = expected.count { case (id, c) => id != c }
     assert(deduped.count() === dupDocs.count() - losers)
@@ -1627,24 +1526,6 @@ class OpsSpec extends SparkSpec {
     val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
       .map(t => Option(t.getMessage).getOrElse("")).mkString(" | ")
     assert(chain.contains("hashSplit: null key"), chain)
-  }
-
-  test("media codec injection: a custom codec drives the batched decode; default stays the fake") {
-    val media = Multimodal.ingest(docs.limit(20), "doc_id", $"text", "image/fake")
-    val decoded = Multimodal.decodeBatched(
-      media, "doc_id", "media", featureDim = 4, batchSize = 8, codec = StubCodec).collect()
-    assert(decoded.length === 20)
-    assert(decoded.forall(d => d.width === 42 && d.height === 24 && d.features.forall(_ === 0.25)))
-    val fake = Multimodal.decodeBatched(media, "doc_id", "media", 4).collect()
-    assert(fake.forall(d => d.width === ((d.byte_size * 37) % 1920 + 16).toInt))
-    // column-level hooks route through the injected codec too
-    val metas = media.select(Multimodal.decodeImageMeta($"media", $"meta", StubCodec).as("m"))
-      .select($"m.width").as[Option[Int]].collect()
-    assert(metas.forall(_.isEmpty)) // StubCodec.decodeImageMeta = identity (ingest widths are null)
-    // the fake* entry points and the FakeMediaCodec instance are the same path
-    val viaName = media.select(Multimodal.fakeDecodeImageMeta($"media", $"meta").as("m"))
-    val viaCodec = media.select(Multimodal.decodeImageMeta($"media", $"meta", FakeMediaCodec).as("m"))
-    assert(viaName.collect().toSeq === viaCodec.collect().toSeq)
   }
 
   test("native lang_id is bit-identical to the Column-tree version incl. null/empty/tie cases") {

@@ -137,7 +137,7 @@ class SuiteSpec extends SparkSpec {
     assert(r2._4 === "java" && r2._5 === 2L && r2._6 === 3L)
     val r3 = out(1)
     assert(r3 === (("repo3", 2L, 2L, "java", 1L, 1L))) // tie broken ascending
-    // null dep lands under the shared batch/streaming sentinel category
+    // null dep lands under the shared null sentinel category
     val nullGrp = Checks.functionalDependencyViolations(
       df.filter(col("repo") === "repo2"), Seq("repo"), "lang")
       .as[(String, Long, Long, String, Long, Long)].collect().head

@@ -2,6 +2,7 @@ package graft
 
 import graft.dsl._
 import graft.run.Validator
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 /** Golden-parity tests re-encoding the reference's executable examples
@@ -540,5 +541,64 @@ class ValidatorSpec extends SparkSpec {
     assert(total === ((100L, 45L, 55L)))
     val grouped = r.summaryBy("valid").orderBy("valid").collect()
     assert(grouped.length === 2)
+  }
+
+  // ---- Structured Streaming ------------------------------------------------
+  // The compiled validation pipeline is stateless Column transforms, so the
+  // SAME SchemaSpec runs unchanged over a stream: violations flow out per
+  // micro-batch; windowed summaries aggregate with watermarks. (The
+  // reference is batch-only; this is the Spark-native lift.)
+
+  case class Ev(event_id: Long, event_type: String, value: Double)
+
+  test("streaming validation: violations flow through a memory sink per micro-batch") {
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[Ev]
+    val spec = SchemaSpec("events", Seq(
+      Field.string("event_type").in("view", "click", "purchase"),
+      Field.float("value").ge(0.0)),
+      keyColumns = Seq("event_id"))
+
+    val violations = Validator.validate(spec, input.toDF()).violations
+    val q = violations.writeStream
+      .format("memory").queryName("viol_sink").outputMode("append").start()
+    try {
+      input.addData(
+        Ev(1, "view", 10.0),
+        Ev(2, "hack", 5.0),    // inclusion violation
+        Ev(3, "click", -2.0))  // ge violation
+      q.processAllAvailable()
+      input.addData(Ev(4, "purchase", 1.0), Ev(5, "hack", -1.0)) // two violations
+      q.processAllAvailable()
+      val got = spark.table("viol_sink")
+        .select("event_id", "constraint_id").as[(Long, String)].collect().toSet
+      assert(got === Set(
+        (2L, "event_type.inclusion"),
+        (3L, "value.greater_than_or_equal_to"),
+        (5L, "event_type.inclusion"),
+        (5L, "value.greater_than_or_equal_to")))
+    } finally q.stop()
+  }
+
+  test("streaming windowed summary with watermark (violations per window)") {
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[(java.sql.Timestamp, String)]
+    val spec = SchemaSpec("s", Seq(
+      Field.string("v").in("ok")), keyColumns = Seq("ts"))
+    val annotated = Validator.validate(spec, input.toDF().toDF("ts", "v")).annotated
+    val summary = annotated
+      .withWatermark("ts", "10 seconds")
+      .groupBy(window($"ts", "10 seconds"))
+      .agg(count(lit(1)).as("rows"), sum(when(!$"valid", 1L).otherwise(0L)).as("invalid"))
+    val q = summary.writeStream
+      .format("memory").queryName("win_sink").outputMode("complete").start()
+    try {
+      def ts(s: Long) = new java.sql.Timestamp(s * 1000)
+      input.addData((ts(5), "ok"), (ts(7), "bad"), (ts(15), "ok"))
+      q.processAllAvailable()
+      val rows = spark.table("win_sink").select("rows", "invalid")
+        .as[(Long, Long)].collect().toSet
+      assert(rows === Set((2L, 1L), (1L, 0L)))
+    } finally q.stop()
   }
 }
