@@ -9,8 +9,8 @@ import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType}
 
-/** Per-stage row accounting for one [[TrainingPipeline.run]] (docs removed BY
-  * that stage; every stage sees the previous stage's survivors).
+/** Per-stage row accounting for one batch [[TrainingPipeline.run]] (docs
+  * removed BY that stage; every stage sees the previous stage's survivors).
   * `nearDupDroppedBuckets`/`nearDupDroppedIds` surface the MinHash LSH bucket
   * cap's exclusions (the one recall cap in the pipeline) — the operators'
   * no-silent-caps contract survives composition. */
@@ -28,11 +28,12 @@ case class PipelineReport(
   def removed: Long = invalid + exactDups + nearDups + contaminated + lowQuality
 }
 
-/** One pipeline stage's completion record: whether its state was computed
-  * this invocation or loaded from the work dir's committed checkpoint, plus
-  * the counts it contributed to the [[PipelineReport]]. Surfaced on
-  * [[PipelineResult.stages]] so callers (and the resume tests) can see
-  * exactly which stages a resumed run re-executed. */
+/** One [[TrainingPipeline.runDelta]] stage's completion record: whether its
+  * state was computed this invocation or loaded from the work dir's
+  * committed checkpoint, plus the counts it contributed to the
+  * [[DeltaPipelineReport]]. Surfaced on [[DeltaPipelineResult.stages]] so
+  * callers (and the resume tests) can see exactly which stages a resumed run
+  * re-executed. */
 case class StageRecord(name: String, loaded: Boolean, counts: Map[String, Long])
 
 /** Per-stage row accounting for one [[TrainingPipeline.runDelta]] snapshot
@@ -48,21 +49,19 @@ case class DeltaPipelineReport(
 
 /** One [[TrainingPipeline.runDelta]] snapshot's output: the delta's surviving
   * documents (split/packed), its report, and the per-stage manifest (which
-  * stages a resumed run loaded vs recomputed — the same contract as
-  * [[PipelineResult.stages]]). */
+  * stages a resumed or replayed run loaded vs recomputed). */
 case class DeltaPipelineResult(corpus: DataFrame, report: DeltaPipelineReport,
     stages: Seq[StageRecord] = Nil,
     /** The delta's content-address tag (stage-namespace id) — callers use it
       * as a stable per-snapshot output address (graft.RunPipeline does). */
     tag: String = "")
 
-/** `corpus` reads from the one cached frame [[run]] created; call
-  * [[unpersist]] once the caller's action on `corpus` (write/collect) is done.
-  * `stages` is the per-stage manifest — empty for the uncheckpointed [[run]],
-  * one record per stage for [[TrainingPipeline.runResumable]]. */
+/** One [[TrainingPipeline.run]]'s output. `corpus` reads from the one cached
+  * frame the run created; call [[unpersist]] once the caller's action on
+  * `corpus` (write/collect) is done. The batch run keeps no checkpoint, so it
+  * has no stage manifest. */
 case class PipelineResult(corpus: DataFrame, report: PipelineReport,
-    private[ops] val cached: Seq[DataFrame] = Nil,
-    stages: Seq[StageRecord] = Nil) {
+    private[ops] val cached: Seq[DataFrame] = Nil) {
   /** Releases the pipeline's cached frames (the deduped corpus + the small
     * flagged-id / probe-hash sets). After this, actions on `corpus` recompute
     * the full lineage. */
@@ -143,27 +142,15 @@ object TrainingPipeline {
 
     // validate; count input and survivors with ONE observation riding the
     // cache-materializing count below (no separate full pass per count)
-    val intake = Observation(s"graft_pipeline_intake_${seq.incrementAndGet()}")
-    val annotated = schema match {
-      case Some(spec) => Validator.validate(spec, cleaned).annotated
-      case None       => cleaned.withColumn("valid", lit(true))
-    }
-    val observed = annotated
-      .observe(intake, count(lit(1)).as("n_input"),
-        coalesce(sum(when(col("valid"), 1L).otherwise(0L)), lit(0L)).as("n_valid"))
-      .filter(col("valid"))
-    val valid = (schema match {
-      case Some(_) => observed.drop("violations", "valid")
-      case None    => observed.drop("valid")
-    })
+    val (valid, intakeCounted) = validIntake(cleaned, schema, "graft_pipeline_intake")
 
     // exact dedup, fused into THE one persisted corpus frame: everything
     // downstream (signature scan, Jaccard verify, decontamination join,
     // quality filter, the caller's action) re-reads this cache instead of
     // re-running scrub+validate+dedup per stage
     val exact = Dedup.exactDedup(valid, idCol, textCol).persist()
-    val nExact = exact.count() // materializes the cache; fires `intake`
-    val (nInput, nValid) = intakeCounts(intake, annotated)
+    val nExact = exact.count() // materializes the cache; fires the intake observation
+    val (nInput, nValid) = intakeCounted()
     // everything downstream reads the `exact` cache; the pre-scrub
     // projections (persisted only for the scrubs' multi-pass windows) can go
     // now — intakeCounts' recompute fallback has already run if it was going to
@@ -236,7 +223,29 @@ object TrainingPipeline {
       cached = exact +: deconCached)
   }
 
-  // ---- shared stage bodies (run + runResumable) ----------------------------
+  // ---- helpers of run and runDelta -----------------------------------------
+
+  /** Validates `cleaned` (every row is valid when no `schema` is given) and
+    * keeps the valid rows, `violations`/`valid` dropped. Input and valid
+    * counts ride an `Observation` on the first action over the returned
+    * frame; the returned thunk reads them after that action ran. */
+  private def validIntake(cleaned: DataFrame, schema: Option[SchemaSpec],
+      obsName: String): (DataFrame, () => (Long, Long)) = {
+    val intake = Observation(s"${obsName}_${seq.incrementAndGet()}")
+    val annotated = schema match {
+      case Some(spec) => Validator.validate(spec, cleaned).annotated
+      case None       => cleaned.withColumn("valid", lit(true))
+    }
+    val observed = annotated
+      .observe(intake, count(lit(1)).as("n_input"),
+        coalesce(sum(when(col("valid"), 1L).otherwise(0L)), lit(0L)).as("n_valid"))
+      .filter(col("valid"))
+    val valid = schema match {
+      case Some(_) => observed.drop("violations", "valid")
+      case None    => observed.drop("valid")
+    }
+    (valid, () => intakeCounts(intake, annotated))
+  }
 
   /** Integer-threshold quality gate: composite score floor + Gopher-style
     * top-word dominance cap (top_word_count * 100 <= pct * n_tokens). */
@@ -277,9 +286,8 @@ object TrainingPipeline {
     }
   }
 
-  /** One resumable run's stage bookkeeping over [[StageStore]]:
-    * load-or-compute, the per-stage manifest, and the one stage-data writer
-    * ([[runResumable]] and [[runDelta]] share it). */
+  /** One [[runDelta]] call's stage bookkeeping over [[StageStore]]:
+    * load-or-compute, the per-stage manifest, and the one stage-data writer. */
   private final class Stages(spark: SparkSession, workDir: String,
       onStageComputed: String => Unit) {
     private val fs = MetaFile.fs(spark, workDir)
@@ -313,174 +321,6 @@ object TrainingPipeline {
       Dedup.writeCommitMarker(fs, dir)
       n
     }
-  }
-
-  // ---- resumable variant ----------------------------------------------------
-
-  /** [[run]] with pipeline-level resume — the north_rule's checkpoint mandate
-    * lifted from the validation entry point to the whole pipeline. Stage state
-    * lives under `workDir`, committed through [[graft.checkpoint.StageStore]]:
-    *
-    *   - `prepare`  — normalize+PII (+optional line/span scrubs) + validate +
-    *     exact dedup, CHECKPOINTED as the corpus parquet every later stage reads.
-    *     This replaces run()'s in-memory persist: a resume cannot
-    *     re-materialize a cache, and at 100 TB the cleaned deduped corpus is
-    *     written once either way.
-    *   - `neardup`  — MinHash/LSH + connected components; persists the SMALL
-    *     loser-id set (the discovery job is the expensive part; the anti-join
-    *     that applies it is cheap reapplication).
-    *   - `decontam` — n-gram collisions vs the probe; persists the flagged-id
-    *     set (skipped entirely when no probe is given).
-    *   - `quality`  — counts-only (the gate is a cheap reapplied filter).
-    *   - `mix`      — counts-only (deterministic hash sampling, reapplied).
-    *
-    * Stage keys CHAIN: each embeds its predecessor's key plus its own
-    * parameters, rooted at a content fingerprint of the input (and of the
-    * probe, for decontam). A changed input, probe, or parameter therefore
-    * recomputes exactly the affected suffix of the pipeline; an unchanged
-    * prefix loads without touching its files (byte-identical state on disk).
-    * A kill mid-stage leaves that stage uncommitted (meta is written strictly
-    * after data): the resume re-runs it and everything after, never anything
-    * before. The returned corpus is assembled by deterministic reapplication
-    * (corpus checkpoint -> loser anti-joins -> quality filter -> mix -> split
-    * -> pack), so a resumed run's corpus and report are identical to an
-    * uninterrupted one's.
-    *
-    * `schema` is the one input whose content can't be fingerprinted (Scala
-    * closures); encode schema changes in `paramsKey` or use a fresh workDir —
-    * the same contract CheckpointedRunner documents for its `process`.
-    *
-    * Stage data (the corpus checkpoint, the loser-id sets) is written
-    * id-hash-partitioned and id-sorted with no fixed fan-out: AQE sizes the
-    * exchange from the data, so a small corpus writes one file and a large
-    * one follows `spark.sql.shuffle.partitions`. Each stage's commit record
-    * is one small driver-written file (see [[graft.checkpoint.StageStore]]).
-    *
-    * @param paramsKey       caller-owned version string folded into every
-    *                        stage key (bump when `schema` changes)
-    * @param onStageComputed invoked after a stage computes AND commits (not on
-    *                        load) — a progress hook; throwing from it aborts
-    *                        the run at a committed stage boundary, which is
-    *                        exactly the kill the resume test simulates
-    */
-  def runResumable(
-      docs: DataFrame, idCol: String, textCol: String, workDir: String,
-      schema: Option[SchemaSpec] = None,
-      probe: Option[(DataFrame, String, String)] = None,
-      maxLineFreq: Option[Long] = None,
-      spanScrubN: Option[Int] = None, spanScrubMinCount: Long = 2L,
-      shingleN: Int = 3, minhashThreshold: Double = 0.9,
-      maxBucket: Int = Dedup.DefaultMaxBucket,
-      decontamN: Int = 13, decontamMinHits: Long = 1L,
-      minQualityScore: Long = 0L, maxTopWordPct: Int = 100,
-      mixStrataCol: Option[String] = None,
-      mixWeights: Map[String, Double] = Map.empty, mixDefaultWeight: Double = 1.0,
-      splits: Seq[(String, Double)] = Seq("train" -> 1.0), splitSalt: String = "",
-      packBudget: Option[Long] = None, packShards: Int = 64,
-      paramsKey: String = "",
-      onStageComputed: String => Unit = _ => ()): PipelineResult = {
-    val spark = docs.sparkSession
-    val stage = new Stages(spark, workDir, onStageComputed)
-
-    val inFp = contentFp(docs, Seq(idCol, textCol))
-
-    val corpusDir = StageStore.dataDir(workDir, "corpus")
-    val prepareKey =
-      s"v2|in=$inFp|lineFreq=$maxLineFreq|spanN=$spanScrubN|spanMin=$spanScrubMinCount|" +
-        s"schema=${schema.isDefined}|user=$paramsKey"
-    val prep = stage("prepare", prepareKey, Some(corpusDir)) {
-      val cleaned0 = docs.withColumn(textCol,
-        TextOps.scrubPii(TextOps.normalizeUnicode(col(textCol))))
-      val cleaned1 = maxLineFreq match {
-        case Some(f) => Dedup.scrubCommonLines(cleaned0.persist(), idCol, textCol, f)
-        case None    => cleaned0
-      }
-      val preSpan = if (spanScrubN.isDefined) cleaned1.persist() else cleaned1
-      val cleaned = spanScrubN match {
-        case Some(n) => Dedup.scrubDuplicatedSpans(preSpan, idCol, textCol, n, spanScrubMinCount)
-        case None    => cleaned1
-      }
-      val intake = Observation(s"graft_pipeline_intake_${seq.incrementAndGet()}")
-      val annotated = schema match {
-        case Some(spec) => Validator.validate(spec, cleaned).annotated
-        case None       => cleaned.withColumn("valid", lit(true))
-      }
-      val observed = annotated
-        .observe(intake, count(lit(1)).as("n_input"),
-          coalesce(sum(when(col("valid"), 1L).otherwise(0L)), lit(0L)).as("n_valid"))
-        .filter(col("valid"))
-      val valid = schema match {
-        case Some(_) => observed.drop("violations", "valid")
-        case None    => observed.drop("valid")
-      }
-      // the checkpoint write IS the observation's materializing action
-      val nExact = stage.write(Dedup.exactDedup(valid, idCol, textCol), idCol, corpusDir)
-      val (nInput, nValid) = intakeCounts(intake, annotated)
-      if (maxLineFreq.isDefined) cleaned0.unpersist()
-      if (spanScrubN.isDefined) preSpan.unpersist()
-      Map("n_input" -> nInput, "n_valid" -> nValid, "n_exact" -> nExact)
-    }
-    val corpus = spark.read.parquet(corpusDir)
-    val idType = corpus.schema(idCol).dataType
-    def idSet(dir: String): DataFrame = // explicit schema: the set may be EMPTY
-      spark.read.schema(StructType(Seq(StructField(idCol, idType)))).parquet(dir)
-
-    val nearDir = StageStore.dataDir(workDir, "near_losers")
-    val nearKey = s"$prepareKey|shingleN=$shingleN|thr=$minhashThreshold|maxBucket=$maxBucket"
-    val nearC = stage("neardup", nearKey, Some(nearDir)) {
-      val audited = Dedup.minhashNearDupsAudited(
-        corpus, idCol, textCol, shingleN = shingleN, threshold = minhashThreshold,
-        maxBucket = maxBucket)
-      Map("n_near" -> stage.write(Components.nearDupLosers(audited.pairs, idCol),
-        idCol, nearDir),
-        "drop_buckets" -> audited.droppedBuckets, "drop_ids" -> audited.droppedIds)
-    }
-    val near = corpus.join(idSet(nearDir), Seq(idCol), "left_anti")
-
-    val contamDir = StageStore.dataDir(workDir, "contaminated_ids")
-    val (decontamKey, deconAndCount) = probe match {
-      case Some((p, pid, ptext)) =>
-        val key = s"$nearKey|probe=${contentFp(p, Seq(pid, ptext))}|n=$decontamN|minHits=$decontamMinHits"
-        val c = stage("decontam", key, Some(contamDir)) {
-          val probeHashed = Decontaminate.probeHashes(p, pid, ptext, decontamN)
-          Map("n_contam" -> stage.write(Decontaminate
-            .flaggedIds(near, idCol, textCol, probeHashed, decontamN, decontamMinHits),
-            idCol, contamDir))
-        }
-        (key, (near.join(idSet(contamDir), Seq(idCol), "left_anti"), c("n_contam")))
-      case None => (s"$nearKey|probe=none", (near, 0L))
-    }
-    val (decon, nContam) = deconAndCount
-
-    val qualityKey = s"$decontamKey|minQ=$minQualityScore|maxTop=$maxTopWordPct"
-    val kept = qualityFilter(decon, textCol, minQualityScore, maxTopWordPct)
-    val nKept = stage("quality", qualityKey)(Map("n_kept" -> kept.count()))("n_kept")
-
-    val (mixed, nMixedRows) = mixStrataCol match {
-      case Some(sc) =>
-        val wStr = mixWeights.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString(",")
-        val mixKey = s"$qualityKey|strata=$sc|w=$wStr|dw=$mixDefaultWeight|salt=$splitSalt"
-        val m = Sharding.sampleByWeights(kept, idCol, sc, mixWeights, mixDefaultWeight,
-          splitSalt + "#mix")
-        (m, stage("mix", mixKey)(Map("n_mixed" -> m.count()))("n_mixed"))
-      case None => (kept, nKept)
-    }
-
-    val out = splitAndPack(mixed, idCol, textCol, mixing = mixStrataCol.isDefined,
-      splits, splitSalt, packBudget, packShards)
-
-    PipelineResult(out, PipelineReport(
-      input = prep("n_input"),
-      invalid = prep("n_input") - prep("n_valid"),
-      exactDups = prep("n_valid") - prep("n_exact"),
-      nearDups = nearC("n_near"),
-      contaminated = nContam,
-      lowQuality = prep("n_exact") - nearC("n_near") - nContam - nKept,
-      output = nKept,
-      nearDupDroppedBuckets = nearC("drop_buckets"),
-      nearDupDroppedIds = nearC("drop_ids"),
-      mixedRows = nMixedRows),
-      stages = stage.records.result())
   }
 
   // ---- incremental (delta) variant ------------------------------------------
@@ -631,21 +471,10 @@ object TrainingPipeline {
     val prep = stage(sname("prepare"), baseKey, Some(prepDir)) {
       val cleaned = delta.withColumn(textCol,
         TextOps.scrubPii(TextOps.normalizeUnicode(col(textCol))))
-      val intake = Observation(s"graft_delta_intake_${seq.incrementAndGet()}")
-      val annotated = schema match {
-        case Some(spec) => Validator.validate(spec, cleaned).annotated
-        case None       => cleaned.withColumn("valid", lit(true))
-      }
-      val observed = annotated
-        .observe(intake, count(lit(1)).as("n_input"),
-          coalesce(sum(when(col("valid"), 1L).otherwise(0L)), lit(0L)).as("n_valid"))
-        .filter(col("valid"))
-      val valid = schema match {
-        case Some(_) => observed.drop("violations", "valid")
-        case None    => observed.drop("valid")
-      }
+      val (valid, intakeCounted) = validIntake(cleaned, schema, "graft_delta_intake")
+      // the checkpoint write is the intake observation's materializing action
       val nExact = stage.write(Dedup.exactDedup(valid, idCol, textCol), idCol, prepDir)
-      val (nInput, nValid) = intakeCounts(intake, annotated)
+      val (nInput, nValid) = intakeCounted()
       Map("n_input" -> nInput, "n_valid" -> nValid, "n_exact" -> nExact)
     }
     val prepared = spark.read.parquet(prepDir)

@@ -702,73 +702,6 @@ class OpsSpec extends SparkSpec {
     out.unpersist(); probe.unpersist(); base.unpersist()
   }
 
-  test("resumable pipeline: kill after a stage resumes with complement stages only; corpus + report identical; committed state untouched") {
-    import graft.ops.TrainingPipeline
-    import graft.dsl.{Field, SchemaSpec}
-    val clean = docs.filter(!$"text".contains("dup")).select($"doc_id", $"text", $"lang")
-    val probe = clean.filter($"doc_id" % 25 === 0)
-      .select(($"doc_id" + 90000).as("pid"), $"text".as("ptext")).cache()
-    val base = clean.filter($"doc_id" % 25 =!= 0).cache()
-    val corpus = base
-      .unionAll(base.filter($"doc_id" % 5 === 0).select($"doc_id" + 10000, $"text", $"lang"))
-      .unionAll(probe.select($"pid" + 10000, $"ptext", lit("en")))
-      .unionAll(Seq((40001L, "a perfectly fine document text", null.asInstanceOf[String]))
-        .toDF("doc_id", "text", "lang"))
-      .toDF("doc_id", "text", "lang")
-    val spec = Some(SchemaSpec("d", Seq(Field.string("lang").req), keyColumns = Seq("doc_id")))
-    def go(work: String, onStage: String => Unit = _ => (), in: org.apache.spark.sql.DataFrame = corpus) =
-      TrainingPipeline.runResumable(in, "doc_id", "text", work,
-        schema = spec, probe = Some((probe, "pid", "ptext")),
-        splits = Seq("train" -> 0.9, "val" -> 0.1), splitSalt = "pipe",
-        packBudget = Some(500L), onStageComputed = onStage)
-
-    // uninterrupted reference run in its own work dir
-    val work1 = java.nio.file.Files.createTempDirectory("graft-pipe1").toString
-    val full = go(work1)
-    assert(full.stages.map(s => (s.name, s.loaded)) ===
-      Seq("prepare" -> false, "neardup" -> false, "decontam" -> false, "quality" -> false))
-    val fullRows = full.corpus.collect().map(_.toString).sorted
-
-    // kill at the neardup commit boundary; decontam/quality never ran
-    val work2 = java.nio.file.Files.createTempDirectory("graft-pipe2").toString
-    val killed = intercept[RuntimeException] {
-      go(work2, onStage = n => if (n == "neardup") throw new RuntimeException("kill"))
-    }
-    assert(killed.getMessage === "kill")
-    def stateFiles(): Map[String, Long] = {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(java.nio.file.Paths.get(work2)).iterator().asScala
-        .filter(java.nio.file.Files.isRegularFile(_))
-        .map(p => p.toString -> java.nio.file.Files.getLastModifiedTime(p).toMillis).toMap
-    }
-    val committed = stateFiles()
-    assert(committed.keys.exists(_.contains("/corpus/")) &&
-      committed.keys.exists(_.contains("/near_losers/")))
-
-    // resume: prepare + neardup load, decontam + quality compute
-    val resumed = go(work2)
-    assert(resumed.stages.map(s => (s.name, s.loaded)) ===
-      Seq("prepare" -> true, "neardup" -> true, "decontam" -> false, "quality" -> false))
-    assert(resumed.report === full.report)
-    assert(resumed.corpus.collect().map(_.toString).sorted === fullRows)
-    // completed stages' files were never rewritten — byte-identical on disk
-    val after = stateFiles()
-    assert(committed.forall { case (p, t) => after.get(p).contains(t) },
-      committed.filterNot { case (p, t) => after.get(p).contains(t) }.keys.mkString(","))
-
-    // a third invocation loads everything (no stage recomputes)
-    val again = go(work2)
-    assert(again.stages.forall(_.loaded) && again.report === full.report)
-
-    // content change invalidates the whole chain: every stage recomputes
-    val grown = corpus.unionAll(Seq((50000L, "a brand new document body", "en"))
-      .toDF("doc_id", "text", "lang"))
-    val changed = go(work2, in = grown)
-    assert(changed.stages.forall(!_.loaded))
-    assert(changed.report.input === full.report.input + 1)
-    probe.unpersist(); base.unpersist()
-  }
-
   test("delta pipeline facade: two snapshots equal the batch run; indexes hold the survivors; kill resumes; replay is exactly-once") {
     import graft.ops.{Dedup, Similarity, TrainingPipeline}
     import graft.dsl.{Field, SchemaSpec}
@@ -878,11 +811,28 @@ class OpsSpec extends SparkSpec {
       go(d1, w = work2, onStage = n => if (n.endsWith("_lexdedup")) throw new RuntimeException("kill"))
     }
     assert(killed.getMessage === "kill")
+    // the committed prefix: both stages' data dirs and their commit records
+    // (the index dirs are left out: the resumed appends add files there)
+    def prefixFiles(): Map[String, (Long, Long)] = {
+      import scala.jdk.CollectionConverters._
+      val roots = Seq(s"delta_${r1.tag}_corpus", s"delta_${r1.tag}_lex_keep",
+        s"_meta/delta_${r1.tag}_prepare", s"_meta/delta_${r1.tag}_lexdedup")
+      roots.map(r => java.nio.file.Paths.get(work2, r)).flatMap { root =>
+        assert(java.nio.file.Files.exists(root), root)
+        java.nio.file.Files.walk(root).iterator().asScala
+          .filter(java.nio.file.Files.isRegularFile(_)).toSeq
+      }.map(p => p.toString ->
+        (java.nio.file.Files.size(p), java.nio.file.Files.getLastModifiedTime(p).toMillis)).toMap
+    }
+    val committed = prefixFiles()
+    assert(committed.keys.exists(_.contains(s"delta_${r1.tag}_lex_keep/")))
     val resumed = go(d1, w = work2)
     val loadedNames = resumed.stages.collect { case s if s.loaded => s.name.split("_").last }
     assert(loadedNames === Seq("prepare", "lexdedup"))
     assert(resumed.report === r1.report)
     assert(resumed.corpus.select($"doc_id").as[Long].collect().toSet === out1)
+    // the loaded stages' files were never rewritten: same length and mtime
+    assert(prefixFiles() === committed)
 
     // crash-window replay: dedup stage metas lost AFTER the survivors were
     // already appended/built into the indexes (the meta row is the commit
@@ -1407,13 +1357,6 @@ class OpsSpec extends SparkSpec {
     assert(out(100L).contains("unique filler document number 0"))
     res.unpersist()
     assert(org.apache.spark.sql.graftbridge.noCachedPlans(spark))
-    // resumable variant: same corpus text through the prepare checkpoint
-    val work = java.nio.file.Files.createTempDirectory("graft-spanpipe").toString
-    val res2 = TrainingPipeline.runResumable(corpus, "doc_id", "text", work,
-      spanScrubN = Some(8))
-    val out2 = res2.corpus.select($"doc_id", $"text").as[(Long, String)].collect().toMap
-    assert(out2 === out)
-    res2.unpersist()
   }
 
   test("pipeline packing: composite (split, shard) key fans the window out; bins dense per pair") {

@@ -4,11 +4,17 @@
     python3 tools/unreached_api.py [repo_root]
 
 Prints each public member declared at object level (indent <= 2) in
-`src/main/scala/graft/ops/*.scala` whose name occurs nowhere in
-`src/main` or `perfbench/src` apart from its own name in its declaration
-(comments are ignored, so a scaladoc link is not a caller). Tests do not
-count: public API that only a test reaches is a candidate for deletion.
-Names in ALLOWED are printed with their reason instead of as candidates.
+`src/main/scala/graft/ops/*.scala` that nothing in `src/main` or
+`perfbench/src` reaches (comments are ignored, so a scaladoc link is not a
+caller). A member of an `object Obj` is reached by a qualified `Obj.name`
+(a line break may sit before the dot), by a bare `name` inside `Obj`'s
+own body, or by a bare `name` in a file that imports `Obj._` or
+`Obj.{..}`; a bare `name` elsewhere is some other member of that name, so
+entry points with common names (`run`) show up. Any other declaration is
+reached by its name occurring anywhere apart from its own declaration.
+Tests do not count: public API that only a test reaches is a candidate
+for deletion. Names in ALLOWED are printed with their reason instead of as
+candidates. Exits 1 when it prints an `unreached` line.
 """
 import pathlib
 import re
@@ -20,11 +26,12 @@ ALLOWED = {
     "dequantizeInt8": "reference for the int8 error bound",
     "deltaDedup": "raw-frame reference the indexed delta-dedup test compares against",
     "deltaDedupIndexed": "the composition runDelta runs; the indexed-redelivery tests drive it",
-    "runResumable": "restartable batch pipeline; no CLI calls it, its kill-and-resume tests do",
+    "run": "batch reference the delta ≡ batch test compares against",
 }
 
 DECL = re.compile(r"^( {0,2})((?:(?:override|final|implicit|lazy)\s+)*)(def|object)\s+([A-Za-z_]\w*)")
 PRIVATE = re.compile(r"^\s*(private|protected)\b")
+TOP = re.compile(r"^(?:(?:final|sealed|abstract|case|implicit)\s+)*(object|class|trait)\s+([A-Za-z_]\w*)")
 
 
 def strip_comments(src):
@@ -38,21 +45,56 @@ def strip_comments(src):
     return out
 
 
+def offsets(ls):
+    """Character offset of each line's start in "\n".join(ls), then its end."""
+    out, pos = [], 0
+    for line in ls:
+        out.append(pos)
+        pos += len(line) + 1
+    return out + [pos]
+
+
+def bare(text, word):
+    """Offsets of `word` not preceded by a dot (whitespace may sit between)."""
+    return [m.start() for m in word.finditer(text) if not text[:m.start()].rstrip().endswith(".")]
+
+
 def main():
     root = pathlib.Path(sys.argv[1] if len(sys.argv) > 1 else ".")
     files = sorted((root / "src/main").rglob("*.scala")) + sorted((root / "perfbench/src").rglob("*.scala"))
     lines = {f: strip_comments(f.read_text()) for f in files}
-    decls = []  # (name, kind, file, line number)
+    texts = {f: "\n".join(ls) for f, ls in lines.items()}
+    at = {f: offsets(ls) for f, ls in lines.items()}
+    decls = []  # (name, kind, file, line number, name's offset, declaring object or None)
     for f in sorted((root / "src/main/scala/graft/ops").glob("*.scala")):
+        tops = [(n, TOP.match(line)) for n, line in enumerate(lines[f]) if TOP.match(line)]
         for n, line in enumerate(lines[f]):
             m = DECL.match(line)
-            if m and not PRIVATE.match(line):
-                decls.append((m.group(4), m.group(3), f, n))
-    for name, kind, f, n in decls:
+            if not m or PRIVATE.match(line):
+                continue
+            owner = None
+            if m.group(1):  # a member: find its enclosing top-level definition
+                starts = [(i, t) for i, t in tops if i < n]
+                if starts and starts[-1][1].group(1) == "object":
+                    i, t = starts[-1]
+                    end = next((j for j, _ in tops if j > i), len(lines[f]))
+                    owner = (t.group(2), i, end)
+            decls.append((m.group(4), m.group(3), f, n, at[f][n] + m.start(4), owner))
+    unreached = False
+    for name, kind, f, n, decl_at, owner in decls:
         word = re.compile(rf"\b{re.escape(name)}\b")
-        own = DECL.sub("", lines[f][n], count=1)  # the line minus the declared name
-        used = word.search(own) or any(word.search(line) for g, ls in lines.items()
-                                       for i, line in enumerate(ls) if (g, i) != (f, n))
+        if owner is None:
+            own = DECL.sub("", lines[f][n], count=1)  # the line minus the declared name
+            used = word.search(own) or any(word.search(line) for g, ls in lines.items()
+                                           for i, line in enumerate(ls) if (g, i) != (f, n))
+        else:
+            obj, start, end = owner
+            qualified = re.compile(rf"\b{re.escape(obj)}\s*\.\s*{re.escape(name)}\b")
+            wholesale = re.compile(rf"^\s*import\s+[\w.]*\b{re.escape(obj)}\.(_|\{{)", re.M)
+            body = range(at[f][start], at[f][end])
+            used = (any(qualified.search(t) for t in texts.values())
+                    or any(o in body and o != decl_at for o in bare(texts[f], word))
+                    or any(g != f and wholesale.search(t) and bare(t, word) for g, t in texts.items()))
         if used:
             continue
         where = f"{f.relative_to(root)}:{n + 1}"
@@ -60,7 +102,9 @@ def main():
             print(f"allowed  {kind} {name}  {where}  ({ALLOWED[name]})")
         else:
             print(f"unreached {kind} {name}  {where}")
+            unreached = True
+    return 1 if unreached else 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())
