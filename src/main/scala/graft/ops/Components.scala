@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Distributed connected components over an undirected edge list — the last
   * step of a near-dup pipeline: pair output (MinHash/SimHash/embedding LSH)
@@ -74,7 +75,8 @@ object Components {
     * milliseconds. */
   val SmallGraphEdges: Long = 1L << 20
 
-  private def ltAny(x: Any, y: Any): Boolean = (x, y) match {
+  /** The distributed rounds' id order, on the driver. */
+  private[ops] def ltAny(x: Any, y: Any): Boolean = (x, y) match {
     case (a: Long, b: Long) => a < b
     case (a: Int, b: Int) => a < b
     case (a: Short, b: Short) => a < b
@@ -89,17 +91,16 @@ object Components {
     case _ => throw new IllegalArgumentException(s"unorderable id type: ${x.getClass}")
   }
 
-  private def driverOrderable(e: DataFrame): Boolean =
-    e.schema.head.dataType match {
-      case org.apache.spark.sql.types.LongType | org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.ShortType | org.apache.spark.sql.types.ByteType |
-           org.apache.spark.sql.types.StringType => true
-      case _ => false
-    }
+  /** Id types [[ltAny]] orders. */
+  private[ops] def driverOrderable(t: DataType): Boolean = t match {
+    case LongType | IntegerType | ShortType | ByteType | StringType => true
+    case _ => false
+  }
 
-  /** Exact same (id, component-min) output as the distributed rounds, via a
-    * driver union-find over an already-materialized small edge set. */
-  private def driverUnionFind(e: DataFrame): DataFrame = {
+  /** The one driver union-find: every node of `edges` (pairs of non-null,
+    * distinct ids) mapped to its component's minimum id under [[ltAny]] —
+    * the same (id, component) the distributed rounds converge to. */
+  private[ops] def unionFind(edges: Iterator[(Any, Any)]): Map[Any, Any] = {
     val parent = new java.util.HashMap[Any, Any]()
     def find(x0: Any): Any = {
       var x = x0
@@ -112,23 +113,28 @@ object Components {
       }
       x
     }
-    e.collect().foreach { r =>
-      val (a, b) = (r.get(0), r.get(1))
+    edges.foreach { case (a, b) =>
       if (parent.get(a) == null) parent.put(a, a)
       if (parent.get(b) == null) parent.put(b, b)
       val (ra, rb) = (find(a), find(b))
       if (ra != rb) {
+        // the smaller root wins, so every root is its component's minimum
         if (ltAny(ra, rb)) parent.put(rb, ra) else parent.put(ra, rb)
       }
     }
     import scala.jdk.CollectionConverters._
+    parent.keySet().asScala.iterator.map(id => id -> find(id)).toMap
+  }
+
+  /** Exact same (id, component-min) output as the distributed rounds, via
+    * [[unionFind]] over an already-materialized small edge set. */
+  private def driverComponents(e: DataFrame): DataFrame = {
+    import scala.jdk.CollectionConverters._
     val t = e.schema.head.dataType
-    val out = parent.keySet().asScala.toSeq
-      .map(id => org.apache.spark.sql.Row(id, find(id)))
-    e.sparkSession.createDataFrame(out.asJava,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id", t, nullable = false),
-        org.apache.spark.sql.types.StructField("component", t, nullable = false))))
+    val out = unionFind(e.collect().iterator.map(r => (r.get(0), r.get(1))))
+      .map { case (id, c) => Row(id, c) }.toSeq
+    e.sparkSession.createDataFrame(out.asJava, StructType(Seq(
+      StructField("id", t, nullable = false), StructField("component", t, nullable = false))))
   }
 
   /** Connected components of the graph given as an edge list.
@@ -140,13 +146,16 @@ object Components {
     *
     * When the canonical edge set — already materialized for the convergence
     * checksum — is at most `smallGraphEdges` (and the id type has a driver
-    * ordering), the components come from a driver union-find instead of the
-    * distributed rounds: identical output, milliseconds instead of
+    * ordering), the components come from the driver [[unionFind]] instead
+    * of the distributed rounds: identical output, milliseconds instead of
     * 2x(rounds)x(eager-checkpoint + checksum) fixed job cost. Near-dup pair
     * graphs are tiny by construction (output ∝ duplicates); the distributed
     * path remains the unbounded-scale default and the only semantic
     * difference is that a small graph cannot hit maxRounds. Pass
-    * `smallGraphEdges = 0` to force the distributed rounds. */
+    * `smallGraphEdges = 0` to force the distributed rounds. The delta
+    * dedups resolve their survivors under the same cut without calling
+    * this: `Dedup.deltaLosers` collects the pair rows once and runs the
+    * same union-find over them. */
   def connectedComponents(
       edges: DataFrame, srcCol: String, dstCol: String,
       maxRounds: Int = 25, reliableCheckpoint: Boolean = false,
@@ -156,8 +165,8 @@ object Components {
 
     var cur = truncate(canonical(edges, srcCol, dstCol))
     var sig = checksum(cur)
-    if (sig._1 > 0 && sig._1 <= smallGraphEdges && driverOrderable(cur))
-      return driverUnionFind(cur)
+    if (sig._1 > 0 && sig._1 <= smallGraphEdges && driverOrderable(cur.schema.head.dataType))
+      return driverComponents(cur)
     var converged = sig._1 == 0 // empty edge set: nothing to do
     var round = 0
     while (!converged && round < maxRounds) {

@@ -1,7 +1,7 @@
 package graft.ops
 
-import graft.io.MetaFile
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import graft.io.{MetaFile, ParquetLayout}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, graftbridge}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -876,18 +876,96 @@ object Dedup {
 
   /** `newDocs` minus the losing new ids of its delta pair set (id_a, id_b,
     * a_is_new, b_is_new) — the one survivors tail of every delta dedup,
-    * lexical and semantic. The pairs are checkpointed here: the CC rounds
-    * and the tag join both read them. */
+    * lexical and semantic. [[deltaLosers]] decides who loses, on the driver
+    * below `Components.SmallGraphEdges` pair rows; a driver loser set drops
+    * out through one [[idIn]] filter (no join, no job of its own), a
+    * distributed one through an anti-join that ships only the loser ids. */
   private[ops] def deltaSurvivors(
       newDocs: DataFrame, idCol: String, pairs: DataFrame): DataFrame =
-    newDocs.join(deltaLosers(pairs.localCheckpoint(true)).withColumnRenamed("id", idCol),
-      Seq(idCol), "left_anti")
+    deltaLosers(pairs) match {
+      case Left(ids) =>
+        val c = col(idCol)
+        newDocs.filter(c.isNull || !idIn(c, ids, newDocs.schema(idCol).dataType))
+      case Right(losers) =>
+        newDocs.join(losers.withColumnRenamed("id", idCol), Seq(idCol), "left_anti")
+    }
 
-  /** Losing NEW ids of a materialized delta pair set: a new id loses when its
-    * connected component contains any old id (old always wins) or it is not
-    * the component's minimum new id. */
-  private def deltaLosers(pairs: DataFrame): DataFrame = {
-    val comp = Components.connectedComponents(pairs, "id_a", "id_b")
+  private val pairCountSeq = new java.util.concurrent.atomic.AtomicLong()
+
+  /** Losing NEW ids of a delta pair set: a new id loses when its connected
+    * component contains any old id (old always wins) or it is not the
+    * component's minimum new id.
+    *
+    * The pairs are checkpointed once, counted by an observation on that same
+    * job. At most `smallGraphEdges` rows (`Components.SmallGraphEdges`, the
+    * cut `connectedComponents` applies) with a driver-ordered id type are
+    * collected and resolved on the driver (`Left`): `Components.unionFind`,
+    * then per component `has_old` and `min_new` in the distributed rounds'
+    * id order. Larger pair sets take the distributed rounds and joins
+    * (`Right`, one `id` column). Both give the same ids; `smallGraphEdges =
+    * 0` forces the distributed path. */
+  private[graft] def deltaLosers(pairs: DataFrame,
+      smallGraphEdges: Long = Components.SmallGraphEdges): Either[Seq[Any], DataFrame] = {
+    val counted = Observation(s"graft_delta_pairs_${pairCountSeq.incrementAndGet()}")
+    val staged = pairs.select("id_a", "id_b", "a_is_new", "b_is_new")
+      .observe(counted, count(lit(1)).as("n")).localCheckpoint(true)
+    // AQE's empty-relation propagation drops the metrics node only when no
+    // pair survived, so a missing count is 0
+    val n = counted.get.get("n").map(_.asInstanceOf[Long]).getOrElse(0L)
+    if (n <= smallGraphEdges && Components.driverOrderable(staged.schema("id_a").dataType))
+      Left(driverDeltaLosers(staged.collect()))
+    else Right(distributedDeltaLosers(staged, smallGraphEdges))
+  }
+
+  /** [[deltaLosers]] on the driver, over the collected pair rows. */
+  private def driverDeltaLosers(rows: Array[Row]): Seq[Any] = {
+    val comp = Components.unionFind(rows.iterator
+      .filter(r => !r.isNullAt(0) && !r.isNullAt(1) && r.get(0) != r.get(1))
+      .map(r => (r.get(0), r.get(1))))
+    val hasOld = scala.collection.mutable.Set.empty[Any]
+    val minNew = scala.collection.mutable.Map.empty[Any, Any]
+    val newIds = scala.collection.mutable.LinkedHashSet.empty[Any]
+    // a flag tags its id wherever it appears, the distributed path's `tags`
+    def tag(id: Any, isNew: Any): Unit = comp.get(id).foreach { c =>
+      isNew match {
+        case true =>
+          newIds += id
+          if (minNew.get(c).forall(Components.ltAny(id, _))) minNew(c) = id
+        case false => hasOld += c
+        case _ => // a null flag counts neither way
+      }
+    }
+    rows.foreach { r =>
+      if (!r.isNullAt(0)) tag(r.get(0), r.get(2))
+      if (!r.isNullAt(1)) tag(r.get(1), r.get(3))
+    }
+    newIds.iterator.filter { id => val c = comp(id); hasOld(c) || minNew(c) != id }.toSeq
+  }
+
+  /** `c IN ids` over a driver-side id set of type `t`, with no join: a
+    * Catalyst `InSet`, whose generated code holds the set as a reference
+    * object, so nothing is broadcast by a job (a broadcast join, even of a
+    * local relation, collects its build side in one) and, for Long and
+    * String ids, every set runs the same generated class. Null when `c` is
+    * null, like a join key that matches nothing. */
+  private[ops] def idIn(c: Column, ids: Iterable[Any], t: DataType): Column = {
+    val values: Set[Any] = t match {
+      case StringType => ids.iterator
+        .map(v => org.apache.spark.unsafe.types.UTF8String.fromString(v.asInstanceOf[String])).toSet
+      case _ => ids.toSet
+    }
+    graftbridge.toColumn(
+      org.apache.spark.sql.catalyst.expressions.InSet(graftbridge.toExpression(c), values))
+  }
+
+  /** [[deltaLosers]] as distributed rounds and joins, for pair sets above
+    * the driver cut (or ids without a driver order). `perComp` is hinted
+    * broadcast: left to AQE, whichever ~10-row side finished first was
+    * broadcast, and the two plans differ by one shuffle stage, so the job
+    * count moved between runs. */
+  private def distributedDeltaLosers(pairs: DataFrame, smallGraphEdges: Long): DataFrame = {
+    val comp = Components.connectedComponents(pairs, "id_a", "id_b",
+      smallGraphEdges = smallGraphEdges)
     val tags = pairs.select(col("id_a").as("id"), col("a_is_new").as("is_new"))
       .unionAll(pairs.select(col("id_b").as("id"), col("b_is_new").as("is_new")))
       .distinct()
@@ -895,7 +973,7 @@ object Dedup {
     val perComp = labeled.groupBy("component").agg(
       max(when(!col("is_new"), lit(1)).otherwise(lit(0))).as("has_old"),
       min(when(col("is_new"), col("id"))).as("min_new"))
-    labeled.join(perComp, Seq("component"))
+    labeled.join(broadcast(perComp), Seq("component"))
       .filter(col("is_new") && (col("has_old") === 1 || col("id") =!= col("min_new")))
       .select(col("id"))
   }
@@ -920,13 +998,16 @@ object Dedup {
     val spark = newDocs.sparkSession
     recoverIndex(spark, indexDir)
     val (p, idType) = loadIndexMeta(spark, indexDir)
-    // directory prune: the buckets `keys`' rows hash to, ≤ numBuckets ints
+    // directory prune: the `layout` rows in the buckets `keys`' rows hash
+    // to. The bucket list is one shuffle-free collect, made distinct on the
+    // driver (≤ numBuckets ints). The relation is built over one driver
+    // listing pruned to those buckets: `spark.read` over the layout's
+    // numBuckets directories would list them in a Spark job (one task per
+    // directory) whenever there are more than 32
     def pruned(layout: String, schema: StructType, bucketCol: String,
-        keys: DataFrame): DataFrame = {
-      val buckets = keys.distinct().collect().map(_.getInt(0)).toSeq
-      val all = spark.read.schema(schema).parquet(s"$indexDir/$layout")
-      if (buckets.isEmpty) all.filter(lit(false)) else all.filter(col(bucketCol).isin(buckets: _*))
-    }
+        keys: DataFrame): DataFrame =
+      ParquetLayout.readPartitions(spark, s"$indexDir/$layout", schema, bucketCol,
+        keys.collect().iterator.map(_.getInt(0)).toSet)
     // `eagerCheckpoints = false` is a PLAN-INSPECTION seam: checkpoints
     // truncate lineage to ExistingRDD leaves, hiding the partition-pruned
     // parquet scans from the final executed plan — tests disable them to pin
@@ -990,7 +1071,8 @@ object Dedup {
     // tiny frame, read by the bucket keys, the banding union and the sig union
     val newSigs = minhashSignatures(newDocs, idCol, textCol, p).localCheckpoint(true)
     val newBands = bandRows(newSigs, p).withColumn("is_new", lit(true))
-    val newKeys = bcast(newBands.select("band_idx", "band_hash").distinct())
+    // a semi-join's right side needs no distinct (a shuffle stage of its own)
+    val newKeys = bcast(newBands.select("band_idx", "band_hash"))
     val oldPruned = oldBands(newBands)
       .join(newKeys, Seq("band_idx", "band_hash"), "left_semi")
       .select(col("id"), lit(false).as("is_new"), col("band_idx"), col("band_hash"))
@@ -1013,9 +1095,9 @@ object Dedup {
         .agg(min(col("a_is_new")).as("a_is_new"), min(col("b_is_new")).as("b_is_new"))
         .select("id_a", "a_is_new", "id_b", "b_is_new"))
     val candPairs = stage(cand.pairs) // read by the old-id fetch AND the sig joins
+    // as a semi-join side and a bucket list, the old ids need no distinct
     val oldIds = candPairs.filter(!col("a_is_new")).select(col("id_a").as("id"))
       .unionAll(candPairs.filter(!col("b_is_new")).select(col("id_b").as("id")))
-      .distinct()
     val oldSigsNeeded = oldSigsOf(oldIds)
       // same escape hatch as the bucket-key prune: a delta too large to
       // broadcast its keys has a candidate old-id set of similar magnitude

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.io.MetaFile
+import graft.io.{MetaFile, ParquetLayout}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -762,6 +762,22 @@ object Similarity {
           col("p.a.is_new").as("a_is_new"), col("p.b.is_new").as("b_is_new")))
   }
 
+  /** The index rows of the cells `assigned`'s rows fall in: the cell ids
+    * come to the driver in one shuffle-free collect (made distinct there,
+    * ≤ numCells ints), and the read is partition-pruned to those cells over
+    * a driver listing with the schema of a data file's footer — no listing
+    * or schema-inference job (see `graft.io.ParquetLayout`). */
+  private def touchedCells(assigned: DataFrame, indexDir: String): DataFrame = {
+    val spark = assigned.sparkSession
+    val cells = assigned.select("cell").collect().iterator.map(_.getInt(0)).toSet
+    val dir = s"$indexDir/cells"
+    ParquetLayout.footerSchema(spark, dir) match {
+      case Some(data) =>
+        ParquetLayout.readPartitions(spark, dir, data.add("cell", IntegerType), "cell", cells)
+      case None => spark.read.parquet(dir).filter(col("cell").isin(cells.toSeq.sorted: _*))
+    }
+  }
+
   /** Delta pairs against a PERSISTED IVF index ([[ivfBuildIndex]] layout):
     * the delta assigns against the index's own centroids, the touched cell
     * ids collect to the driver (≤ numCells ints), and the index read is
@@ -774,11 +790,8 @@ object Similarity {
     // tiny frame (the delta), read by the cell collect AND the pair build —
     // recomputing it would re-run the assignment scan per reference
     val newAssigned = ivfAssign(newDf, idCol, embCol, centroids).localCheckpoint(true)
-    val cells = newAssigned.select("cell").distinct().collect().map(_.getInt(0)).toSeq
     Dedup.completeSwap(spark, s"$indexDir/cells", s"$indexDir/cells_compacting")
-    val old = spark.read.parquet(s"$indexDir/cells")
-      .filter(col("cell").isin(cells: _*))
-      .select(col("id"), col("emb"), col("cell"))
+    val old = touchedCells(newAssigned, indexDir).select(col("id"), col("emb"), col("cell"))
     semanticDeltaPairsAudited(newAssigned, old, threshold, maxCell)
   }
 
@@ -808,14 +821,13 @@ object Similarity {
     // one checkpoint read by the cell collect, the candidate join, the
     // refine, and the within-delta pairs
     val newAssigned = cp(pqAssign(newDf, idCol, embCol, centroids, codebooks))
-    val cells = newAssigned.select("cell").distinct().collect().map(_.getInt(0)).toSeq
     Dedup.completeSwap(spark, s"$indexDir/cells", s"$indexDir/cells_compacting")
+    val cells = touchedCells(newAssigned, indexDir)
     // dropDuplicates("id"): repair-at-read for duplicate rows a
     // crashed-then-redelivered append left (the lexical indexed path's
     // convention) — duplicates would emit duplicate pairs and inflate the
     // maxCell audit until the next compaction
-    def touched(cols: Column*): DataFrame = spark.read.parquet(s"$indexDir/cells")
-      .filter(col("cell").isin(cells: _*)).select(cols: _*).dropDuplicates("id")
+    def touched(cols: Column*): DataFrame = cells.select(cols: _*).dropDuplicates("id")
     pqDeltaPairs(newAssigned, touched(col("id"), col("codes"), col("cell")),
       candIds => {
         val oldEmb = touched(col("id"), col("emb"))

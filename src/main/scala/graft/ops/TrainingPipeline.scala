@@ -2,7 +2,7 @@ package graft.ops
 
 import graft.checkpoint.StageStore
 import graft.dsl.SchemaSpec
-import graft.io.MetaFile
+import graft.io.{MetaFile, ParquetLayout}
 import graft.run.Validator
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
@@ -477,10 +477,25 @@ object TrainingPipeline {
       val (nInput, nValid) = intakeCounted()
       Map("n_input" -> nInput, "n_valid" -> nValid, "n_exact" -> nExact)
     }
-    val prepared = spark.read.parquet(prepDir)
+    // the schema from a footer on the driver: inferring it is a job
+    val prepared = ParquetLayout.footerSchema(spark, prepDir)
+      .fold(spark.read)(spark.read.schema).parquet(prepDir)
     val idType = prepared.schema(idCol).dataType
-    def idSet(dir: String): DataFrame =
-      spark.read.schema(StructType(Seq(StructField(idCol, idType)))).parquet(dir)
+    // `df` restricted to (keep) or cleared of (!keep) the id set a stage
+    // wrote at `dir`. Up to DriverIdSetMax ids are read on the driver into
+    // one `InSet` filter: these frames are read by several later stages and
+    // the final write, and a join against the set is a broadcast job per
+    // read. Larger sets are joined. Columns keep the join's order (id first).
+    def withIds(df: DataFrame, dir: String, keep: Boolean): DataFrame =
+      ParquetLayout.readIds(spark, dir, idType, DriverIdSetMax) match {
+        case Some(ids) =>
+          val in = Dedup.idIn(col(idCol), ids, idType)
+          df.filter(if (keep) in else col(idCol).isNull || !in)
+            .select((idCol +: df.columns.filterNot(_ == idCol).toSeq).map(col): _*)
+        case None =>
+          df.join(spark.read.schema(StructType(Seq(StructField(idCol, idType)))).parquet(dir),
+            Seq(idCol), if (keep) "left_semi" else "left_anti")
+      }
 
     // -- lexical delta dedup vs the persisted MinHash index (built empty on
     //    first use: a from-scratch corpus's first snapshot dedups only
@@ -503,7 +518,7 @@ object TrainingPipeline {
           "drop_buckets" -> audited.droppedBuckets, "drop_ids" -> audited.droppedIds)
       } finally Dedup.releaseCheckpointsSince(sc, before)
     }
-    val lexKept = prepared.join(idSet(lexDir), Seq(idCol), "left_semi")
+    val lexKept = withIds(prepared, lexDir, keep = true)
 
     // -- append the DEDUP-stage survivors' signatures (pre-quality: a batch
     //    near-dup cluster forms over validated docs regardless of their later
@@ -525,7 +540,7 @@ object TrainingPipeline {
             .flaggedIds(lexKept, idCol, textCol, probeHashed, decontamN, decontamMinHits),
             idCol, contamDir))
         }
-        (key, (lexKept.join(idSet(contamDir), Seq(idCol), "left_anti"), c("n_contam")))
+        (key, (withIds(lexKept, contamDir, keep = false), c("n_contam")))
       case None => (s"$lexKey|probe=none", (lexKept, 0L))
     }
     val (decon, nContam) = deconAndCount
@@ -533,7 +548,7 @@ object TrainingPipeline {
     // -- quality gate (cheap reapplied filter; counts-only stage)
     val qualityKey = s"$decontamKey|minQ=$minQualityScore|maxTop=$maxTopWordPct"
     val kept = qualityFilter(decon, textCol, minQualityScore, maxTopWordPct)
-    val nKept = stage(sname("quality"), qualityKey)(Map("n_kept" -> kept.count()))("n_kept")
+    val nKept = stage(sname("quality"), qualityKey)(Map("n_kept" -> rowCount(kept)))("n_kept")
 
     // -- semantic delta dedup vs the persisted IVF index; first snapshot
     //    trains the quantizer (on its quality survivors) and seeds the index
@@ -577,7 +592,7 @@ object TrainingPipeline {
               "bootstrapped" -> (if (bootstrapCents.isDefined) 1L else 0L))
           } finally Dedup.releaseCheckpointsSince(sc, before)
         }
-        val semKept = kept.join(idSet(semDir), Seq(idCol), "left_semi")
+        val semKept = withIds(kept, semDir, keep = true)
         stage(sname("semappend"), semKey) {
           // bootstrap: the index IS the seeded survivor set — built HERE,
           // after the semdedup stage committed. Building it inside semdedup
@@ -642,21 +657,49 @@ object TrainingPipeline {
   /** Order-independent, multiset-robust content address over `cols`:
     * (row count, bit_xor of row hashes, additive hash sum mod Long.MaxValue).
     * XOR alone cancels duplicate rows in pairs ({A,A,B} vs {C,C,B} would
-    * collide); the decimal SUM counts multiplicity and is ANSI-overflow-safe
-    * (10^12 rows x 2^63 fits decimal(38)). ONE column-pruned scan — the
-    * Iceberg seam: a catalog maintaining content digests in metadata
-    * supplies this without any scan. */
-  private def contentFp(df: DataFrame, cols: Seq[String]): String = {
-    val h = xxhash64(cols.map(col): _*)
-    val r = df.agg(count(lit(1)), bit_xor(h),
-      sum(h.cast(org.apache.spark.sql.types.DecimalType(38, 0)))).collect().head
-    val sumMod = Option(r.getDecimal(2))
-      .map(_.toBigInteger.mod(java.math.BigInteger.valueOf(Long.MaxValue)).toString)
-      .getOrElse("0")
-    s"${r.getLong(0)}:${if (r.isNullAt(1)) 0L else r.getLong(1)}:$sumMod"
+    * collide); the sum counts multiplicity. ONE column-pruned scan and ONE
+    * job: each partition folds its row hashes (the sum exactly, in 128
+    * bits), the driver combines the folds — no exchange, where a global
+    * aggregate is a shuffle-map job plus a final job under AQE. The string
+    * is the one the earlier decimal(38,0) `sum` aggregate printed, so
+    * committed stage keys built from it stay valid. The Iceberg seam: a
+    * catalog maintaining content digests in metadata supplies this without
+    * any scan. */
+  private[graft] def contentFp(df: DataFrame, cols: Seq[String]): String = {
+    import df.sparkSession.implicits._
+    val folds = df.select(xxhash64(cols.map(col): _*)).as[Long].mapPartitions { hs =>
+      var (n, x, lo, hi) = (0L, 0L, 0L, 0L)
+      hs.foreach { h =>
+        n += 1; x ^= h
+        val sum = lo + h // (hi, lo) += h as a signed 128-bit add
+        hi += (h >> 63) + (if (java.lang.Long.compareUnsigned(sum, lo) < 0) 1L else 0L)
+        lo = sum
+      }
+      Iterator((n, x, hi, lo))
+    }.collect()
+    def int128(hi: Long, lo: Long) =
+      java.math.BigInteger.valueOf(hi).shiftLeft(64).add(
+        new java.math.BigInteger(java.lang.Long.toUnsignedString(lo)))
+    val sum = folds.map { case (_, _, hi, lo) => int128(hi, lo) }
+      .foldLeft(java.math.BigInteger.ZERO)(_.add(_))
+    val sumMod = sum.mod(java.math.BigInteger.valueOf(Long.MaxValue))
+    s"${folds.map(_._1).sum}:${folds.map(_._2).foldLeft(0L)(_ ^ _)}:$sumMod"
+  }
+
+  /** `df`'s row count in one job: per-partition counts summed on the
+    * driver, where `count()` is a global aggregate (under AQE a shuffle-map
+    * job plus a final job). */
+  private def rowCount(df: DataFrame): Long = {
+    import df.sparkSession.implicits._
+    df.select(lit(1)).as[Int].mapPartitions(rows => Iterator(rows.size.toLong)).collect().sum
   }
 
   private val seq = new java.util.concurrent.atomic.AtomicLong()
+
+  /** Most ids of a stage's id set [[runDelta]] reads on the driver (a few
+    * MB of boxed ids held by the filter's generated code); larger sets are
+    * joined. */
+  private val DriverIdSetMax = 1 << 16
 
   /** Intake counts from the observation, via the one observation resolver
     * (grace wait + loud explicit recompute — see Dedup.observedLongs). */

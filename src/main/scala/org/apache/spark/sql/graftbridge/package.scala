@@ -29,4 +29,9 @@ package object graftbridge {
   def collectTopK(c: Column, k: Int, reverse: Boolean): Column =
     toColumn(catalyst.expressions.aggregate.GraftTopKShim.collectTopK(
       toExpression(c), k, reverse))
+
+  /** `s` with every field nullable, nested ones included — what a file
+    * source's `DataSource` makes of a data schema (`asNullable` is
+    * private[spark]). */
+  def asNullable(s: types.StructType): types.StructType = s.asNullable
 }

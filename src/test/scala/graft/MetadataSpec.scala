@@ -2,8 +2,9 @@ package graft
 
 import graft.checkpoint.StageStore
 import graft.io.PreChangeLayoutException
-import graft.ops.{Adaptive, Dedup, IndexVersions, Similarity, TrainingPipeline}
+import graft.ops.{Adaptive, DeltaPipelineReport, Dedup, IndexVersions, Similarity, TrainingPipeline}
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.DataFrame
 
 /** graft's small metadata (stage commit records, index params, quantizers,
   * lifecycle events) is driver-side file I/O: no Spark job, no dependence on
@@ -17,6 +18,11 @@ class MetadataSpec extends SparkSpec {
 
   private def doc(i: Long) = (i, (1 to 25).map(t => s"m${i}_$t").mkString(" "))
   private def delta(ids: Long*) = ids.map(doc).toDF("doc_id", "text")
+
+  /** Spark jobs of the budget test's delta (local[4], 4 shuffle partitions):
+    * its survivors resolve on the driver, and its index reads and stage id
+    * sets run no job. */
+  private val DeltaJobBudget = 43
 
   test("tiny metadata never submits a Spark job: stage records, index epochs, MinHash params, IVF centroids") {
     val w = tmp()
@@ -120,5 +126,60 @@ class MetadataSpec extends SparkSpec {
       .coalesce(1).write.mode("append").parquet(s"$w/mh/${IndexVersions.Sidecar}")
     val log = intercept[PreChangeLayoutException](IndexVersions.epoch(spark, s"$w/mh"))
     assert(log.getMessage.contains("rebuild the index"), log.getMessage)
+  }
+
+  test("a pipeline delta against bootstrapped indexes stays within its job budget, the same count every run") {
+    def text(i: Long, extra: String = "") = (1 to 30).map(t => s"w${i}_$t").mkString(" ") + extra
+    def emb(c: Long): Seq[Double] = Seq.tabulate(16) { j =>
+      (scala.util.hashing.MurmurHash3.productHash((c, j)) % 19 - 9).toDouble
+    }
+    def docs(rows: Seq[(Long, String, Long)]) = // (id, text, embedding concept)
+      rows.map { case (i, t, c) => (i, t, emb(c)) }.toDF("doc_id", "text", "emb")
+    val leak = "the quick brown fox jumps over the lazy dog once more for the benchmark row"
+    val probe = Seq((900L, leak)).toDF("pid", "ptext")
+    val first = docs((1L to 20L).map(i => (i, text(i), i)))
+    val next = docs((101L to 110L).map(i => (i, text(i), i)) ++ Seq(
+      (121L, text(3, " xq1 xq2"), 121L), // near twin of an indexed doc
+      (122L, text(122), 5L),             // semantic twin of an indexed doc
+      (123L, leak, 123L)))               // benchmark leak
+    // the second delta of a fresh work dir: every stage computes, against
+    // the MinHash and IVF indexes the first delta bootstrapped
+    def deltaJobs(): (Int, DeltaPipelineReport) = {
+      val w = tmp()
+      def go(d: DataFrame) = TrainingPipeline.runDelta(d, "doc_id", "text", w,
+        probe = Some((probe, "pid", "ptext")), embCol = Some("emb"),
+        minhashThreshold = 0.8, semanticThreshold = 0.99, numCells = 4,
+        ivfIters = 2, ivfSampleSize = 16)
+      go(first)
+      var report: DeltaPipelineReport = null
+      val (jobs, _) = jobsDuring { report = go(next).report }
+      (jobs, report)
+    }
+    val (jobs, report) = deltaJobs()
+    assert(report.nearDups === 1 && report.semanticDups === 1 && report.contaminated === 1,
+      report.toString)
+    assert(jobs <= DeltaJobBudget, s"a delta ran $jobs Spark jobs (budget $DeltaJobBudget)")
+    assert(deltaJobs()._1 === jobs, "an identical delta ran another number of jobs")
+  }
+
+  test("an index read lists its bucket directories on the driver: no job with a task per directory") {
+    val w = tmp()
+    val p = Dedup.MinhashIndexParams(numHashes = 32, bands = 8) // 64 bucket directories
+    Dedup.minhashIndexBuild((1L to 400L).map(doc).toDF("doc_id", "text"), "doc_id", "text",
+      s"$w/mh", p)
+    val dirs = fs.listStatus(new Path(s"$w/mh/bands")).count(_.getPath.getName.contains("="))
+    // more than Spark's 32-path parallel-discovery threshold: spark.read
+    // would list them in a job of one task per directory
+    assert(dirs > 32, s"$dirs bucket directories")
+    val delta = (Seq(1L) ++ (1001L to 1040L)).map(doc).map { case (i, t) => (i + 5000L, t) }
+      .toDF("doc_id", "text")
+    var pairs = 0L
+    val jobs = jobStartsDuring {
+      pairs = Dedup.deltaNearDupsIndexedAudited(delta, "doc_id", "text", s"$w/mh",
+        threshold = 0.8).pairs.count()
+    }
+    assert(pairs === 1L) // the copy of doc 1 pairs with its indexed source
+    val tasks = jobs.map(_.stageInfos.map(_.numTasks).max)
+    assert(tasks.nonEmpty && tasks.forall(_ < dirs), s"tasks per job: $tasks")
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.dsl._
+import graft.ops.Dedup
 import graft.run.Validator
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
@@ -326,5 +327,69 @@ class PropertySpec extends SparkSpec {
     val n = Sharding.sampleByWeights(df, "id", "g", Map.empty, defaultWeight = 1.5, salt = "n")
       .count()
     assert(n > 2000 * 1.35 && n < 2000 * 1.65, s"rows $n for weight 1.5")
+  }
+
+  test("delta losers: the driver union-find and the distributed rounds agree on random flagged pair graphs") {
+    // each id pairs under random old/new flags, so an id can be new in one
+    // row and old in another (a resubmitted id), and self pairs appear. One
+    // disjoint union of 40 random graphs per id type: graph g's ids share
+    // one prefix, so the union's components are the graphs' components
+    val graphs = Gen.listOfN(40, for {
+      k <- Gen.choose(2, 7)
+      m <- Gen.choose(1, 10)
+      edges <- Gen.listOfN(m, for {
+        i <- Gen.choose(0, k - 1); j <- Gen.choose(0, k - 1)
+        aNew <- Gen.oneOf(true, false); bNew <- Gen.oneOf(true, false)
+      } yield (i, j, aNew, bNew))
+    } yield edges).sample.get
+    // UTF-8 byte order (Spark's min) and Java's UTF-16 order disagree on
+    // U+10000 and U+1F600 against U+E000 and U+FFFD
+    val names = Seq("a", "z", "\uE000", "\uFFFD", "\uD800\uDC00", "\uD83D\uDE00", "b")
+    def losers[T](id: (Int, Int) => T)(implicit enc: org.apache.spark.sql.Encoder[(T, T, Boolean, Boolean)]) = {
+      val rows = graphs.zipWithIndex.flatMap { case (edges, g) =>
+        edges.map { case (i, j, aNew, bNew) => (id(g, i), id(g, j), aNew, bNew) }
+      }
+      val pairs = rows.toDF("id_a", "id_b", "a_is_new", "b_is_new")
+      val driver = Dedup.deltaLosers(pairs) match {
+        case Left(ids) => ids
+        case Right(_) => fail("a small pair set must resolve on the driver")
+      }
+      val distributed = Dedup.deltaLosers(pairs, smallGraphEdges = 0L) match {
+        case Right(df) => df.collect().map(_.get(0)).toSeq
+        case Left(_) => fail("smallGraphEdges = 0 must take the distributed path")
+      }
+      (driver.sortBy(_.toString), distributed.sortBy(_.toString))
+    }
+    val (longDriver, longDistributed) = losers((g, i) => g * 100L + i)
+    assert(longDriver.nonEmpty)
+    assert(longDriver === longDistributed)
+    val (strDriver, strDistributed) = losers((g, i) => f"$g%02d-${names(i)}")
+    assert(strDriver.nonEmpty)
+    assert(strDriver === strDistributed)
+  }
+
+  test("content fingerprint: the one-job per-partition fold prints what the decimal(38,0) aggregate printed") {
+    import graft.ops.TrainingPipeline
+    // the fingerprint keys every committed pipeline stage: a different
+    // string would recompute them all. Random rows spread over 7 partitions,
+    // with repeats, so the hash sum leaves the 64-bit range and the
+    // partition folds combine
+    val rows = Gen.listOfN(2000, for {
+      i <- Gen.chooseNum(Long.MinValue, Long.MaxValue)
+      t <- Gen.alphaNumStr.map(_.take(12))
+    } yield (i, t)).sample.get
+    val df = (rows ++ rows.take(300)).toDF("id", "text").repartition(7)
+    def aggregateFp(d: org.apache.spark.sql.DataFrame): String = {
+      val h = xxhash64(col("id"), col("text"))
+      val r = d.agg(count(lit(1)), bit_xor(h),
+        sum(h.cast(org.apache.spark.sql.types.DecimalType(38, 0)))).collect().head
+      val sumMod = Option(r.getDecimal(2))
+        .map(_.toBigInteger.mod(java.math.BigInteger.valueOf(Long.MaxValue)).toString)
+        .getOrElse("0")
+      s"${r.getLong(0)}:${if (r.isNullAt(1)) 0L else r.getLong(1)}:$sumMod"
+    }
+    assert(TrainingPipeline.contentFp(df, Seq("id", "text")) === aggregateFp(df))
+    val empty = df.limit(0)
+    assert(TrainingPipeline.contentFp(empty, Seq("id", "text")) === aggregateFp(empty))
   }
 }

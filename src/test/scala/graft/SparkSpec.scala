@@ -23,16 +23,23 @@ object TestSpark {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
 
-  /** (jobs, SQL executions) submitted while `body` ran. Listener events
-    * arrive asynchronously but in order, so a sentinel job submitted
-    * afterwards marks the point by which every earlier job start was seen. */
+  /** (jobs, SQL executions) submitted while `body` ran. */
   protected def jobsDuring(body: => Unit): (Int, Int) = {
+    val jobs = jobStartsDuring(body)
+    (jobs.size, jobs.map(js => String.valueOf(js.properties.getProperty("spark.sql.execution.id")))
+      .distinct.size)
+  }
+
+  /** The start events of the jobs submitted while `body` ran. Listener
+    * events arrive asynchronously but in order, so a sentinel job submitted
+    * afterwards marks the point by which every earlier job start was seen. */
+  protected def jobStartsDuring(body: => Unit): Seq[SparkListenerJobStart] = {
     import scala.jdk.CollectionConverters._
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    def description(js: SparkListenerJobStart) =
+      String.valueOf(js.properties.getProperty("spark.job.description"))
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]()
     val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        seen.add((String.valueOf(js.properties.getProperty("spark.job.description")),
-          String.valueOf(js.properties.getProperty("spark.sql.execution.id"))))
+      override def onJobStart(js: SparkListenerJobStart): Unit = seen.add(js)
     }
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
@@ -41,11 +48,10 @@ abstract class SparkSpec extends AnyFunSuite {
       sc.setJobDescription("graft-sentinel")
       try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
       val deadline = System.nanoTime() + 20L * 1000 * 1000 * 1000
-      def sentinelSeen = seen.iterator().asScala.exists(_._1 == "graft-sentinel")
+      def sentinelSeen = seen.iterator().asScala.exists(description(_) == "graft-sentinel")
       while (!sentinelSeen && System.nanoTime() < deadline) Thread.sleep(20)
       assert(sentinelSeen, "listener never saw the sentinel job")
-      val jobs = seen.iterator().asScala.takeWhile(_._1 != "graft-sentinel").toSeq
-      (jobs.size, jobs.map(_._2).distinct.size)
+      seen.iterator().asScala.takeWhile(description(_) != "graft-sentinel").toSeq
     } finally sc.removeSparkListener(listener)
   }
 }

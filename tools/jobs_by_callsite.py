@@ -2,6 +2,7 @@
 """Spark jobs, tasks and job wall time per graft call site, from an event log.
 
     python3 tools/jobs_by_callsite.py <event log> [--depth 2] [--top 40]
+        [--results <results.json> --span <name>[#k]]
 
 The log is a file Spark wrote with `spark.eventLog.enabled=true`: plain JSON
 lines, or `.zstd`-compressed (Spark's default codec), which is read through
@@ -17,6 +18,14 @@ it. Frames of the benchmark harness (`graft.perfbench`) are skipped. A stage
 is charged to the running job that submitted it; tasks are counted from
 `SparkListenerTaskEnd`. Wall is a job's submission to completion; the share
 is of the summed wall of all jobs in the log.
+
+With `--results` (the results file of the same `--trace 1` perfbench run)
+and `--span`, only the jobs of one traced call's span are charged: a
+perfbench job carries the id of the span open when it was submitted (the
+`graft.perfbench.span` job property; ids index the results file's `spans`),
+and a job counts when that span is an instance named `<name>` or one of its
+descendants. `<name>#k` keeps only the k-th instance (from 0), e.g.
+`cli.pipeline#0` is the first traced pipeline call, a delta.
 
 Recording a log without touching the benchmark (the JVM reads `spark.*`
 system properties into its SparkConf):
@@ -81,12 +90,35 @@ def call_site(stack, depth):
     return " < ".join(frames) if frames else NO_FRAME
 
 
+def span_ids(results_path, spec):
+    """Ids of the span instances `spec` names (`name` or `name#k`) and of
+    all their descendants, from a perfbench results file."""
+    with open(results_path) as fh:
+        spans = json.load(fh)["spans"]
+    name, _, k = spec.partition("#")
+    roots = [i for i, s in enumerate(spans) if s["name"] == name]
+    if k:
+        roots = roots[int(k):int(k) + 1]
+    if not roots:
+        sys.exit(f"no span instance {spec} in {results_path}")
+    ids = set(roots)
+    for i, s in enumerate(spans):  # a parent always precedes its children
+        if s["parent"] in ids:
+            ids.add(i)
+    return {str(i) for i in ids}
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("log", help="event log file (plain or .zstd) or eventlog_v2_* directory")
     ap.add_argument("--depth", type=int, default=2, help="graft frames per call site")
     ap.add_argument("--top", type=int, default=40, help="rows to print")
+    ap.add_argument("--results", help="perfbench results JSON of the same --trace 1 run")
+    ap.add_argument("--span", help="charge only this span's jobs: name or name#k (needs --results)")
     a = ap.parse_args()
+    if bool(a.results) != bool(a.span):
+        ap.error("--results and --span go together")
+    only = span_ids(a.results, a.span) if a.span else None
 
     sql_stack = {}            # execution id -> call stack
     job_site = {}             # job id -> call site
@@ -102,10 +134,13 @@ def main():
             sql_stack[str(e["executionId"])] = e.get("details", "")
         elif kind == "SparkListenerJobStart":
             jid = e["Job ID"]
+            props = e.get("Properties") or {}
+            if only is not None and props.get("graft.perfbench.span") not in only:
+                continue
             infos = sorted(e.get("Stage Infos", []), key=lambda s: s["Stage ID"])
             stack = infos[0].get("Details", "") if infos else ""
             if call_site(stack, 1) == NO_FRAME:
-                exec_id = (e.get("Properties") or {}).get("spark.sql.execution.id")
+                exec_id = props.get("spark.sql.execution.id")
                 stack = sql_stack.get(exec_id, stack)
             site = call_site(stack, a.depth)
             job_site[jid] = site
