@@ -1,15 +1,14 @@
 package graft.checkpoint
 
 import com.fasterxml.jackson.databind.JsonNode
-import graft.io.MetaFile
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, Path}
+import graft.functions.IdIn
+import graft.io.{MetaFile, ParquetLayout}
+import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
-import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
-import org.apache.parquet.hadoop.metadata.{CompressionCodecName, ParquetMetadata}
-import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.UserDefinedExpression
 import org.apache.spark.sql.catalyst.plans.logical.{AppendColumns, LeafNode, ObjectConsumer, ObjectProducer, TypedFilter}
@@ -214,7 +213,7 @@ object CheckpointedRunner {
           fs.delete(recordPath, false)
           removed.foreach(b => fs.delete(new Path(stagingDir, s"bucket=$b"), true))
           if (changed.nonEmpty)
-            writeStaged(bucketed.filter(memberOf(changed, col("bucket"))), stagingDir, "dynamic")
+            writeStaged(bucketed.filter(IdIn(col("bucket"), changed, IntegerType)), stagingDir, "dynamic")
           // with an input identity the write evaluated the aggregate's plan
           // over the aggregate's files, so the aggregate's stats describe the
           // written buckets. Without one (generated frames, user code) the
@@ -337,7 +336,7 @@ object CheckpointedRunner {
     // a null (or, in an old file, absent) field has no value
     def has(g: Group, field: String) =
       g.getType.containsField(field) && g.getFieldRepetitionCount(field) > 0
-    parquetFiles(conf, new Path(manifestDir)).iterator.flatMap(readGroups(conf, _))
+    ParquetLayout.dataFiles(conf, new Path(manifestDir)).flatMap(ParquetLayout.readGroups(conf, _))
       .filter(g => has(g, "status") && g.getString("status", 0) == "done")
       .map(g => (g.getInteger("bucket", 0), g.getLong("rows", 0),
         Option.when(has(g, "fingerprint"))(g.getLong("fingerprint", 0))))
@@ -414,8 +413,10 @@ object CheckpointedRunner {
     val t0 = System.nanoTime()
     val conf = spark.sparkContext.hadoopConfiguration
     // a committed staging record names the staged schema, else a staged
-    // file's footer does: no inference job either way
-    val staged = stagedSchema.orElse(footerSchema(conf, new Path(stagingDir)))
+    // file's footer does (with the partition column): no inference job
+    // either way
+    val staged = stagedSchema
+      .orElse(ParquetLayout.footerSchema(conf, new Path(stagingDir)).map(_.add("bucket", IntegerType)))
       .fold(spark.read)(spark.read.schema).parquet(stagingDir)
     // partition-pruned scan: only pending bucket directories are read (a
     // partition-only filter is never codegen'd, so `isin` compiles nothing)
@@ -428,7 +429,7 @@ object CheckpointedRunner {
     // replace a COMPLETED bucket's committed output with partial data. A
     // per-row raise_error fails the write job before its commit (and before
     // the manifest append), so completed buckets stay intact.
-    val guardedBucket = when(memberOf(pending, bucketOf), bucketOf)
+    val guardedBucket = when(IdIn(bucketOf, pending, IntegerType), bucketOf)
       .otherwise(raise_error(concat(
         lit("CheckpointedRunner: process() emitted a row whose keys map to non-pending bucket "),
         bucketOf.cast(StringType),
@@ -476,7 +477,7 @@ object CheckpointedRunner {
     val wallMs = (System.nanoTime() - t0) / 1000000
     appendManifest(spark, manifestDir, pending.map { b =>
       Row(b, runId, stagingDir, rowsByBucket.getOrElse(b, 0L),
-        rowCount(conf, new Path(outDir, s"bucket=$b")),
+        ParquetLayout.rowCount(conf, new Path(outDir, s"bucket=$b")),
         wallMs, "done", fpByBucket.getOrElse(b, null))
     })
     pending
@@ -517,64 +518,6 @@ object CheckpointedRunner {
     require(dir.getFileSystem(conf).rename(tmp, new Path(dir, name)),
       s"manifest commit failed: $tmp -> $name")
   }
-
-  // --------------------------------------------------------------------------
-  // Driver-side parquet metadata reads
-  // --------------------------------------------------------------------------
-
-  /** The data files of a parquet directory as Spark's reader lists them
-    * (names starting with `_` or `.` are hidden); none when it is absent. */
-  private def parquetFiles(conf: Configuration, dir: Path): Seq[FileStatus] = {
-    val fs = dir.getFileSystem(conf)
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq.filter { s =>
-      val name = s.getPath.getName
-      s.isFile && !name.startsWith("_") && !name.startsWith(".")
-    }
-  }
-
-  private def footer(conf: Configuration, file: FileStatus): ParquetMetadata = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
-    try reader.getFooter finally reader.close()
-  }
-
-  /** Rows of a parquet directory's files, from their footers. */
-  private def rowCount(conf: Configuration, dir: Path): Long = {
-    import scala.jdk.CollectionConverters._
-    parquetFiles(conf, dir).map(footer(conf, _).getBlocks.asScala.map(_.getRowCount).sum).sum
-  }
-
-  /** Every record of one parquet file, as parquet-hadoop's example groups. */
-  private def readGroups(conf: Configuration, file: FileStatus): Seq[Group] = {
-    val reader = ParquetReader.builder(new GroupReadSupport(), file.getPath).withConf(conf).build()
-    try Iterator.continually(reader.read()).takeWhile(_ != null).toVector
-    finally reader.close()
-  }
-
-  /** The staged table's schema (partition column included) from one staged
-    * file's footer, as Spark wrote it; None when there is no staged file or
-    * its footer lacks Spark's row schema (then the read infers it). */
-  private def footerSchema(conf: Configuration, stagingDir: Path): Option[StructType] = {
-    val fs = stagingDir.getFileSystem(conf)
-    val buckets =
-      if (!fs.exists(stagingDir)) Iterator.empty
-      else fs.listStatus(stagingDir).iterator
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
-    buckets.flatMap(b => parquetFiles(conf, b.getPath)).nextOption()
-      .flatMap(f => Option(footer(conf, f).getFileMetaData.getKeyValueMetaData
-        .get(ParquetReadSupport.SPARK_METADATA_KEY)))
-      .map { json =>
-        val data = DataType.fromJson(json).asInstanceOf[StructType]
-        StructType(data.map(_.copy(nullable = true))).add("bucket", IntegerType)
-      }
-  }
-
-  /** `c IN ids` for an expression inside generated code: a literal array is
-    * a reference object of the generated class, so every id set runs the
-    * same class, where `isin` over ints inlines the ids as Java literals and
-    * compiles one class per set. Partition-only filters are never codegen'd
-    * and keep `isin`. */
-  private def memberOf(ids: Seq[Int], c: Column): Column = array_contains(typedLit(ids.toArray), c)
 
   // --------------------------------------------------------------------------
   // Incremental (snapshot-diff) revalidation

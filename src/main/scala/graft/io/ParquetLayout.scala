@@ -1,9 +1,11 @@
 package graft.io
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
 import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row, SparkSession, graftbridge}
 import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
@@ -11,8 +13,9 @@ import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, Pa
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
-/** Reads of graft's partitioned parquet layouts (index bands, signatures,
-  * IVF cells) and stage directories that run no Spark job before the query.
+/** Driver-side parquet reads: graft's partitioned layouts (index bands,
+  * signatures, IVF cells), stage directories and the checkpoint runner's
+  * manifests and staging footers, read without a Spark job.
   *
   * `spark.read.parquet(dir)` pays for the table's shape, not its data, in
   * two places: over more than 32 directories
@@ -21,8 +24,8 @@ import org.apache.spark.sql.types._
   * the inference is another job that reads a footer. A delta-sized read
   * touches a few KB, so both jobs cost more than the read. Here the listing
   * is a `listStatus` walk on the driver into the touched directories only,
-  * and the schema comes from the caller or from one footer, read on the
-  * driver. */
+  * and schemas, row counts and small tables come from footers and records
+  * read on the driver with parquet-hadoop. */
 object ParquetLayout {
 
   /** Spark's listing rule: names starting with `_` (unless they hold a
@@ -47,7 +50,7 @@ object ParquetLayout {
       if (values.isEmpty || !fs.exists(root)) Vector.empty
       else fs.listStatus(root).iterator
         .filter(d => d.isDirectory && wanted(d.getPath.getName))
-        .flatMap(d => dataFiles(fs, d.getPath)).toVector
+        .flatMap(d => walk(fs, d.getPath)).toVector
     if (files.isEmpty)
       spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
     else {
@@ -70,62 +73,70 @@ object ParquetLayout {
     }
   }
 
-  /** The Spark schema a data file under `dir` was written with (partition
-    * columns excluded: they live in directory names), from its footer on the
-    * driver — the schema `spark.read.parquet(dir)` infers with a job. None
-    * when `dir` holds no data file or the footer lacks Spark's schema. */
-  def footerSchema(spark: SparkSession, dir: String): Option[StructType] = {
-    val root = new Path(dir)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = root.getFileSystem(conf)
-    val file = if (fs.exists(root)) dataFiles(fs, root).find(_.getLen > 0) else None
-    file.flatMap { f =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
-      val meta = try reader.getFooter.getFileMetaData finally reader.close()
-      Option(meta.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
-    }.map(json => graftbridge.asNullable(DataType.fromJson(json).asInstanceOf[StructType]))
+  /** The data files under `dir` as Spark's reader lists them (hidden names
+    * skipped, partition directories descended); none when `dir` is absent. */
+  def dataFiles(conf: Configuration, dir: Path): Iterator[FileStatus] = {
+    val fs = dir.getFileSystem(conf)
+    if (fs.exists(dir)) walk(fs, dir) else Iterator.empty
   }
 
-  /** The visible files under `dir`, walked lazily with `listStatus` — the
-    * shape of Spark's own driver-side listing. Not `listFiles`: it returns
+  /** [[dataFiles]]' walk, lazily with `listStatus` — the shape of Spark's
+    * own driver-side listing. Not `listFiles`: it returns
     * `LocatedFileStatus`es, whose construction on the local file system
     * forks a `stat` per file for its permissions (~4 ms each: 0.48 s for
     * the 128 files of one index layout, measured). */
-  private def dataFiles(fs: FileSystem, dir: Path): Iterator[FileStatus] =
+  private def walk(fs: FileSystem, dir: Path): Iterator[FileStatus] =
     fs.listStatus(dir).iterator.filterNot(s => hidden(s.getPath.getName)).flatMap { s =>
-      if (s.isDirectory) dataFiles(fs, s.getPath) else Iterator(s)
+      if (s.isDirectory) walk(fs, s.getPath) else Iterator(s)
     }
+
+  def footer(conf: Configuration, file: FileStatus): ParquetMetadata = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
+    try reader.getFooter finally reader.close()
+  }
+
+  /** Rows of the data files under `dir`, from their footers. */
+  def rowCount(conf: Configuration, dir: Path): Long =
+    dataFiles(conf, dir).map(fileRows(conf, _)).sum
+
+  private def fileRows(conf: Configuration, file: FileStatus): Long = {
+    import scala.jdk.CollectionConverters._
+    footer(conf, file).getBlocks.asScala.map(_.getRowCount).sum
+  }
+
+  /** Every record of one parquet file, as parquet-hadoop's example groups. */
+  def readGroups(conf: Configuration, file: FileStatus): Seq[Group] = {
+    val reader = ParquetReader.builder(new GroupReadSupport(), file.getPath).withConf(conf).build()
+    try Iterator.continually(reader.read()).takeWhile(_ != null).toVector
+    finally reader.close()
+  }
+
+  /** The Spark schema a data file under `dir` was written with (partition
+    * columns excluded: they live in directory names; every field nullable,
+    * as a file source reads it), from its footer on the driver — the schema
+    * `spark.read.parquet(dir)` infers with a job. None when `dir` holds no
+    * data file or the footer lacks Spark's schema. */
+  def footerSchema(conf: Configuration, dir: Path): Option[StructType] =
+    dataFiles(conf, dir).find(_.getLen > 0)
+      .flatMap(f => Option(footer(conf, f).getFileMetaData.getKeyValueMetaData
+        .get(ParquetReadSupport.SPARK_METADATA_KEY)))
+      .map(json => graftbridge.asNullable(DataType.fromJson(json).asInstanceOf[StructType]))
 
   /** The non-null values of the one-column parquet table at `dir` (a stage's
     * id set) read on the driver, for a column of type `t` — Long, Int,
-    * Short, Byte or String. None when `t` is another type or the table holds
-    * more than `max` values: then the caller joins against it. */
-  def readIds(spark: SparkSession, dir: String, t: DataType, max: Int): Option[Seq[Any]] = {
-    val get: (Group, Int) => Any = t match {
-      case LongType => _.getLong(0, _)
-      case IntegerType => _.getInteger(0, _)
-      case ShortType => (g, i) => g.getInteger(0, i).toShort
-      case ByteType => (g, i) => g.getInteger(0, i).toByte
-      case StringType => _.getString(0, _)
+    * Short, Byte or String. None when `t` is another type or the footers
+    * count more than `max` rows: then the caller joins against the table. */
+  def readIds(conf: Configuration, dir: Path, t: DataType, max: Int): Option[Seq[Any]] = {
+    val get: Group => Any = t match {
+      case LongType => _.getLong(0, 0)
+      case IntegerType => _.getInteger(0, 0)
+      case ShortType => _.getInteger(0, 0).toShort
+      case ByteType => _.getInteger(0, 0).toByte
+      case StringType => _.getString(0, 0)
       case _ => return None
     }
-    val root = new Path(dir)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = root.getFileSystem(conf)
-    val files = (if (fs.exists(root)) dataFiles(fs, root) else Iterator.empty).filter(_.getLen > 0)
-    val out = Vector.newBuilder[Any]
-    var n = 0
-    while (n <= max && files.hasNext) {
-      val reader = ParquetReader.builder(new GroupReadSupport(), files.next().getPath)
-        .withConf(conf).build()
-      try {
-        var g = reader.read()
-        while (n <= max && g != null) {
-          if (g.getFieldRepetitionCount(0) > 0) { out += get(g, 0); n += 1 }
-          g = reader.read()
-        }
-      } finally reader.close()
-    }
-    if (n > max) None else Some(out.result())
+    val files = dataFiles(conf, dir).filter(_.getLen > 0).toVector
+    if (files.iterator.map(fileRows(conf, _)).sum > max) None
+    else Some(files.flatMap(readGroups(conf, _)).filter(_.getFieldRepetitionCount(0) > 0).map(get))
   }
 }

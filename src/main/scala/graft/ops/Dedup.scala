@@ -1,7 +1,8 @@
 package graft.ops
 
+import graft.functions.IdIn
 import graft.io.{MetaFile, ParquetLayout}
-import org.apache.spark.sql.{Column, DataFrame, Observation, Row, graftbridge}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -876,19 +877,46 @@ object Dedup {
 
   /** `newDocs` minus the losing new ids of its delta pair set (id_a, id_b,
     * a_is_new, b_is_new) — the one survivors tail of every delta dedup,
-    * lexical and semantic. [[deltaLosers]] decides who loses, on the driver
-    * below `Components.SmallGraphEdges` pair rows; a driver loser set drops
-    * out through one [[idIn]] filter (no join, no job of its own), a
-    * distributed one through an anti-join that ships only the loser ids. */
-  private[ops] def deltaSurvivors(
-      newDocs: DataFrame, idCol: String, pairs: DataFrame): DataFrame =
-    deltaLosers(pairs) match {
-      case Left(ids) =>
-        val c = col(idCol)
-        newDocs.filter(c.isNull || !idIn(c, ids, newDocs.schema(idCol).dataType))
-      case Right(losers) =>
-        newDocs.join(losers.withColumnRenamed("id", idCol), Seq(idCol), "left_anti")
+    * lexical and semantic, with the columns of an anti-join (`idCol`
+    * first). [[deltaLosers]] decides who loses, on the driver up to
+    * `smallGraphEdges` pair rows (`0` forces the distributed path); the
+    * losers leave through [[withIds]]. */
+  private[graft] def deltaSurvivors(newDocs: DataFrame, idCol: String, pairs: DataFrame,
+      smallGraphEdges: Long = Components.SmallGraphEdges): DataFrame =
+    withIds(newDocs, idCol, deltaLosers(pairs, smallGraphEdges), keep = false)
+
+  /** Most ids of a driver-side id set [[withIds]] filters by; a larger set
+    * is joined. Where the filter stops paying, measured on 4 cores (a
+    * `left_anti` of a 450-row frame by random Long ids, median of 5 runs):
+    * the `InSet` filter takes 106 / 122 / 169 / 274 ms at 2^11 / 2^12 /
+    * 2^13 / 2^14 ids, the local-relation join 149 / 135 / 144 / 156 ms. */
+  private[ops] val DriverIdSetMax: Int = 1 << 12
+
+  /** `df` restricted to (`keep`) or cleared of (`!keep`) the rows whose
+    * `idCol` is in `ids`: the rows and columns (`idCol` first) of a
+    * left-semi or left-anti join against them. `ids` is a set on the driver
+    * with its type, or a frame of one id column. A driver set of at most
+    * [[DriverIdSetMax]] ids of `df`'s id type is one `graft.functions.IdIn`
+    * filter: no join, and no job, where a broadcast join collects its build
+    * side in one (these frames are read by several later stages, each
+    * paying it). A larger set, or one of another type (a pair column that
+    * widened Int delta ids against a Long index), is joined as a local
+    * relation, the join coercing the types. */
+  private[ops] def withIds(df: DataFrame, idCol: String,
+      ids: Either[(Seq[Any], DataType), DataFrame], keep: Boolean): DataFrame = {
+    val idType = df.schema(idCol).dataType
+    ids match {
+      case Left((set, t)) if t == idType && set.size <= DriverIdSetMax =>
+        val in = IdIn(col(idCol), set, idType)
+        df.filter(if (keep) in else col(idCol).isNull || !in)
+          .select((idCol +: df.columns.filterNot(_ == idCol).toSeq).map(col): _*)
+      case _ =>
+        import scala.jdk.CollectionConverters._
+        val frame = ids.fold({ case (set, t) => df.sparkSession.createDataFrame(
+          set.map(Row(_)).asJava, StructType(Seq(StructField(idCol, t)))) }, _.toDF(idCol))
+        df.join(frame, Seq(idCol), if (keep) "left_semi" else "left_anti")
     }
+  }
 
   private val pairCountSeq = new java.util.concurrent.atomic.AtomicLong()
 
@@ -899,21 +927,22 @@ object Dedup {
     * The pairs are checkpointed once, counted by an observation on that same
     * job. At most `smallGraphEdges` rows (`Components.SmallGraphEdges`, the
     * cut `connectedComponents` applies) with a driver-ordered id type are
-    * collected and resolved on the driver (`Left`): `Components.unionFind`,
-    * then per component `has_old` and `min_new` in the distributed rounds'
-    * id order. Larger pair sets take the distributed rounds and joins
-    * (`Right`, one `id` column). Both give the same ids; `smallGraphEdges =
-    * 0` forces the distributed path. */
+    * collected and resolved on the driver (`Left`, with the pair columns'
+    * id type): `Components.unionFind`, then per component `has_old` and
+    * `min_new` in the distributed rounds' id order. Larger pair sets take
+    * the distributed rounds and joins (`Right`, one `id` column). Both give
+    * the same ids. */
   private[graft] def deltaLosers(pairs: DataFrame,
-      smallGraphEdges: Long = Components.SmallGraphEdges): Either[Seq[Any], DataFrame] = {
+      smallGraphEdges: Long = Components.SmallGraphEdges): Either[(Seq[Any], DataType), DataFrame] = {
     val counted = Observation(s"graft_delta_pairs_${pairCountSeq.incrementAndGet()}")
     val staged = pairs.select("id_a", "id_b", "a_is_new", "b_is_new")
       .observe(counted, count(lit(1)).as("n")).localCheckpoint(true)
     // AQE's empty-relation propagation drops the metrics node only when no
     // pair survived, so a missing count is 0
     val n = counted.get.get("n").map(_.asInstanceOf[Long]).getOrElse(0L)
-    if (n <= smallGraphEdges && Components.driverOrderable(staged.schema("id_a").dataType))
-      Left(driverDeltaLosers(staged.collect()))
+    val idType = staged.schema("id_a").dataType
+    if (n <= smallGraphEdges && Components.driverOrderable(idType))
+      Left((driverDeltaLosers(staged.collect()), idType))
     else Right(distributedDeltaLosers(staged, smallGraphEdges))
   }
 
@@ -942,27 +971,8 @@ object Dedup {
     newIds.iterator.filter { id => val c = comp(id); hasOld(c) || minNew(c) != id }.toSeq
   }
 
-  /** `c IN ids` over a driver-side id set of type `t`, with no join: a
-    * Catalyst `InSet`, whose generated code holds the set as a reference
-    * object, so nothing is broadcast by a job (a broadcast join, even of a
-    * local relation, collects its build side in one) and, for Long and
-    * String ids, every set runs the same generated class. Null when `c` is
-    * null, like a join key that matches nothing. */
-  private[ops] def idIn(c: Column, ids: Iterable[Any], t: DataType): Column = {
-    val values: Set[Any] = t match {
-      case StringType => ids.iterator
-        .map(v => org.apache.spark.unsafe.types.UTF8String.fromString(v.asInstanceOf[String])).toSet
-      case _ => ids.toSet
-    }
-    graftbridge.toColumn(
-      org.apache.spark.sql.catalyst.expressions.InSet(graftbridge.toExpression(c), values))
-  }
-
   /** [[deltaLosers]] as distributed rounds and joins, for pair sets above
-    * the driver cut (or ids without a driver order). `perComp` is hinted
-    * broadcast: left to AQE, whichever ~10-row side finished first was
-    * broadcast, and the two plans differ by one shuffle stage, so the job
-    * count moved between runs. */
+    * the driver cut (or ids without a driver order). */
   private def distributedDeltaLosers(pairs: DataFrame, smallGraphEdges: Long): DataFrame = {
     val comp = Components.connectedComponents(pairs, "id_a", "id_b",
       smallGraphEdges = smallGraphEdges)
@@ -973,7 +983,7 @@ object Dedup {
     val perComp = labeled.groupBy("component").agg(
       max(when(!col("is_new"), lit(1)).otherwise(lit(0))).as("has_old"),
       min(when(col("is_new"), col("id"))).as("min_new"))
-    labeled.join(broadcast(perComp), Seq("component"))
+    labeled.join(perComp, Seq("component"))
       .filter(col("is_new") && (col("has_old") === 1 || col("id") =!= col("min_new")))
       .select(col("id"))
   }
@@ -999,15 +1009,14 @@ object Dedup {
     recoverIndex(spark, indexDir)
     val (p, idType) = loadIndexMeta(spark, indexDir)
     // directory prune: the `layout` rows in the buckets `keys`' rows hash
-    // to. The bucket list is one shuffle-free collect, made distinct on the
-    // driver (≤ numBuckets ints). The relation is built over one driver
+    // to (`distinctInts`: one job). The relation is built over one driver
     // listing pruned to those buckets: `spark.read` over the layout's
     // numBuckets directories would list them in a Spark job (one task per
     // directory) whenever there are more than 32
     def pruned(layout: String, schema: StructType, bucketCol: String,
         keys: DataFrame): DataFrame =
       ParquetLayout.readPartitions(spark, s"$indexDir/$layout", schema, bucketCol,
-        keys.collect().iterator.map(_.getInt(0)).toSet)
+        distinctInts(keys))
     // `eagerCheckpoints = false` is a PLAN-INSPECTION seam: checkpoints
     // truncate lineage to ExistingRDD leaves, hiding the partition-pruned
     // parquet scans from the final executed plan — tests disable them to pin
@@ -1019,6 +1028,16 @@ object Dedup {
       oldSigsOf = ids => pruned("sigs", sigsSchema(idType), "id_bucket",
         ids.select(idBucket(p))),
       stage = df => if (eagerCheckpoints) df.localCheckpoint(true) else df)
+  }
+
+  /** The distinct values of `keys`' one int column (bucket or cell ids) on
+    * the driver, in one job with no exchange: each partition sends its own
+    * distinct values, so at most numPartitions x distinct ints reach the
+    * driver, where `distinct().collect()` is a shuffle-map job plus a final
+    * job. */
+  private[ops] def distinctInts(keys: DataFrame): Set[Int] = {
+    import keys.sparkSession.implicits._
+    keys.as[Int].mapPartitions(_.toSet.iterator).collect().toSet
   }
 
   /** [[deltaNearDupsIndexedAudited]]'s pairs. Kept as a plain entry point

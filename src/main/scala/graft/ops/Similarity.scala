@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.io.{MetaFile, ParquetLayout}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -763,15 +764,15 @@ object Similarity {
   }
 
   /** The index rows of the cells `assigned`'s rows fall in: the cell ids
-    * come to the driver in one shuffle-free collect (made distinct there,
-    * ≤ numCells ints), and the read is partition-pruned to those cells over
-    * a driver listing with the schema of a data file's footer — no listing
-    * or schema-inference job (see `graft.io.ParquetLayout`). */
+    * come to the driver in one shuffle-free job (`Dedup.distinctInts`), and
+    * the read is partition-pruned to those cells over a driver listing with
+    * the schema of a data file's footer — no listing or schema-inference
+    * job (see `graft.io.ParquetLayout`). */
   private def touchedCells(assigned: DataFrame, indexDir: String): DataFrame = {
     val spark = assigned.sparkSession
-    val cells = assigned.select("cell").collect().iterator.map(_.getInt(0)).toSet
+    val cells = Dedup.distinctInts(assigned.select("cell"))
     val dir = s"$indexDir/cells"
-    ParquetLayout.footerSchema(spark, dir) match {
+    ParquetLayout.footerSchema(spark.sparkContext.hadoopConfiguration, new Path(dir)) match {
       case Some(data) =>
         ParquetLayout.readPartitions(spark, dir, data.add("cell", IntegerType), "cell", cells)
       case None => spark.read.parquet(dir).filter(col("cell").isin(cells.toSeq.sorted: _*))

@@ -478,24 +478,18 @@ object TrainingPipeline {
       Map("n_input" -> nInput, "n_valid" -> nValid, "n_exact" -> nExact)
     }
     // the schema from a footer on the driver: inferring it is a job
-    val prepared = ParquetLayout.footerSchema(spark, prepDir)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val prepared = ParquetLayout.footerSchema(conf, new Path(prepDir))
       .fold(spark.read)(spark.read.schema).parquet(prepDir)
     val idType = prepared.schema(idCol).dataType
     // `df` restricted to (keep) or cleared of (!keep) the id set a stage
-    // wrote at `dir`. Up to DriverIdSetMax ids are read on the driver into
-    // one `InSet` filter: these frames are read by several later stages and
-    // the final write, and a join against the set is a broadcast job per
-    // read. Larger sets are joined. Columns keep the join's order (id first).
-    def withIds(df: DataFrame, dir: String, keep: Boolean): DataFrame =
-      ParquetLayout.readIds(spark, dir, idType, DriverIdSetMax) match {
-        case Some(ids) =>
-          val in = Dedup.idIn(col(idCol), ids, idType)
-          df.filter(if (keep) in else col(idCol).isNull || !in)
-            .select((idCol +: df.columns.filterNot(_ == idCol).toSeq).map(col): _*)
-        case None =>
-          df.join(spark.read.schema(StructType(Seq(StructField(idCol, idType)))).parquet(dir),
-            Seq(idCol), if (keep) "left_semi" else "left_anti")
-      }
+    // wrote at `dir`, read on the driver when it is small enough to filter
+    // by (see Dedup.withIds), else joined where it lies
+    def withIds(df: DataFrame, dir: String, keep: Boolean): DataFrame = {
+      val ids = ParquetLayout.readIds(conf, new Path(dir), idType, Dedup.DriverIdSetMax)
+      Dedup.withIds(df, idCol, ids.map(_ -> idType)
+        .toLeft(spark.read.schema(StructType(Seq(StructField(idCol, idType)))).parquet(dir)), keep)
+    }
 
     // -- lexical delta dedup vs the persisted MinHash index (built empty on
     //    first use: a from-scratch corpus's first snapshot dedups only
@@ -695,11 +689,6 @@ object TrainingPipeline {
   }
 
   private val seq = new java.util.concurrent.atomic.AtomicLong()
-
-  /** Most ids of a stage's id set [[runDelta]] reads on the driver (a few
-    * MB of boxed ids held by the filter's generated code); larger sets are
-    * joined. */
-  private val DriverIdSetMax = 1 << 16
 
   /** Intake counts from the observation, via the one observation resolver
     * (grace wait + loud explicit recompute — see Dedup.observedLongs). */

@@ -1,7 +1,7 @@
 package graft
 
 import graft.checkpoint.StageStore
-import graft.io.PreChangeLayoutException
+import graft.io.{ParquetLayout, PreChangeLayoutException}
 import graft.ops.{Adaptive, DeltaPipelineReport, Dedup, IndexVersions, Similarity, TrainingPipeline}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
@@ -181,5 +181,23 @@ class MetadataSpec extends SparkSpec {
     assert(pairs === 1L) // the copy of doc 1 pairs with its indexed source
     val tasks = jobs.map(_.stageInfos.map(_.numTasks).max)
     assert(tasks.nonEmpty && tasks.forall(_ < dirs), s"tasks per job: $tasks")
+  }
+
+  test("a stage id set reads on the driver up to the cut and is refused above it from its footers") {
+    import org.apache.spark.sql.types.{LongType, StringType}
+    val w = tmp()
+    Seq(Some(3L), None, Some(1L), Some(2L)).toDF("doc_id").repartition(2).write.parquet(s"$w/ids")
+    Seq("a", "\uD83D\uDE00").toDF("doc_id").write.parquet(s"$w/strs")
+    val conf = spark.sparkContext.hadoopConfiguration
+    var (ids, over, strs) = (Option.empty[Seq[Any]], Option.empty[Seq[Any]], Option.empty[Seq[Any]])
+    val (jobs, _) = jobsDuring {
+      ids = ParquetLayout.readIds(conf, new Path(s"$w/ids"), LongType, 4)
+      over = ParquetLayout.readIds(conf, new Path(s"$w/ids"), LongType, 3) // 4 rows, one null
+      strs = ParquetLayout.readIds(conf, new Path(s"$w/strs"), StringType, 4)
+    }
+    assert(jobs === 0)
+    assert(ids.map(_.sortBy(_.toString)) === Some(Seq(1L, 2L, 3L)))
+    assert(over === None)
+    assert(strs.map(_.toSet) === Some(Set("a", "\uD83D\uDE00")))
   }
 }

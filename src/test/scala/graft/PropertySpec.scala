@@ -1,7 +1,7 @@
 package graft
 
 import graft.dsl._
-import graft.ops.Dedup
+import graft.ops.{Components, Dedup}
 import graft.run.Validator
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
@@ -345,27 +345,63 @@ class PropertySpec extends SparkSpec {
     // UTF-8 byte order (Spark's min) and Java's UTF-16 order disagree on
     // U+10000 and U+1F600 against U+E000 and U+FFFD
     val names = Seq("a", "z", "\uE000", "\uFFFD", "\uD800\uDC00", "\uD83D\uDE00", "b")
-    def losers[T](id: (Int, Int) => T)(implicit enc: org.apache.spark.sql.Encoder[(T, T, Boolean, Boolean)]) = {
+    // survivors of every id a graph may hold (ids beyond a graph's k are in
+    // no pair), from a frame whose id column comes second: the driver losers leave through
+    // one filter, the distributed ones through the anti-join, and both give
+    // the anti-join's rows and columns
+    def docs[T](id: (Int, Int) => T)(implicit enc: org.apache.spark.sql.Encoder[(String, T)]) =
+      (for (g <- graphs.indices; i <- names.indices) yield (s"t${id(g, i)}", id(g, i))).toDF("text", "doc_id")
+    def survivors(d: org.apache.spark.sql.DataFrame, pairs: org.apache.spark.sql.DataFrame,
+        smallGraphEdges: Long) = {
+      val s = Dedup.deltaSurvivors(d, "doc_id", pairs, smallGraphEdges)
+      assert(s.columns.toSeq === Seq("doc_id", "text"))
+      s.collect().map(r => (r.get(0), r.getString(1))).toSeq.sortBy(_._2)
+    }
+    def check[T](id: (Int, Int) => T)(implicit
+        enc: org.apache.spark.sql.Encoder[(T, T, Boolean, Boolean)],
+        docEnc: org.apache.spark.sql.Encoder[(String, T)]): Seq[Any] = {
       val rows = graphs.zipWithIndex.flatMap { case (edges, g) =>
         edges.map { case (i, j, aNew, bNew) => (id(g, i), id(g, j), aNew, bNew) }
       }
       val pairs = rows.toDF("id_a", "id_b", "a_is_new", "b_is_new")
       val driver = Dedup.deltaLosers(pairs) match {
-        case Left(ids) => ids
+        case Left((ids, _)) => ids.sortBy(_.toString)
         case Right(_) => fail("a small pair set must resolve on the driver")
       }
       val distributed = Dedup.deltaLosers(pairs, smallGraphEdges = 0L) match {
-        case Right(df) => df.collect().map(_.get(0)).toSeq
+        case Right(df) => df.collect().map(_.get(0)).toSeq.sortBy(_.toString)
         case Left(_) => fail("smallGraphEdges = 0 must take the distributed path")
       }
-      (driver.sortBy(_.toString), distributed.sortBy(_.toString))
+      assert(driver.nonEmpty)
+      assert(driver === distributed)
+      val d = docs(id)
+      val expected = d.collect().map(r => (r.get(1), r.getString(0))).toSeq
+        .filterNot(r => driver.contains(r._1)).sortBy(_._2)
+      assert(survivors(d, pairs, Components.SmallGraphEdges) === expected)
+      assert(survivors(d, pairs, 0L) === expected)
+      driver
     }
-    val (longDriver, longDistributed) = losers((g, i) => g * 100L + i)
-    assert(longDriver.nonEmpty)
-    assert(longDriver === longDistributed)
-    val (strDriver, strDistributed) = losers((g, i) => f"$g%02d-${names(i)}")
-    assert(strDriver.nonEmpty)
-    assert(strDriver === strDistributed)
+    val longLosers = check((g, i) => g * 100L + i)
+    check((g, i) => f"$g%02d-${names(i)}")
+
+    // Int docs against Long pair columns (a pair type widened by a Long
+    // index) take the local-relation join, with the same survivors
+    val longPairs = graphs.zipWithIndex.flatMap { case (edges, g) =>
+      edges.map { case (i, j, aNew, bNew) => (g * 100L + i, g * 100L + j, aNew, bNew) }
+    }.toDF("id_a", "id_b", "a_is_new", "b_is_new")
+    val intDocs = docs((g, i) => g * 100 + i)
+    assert(survivors(intDocs, longPairs, Components.SmallGraphEdges).map(_._2) ===
+      survivors(docs((g, i) => g * 100L + i), longPairs, Components.SmallGraphEdges).map(_._2))
+    assert(survivors(intDocs, longPairs, Components.SmallGraphEdges).size ===
+      graphs.size * names.size - longLosers.size)
+    // a loser set above the 400-id `InSet` switch threshold (a star of 500
+    // new ids on one old id), for Long docs (the hash `InSet`) and Int docs
+    val star = (1 to 500).map(i => (0L, i.toLong, false, true))
+      .toDF("id_a", "id_b", "a_is_new", "b_is_new")
+    val starDocs = (1 to 600).map(i => (s"t$i", i.toLong)).toDF("text", "doc_id")
+    for (d <- Seq(starDocs, starDocs.withColumn("doc_id", col("doc_id").cast("int"))))
+      assert(survivors(d, star, Components.SmallGraphEdges).map(_._1.toString) ===
+        (501 to 600).sortBy(i => s"t$i").map(_.toString))
   }
 
   test("content fingerprint: the one-job per-partition fold prints what the decimal(38,0) aggregate printed") {
