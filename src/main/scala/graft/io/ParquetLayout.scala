@@ -51,26 +51,39 @@ object ParquetLayout {
       else fs.listStatus(root).iterator
         .filter(d => d.isDirectory && wanted(d.getPath.getName))
         .flatMap(d => walk(fs, d.getPath)).toVector
-    if (files.isEmpty)
-      spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
-    else {
-      val listed = files.toArray
-      // the index asks its cache before it lists: this one answers with the
-      // driver listing for the root, so the index lists nothing itself
-      val cache = new FileStatusCache {
-        override def getLeafFiles(path: Path): Option[Array[FileStatus]] = Some(listed)
-        override def putLeafFiles(path: Path, leafFiles: Array[FileStatus]): Unit = ()
-        override def invalidateAll(): Unit = ()
-      }
-      val index = new InMemoryFileIndex(spark, Seq(root), Map.empty, Some(schema), cache)
-      val parts = index.partitionSchema.fieldNames.toSet
-      val relation = HadoopFsRelation(index, index.partitionSchema,
-        graftbridge.asNullable(StructType(schema.filterNot(f => parts(f.name)))),
-        None, new ParquetFileFormat, Map.empty)(spark)
-      spark.baseRelationToDataFrame(relation)
-        .select(schema.fieldNames.toSeq.map(col): _*)
-        .filter(col(partCol).isin(values.toSeq.sorted: _*))
+    if (files.isEmpty) empty(spark, schema)
+    else relation(spark, Seq(root -> files.toArray), schema)
+      .filter(col(partCol).isin(values.toSeq.sorted: _*))
+  }
+
+  /** The rows of `roots`' listed data files (each root a directory whose
+    * files were listed on the driver, with no partition directories below
+    * it) read as `schema`; an empty frame of `schema` when none is listed. */
+  def readFiles(spark: SparkSession, roots: Seq[(Path, Array[FileStatus])],
+      schema: StructType): DataFrame =
+    if (roots.forall(_._2.isEmpty)) empty(spark, schema)
+    else relation(spark, roots.filter(_._2.nonEmpty), schema)
+
+  private def empty(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+
+  /** A parquet relation over driver-listed files: the index asks its cache
+    * for each root's leaf files before it lists, and this cache answers with
+    * the driver listing, so the index lists nothing itself. */
+  private def relation(spark: SparkSession, roots: Seq[(Path, Array[FileStatus])],
+      schema: StructType): DataFrame = {
+    val listed = roots.toMap
+    val cache = new FileStatusCache {
+      override def getLeafFiles(path: Path): Option[Array[FileStatus]] = listed.get(path)
+      override def putLeafFiles(path: Path, leafFiles: Array[FileStatus]): Unit = ()
+      override def invalidateAll(): Unit = ()
     }
+    val index = new InMemoryFileIndex(spark, roots.map(_._1), Map.empty, Some(schema), cache)
+    val parts = index.partitionSchema.fieldNames.toSet
+    val rel = HadoopFsRelation(index, index.partitionSchema,
+      graftbridge.asNullable(StructType(schema.filterNot(f => parts(f.name)))),
+      None, new ParquetFileFormat, Map.empty)(spark)
+    spark.baseRelationToDataFrame(rel).select(schema.fieldNames.toSeq.map(col): _*)
   }
 
   /** The data files under `dir` as Spark's reader lists them (hidden names
@@ -85,7 +98,7 @@ object ParquetLayout {
     * `LocatedFileStatus`es, whose construction on the local file system
     * forks a `stat` per file for its permissions (~4 ms each: 0.48 s for
     * the 128 files of one index layout, measured). */
-  private def walk(fs: FileSystem, dir: Path): Iterator[FileStatus] =
+  private[io] def walk(fs: FileSystem, dir: Path): Iterator[FileStatus] =
     fs.listStatus(dir).iterator.filterNot(s => hidden(s.getPath.getName)).flatMap { s =>
       if (s.isDirectory) walk(fs, s.getPath) else Iterator(s)
     }

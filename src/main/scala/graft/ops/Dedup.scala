@@ -1,7 +1,7 @@
 package graft.ops
 
-import graft.functions.IdIn
-import graft.io.{MetaFile, ParquetLayout}
+import graft.functions.{BandHashes, IdIn, MinHashSig, SigMatchCount}
+import graft.io.{MetaFile, TieredLayout}
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -92,15 +92,12 @@ object Dedup {
   def minhashSignature(text: Column, shingleN: Int, numHashes: Int, seed: Long = 42L): Column =
     graft.functions.MinHashSig(text, shingleN, numHashes, seed)
 
-  /** LSH banding: (id, band_idx, band_hash) — `bands` bands of `rows` sig rows. */
-  def lshBands(df: DataFrame, idCol: String, sigCol: Column, bands: Int, rows: Int): DataFrame = {
-    val banded = (0 until bands).map { bi =>
-      struct(lit(bi).as("band_idx"),
-        xxhash64(concat_ws(",", slice(sigCol, bi * rows + 1, rows))).as("band_hash"))
-    }
-    df.select(col(idCol).as("id"), explode(array(banded: _*)).as("b"))
-      .select(col("id"), col("b.band_idx"), col("b.band_hash"))
-  }
+  /** LSH banding: (id, band_idx, band_hash) — `bands` bands of `rows` sig
+    * rows, hashed by [[graft.functions.BandHashes]] (the one banding body of
+    * the batch path and the index). */
+  def lshBands(df: DataFrame, idCol: String, sigCol: Column, bands: Int, rows: Int): DataFrame =
+    df.select(col(idCol).as("id"),
+      posexplode(BandHashes(sigCol, bands, rows)).as(Seq("band_idx", "band_hash")))
 
   private val auditSeq = new java.util.concurrent.atomic.AtomicLong()
 
@@ -518,33 +515,23 @@ object Dedup {
     * single-file input would otherwise hash on one core. */
   def minhashSignatures(
       df: DataFrame, idCol: String, textCol: String, p: MinhashIndexParams): DataFrame =
-    Adaptive.spread(df.select(col(idCol).as("id"), col(textCol).as("__text")))
-      .select(col("id"),
-        graft.functions.MinHashSig(col("__text"), p.shingleN, p.numHashes, p.seed, p.portable)
-          .as("sig"))
+    sigProjection(Adaptive.spread(df.select(col(idCol).as("id"), col(textCol).as("__text"))),
+      "id", "__text", p)
 
-  /** Positions where two equal-length signatures agree — the MinHash Jaccard
-    * estimate's integer numerator (estimate = matches / numHashes). Unrolled
-    * element_at comparisons, never a HOF lambda (codegen stays whole-stage). */
-  def sigMatchCount(a: Column, b: Column, numHashes: Int): Column =
-    (1 to numHashes).map(i =>
-      when(element_at(a, i) === element_at(b, i), 1L).otherwise(0L))
-      .reduce(_ + _)
+  /** (id, sig) of `df`'s rows in its own partitions. */
+  private def sigProjection(
+      df: DataFrame, idCol: String, textCol: String, p: MinhashIndexParams): DataFrame =
+    df.select(col(idCol).as("id"),
+      MinHashSig(col(textCol), p.shingleN, p.numHashes, p.seed, p.portable).as("sig"))
 
   /** (id, sig, band_idx, band_hash) band rows of a signature frame — one row
     * per (document, band), the LSH bucketing the near-dup candidate search
     * keys on. Shared by the raw-frame delta path (which computes these on the
     * fly) and the persisted index (which stores them, so a delta never
     * re-bands the corpus). */
-  private[ops] def bandRows(sigs: DataFrame, p: MinhashIndexParams): DataFrame = {
-    val banded = (0 until p.bands).map { bi =>
-      struct(lit(bi).as("band_idx"),
-        xxhash64(concat_ws(",", slice(col("sig"), bi * p.rowsPerBand + 1, p.rowsPerBand)))
-          .as("band_hash"))
-    }
-    sigs.select(col("id"), col("sig"), explode(array(banded: _*)).as("b"))
-      .select(col("id"), col("sig"), col("b.band_idx"), col("b.band_hash"))
-  }
+  private[ops] def bandRows(sigs: DataFrame, p: MinhashIndexParams): DataFrame =
+    sigs.select(col("id"), col("sig"),
+      posexplode(BandHashes(col("sig"), p.bands, p.rowsPerBand)).as(Seq("band_idx", "band_hash")))
 
   private def bandBucket(p: MinhashIndexParams): Column =
     pmod(col("band_hash"), lit(p.numBuckets.toLong)).cast(IntegerType)
@@ -561,67 +548,51 @@ object Dedup {
     StructField("id", idType), StructField("band_idx", IntegerType),
     StructField("band_hash", LongType), StructField("band_bucket", IntegerType)))
 
-  // per-write static overwrite: a caller's session-wide
-  // partitionOverwriteMode=dynamic would make a whole-layout rebuild keep any
-  // bucket partition absent from the new data — stale rows surviving an
-  // "overwrite" silently (the CLAUDE.md staging bug, index edition)
-  // one partition per bucket, spread over every core: an AQE-coalesced
-  // exchange would funnel a small append into ONE task writing every bucket
-  // file in turn; a fixed count equal to the bucket fan-out (capped at the
-  // slot count) keeps exactly one file per bucket per write either way
-  private def byBucket(df: DataFrame, bucketCol: String, p: MinhashIndexParams): DataFrame =
-    df.repartition(math.min(p.numBuckets, df.sparkSession.sparkContext.defaultParallelism),
-      col(bucketCol))
+  private def sigsLayout(indexDir: String) = TieredLayout(s"$indexDir/sigs", "id_bucket", "id")
+  private def bandsLayout(indexDir: String) =
+    TieredLayout(s"$indexDir/bands", "band_bucket", "band_hash")
 
-  /** Writes the signature rows; returns how many (counted on the write job). */
-  private def writeSigs(sigs: DataFrame, dir: String, p: MinhashIndexParams,
-      mode: String): Long =
-    countingWrite(byBucket(sigs.withColumn("id_bucket", idBucket(p)), "id_bucket", p)
-      .sortWithinPartitions("id_bucket", "id"))(
-      _.write.mode(mode).option("partitionOverwriteMode", "static")
-        .partitionBy("id_bucket").parquet(dir))
+  /** A signature frame's `sigs/` rows. */
+  private def sigsRows(sigs: DataFrame, p: MinhashIndexParams): DataFrame =
+    sigs.select(col("id"), col("sig"), idBucket(p).as("id_bucket"))
 
-  private def writeBands(bands: DataFrame, dir: String, p: MinhashIndexParams,
-      mode: String): Unit =
-    byBucket(bands.select(col("id"), col("band_idx"), col("band_hash"))
-      .withColumn("band_bucket", bandBucket(p)), "band_bucket", p)
-      .sortWithinPartitions("band_bucket", "band_hash")
-      .write.mode(mode).option("partitionOverwriteMode", "static")
-      .partitionBy("band_bucket").parquet(dir)
+  /** A signature frame's `bands/` rows. */
+  private def bandsRows(sigs: DataFrame, p: MinhashIndexParams): DataFrame =
+    bandRows(sigs, p).select(col("id"), col("band_idx"), col("band_hash"),
+      bandBucket(p).as("band_bucket"))
 
   /** Build (overwrite) a signature index for `df` at `indexDir`. Layout:
-    *  - `sigs/` (id, sig), hash-partitioned by `id_bucket` — the signature
-    *    store, read partition-pruned when verifying candidate pairs;
-    *  - `bands/` (id, band_idx, band_hash), hash-partitioned by
-    *    `band_bucket` — the THIN banding store (~30 B/row, no signature
-    *    payload) the candidate search scans, partition-pruned to the delta's
-    *    band buckets. Persisting the band rows means a delta NEVER recomputes
-    *    band hashes over the corpus, and the candidate scan never drags the
-    *    ~`numHashes`×8 B signature column through the bucket join;
+    *  - `sigs/` (id, sig), bucketed by `id_bucket` — the signature
+    *    store, read bucket-pruned when verifying candidate pairs;
+    *  - `bands/` (id, band_idx, band_hash), bucketed by `band_bucket` — the
+    *    THIN banding store (~30 B/row, no signature payload) the candidate
+    *    search scans, bucket-pruned to the delta's band buckets. Persisting
+    *    the band rows means a delta NEVER recomputes band hashes over the
+    *    corpus, and the candidate scan never drags the ~`numHashes`×8 B
+    *    signature column through the bucket join;
     *  - `_params` JSON sidecar, written on the driver (all
     *    MinhashIndexParams fields + the id column's type, so empty layouts
     *    read back typed).
-    * Append later deltas with [[minhashIndexAppend]]; dedup deltas with
-    * [[deltaDedupIndexed]]. */
+    * Both layouts are [[graft.io.TieredLayout]]s: the build writes their
+    * base tier, appends land in their run tier. Append later deltas with
+    * [[minhashIndexAppend]]; dedup deltas with [[deltaDedupIndexed]]. */
   def minhashIndexBuild(
       df: DataFrame, idCol: String, textCol: String, indexDir: String,
       p: MinhashIndexParams = MinhashIndexParams(), epoch: Long = 0L): Unit = {
     val spark = df.sparkSession
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    try {
-      // written twice (sigs + bands) — checkpoint so the signature scan of a
-      // possibly-expensive input lineage runs once
-      val sigs = minhashSignatures(df, idCol, textCol, p).localCheckpoint(true)
-      val n = writeSigs(sigs, s"$indexDir/sigs", p, "overwrite")
-      writeBands(bandRows(sigs, p), s"$indexDir/bands", p, "overwrite")
-      MetaFile.writeJson(spark, s"$indexDir/_params", Map(
-        "shingle_n" -> p.shingleN, "num_hashes" -> p.numHashes, "bands" -> p.bands,
-        "seed" -> p.seed, "portable" -> p.portable, "num_buckets" -> p.numBuckets,
-        "id_type" -> df.schema(idCol).dataType.sql))
-      // pass `epoch` = the corpus manifest epoch when building under a corpus
-      // that already saw deletion passes — a fresh index is NOT stale
-      IndexVersions.record(spark, indexDir, epoch, "build", n)
-    } finally releaseCheckpointsSince(spark.sparkContext, before)
+    val sigs = sigsLayout(indexDir)
+    val n = sigs.rewrite(sigsRows(minhashSignatures(df, idCol, textCol, p), p), p.numBuckets)
+    // the band rows derive from the written signatures: the signature scan
+    // of a possibly-expensive input lineage runs once, with no checkpoint
+    bandsLayout(indexDir).rewrite(bandsRows(
+      sigs.read(spark, sigsSchema(df.schema(idCol).dataType), None), p), p.numBuckets)
+    MetaFile.writeJson(spark, s"$indexDir/_params", Map(
+      "shingle_n" -> p.shingleN, "num_hashes" -> p.numHashes, "bands" -> p.bands,
+      "seed" -> p.seed, "portable" -> p.portable, "num_buckets" -> p.numBuckets,
+      "id_type" -> df.schema(idCol).dataType.sql))
+    // pass `epoch` = the corpus manifest epoch when building under a corpus
+    // that already saw deletion passes — a fresh index is NOT stale
+    IndexVersions.record(spark, indexDir, epoch, "build", n)
   }
 
   /** (params, id column type) of a persisted index, read on the driver. */
@@ -639,17 +610,17 @@ object Dedup {
 
   private def recoverIndex(
       spark: org.apache.spark.sql.SparkSession, indexDir: String): Unit = {
-    completeSwap(spark, s"$indexDir/sigs", s"$indexDir/sigs_compacting")
-    completeSwap(spark, s"$indexDir/bands", s"$indexDir/bands_compacting")
+    sigsLayout(indexDir).recover(spark)
+    bandsLayout(indexDir).recover(spark)
   }
 
-  /** Load a signature index: (sigs (id, sig), params). Completes any
-    * interrupted [[minhashIndexCompact]] swap first (see [[completeSwap]]). */
+  /** Load a signature index: (sigs (id, sig), params), both tiers. Completes
+    * any interrupted base swap first ([[graft.io.TieredLayout.recover]]). */
   def minhashIndexLoad(
       spark: org.apache.spark.sql.SparkSession, indexDir: String): (DataFrame, MinhashIndexParams) = {
     recoverIndex(spark, indexDir)
     val (p, idType) = loadIndexMeta(spark, indexDir)
-    val sigs = spark.read.schema(sigsSchema(idType)).parquet(s"$indexDir/sigs")
+    val sigs = sigsLayout(indexDir).read(spark, sigsSchema(idType), None)
       .select(col("id"), col("sig"))
     (sigs, p)
   }
@@ -657,34 +628,38 @@ object Dedup {
   /** Append `docs`' signatures to an existing index (call AFTER delta-dedup
     * decided which delta docs survive — append the KEPT ones). Uses the
     * index's own stored params, so an append can never fork the signature
-    * construction. */
+    * construction. Each layout gets one run: the signatures in `docs`' own
+    * partitions (no spread: a delta-sized append is one task, and a
+    * stage-written input already carries data-sized partitions), then the
+    * band rows derived from that run's files — one signature pass, no
+    * checkpoint, two jobs. A layout whose run tier holds `numBuckets` runs
+    * is folded into its base first. */
   def minhashIndexAppend(
       docs: DataFrame, idCol: String, textCol: String, indexDir: String): Unit = {
     val spark = docs.sparkSession
     recoverIndex(spark, indexDir)
-    val (p, _) = loadIndexMeta(spark, indexDir)
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    try {
-      val sigs = minhashSignatures(docs, idCol, textCol, p).localCheckpoint(true)
-      // sigs first, bands second: a kill in between leaves sig rows no band
-      // row references — they are simply never found as candidates (bounded
-      // under-dedup for ONE delta, healed when the at-least-once redelivery
-      // re-appends; duplicate rows are collapsed at the delta's sig fetch
-      // and compaction restores exactly-one on disk)
-      val n = writeSigs(sigs, s"$indexDir/sigs", p, "append")
-      writeBands(bandRows(sigs, p), s"$indexDir/bands", p, "append")
-      IndexVersions.record(spark, indexDir,
-        IndexVersions.epoch(spark, indexDir), "append", n)
-    } finally releaseCheckpointsSince(spark.sparkContext, before)
+    val (p, idType) = loadIndexMeta(spark, indexDir)
+    val (sigs, bands) = (sigsLayout(indexDir), bandsLayout(indexDir))
+    // sigs first, bands second: a kill in between leaves sig rows no band
+    // row references — they are simply never found as candidates (bounded
+    // under-dedup for ONE delta, healed when the at-least-once redelivery
+    // re-appends; duplicate rows are collapsed at the delta's sig fetch
+    // and compaction restores exactly-one on disk)
+    val (n, run) = sigs.appendRun(sigsRows(sigProjection(docs, idCol, textCol, p), p),
+      p.numBuckets)
+    bands.appendRun(bandsRows(sigs.readRun(spark, run, sigsSchema(idType)), p), p.numBuckets)
+    IndexVersions.record(spark, indexDir,
+      IndexVersions.epoch(spark, indexDir), "append", n)
   }
 
   /** Compact a signature index to the ids in `keepIds`: the index is
     * APPEND-ONLY, so documents later dropped from the corpus leave stale
     * signatures that would still WIN against future deltas (a new doc
     * near-dups a deleted one and is wrongly discarded). Run this after any
-    * corpus deletion with the surviving id set. Writes the kept signatures
-    * to a sibling directory and swaps it in (an in-place overwrite would
-    * read its own input mid-write); the params sidecar is untouched. */
+    * corpus deletion with the surviving id set. Each layout's kept rows
+    * (both tiers) become its new base, written to a sibling directory and
+    * swapped in (an in-place overwrite would read its own input mid-write);
+    * the params sidecar is untouched. */
   def minhashIndexCompact(
       keepIds: DataFrame, idCol: String, indexDir: String,
       epoch: Option[Long] = None): Unit = {
@@ -696,8 +671,9 @@ object Dedup {
     val target = epoch.getOrElse(cur + 1)
     require(target >= cur,
       s"compaction epoch $target would regress the index at $indexDir (currently $cur)")
-    val (_, idType) = loadIndexMeta(spark, indexDir)
+    val (p, idType) = loadIndexMeta(spark, indexDir)
     val keep = keepIds.select(col(idCol).as("id"))
+    val (sigs, bands) = (sigsLayout(indexDir), bandsLayout(indexDir))
     // bands first, sigs second: between the two swaps, stale SIG rows may
     // outlive their band rows — they are never found as candidates, so a
     // deleted document can not win a delta in the window (the failure the
@@ -707,89 +683,44 @@ object Dedup {
     // dropDuplicates doubles as the REPAIR path for a crashed append that was
     // redelivered (at-least-once appends can leave duplicate rows per id —
     // harmless for dedup decisions, but compaction restores exactly-one)
-    compactDir(spark, s"$indexDir/bands",
-      spark.read.schema(bandsSchema(idType)).parquet(s"$indexDir/bands")
-        .join(keep, Seq("id"), "left_semi")
-        .dropDuplicates("id", "band_idx"), "band_bucket", "band_hash")
-    val nSigs = compactDir(spark, s"$indexDir/sigs",
-      spark.read.schema(sigsSchema(idType)).parquet(s"$indexDir/sigs")
-        .join(keep, Seq("id"), "left_semi")
-        .dropDuplicates("id"), "id_bucket", "id")
+    bands.rewrite(bands.read(spark, bandsSchema(idType), None)
+      .join(keep, Seq("id"), "left_semi").dropDuplicates("id", "band_idx"), p.numBuckets)
+    val nSigs = sigs.rewrite(sigs.read(spark, sigsSchema(idType), None)
+      .join(keep, Seq("id"), "left_semi").dropDuplicates("id"), p.numBuckets)
     IndexVersions.record(spark, indexDir, target, "compact", nSigs)
   }
-
-  /** Rewrite `kept` into `<live>_compacting` (partitioned by `partCol`, the
-    * already-present bucket column; `sortCol` keeps per-file min/max stats
-    * tight), commit-mark it, and swap it in. */
-  private def compactDir(
-      spark: org.apache.spark.sql.SparkSession, liveDir: String,
-      kept: DataFrame, partCol: String, sortCol: String): Long = {
-    val tmp = s"${liveDir}_compacting"
-    val n = countingWrite(
-      kept.repartition(col(partCol)).sortWithinPartitions(partCol, sortCol))(
-      _.write.mode("overwrite").partitionBy(partCol).parquet(tmp))
-    val fs = new org.apache.hadoop.fs.Path(liveDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    writeCommitMarker(fs, tmp)
-    val live = new org.apache.hadoop.fs.Path(liveDir)
-    fs.delete(live, true)
-    require(fs.rename(new org.apache.hadoop.fs.Path(tmp), live),
-      s"compact swap failed: could not rename $tmp to $live")
-    n
-  }
-
-  /** Graft-owned commit marker for the compact swap. Recovery must NOT key
-    * off Hadoop's `_SUCCESS`: deployments commonly disable it on object
-    * stores (`mapreduce.fileoutputcommitter.marksuccessfuljobs=false`), and a
-    * crash between delete(live) and rename would then leave a fully-written
-    * sibling that recovery DELETES — permanently losing the index. This
-    * marker is written by graft itself after the compact write returns, so
-    * its presence is independent of committer configuration. */
-  private[graft] val CommitMarker = "_GRAFT_COMMITTED"
-
-  private[graft] def writeCommitMarker(
-      fs: org.apache.hadoop.fs.FileSystem, dir: String): Unit =
-    fs.create(new org.apache.hadoop.fs.Path(dir, CommitMarker), true).close()
 
   /** The one resolver for two Long metrics riding a job as an
     * `Observation` (the AQE empty-metrics edge is handled HERE). Never blocks
     * on `Observation.get` (it waits indefinitely if no action ran yet): the
     * async listener gets a grace window (spark.graft.auditWaitSec, default 2
     * — raise on busy clusters whose listener bus lags), then `recompute`
-    * runs — loudly, since it is a SECOND pass. AQE's empty-relation
-    * propagation also lands there by design: it drops the executed
-    * CollectMetrics node from the final plan, so the map comes back empty.
-    * `what` names the observation and `recomputing` the metrics in that
-    * stderr line. */
+    * runs — loudly, since it is a SECOND pass nobody planned for.
+    *
+    * AQE's empty-relation propagation is recognised at once, not waited
+    * out: when the observed node's stage emptied (no row survived it), AQE
+    * drops the executed CollectMetrics node from the final plan and Spark
+    * delivers the observation as an EMPTY map right after the action. The
+    * map cannot tell zero drops from all-dropped buckets, so `recompute`
+    * runs, without the warning: it is the documented outcome, not a lost
+    * observation. `what` names the observation and `recomputing` the
+    * metrics in the warning. */
   private[graft] def observedLongs(obs: Observation, keys: (String, String), what: String,
       recomputing: String)(recompute: => (Long, Long)): (Long, Long) = {
     val waitSec = java.lang.Long.getLong("spark.graft.auditWaitSec", 2L)
-    val completed =
+    val delivered =
       try { scala.concurrent.Await.ready(obs.future, scala.concurrent.duration.Duration(waitSec, "s")); true }
       catch { case _: java.util.concurrent.TimeoutException => false }
-    val m = if (completed) obs.get else Map.empty[String, Any]
-    if (m.contains(keys._1)) (m(keys._1).asInstanceOf[Long], m(keys._2).asInstanceOf[Long])
-    else {
+    if (!delivered) {
       System.err.println(
         s"[graft] $what observation not delivered within ${waitSec}s — " +
           s"recomputing $recomputing with an explicit aggregate pass")
       recompute
+    } else {
+      val m = obs.get
+      if (m.contains(keys._1)) (m(keys._1).asInstanceOf[Long], m(keys._2).asInstanceOf[Long])
+      else recompute
     }
-  }
-
-  private val obsCountSeq = new java.util.concurrent.atomic.AtomicLong()
-
-  /** Run `write` on `df` with a count Observation riding the SAME job, so
-    * index lifecycle records never pay a second full scan of just-written
-    * data (on a 10^12-row index the recount would double every compaction's
-    * I/O for one BIGINT field). If AQE's empty-relation propagation replaced
-    * the plan, the metrics map comes back empty — that only happens when
-    * zero rows survived, so the fallback IS the count. */
-  private[graft] def countingWrite(df: DataFrame)(write: DataFrame => Unit): Long = {
-    val obs = org.apache.spark.sql.Observation(
-      s"graft_write_count_${obsCountSeq.incrementAndGet()}")
-    write(df.observe(obs, count(lit(1)).as("n")))
-    obs.get.get("n").map(_.asInstanceOf[Long]).getOrElse(0L)
   }
 
   /** Unpersist every RDD that became persistent after `beforeIds` was
@@ -806,28 +737,6 @@ object Dedup {
     val current = sc.getPersistentRDDs
     (current.keySet -- beforeIds).foreach(id =>
       current.get(id).foreach(_.unpersist(blocking = false)))
-  }
-
-  /** Crash recovery for the compact swap, applied at every index read:
-    *  - live missing + committed sibling present (a kill landed between the
-    *    delete and the rename) -> finish the rename;
-    *  - live present + sibling present (a kill landed before the delete) ->
-    *    the compact never took effect; drop the sibling.
-    * Either way the reader sees exactly one committed data directory.
-    * "Committed" means graft's own [[CommitMarker]], not Hadoop's `_SUCCESS`
-    * (which object-store deployments often disable — see [[CommitMarker]]). */
-  private[ops] def completeSwap(
-      spark: org.apache.spark.sql.SparkSession, liveDir: String, tmpDir: String): Unit = {
-    val live = new org.apache.hadoop.fs.Path(liveDir)
-    val tmp = new org.apache.hadoop.fs.Path(tmpDir)
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(tmp)) {
-      val tmpCommitted = fs.exists(new org.apache.hadoop.fs.Path(tmp, CommitMarker))
-      if (!fs.exists(live) && tmpCommitted) {
-        require(fs.rename(tmp, live), s"swap recovery failed: $tmpDir -> $liveDir")
-        System.err.println(s"[graft] completed interrupted compact swap: $liveDir")
-      } else fs.delete(tmp, true) // uncommitted, or the live dir still stands
-    }
   }
 
   /** Near-dup pairs INVOLVING AT LEAST ONE NEW DOCUMENT, between `newDocs`
@@ -1008,24 +917,23 @@ object Dedup {
     val spark = newDocs.sparkSession
     recoverIndex(spark, indexDir)
     val (p, idType) = loadIndexMeta(spark, indexDir)
-    // directory prune: the `layout` rows in the buckets `keys`' rows hash
-    // to (`distinctInts`: one job). The relation is built over one driver
-    // listing pruned to those buckets: `spark.read` over the layout's
-    // numBuckets directories would list them in a Spark job (one task per
-    // directory) whenever there are more than 32
-    def pruned(layout: String, schema: StructType, bucketCol: String,
-        keys: DataFrame): DataFrame =
-      ParquetLayout.readPartitions(spark, s"$indexDir/$layout", schema, bucketCol,
-        distinctInts(keys))
+    // bucket prune: the base read only in the buckets `keys`' rows hash to
+    // (`distinctInts`: one job), next to the whole run tier. A base with no
+    // bucket directory (an index built empty) has nothing to prune, so no
+    // bucket list: the runs are read whole and the semi-joins below keep
+    // what the delta needs
+    def pruned(layout: TieredLayout, schema: StructType, keys: DataFrame): DataFrame =
+      layout.read(spark, schema,
+        if (layout.baseBuckets(spark).isEmpty) None else Some(distinctInts(keys)))
     // `eagerCheckpoints = false` is a PLAN-INSPECTION seam: checkpoints
     // truncate lineage to ExistingRDD leaves, hiding the partition-pruned
     // parquet scans from the final executed plan — tests disable them to pin
     // PartitionFilters, at the cost of re-executing the candidate scan per
     // downstream consumer. Leave true in production.
     lexDeltaPairs(newDocs, idCol, textCol, p, threshold, maxBucket, broadcastNewKeys,
-      oldBands = nb => pruned("bands", bandsSchema(idType), "band_bucket",
+      oldBands = nb => pruned(bandsLayout(indexDir), bandsSchema(idType),
         nb.select(bandBucket(p))),
-      oldSigsOf = ids => pruned("sigs", sigsSchema(idType), "id_bucket",
+      oldSigsOf = ids => pruned(sigsLayout(indexDir), sigsSchema(idType),
         ids.select(idBucket(p))),
       stage = df => if (eagerCheckpoints) df.localCheckpoint(true) else df)
   }
@@ -1134,7 +1042,7 @@ object Dedup {
       .join(side("a"), Seq("id_a", "a_is_new"))
       .join(side("b"), Seq("id_b", "b_is_new"))
       .select(col("id_a"), col("id_b"),
-        sigMatchCount(col("sig_a"), col("sig_b"), p.numHashes).as("matches"),
+        SigMatchCount(col("sig_a"), col("sig_b"), p.numHashes).as("matches"),
         col("a_is_new"), col("b_is_new"))
       .filter(col("matches") >= p.minMatches(threshold)))
   }

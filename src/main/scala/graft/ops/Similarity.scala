@@ -1,7 +1,6 @@
 package graft.ops
 
-import graft.io.{MetaFile, ParquetLayout}
-import org.apache.hadoop.fs.Path
+import graft.io.{MetaFile, TieredLayout}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -224,12 +223,8 @@ object Similarity {
   def ivfBuildIndexWith(
       df: DataFrame, idCol: String, embCol: String, indexDir: String,
       centroids: Seq[Seq[Double]], epoch: Long = 0L): Unit = {
-    // static overwrite: under a session-wide dynamic partitionOverwriteMode a
-    // whole-layout rebuild would keep cell partitions absent from the new
-    // data — stale vectors surviving the "overwrite" and winning future deltas
-    val n = Dedup.countingWrite(ivfAssign(df, idCol, embCol, centroids))(
-      _.write.mode("overwrite").option("partitionOverwriteMode", "static")
-        .partitionBy("cell").parquet(s"$indexDir/cells"))
+    val n = cellsLayout(indexDir).rewrite(ivfAssign(df, idCol, embCol, centroids),
+      centroids.size)
     MetaFile.writeJson(df.sparkSession, s"$indexDir/centroids", centroids)
     IndexVersions.record(df.sparkSession, indexDir, epoch, "build", n)
   }
@@ -322,11 +317,8 @@ object Similarity {
       df: DataFrame, idCol: String, embCol: String, indexDir: String,
       centroids: Seq[Seq[Double]], codebooks: Seq[Seq[Seq[Double]]],
       epoch: Long = 0L): Unit = {
-    val n = Dedup.countingWrite(
-      ivfPqEncodeWithEmb(df, idCol, embCol, centroids, codebooks)
-        .repartition(col("cell")).sortWithinPartitions("cell", "id"))(
-      _.write.mode("overwrite").option("partitionOverwriteMode", "static")
-        .partitionBy("cell").parquet(s"$indexDir/cells"))
+    val n = cellsLayout(indexDir).rewrite(
+      ivfPqEncodeWithEmb(df, idCol, embCol, centroids, codebooks), centroids.size)
     val spark = df.sparkSession
     MetaFile.writeJson(spark, s"$indexDir/centroids", centroids)
     MetaFile.writeJson(spark, s"$indexDir/codebooks", codebooks)
@@ -763,21 +755,36 @@ object Similarity {
           col("p.a.is_new").as("a_is_new"), col("p.b.is_new").as("b_is_new")))
   }
 
-  /** The index rows of the cells `assigned`'s rows fall in: the cell ids
-    * come to the driver in one shuffle-free job (`Dedup.distinctInts`), and
-    * the read is partition-pruned to those cells over a driver listing with
-    * the schema of a data file's footer — no listing or schema-inference
-    * job (see `graft.io.ParquetLayout`). */
-  private def touchedCells(assigned: DataFrame, indexDir: String): DataFrame = {
-    val spark = assigned.sparkSession
-    val cells = Dedup.distinctInts(assigned.select("cell"))
-    val dir = s"$indexDir/cells"
-    ParquetLayout.footerSchema(spark.sparkContext.hadoopConfiguration, new Path(dir)) match {
-      case Some(data) =>
-        ParquetLayout.readPartitions(spark, dir, data.add("cell", IntegerType), "cell", cells)
-      case None => spark.read.parquet(dir).filter(col("cell").isin(cells.toSeq.sorted: _*))
+  /** The IVF index's `cells/` layout: a [[graft.io.TieredLayout]] bucketed
+    * by `cell` (builds and compactions write its base, appends its run
+    * tier), with one bucket per centroid. */
+  private def cellsLayout(indexDir: String) = TieredLayout(s"$indexDir/cells", "cell", "id")
+
+  /** The index rows of `cells` (None: every cell), both tiers, read as the
+    * schema of a data file's footer — no listing or schema-inference job
+    * (see `graft.io.ParquetLayout`). Completes an interrupted base swap
+    * first. */
+  private def cellRows(spark: SparkSession, indexDir: String,
+      cells: Option[Set[Int]]): DataFrame = {
+    val layout = cellsLayout(indexDir)
+    layout.recover(spark)
+    layout.dataSchema(spark) match {
+      case Some(schema) => layout.read(spark, schema, cells)
+      case None => spark.read.parquet(layout.dir) // no data file: Spark names the missing schema
     }
   }
+
+  /** Every row of a persisted IVF or IVF-PQ index: (id, emb, cell), plus
+    * `codes` for IVF-PQ. */
+  def ivfIndexLoad(spark: SparkSession, indexDir: String): DataFrame =
+    cellRows(spark, indexDir, None)
+
+  /** The index rows of the cells `assigned`'s rows fall in: the cell ids
+    * come to the driver in one shuffle-free job (`Dedup.distinctInts`), and
+    * the base read is partition-pruned to those cells. */
+  private def touchedCells(assigned: DataFrame, indexDir: String): DataFrame =
+    cellRows(assigned.sparkSession, indexDir,
+      Some(Dedup.distinctInts(assigned.select("cell"))))
 
   /** Delta pairs against a PERSISTED IVF index ([[ivfBuildIndex]] layout):
     * the delta assigns against the index's own centroids, the touched cell
@@ -791,7 +798,6 @@ object Similarity {
     // tiny frame (the delta), read by the cell collect AND the pair build —
     // recomputing it would re-run the assignment scan per reference
     val newAssigned = ivfAssign(newDf, idCol, embCol, centroids).localCheckpoint(true)
-    Dedup.completeSwap(spark, s"$indexDir/cells", s"$indexDir/cells_compacting")
     val old = touchedCells(newAssigned, indexDir).select(col("id"), col("emb"), col("cell"))
     semanticDeltaPairsAudited(newAssigned, old, threshold, maxCell)
   }
@@ -822,7 +828,6 @@ object Similarity {
     // one checkpoint read by the cell collect, the candidate join, the
     // refine, and the within-delta pairs
     val newAssigned = cp(pqAssign(newDf, idCol, embCol, centroids, codebooks))
-    Dedup.completeSwap(spark, s"$indexDir/cells", s"$indexDir/cells_compacting")
     val cells = touchedCells(newAssigned, indexDir)
     // dropDuplicates("id"): repair-at-read for duplicate rows a
     // crashed-then-redelivered append left (the lexical indexed path's
@@ -935,16 +940,21 @@ object Similarity {
 
   /** Append vectors to a persisted IVF-PQ index, assigned AND encoded with
     * the index's own stored quantizers (an append can never fork either);
-    * same (emb, codes) projection and id-sorted layout as the build. */
+    * same (emb, codes) projection as the build, as one run. */
   def ivfPqIndexAppend(
       df: DataFrame, idCol: String, embCol: String, indexDir: String): Unit = {
-    val spark = df.sparkSession
-    Dedup.completeSwap(spark, s"$indexDir/cells", s"$indexDir/cells_compacting")
-    val (centroids, codebooks) = ivfPqLoadIndex(spark, indexDir)
-    val n = Dedup.countingWrite(
-      ivfPqEncodeWithEmb(df, idCol, embCol, centroids, codebooks)
-        .repartition(col("cell")).sortWithinPartitions("cell", "id"))(
-      _.write.mode("append").partitionBy("cell").parquet(s"$indexDir/cells"))
+    val (centroids, codebooks) = ivfPqLoadIndex(df.sparkSession, indexDir)
+    appendCells(df.sparkSession, indexDir, centroids.size,
+      ivfPqEncodeWithEmb(df, idCol, embCol, centroids, codebooks))
+  }
+
+  /** `rows` appended to the index's `cells/` layout as one run (a tier of
+    * `numCells` runs is folded into the base first). */
+  private def appendCells(spark: SparkSession, indexDir: String, numCells: Int,
+      rows: DataFrame): Unit = {
+    val layout = cellsLayout(indexDir)
+    layout.recover(spark)
+    val (n, _) = layout.appendRun(rows, numCells)
     IndexVersions.record(spark, indexDir,
       IndexVersions.epoch(spark, indexDir), "append", n)
   }
@@ -960,19 +970,15 @@ object Similarity {
       semanticDeltaPairsIndexed(newDf, idCol, embCol, indexDir, threshold, maxCell).pairs)
 
   /** Append vectors to a persisted IVF index, assigned with the index's OWN
-    * centroids (an append can never fork the quantizer) and written into
-    * their cell partitions. */
+    * centroids (an append can never fork the quantizer), as one run. */
   def ivfIndexAppend(
       df: DataFrame, idCol: String, embCol: String, indexDir: String): Unit = {
     require(!isPqIndex(df.sparkSession, indexDir),
       s"index at $indexDir is IVF-PQ (codebooks present) — append with " +
         "ivfPqIndexAppend (usePqCodes=true), or PQ deltas can't score the new rows")
-    Dedup.completeSwap(df.sparkSession, s"$indexDir/cells", s"$indexDir/cells_compacting")
     val centroids = ivfLoadCentroids(df.sparkSession, indexDir)
-    val n = Dedup.countingWrite(ivfAssign(df, idCol, embCol, centroids))(
-      _.write.mode("append").partitionBy("cell").parquet(s"$indexDir/cells"))
-    IndexVersions.record(df.sparkSession, indexDir,
-      IndexVersions.epoch(df.sparkSession, indexDir), "append", n)
+    appendCells(df.sparkSession, indexDir, centroids.size,
+      ivfAssign(df, idCol, embCol, centroids))
   }
 
   /** Compact a persisted IVF index to the ids in `keepIds` — the
@@ -980,29 +986,21 @@ object Similarity {
     * (appends are append-only; deleted corpus vectors would otherwise keep
     * winning delta dedups). Rewrites the kept rows cell-partitioned into a
     * sibling directory and swaps; centroids are untouched (compaction never
-    * re-trains the quantizer). */
+    * re-trains the quantizer). Both tiers' kept rows become the new base. */
   def ivfIndexCompact(
       keepIds: DataFrame, idCol: String, indexDir: String,
       epoch: Option[Long] = None): Unit = {
     val spark = keepIds.sparkSession
-    Dedup.completeSwap(spark, s"$indexDir/cells", s"$indexDir/cells_compacting")
+    val cells = cellRows(spark, indexDir, None)
     val cur = IndexVersions.epoch(spark, indexDir)
     val target = epoch.getOrElse(cur + 1)
     require(target >= cur,
       s"compaction epoch $target would regress the index at $indexDir (currently $cur)")
-    val cells = spark.read.parquet(s"$indexDir/cells")
-    val tmp = s"$indexDir/cells_compacting"
-    val n = Dedup.countingWrite(
+    val n = cellsLayout(indexDir).rewrite(
       cells.join(keepIds.select(col(idCol).as("id")), Seq("id"), "left_semi")
-        .dropDuplicates("id"))( // repair duplicate rows a redelivered append left
-      _.write.mode("overwrite").partitionBy("cell").parquet(tmp))
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Dedup.writeCommitMarker(fs, tmp)
-    val live = new org.apache.hadoop.fs.Path(s"$indexDir/cells")
-    fs.delete(live, true)
-    require(fs.rename(new org.apache.hadoop.fs.Path(tmp), live),
-      s"compact swap failed: could not rename $tmp to $live")
+        .dropDuplicates("id"), // repair duplicate rows a redelivered append left
+      ivfLoadCentroids(spark, indexDir).size)
     IndexVersions.record(spark, indexDir, target, "compact", n)
   }
+
 }

@@ -2,7 +2,7 @@ package graft.ops
 
 import graft.checkpoint.StageStore
 import graft.dsl.SchemaSpec
-import graft.io.{MetaFile, ParquetLayout}
+import graft.io.{MetaFile, ParquetLayout, TieredLayout}
 import graft.run.Validator
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
@@ -299,7 +299,7 @@ object TrainingPipeline {
     def apply(name: String, key: String, dataDir: Option[String] = None)(
         compute: => Map[String, Long]): Map[String, Long] =
       StageStore.load(spark, workDir, name, key)
-        .filter(_ => dataDir.forall(d => fs.exists(new Path(d, Dedup.CommitMarker)))) match {
+        .filter(_ => dataDir.forall(d => fs.exists(new Path(d, TieredLayout.CommitMarker)))) match {
         case Some(c) => records += StageRecord(name, loaded = true, c); c
         case None =>
           val c = compute
@@ -316,9 +316,9 @@ object TrainingPipeline {
       * `spark.sql.shuffle.partitions`), and the id sort keeps per-file id
       * stats tight and the layout deterministic across recomputes. */
     def write(df: DataFrame, idCol: String, dir: String): Long = {
-      val n = Dedup.countingWrite(df.repartition(col(idCol)).sortWithinPartitions(idCol))(
+      val n = TieredLayout.countingWrite(df.repartition(col(idCol)).sortWithinPartitions(idCol))(
         _.write.mode(SaveMode.Overwrite).parquet(dir))
-      Dedup.writeCommitMarker(fs, dir)
+      TieredLayout.writeCommitMarker(fs, dir)
       n
     }
   }
@@ -444,8 +444,7 @@ object TrainingPipeline {
         Dedup.minhashIndexCompact(keep, "id", mhDir, Some(target))
       }
       if (embCol.isDefined && exists(s"$ivfDir/centroids")) {
-        Dedup.completeSwap(spark, s"$ivfDir/cells", s"$ivfDir/cells_compacting")
-        val keep = spark.read.parquet(s"$ivfDir/cells").select("id")
+        val keep = Similarity.ivfIndexLoad(spark, ivfDir).select("id")
           .join(delIds, Seq("id"), "left_anti")
         Similarity.ivfIndexCompact(keep, "id", ivfDir, Some(target))
       }

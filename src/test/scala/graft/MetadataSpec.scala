@@ -22,7 +22,7 @@ class MetadataSpec extends SparkSpec {
   /** Spark jobs of the budget test's delta (local[4], 4 shuffle partitions):
     * its survivors resolve on the driver, and its index reads and stage id
     * sets run no job. */
-  private val DeltaJobBudget = 43
+  private val DeltaJobBudget = 38
 
   test("tiny metadata never submits a Spark job: stage records, index epochs, MinHash params, IVF centroids") {
     val w = tmp()
@@ -70,7 +70,7 @@ class MetadataSpec extends SparkSpec {
         minhashThreshold = 0.8)
       assert(first.stages.forall(!_.loaded))
       val corpusDir = new Path(StageStore.dataDir(w, s"delta_${first.tag}_corpus"))
-      assert(fs.exists(new Path(corpusDir, Dedup.CommitMarker)))
+      assert(fs.exists(new Path(corpusDir, graft.io.TieredLayout.CommitMarker)))
       assert(!fs.exists(new Path(corpusDir, "_SUCCESS")), "the committer still wrote _SUCCESS")
       val again = TrainingPipeline.runDelta(delta(1L, 2L), "doc_id", "text", w,
         minhashThreshold = 0.8)
@@ -199,5 +199,81 @@ class MetadataSpec extends SparkSpec {
     assert(ids.map(_.sortBy(_.toString)) === Some(Seq(1L, 2L, 3L)))
     assert(over === None)
     assert(strs.map(_.toSet) === Some(Set("a", "\uD83D\uDE00")))
+  }
+
+  /** Data files under `dir` (hidden names skipped, `_runs/` included). */
+  private def files(dir: String): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(dir)
+    if (!java.nio.file.Files.exists(root)) Set.empty
+    else java.nio.file.Files.walk(root).iterator().asScala
+      .filter(f => java.nio.file.Files.isRegularFile(f) && f.getFileName.toString.startsWith("part-"))
+      .map(_.toString).toSet
+  }
+
+  test("an index append adds at most one file per write task to each layout, and none to its base") {
+    val w = tmp()
+    val p = Dedup.MinhashIndexParams(numHashes = 32, bands = 8) // 64 buckets
+    Dedup.minhashIndexBuild((1L to 200L).map(doc).toDF("doc_id", "text"), "doc_id", "text",
+      s"$w/mh", p)
+    val embs = (1 to 40).map(i => (i.toLong, Seq((i % 5).toFloat, (i % 3).toFloat, 1f)))
+    Similarity.ivfBuildIndex(embs.toDF("id", "emb"), "id", "emb", s"$w/ivf", numCells = 8, iters = 1)
+    val layouts = Seq(s"$w/mh/sigs", s"$w/mh/bands", s"$w/ivf/cells")
+    val before = layouts.map(d => d -> files(d)).toMap
+    val tasks = 3
+    // `tasks` write tasks per append: an explicit partition count AQE keeps
+    Dedup.minhashIndexAppend((301L to 360L).map(doc).toDF("doc_id", "text").repartition(tasks),
+      "doc_id", "text", s"$w/mh")
+    Similarity.ivfIndexAppend((41 to 70).map(i => (i.toLong, Seq(1f, (i % 4).toFloat, 0f)))
+      .toDF("id", "emb").repartition(tasks), "id", "emb", s"$w/ivf")
+    layouts.foreach { d =>
+      val added = files(d) -- before(d)
+      assert(added.nonEmpty && added.size <= tasks, s"$d: ${added.size} files for $tasks tasks")
+      assert(added.forall(_.contains(s"/${graft.io.TieredLayout.RunsDir}/")), s"$d: $added")
+      assert(before(d).subsetOf(files(d)), s"$d: the append rewrote base files")
+    }
+    assert(Dedup.minhashIndexLoad(spark, s"$w/mh")._1.count() === 260L)
+    assert(Similarity.ivfIndexLoad(spark, s"$w/ivf").count() === 70L)
+  }
+
+  test("the run tier stays within its bound across 3 x numBuckets appends") {
+    val w = tmp()
+    val p = Dedup.MinhashIndexParams(numHashes = 32, bands = 8, numBuckets = 4)
+    Dedup.minhashIndexBuild(delta(1L, 2L, 3L), "doc_id", "text", s"$w/mh", p)
+    val layouts = Seq(graft.io.TieredLayout(s"$w/mh/sigs", "id_bucket", "id"),
+      graft.io.TieredLayout(s"$w/mh/bands", "band_bucket", "band_hash"))
+    var folded = false
+    for (k <- 1 to 3 * p.numBuckets) {
+      Dedup.minhashIndexAppend(delta(100L + 2 * k, 101L + 2 * k), "doc_id", "text", s"$w/mh")
+      layouts.foreach { l =>
+        val tier = l.runs(spark).size
+        assert(tier <= p.numBuckets, s"${l.dir}: $tier runs after append $k")
+        folded ||= tier == 1 && k > 1
+      }
+      assert(Dedup.minhashIndexLoad(spark, s"$w/mh")._1.count() === 3L + 2 * k)
+    }
+    assert(folded, "no append folded the tier")
+    // the folded index still finds a copy of an appended doc
+    val copy = delta(110L).select(($"doc_id" + 1000).as("doc_id"), $"text")
+    assert(Dedup.deltaNearDupsIndexedAudited(copy, "doc_id", "text", s"$w/mh", threshold = 0.8)
+      .pairs.select("id_a").as[Long].collect().toSeq === Seq(110L))
+  }
+
+  test("a first delta with no candidate bucket resolves its drop audit at once, without the warning") {
+    val w = tmp()
+    val p = Dedup.MinhashIndexParams(numHashes = 32, bands = 8, numBuckets = 4)
+    Dedup.minhashIndexBuild(delta(1L).limit(0), "doc_id", "text", s"$w/mh", p)
+    val audited = Dedup.deltaNearDupsIndexedAudited(delta(1L, 2L, 3L), "doc_id", "text",
+      s"$w/mh", threshold = 0.8)
+    assert(audited.pairs.count() === 0L)
+    val err = new java.io.ByteArrayOutputStream()
+    val prior = System.err
+    System.setErr(new java.io.PrintStream(err, true))
+    val t0 = System.nanoTime()
+    val drops = try (audited.droppedBuckets, audited.droppedIds) finally System.setErr(prior)
+    val seconds = (System.nanoTime() - t0) / 1e9
+    assert(drops === ((0L, 0L)))
+    assert(!err.toString.contains("not delivered"), err.toString)
+    assert(seconds < 1.5, s"the audit took $seconds s")
   }
 }

@@ -775,7 +775,7 @@ class OpsSpec extends SparkSpec {
       .select($"id").as[Long].collect().toSet
     val lexSurvivors = ((1L to 20L).toSet ++ (101L to 110L).toSet + 23L + 124L + 125L)
     assert(mhIds === lexSurvivors)
-    val ivfIds = spark.read.parquet(s"$work/ivfidx/cells")
+    val ivfIds = Similarity.ivfIndexLoad(spark, s"$work/ivfidx")
       .select($"id").as[Long].collect().toSet
     assert(ivfIds === out1.union(out2))
 
@@ -793,7 +793,7 @@ class OpsSpec extends SparkSpec {
         usePqCodes = true, pqM = 8, pqKSub = 8, pqAdcMargin = 2.0)
     assert(goPq(d1).corpus.select($"doc_id").as[Long].collect().toSet === out1)
     assert(goPq(d2).corpus.select($"doc_id").as[Long].collect().toSet === out2)
-    val pqCells = spark.read.parquet(s"$workPq/ivfidx/cells")
+    val pqCells = Similarity.ivfIndexLoad(spark, s"$workPq/ivfidx")
     assert(pqCells.columns.contains("codes"))
     assert(pqCells.select($"id").as[Long].collect().toSet === out1.union(out2))
 
@@ -870,7 +870,7 @@ class OpsSpec extends SparkSpec {
     assert(bSem.contains(124L)) // A's semantic entry wasn't there to beat it
     val rA = go(d1, w = work3)
     assert(rA.corpus.select($"doc_id").as[Long].collect().toSet === out1)
-    val cellIds3 = spark.read.parquet(s"$work3/ivfidx/cells")
+    val cellIds3 = Similarity.ivfIndexLoad(spark, s"$work3/ivfidx")
       .select($"id").as[Long].collect().toSet
     assert(bSem.subsetOf(cellIds3), s"B's survivors must survive A's redelivery: $cellIds3")
     assert(out1.subsetOf(cellIds3))
@@ -1281,7 +1281,7 @@ class OpsSpec extends SparkSpec {
     val nBefore = Dedup.minhashIndexLoad(spark, idx)._1.count()
     // the compact above left graft's own commit marker in the live dir, so
     // the renamed sibling is "committed" even where _SUCCESS is disabled
-    assert(fs.exists(pth(s"$idx/sigs/${Dedup.CommitMarker}")))
+    assert(fs.exists(pth(s"$idx/sigs/${graft.io.TieredLayout.CommitMarker}")))
     assert(fs.rename(pth(s"$idx/sigs"), pth(s"$idx/sigs_compacting")))
     assert(Dedup.minhashIndexLoad(spark, idx)._1.count() === nBefore)
     fs.mkdirs(pth(s"$idx/sigs_compacting")) // uncommitted leftover (no marker)

@@ -1,6 +1,8 @@
 package graft
 
 import graft.dsl._
+import graft.functions.{BandHashes, SigMatchCount}
+import graft.io.TieredLayout
 import graft.ops.{Components, Dedup}
 import graft.run.Validator
 import org.apache.spark.sql.Column
@@ -427,5 +429,128 @@ class PropertySpec extends SparkSpec {
     assert(TrainingPipeline.contentFp(df, Seq("id", "text")) === aggregateFp(df))
     val empty = df.limit(0)
     assert(TrainingPipeline.contentFp(empty, Seq("id", "text")) === aggregateFp(empty))
+  }
+
+  test("BandHashes: every band equals xxhash64(concat_ws(slice)) on random signatures, nulls and extremes included") {
+    val values = Gen.frequency(
+      6 -> Gen.choose(Long.MinValue, Long.MaxValue),
+      2 -> Gen.choose(-1000L, 1000L),
+      1 -> Gen.oneOf(Long.MinValue, Long.MaxValue, 0L, -1L))
+    val sigs = Gen.listOfN(300, Gen.frequency(
+      12 -> Gen.choose(0, 70).flatMap(n => Gen.listOfN(n, Gen.frequency(
+        9 -> values.map(v => Option(java.lang.Long.valueOf(v))),
+        1 -> Gen.const(Option.empty[java.lang.Long])))).map(l => Some(l.map(_.orNull))),
+      1 -> Gen.const(None))).sample.get
+    val df = sigs.zipWithIndex.map { case (sig, i) => (i.toLong, sig.map(_.toSeq).orNull) }
+      .toDF("id", "sig")
+    for ((bands, rows) <- Seq((16, 4), (8, 4), (3, 5), (1, 64))) {
+      val columnShape = array((0 until bands).map(bi =>
+        xxhash64(concat_ws(",", slice($"sig", bi * rows + 1, rows)))): _*)
+      val diff = df.select($"id", BandHashes($"sig", bands, rows).as("native"),
+          columnShape.as("column"))
+        .filter(!($"native" <=> $"column")).count()
+      assert(diff === 0L, s"$diff rows differ at $bands bands x $rows rows")
+    }
+  }
+
+  test("SigMatchCount equals the unrolled element_at sum, null elements and null arrays included") {
+    val n = 16
+    val elem = Gen.frequency(8 -> Gen.choose(0L, 3L).map(Option(_)), 1 -> Gen.const(Option.empty[Long]))
+    val arr = Gen.frequency(8 -> Gen.listOfN(n, elem).map(l => Some(l)), 1 -> Gen.const(None))
+    val pairs = Gen.listOfN(400, Gen.zip(arr, arr)).sample.get
+    def col(a: Option[List[Option[Long]]]) = a.map(_.map(_.map(java.lang.Long.valueOf).orNull)).orNull
+    val df = pairs.zipWithIndex.map { case ((a, b), i) => (i.toLong, col(a), col(b)) }
+      .toDF("id", "a", "b")
+    val unrolled = (1 to n).map(i =>
+      when(element_at($"a", i) === element_at($"b", i), 1L).otherwise(0L)).reduce(_ + _)
+    val rows = df.select(SigMatchCount($"a", $"b", n).as("native"), unrolled.as("column"))
+      .as[(Long, Long)].collect()
+    assert(rows.forall { case (x, y) => x == y },
+      rows.filter { case (x, y) => x != y }.take(5).mkString(", "))
+    assert(rows.map(_._1).toSet.size > 3) // the generator reached several counts
+  }
+
+  test("tiered layout: random build/append/fold/compact sequences read the one-tier reference rows") {
+    val numBuckets = 5
+    // rows of one id are identical, so a compaction's dropDuplicates("id")
+    // keeps a determined row
+    def row(id: Long) = (id, id * 7 % 11, (id % numBuckets).toInt)
+    val schema = org.apache.spark.sql.types.StructType.fromDDL("id BIGINT, v BIGINT, b INT")
+    def frame(ids: Seq[Long], parts: Int) = ids.map(row).toDF("id", "v", "b").repartition(parts)
+    val ids = Gen.listOf(Gen.choose(0L, 40L))
+    val op = Gen.frequency(
+      1 -> ids.map(i => ("build", i)), 5 -> ids.map(i => ("append", i)),
+      1 -> Gen.const(("fold", Nil)), 1 -> ids.map(i => ("compact", i)))
+    val buckets = Gen.someOf(0 until numBuckets + 1).map(_.toSet)
+    val sequences = Gen.listOfN(6, Gen.zip(Gen.oneOf(true, false), Gen.listOfN(8, Gen.zip(op, buckets))))
+      .sample.get
+    var checks = 0
+    sequences.foreach { case (parentBase, ops) =>
+      val dir = java.nio.file.Files.createTempDirectory("graft-tier").toString + "/layout"
+      val layout = TieredLayout(dir, "b", "id")
+      var ref = Seq.empty[(Long, Long, Int)]
+      // a base as an earlier release wrote it: Spark's partitioned write
+      // straight into the directory, no run tier
+      if (parentBase) {
+        ref = (0L to 20L).map(row)
+        frame(ref.map(_._1), 2).write.partitionBy("b").parquet(dir)
+      }
+      def read(only: Option[Set[Int]]) = {
+        layout.recover(spark)
+        layout.read(spark, schema, only).as[(Long, Long, Int)].collect().toSeq.sorted
+      }
+      ops.foreach { case ((kind, opIds), only) =>
+        kind match {
+          case "build" => layout.rewrite(frame(opIds, 2), numBuckets); ref = opIds.map(row)
+          case "append" => layout.appendRun(frame(opIds, 3), numBuckets); ref = ref ++ opIds.map(row)
+          case "fold" => layout.rewrite(layout.read(spark, schema, None), numBuckets)
+          case _ =>
+            val keep = opIds.toSet
+            layout.rewrite(layout.read(spark, schema, None)
+              .join(opIds.distinct.toDF("id"), Seq("id"), "left_semi").dropDuplicates("id"),
+              numBuckets)
+            ref = ref.filter(r => keep(r._1)).distinct
+        }
+        assert(read(Some(only)) === ref.filter(r => only(r._3)).sorted, s"after $kind, buckets $only")
+        assert(read(None) === ref.sorted, s"after $kind")
+        checks += 1
+      }
+    }
+    assert(checks === 48)
+  }
+
+  test("tiered layout: a kill between a fold's base write and its run removal rereads no duplicate band rows") {
+    val idx = java.nio.file.Files.createTempDirectory("graft-tier-kill").toString
+    val p = Dedup.MinhashIndexParams(numHashes = 32, bands = 8, numBuckets = 4)
+    def docs(ids: Seq[Long]) =
+      ids.map(i => (i, (1 to 20).map(t => s"k${i}_$t").mkString(" "))).toDF("doc_id", "text")
+    Dedup.minhashIndexBuild(docs(1L to 10L), "doc_id", "text", idx, p)
+    Seq(11L to 14L, 15L to 18L).foreach(d => Dedup.minhashIndexAppend(docs(d), "doc_id", "text", idx))
+    val bands = TieredLayout(s"$idx/bands", "band_bucket", "band_hash")
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+      "id BIGINT, band_idx INT, band_hash BIGINT, band_bucket INT")
+    def bandRows() = { bands.recover(spark); bands.read(spark, schema, None)
+      .select($"id", $"band_idx").as[(Long, Int)].collect().toSeq }
+    val expected = (1L to 18L).flatMap(i => (0 until p.bands).map(b => (i, b))).sorted
+    assert(bands.runs(spark).nonEmpty)
+    assert(bandRows().sorted === expected)
+    // the fold's base written and committed beside the live layout, whose
+    // runs still stand: the kill landed before the swap
+    def foldedSibling(): Unit = TieredLayout(s"$idx/bands_compacting", "band_bucket", "band_hash")
+      .rewrite(bands.read(spark, schema, None), p.numBuckets)
+    foldedSibling()
+    assert(bandRows().sorted === expected)
+    assert(bands.runs(spark).nonEmpty) // the sibling was dropped, the runs kept
+    // the kill landed after the live layout (runs included) was deleted
+    foldedSibling()
+    val fs = new org.apache.hadoop.fs.Path(idx).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(s"$idx/bands"), true)
+    assert(bandRows().sorted === expected)
+    assert(bands.runs(spark).isEmpty) // the swap completed: one base, no runs
+    // the index still dedups: a copy of an appended doc finds its source
+    val pairs = Dedup.deltaNearDupsIndexedAudited(
+      docs(Seq(12L)).select(($"doc_id" + 100).as("doc_id"), $"text"), "doc_id", "text", idx,
+      threshold = 0.8).pairs.select("id_a", "id_b").as[(Long, Long)].collect().toSet
+    assert(pairs === Set((12L, 112L)))
   }
 }

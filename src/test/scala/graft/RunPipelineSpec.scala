@@ -105,7 +105,7 @@ class RunPipelineSpec extends SparkSpec {
     assert(field(j1, "output") === 10)
     val j2 = RunPipeline.run(spark, args(work, d2, pq))
     assert(field(j2, "semantic_dups") === 1 && field(j2, "output") === 5)
-    val cells = spark.read.parquet(s"$work/ivfidx/cells")
+    val cells = graft.ops.Similarity.ivfIndexLoad(spark, s"$work/ivfidx")
     assert(cells.columns.contains("codes"))
   }
 

@@ -3,7 +3,7 @@
 from a driver log and an event log.
 
     python3 tools/codegen_by_call.py <driver log> <event log> [--results <results.json>]
-        [--depth 2] [--top 40] [--variants 5]
+        [--depth 2] [--top 40] [--variants 5] [--largest N]
 
 The driver log is what a Spark JVM writes under
 `tools/log4j2-codegen.properties`: Spark's `CodeGenerator` logs a class's
@@ -36,6 +36,17 @@ ran in, labelled `<kind>#<n>` as in `tools/span_table.py`. Jobs outside the
 traced calls (the untimed half of a run, setup, checks) are `(untraced)`.
 `--variants N` prints, for the first N literal variants, the first line that
 differs from the earlier source.
+
+`--largest N` lists the N largest distinct generated classes: the Java bytes
+of the source (without the log's line-number prefixes), how often it was
+compiled, the compile ms summed over those compiles, and the call site and
+CLI call of its first compile. A whole-stage class of tens of KB is a stage
+whose expressions unrolled into Java (an element-wise sum, a struct per
+band): its methods likely exceed HotSpot's 8,000-byte JIT limit, so it runs
+interpreted, and it is recompiled whenever it falls out of the cache. E.g.
+
+    python3 tools/codegen_by_call.py <driver log> <event log> --results <results.json> \
+        --largest 10
 """
 import argparse
 import collections
@@ -80,6 +91,11 @@ def compiles(path):
                 g = GENERATED.search(msg)
                 if g and thread in pending:
                     yield int(ms), pending.pop(thread), float(g.group(1))
+
+
+def java_bytes(lines):
+    """The source's size in bytes, without the log's line-number prefixes."""
+    return sum(len(LINE_NO.sub("", l).encode()) + 1 for l in lines)
 
 
 def normalize(lines):
@@ -161,6 +177,8 @@ def main():
     ap.add_argument("--depth", type=int, default=2, help="graft frames per call site")
     ap.add_argument("--top", type=int, default=40, help="call-site rows to print")
     ap.add_argument("--variants", type=int, default=5, help="literal variants to show")
+    ap.add_argument("--largest", type=int, default=0,
+                    help="list the N largest distinct generated classes")
     a = ap.parse_args()
 
     job_list = jobs(a.event_log, a.depth)
@@ -171,6 +189,7 @@ def main():
     per_site = collections.defaultdict(lambda: {k: [0, 0.0] for k in KINDS})
     per_call = collections.defaultdict(lambda: {k: [0, 0.0] for k in KINDS})
     call_order = []
+    classes = {}  # source digest -> [java bytes, compiles, ms, first site, first call]
     shown = 0
     n = 0
     for end_ms, lines, ms in compiles(a.driver_log):
@@ -204,6 +223,9 @@ def main():
                 print(f"literal variant ({call}, {site}):\n"
                       f"  before: {diff[0]}\n  now:    {diff[1]}")
                 shown += 1
+        c = classes.setdefault(key, [java_bytes(lines), 0, 0.0, site, call])
+        c[1] += 1
+        c[2] += ms
         for rows, k in ((per_site, site), (per_call, call)):
             rows[k][kind][0] += 1
             rows[k][kind][1] += ms
@@ -224,6 +246,11 @@ def main():
     totals = {k: [sum(per_site[s][k][0] for s in per_site), sum(per_site[s][k][1] for s in per_site)]
               for k in KINDS}
     print("total: " + ", ".join(f"{k} {c} ({ms:.0f} ms)" for k, (c, ms) in totals.items()))
+    if a.largest:
+        print()
+        print(f"{'java KB':>8} {'compiles':>8} {'ms':>9}  first call site (CLI call)")
+        for size, count, ms, site, call in sorted(classes.values(), key=lambda c: -c[0])[:a.largest]:
+            print(f"{size / 1000:8.1f} {count:8d} {ms:9.1f}  {site} ({call})")
 
 
 if __name__ == "__main__":
