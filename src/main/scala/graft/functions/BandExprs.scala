@@ -52,7 +52,6 @@ case class BandHashes(child: Expression, bands: Int, rows: Int) extends UnaryExp
 object BandHashes {
   /** Spark's `xxhash64` seed. */
   private val Seed = 42L
-  private val MinValueDigits = Long.MinValue.toString.getBytes("US-ASCII")
 
   /** Static so generated code can call it. */
   def compute(sig: ArrayData, bands: Int, rows: Int): ArrayData = {
@@ -79,21 +78,12 @@ object BandHashes {
   }
 
   /** `v`'s `Long.toString` as ASCII at `buf(at)`; returns the end. */
-  private def appendDecimal(buf: Array[Byte], at: Int, v: Long): Int =
-    if (v == Long.MinValue) {
-      System.arraycopy(MinValueDigits, 0, buf, at, MinValueDigits.length)
-      at + MinValueDigits.length
-    } else {
-      var pos = at
-      var x = v
-      if (x < 0) { buf(pos) = '-'; pos += 1; x = -x }
-      var digits = 1
-      var t = x / 10
-      while (t > 0) { digits += 1; t /= 10 }
-      var j = pos + digits - 1
-      while (j >= pos) { buf(j) = ('0' + (x % 10)).toByte; x /= 10; j -= 1 }
-      pos + digits
-    }
+  private def appendDecimal(buf: Array[Byte], at: Int, v: Long): Int = {
+    val digits = java.lang.Long.toString(v)
+    var j = 0
+    while (j < digits.length) { buf(at + j) = digits.charAt(j).toByte; j += 1 }
+    at + digits.length
+  }
 
   def apply(sig: Column, bands: Int, rows: Int): Column =
     graftbridge.toColumn(BandHashes(graftbridge.toExpression(sig), bands, rows))

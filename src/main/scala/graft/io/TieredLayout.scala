@@ -13,9 +13,9 @@ import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
   * read-optimised base.
   *
   *  - The base tier is `dir` partitioned by `bucketCol`, one directory per
-  *    bucket and each sorted by (`bucketCol`, `sortCol`): a read prunes it
-  *    to the buckets it needs. Builds, folds and compactions write it
-  *    ([[rewrite]]), into a sibling and swapped in.
+  *    bucket, each file in it sorted by (`bucketCol`, `sortCol`): a read
+  *    prunes it to the buckets it needs. Builds and compactions replace it
+  *    whole ([[rewrite]]), written beside it and swapped in.
   *  - The run tier (`dir/_runs/`, hidden from Spark's reader) is where every
   *    append lands ([[appendRun]]): one directory per append holding one
   *    file per write task, sorted by the same key, with no bucket exchange.
@@ -23,14 +23,16 @@ import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
   *    64 per layout per append, ~30 ms each, and the base grew by that many
   *    files per delta.
   *
-  * A read ([[read]]) takes the runs whole next to the bucket-pruned base
-  * (a bucket filter on their rows keeps the pruned read's rows). An append
-  * that would take the tier past the layout's bucket count in runs first
-  * folds the tier into the base: a fold rewrites the whole layout, so it
-  * comes once per bucket-count appends, however many tasks an append
-  * writes with. The base rewrite swaps the whole directory, runs included,
-  * so a kill mid-fold leaves either the old base with its runs or the new
-  * base without them, never both ([[recover]]). */
+  * A read ([[read]]) takes the runs next to the bucket-pruned base. An
+  * append that would take the tier past the layout's bucket count in runs
+  * first folds the tier into the base ([[fold]]): the runs' rows, one file
+  * per bucket, move into the base's bucket directories, so a fold costs the
+  * run tier's size, not the index's, and the base grows by at most one file
+  * per bucket per bucket-count appends. A fold is written under
+  * `dir/_fold/` and commit-marked before any file moves, and every later
+  * step is idempotent, so [[recover]] completes a fold a kill interrupted
+  * (or drops one that never committed) and a reader never sees a row
+  * twice. */
 final case class TieredLayout(dir: String, bucketCol: String, sortCol: String) {
   import TieredLayout._
 
@@ -38,11 +40,22 @@ final case class TieredLayout(dir: String, bucketCol: String, sortCol: String) {
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
   private def tmpDir = s"${dir}_compacting"
 
-  /** Completes or drops an interrupted base rewrite ([[completeSwap]]). */
-  def recover(spark: SparkSession): Unit = completeSwap(spark, dir, tmpDir)
+  private def foldDir = new Path(dir, FoldDir)
+
+  /** Completes or drops an interrupted base rewrite ([[completeSwap]]) or
+    * fold ([[finishFold]]): every reader and writer of the layout calls
+    * this first. */
+  def recover(spark: SparkSession): Unit = {
+    completeSwap(spark, dir, tmpDir)
+    val f = fs(spark)
+    if (f.exists(foldDir)) {
+      if (f.exists(new Path(foldDir, CommitMarker))) finishFold(f)
+      else f.delete(foldDir, true) // never committed: the runs hold its rows
+    }
+  }
 
   /** The buckets the base holds a directory for, from a driver listing. */
-  def baseBuckets(spark: SparkSession): Set[Int] = {
+  private def baseBuckets(spark: SparkSession): Set[Int] = {
     val root = new Path(dir)
     val f = fs(spark)
     val prefix = s"$bucketCol="
@@ -61,19 +74,27 @@ final case class TieredLayout(dir: String, bucketCol: String, sortCol: String) {
       d.getPath -> ParquetLayout.walk(f, d.getPath).toArray).filter(_._2.nonEmpty)
   }
 
-  /** The layout's rows as `schema` (which names `bucketCol`, an int): with
-    * `buckets`, the base read only in those bucket directories and the
-    * runs' rows filtered to them; without, every row. No listing or schema
-    * job either way. */
-  def read(spark: SparkSession, schema: StructType, buckets: Option[Set[Int]]): DataFrame = {
+  /** The layout's rows as `schema` (which names `bucketCol`, an int), after
+    * [[recover]]: with `buckets`, the base read only in those bucket
+    * directories and the runs' rows filtered to them; without, every row.
+    * `buckets` is evaluated once, and only when the layout holds rows for
+    * it to narrow (it may cost the caller a job). With `wholeRuns`, the
+    * runs come unfiltered, for a caller that joins on the bucket key
+    * anyway: then `buckets` is evaluated only when the base holds a bucket
+    * directory, and an index built empty reads with no bucket list. One
+    * listing of the base and one of the runs; no job. */
+  def read(spark: SparkSession, schema: StructType, buckets: => Option[Set[Int]],
+      wholeRuns: Boolean = false): DataFrame = {
     val present = baseBuckets(spark)
-    val base = ParquetLayout.readPartitions(spark, dir, schema, bucketCol,
-      buckets.fold(present)(_ intersect present))
     val tier = runs(spark)
+    lazy val wanted = buckets
+    val base = ParquetLayout.readPartitions(spark, dir, schema, bucketCol,
+      if (present.isEmpty) present else wanted.fold(present)(_ intersect present))
     if (tier.isEmpty) base
     else {
       val all = ParquetLayout.readFiles(spark, tier, schema)
-      val kept = buckets.fold(all)(b => all.filter(IdIn(col(bucketCol), b, IntegerType)))
+      val kept = if (wholeRuns) all
+        else wanted.fold(all)(b => all.filter(IdIn(col(bucketCol), b, IntegerType)))
       if (present.isEmpty) kept else base.unionAll(kept)
     }
   }
@@ -99,11 +120,13 @@ final case class TieredLayout(dir: String, bucketCol: String, sortCol: String) {
   /** Appends `rows` (which carry `bucketCol`) as a new run: each write task
     * sorts its rows by (`bucketCol`, `sortCol`) and writes one file, with
     * no exchange. A tier already holding `numBuckets` runs is first folded
-    * into the base. Returns the rows written (counted on the write job) and
-    * the run's path. */
-  def appendRun(rows: DataFrame, numBuckets: Int): (Long, String) = {
+    * into the base ([[fold]], reading the runs as `schema`, the layout's
+    * own read schema, evaluated only for a fold: `rows` may be narrower
+    * than rows appended earlier). Returns the rows written (counted on the
+    * write job) and the run's path. */
+  def appendRun(rows: DataFrame, numBuckets: Int, schema: => StructType): (Long, String) = {
     val spark = rows.sparkSession
-    if (runs(spark).size >= numBuckets) rewrite(read(spark, rows.schema, None), numBuckets)
+    if (runs(spark).size >= numBuckets) fold(spark, schema, numBuckets)
     val run = s"$dir/$RunsDir/run-${System.currentTimeMillis()}-" +
       java.util.UUID.randomUUID().toString.take(8)
     val n = countingWrite(rows.sortWithinPartitions(bucketCol, sortCol))(
@@ -111,9 +134,55 @@ final case class TieredLayout(dir: String, bucketCol: String, sortCol: String) {
     (n, run)
   }
 
-  /** Replaces the whole layout (base and runs) by `rows` (which carry
-    * `bucketCol`), written as the base: hash-partitioned on `bucketCol` into
-    * min(`numBuckets`, slots) tasks (AQE would coalesce a small write into
+  /** Folds the run tier into the base: [[writeFold]], then [[finishFold]]. */
+  private[graft] def fold(spark: SparkSession, schema: StructType, numBuckets: Int): Unit =
+    if (writeFold(spark, schema, numBuckets)) finishFold(fs(spark))
+
+  /** The fold's first half: the runs' rows read as `schema`,
+    * hash-partitioned on `bucketCol` into min(`numBuckets`, slots) tasks
+    * (so one file per bucket) and sorted within each, written
+    * bucket-partitioned to `dir/_fold/`, then commit-marked with the names
+    * of the runs it holds. False (nothing written) when the tier is
+    * empty. */
+  private[graft] def writeFold(spark: SparkSession, schema: StructType, numBuckets: Int): Boolean = {
+    val tier = runs(spark)
+    if (tier.nonEmpty) {
+      val parts = math.min(numBuckets, spark.sparkContext.defaultParallelism)
+      ParquetLayout.readFiles(spark, tier, schema).repartition(parts, col(bucketCol))
+        .sortWithinPartitions(bucketCol, sortCol)
+        .write.mode("overwrite").option("partitionOverwriteMode", "static")
+        .partitionBy(bucketCol).parquet(foldDir.toString)
+      writeCommitMarker(fs(spark), foldDir.toString, tier.map(_._1.getName))
+    }
+    tier.nonEmpty
+  }
+
+  /** The fold's second half, each step safe to repeat after a kill: every
+    * file of the committed `dir/_fold/` moves into its base bucket
+    * directory (a file already moved is no longer there to move), then the
+    * runs its marker names are deleted, then the fold directory. Until the
+    * runs are gone a reader would see their rows twice, which is why every
+    * read [[recover]]s first. */
+  private def finishFold(f: FileSystem): Unit = {
+    val prefix = s"$bucketCol="
+    f.listStatus(foldDir).iterator.filter(d => d.isDirectory && d.getPath.getName.startsWith(prefix))
+      .foreach { d =>
+        val bucket = new Path(dir, d.getPath.getName)
+        f.mkdirs(bucket)
+        ParquetLayout.walk(f, d.getPath).foreach(file => require(
+          f.rename(file.getPath, new Path(bucket, file.getPath.getName)),
+          s"fold failed: could not move ${file.getPath} into $bucket"))
+      }
+    val marker = f.open(new Path(foldDir, CommitMarker))
+    val consumed = try scala.io.Source.fromInputStream(marker, "UTF-8").getLines().toVector
+      finally marker.close()
+    consumed.filter(_.nonEmpty).foreach(r => f.delete(new Path(new Path(dir, RunsDir), r), true))
+    f.delete(foldDir, true)
+  }
+
+  /** Replaces the whole layout (base, runs and any fold) by `rows` (which
+    * carry `bucketCol`), written as the base: hash-partitioned on
+    * `bucketCol` into min(`numBuckets`, slots) tasks (AQE would coalesce a small write into
     * one task writing every bucket file in turn), sorted by (`bucketCol`,
     * `sortCol`) within each bucket, into `<dir>_compacting`, commit-marked
     * and swapped in. `rows` may read this layout: the swap comes after the
@@ -143,6 +212,10 @@ object TieredLayout {
     * Spark's reader nor a base listing takes it for data. */
   val RunsDir = "_runs"
 
+  /** A fold in progress under a layout ([[TieredLayout.fold]]), hidden the
+    * same way. */
+  private val FoldDir = "_fold"
+
   /** Graft-owned commit marker for a swapped-in directory (an index base
     * rewrite, a pipeline stage's data). Recovery must NOT key off Hadoop's
     * `_SUCCESS`: deployments commonly disable it on object stores
@@ -153,8 +226,13 @@ object TieredLayout {
     * presence is independent of committer configuration. */
   private[graft] val CommitMarker = "_GRAFT_COMMITTED"
 
-  private[graft] def writeCommitMarker(fs: FileSystem, dir: String): Unit =
-    fs.create(new Path(dir, CommitMarker), true).close()
+  /** Writes `dir`'s [[CommitMarker]], holding `lines` (a fold's consumed
+    * runs). */
+  private[graft] def writeCommitMarker(fs: FileSystem, dir: String,
+      lines: Seq[String] = Nil): Unit = {
+    val out = fs.create(new Path(dir, CommitMarker), true)
+    try out.write(lines.map(_ + "\n").mkString.getBytes("UTF-8")) finally out.close()
+  }
 
   /** Crash recovery for a base rewrite's swap, applied at every index read:
     *  - live missing + committed sibling present (a kill landed between the

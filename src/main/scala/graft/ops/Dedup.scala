@@ -645,9 +645,13 @@ object Dedup {
     // under-dedup for ONE delta, healed when the at-least-once redelivery
     // re-appends; duplicate rows are collapsed at the delta's sig fetch
     // and compaction restores exactly-one on disk)
-    val (n, run) = sigs.appendRun(sigsRows(sigProjection(docs, idCol, textCol, p), p),
-      p.numBuckets)
-    bands.appendRun(bandsRows(sigs.readRun(spark, run, sigsSchema(idType)), p), p.numBuckets)
+    // ids as the index's own type: `id_bucket` hashes the id's bytes, so an
+    // Int id appended to a Long index would land in a bucket its Long
+    // lookup never reads
+    val (n, run) = sigs.appendRun(sigsRows(sigProjection(docs, idCol, textCol, p)
+      .withColumn("id", col("id").cast(idType)), p), p.numBuckets, sigsSchema(idType))
+    bands.appendRun(bandsRows(sigs.readRun(spark, run, sigsSchema(idType)), p),
+      p.numBuckets, bandsSchema(idType))
     IndexVersions.record(spark, indexDir,
       IndexVersions.epoch(spark, indexDir), "append", n)
   }
@@ -918,13 +922,11 @@ object Dedup {
     recoverIndex(spark, indexDir)
     val (p, idType) = loadIndexMeta(spark, indexDir)
     // bucket prune: the base read only in the buckets `keys`' rows hash to
-    // (`distinctInts`: one job), next to the whole run tier. A base with no
-    // bucket directory (an index built empty) has nothing to prune, so no
-    // bucket list: the runs are read whole and the semi-joins below keep
-    // what the delta needs
+    // (`distinctInts`: one job, none for a base with no bucket directory),
+    // next to the whole run tier: the semi-joins below keep what the delta
+    // needs
     def pruned(layout: TieredLayout, schema: StructType, keys: DataFrame): DataFrame =
-      layout.read(spark, schema,
-        if (layout.baseBuckets(spark).isEmpty) None else Some(distinctInts(keys)))
+      layout.read(spark, schema, Some(distinctInts(keys)), wholeRuns = true)
     // `eagerCheckpoints = false` is a PLAN-INSPECTION seam: checkpoints
     // truncate lineage to ExistingRDD leaves, hiding the partition-pruned
     // parquet scans from the final executed plan — tests disable them to pin

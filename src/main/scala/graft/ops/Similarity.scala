@@ -954,7 +954,9 @@ object Similarity {
       rows: DataFrame): Unit = {
     val layout = cellsLayout(indexDir)
     layout.recover(spark)
-    val (n, _) = layout.appendRun(rows, numCells)
+    // a fold reads the runs as the layout's own schema (a base footer's),
+    // which may be wider than `rows`
+    val (n, _) = layout.appendRun(rows, numCells, layout.dataSchema(spark).getOrElse(rows.schema))
     IndexVersions.record(spark, indexDir,
       IndexVersions.epoch(spark, indexDir), "append", n)
   }

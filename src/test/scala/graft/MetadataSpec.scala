@@ -259,6 +259,32 @@ class MetadataSpec extends SparkSpec {
       .pairs.select("id_a").as[Long].collect().toSeq === Seq(110L))
   }
 
+  test("a fold reads the runs as the index's own types: Int ids and float vectors folded into Long and double indexes") {
+    val w = tmp()
+    val p = Dedup.MinhashIndexParams(numHashes = 32, bands = 8, numBuckets = 4)
+    Dedup.minhashIndexBuild(delta(1L, 2L, 3L), "doc_id", "text", s"$w/mh", p)
+    val embs = (1 to 12).map(i => (i.toLong, Seq((i % 3).toDouble, (i % 2).toDouble, 1.0)))
+    Similarity.ivfBuildIndex(embs.toDF("id", "emb"), "id", "emb", s"$w/ivf", numCells = 4, iters = 1)
+    // one append past the bucket count: the last one folds a tier of
+    // narrower runs (written by the earlier appends) into the base
+    for (k <- 1 to p.numBuckets + 1) {
+      Dedup.minhashIndexAppend(Seq(doc(100L + k)).map { case (i, t) => (i.toInt, t) }
+        .toDF("doc_id", "text"), "doc_id", "text", s"$w/mh")
+      Similarity.ivfIndexAppend(Seq((100 + k, Seq(1f, (k % 2).toFloat, 0f))).toDF("id", "emb"),
+        "id", "emb", s"$w/ivf")
+    }
+    val sigs = Dedup.minhashIndexLoad(spark, s"$w/mh")._1
+    assert(sigs.schema("id").dataType === org.apache.spark.sql.types.LongType)
+    assert(sigs.select("id").as[Long].collect().toSet ===
+      (Set(1L, 2L, 3L) ++ (1 to p.numBuckets + 1).map(100L + _)))
+    val cells = Similarity.ivfIndexLoad(spark, s"$w/ivf")
+    assert(cells.count() === 12L + p.numBuckets + 1)
+    // the folded index still finds a copy of a folded doc
+    val copy = delta(102L).select(($"doc_id" + 1000).as("doc_id"), $"text")
+    assert(Dedup.deltaNearDupsIndexedAudited(copy, "doc_id", "text", s"$w/mh", threshold = 0.8)
+      .pairs.select("id_a").as[Long].collect().toSeq === Seq(102L))
+  }
+
   test("a first delta with no candidate bucket resolves its drop audit at once, without the warning") {
     val w = tmp()
     val p = Dedup.MinhashIndexParams(numHashes = 32, bands = 8, numBuckets = 4)

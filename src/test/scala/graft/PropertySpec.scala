@@ -502,8 +502,9 @@ class PropertySpec extends SparkSpec {
       ops.foreach { case ((kind, opIds), only) =>
         kind match {
           case "build" => layout.rewrite(frame(opIds, 2), numBuckets); ref = opIds.map(row)
-          case "append" => layout.appendRun(frame(opIds, 3), numBuckets); ref = ref ++ opIds.map(row)
-          case "fold" => layout.rewrite(layout.read(spark, schema, None), numBuckets)
+          case "append" =>
+            layout.appendRun(frame(opIds, 3), numBuckets, schema); ref = ref ++ opIds.map(row)
+          case "fold" => layout.fold(spark, schema, numBuckets)
           case _ =>
             val keep = opIds.toSet
             layout.rewrite(layout.read(spark, schema, None)
@@ -519,34 +520,53 @@ class PropertySpec extends SparkSpec {
     assert(checks === 48)
   }
 
-  test("tiered layout: a kill between a fold's base write and its run removal rereads no duplicate band rows") {
+  test("tiered layout: a fold killed at any step rereads every band row once") {
+    import org.apache.hadoop.fs.Path
     val idx = java.nio.file.Files.createTempDirectory("graft-tier-kill").toString
     val p = Dedup.MinhashIndexParams(numHashes = 32, bands = 8, numBuckets = 4)
     def docs(ids: Seq[Long]) =
       ids.map(i => (i, (1 to 20).map(t => s"k${i}_$t").mkString(" "))).toDF("doc_id", "text")
     Dedup.minhashIndexBuild(docs(1L to 10L), "doc_id", "text", idx, p)
-    Seq(11L to 14L, 15L to 18L).foreach(d => Dedup.minhashIndexAppend(docs(d), "doc_id", "text", idx))
     val bands = TieredLayout(s"$idx/bands", "band_bucket", "band_hash")
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       "id BIGINT, band_idx INT, band_hash BIGINT, band_bucket INT")
+    val fs = new Path(idx).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val foldDir = new Path(s"$idx/bands/_fold")
     def bandRows() = { bands.recover(spark); bands.read(spark, schema, None)
-      .select($"id", $"band_idx").as[(Long, Int)].collect().toSeq }
-    val expected = (1L to 18L).flatMap(i => (0 until p.bands).map(b => (i, b))).sorted
-    assert(bands.runs(spark).nonEmpty)
-    assert(bandRows().sorted === expected)
-    // the fold's base written and committed beside the live layout, whose
-    // runs still stand: the kill landed before the swap
-    def foldedSibling(): Unit = TieredLayout(s"$idx/bands_compacting", "band_bucket", "band_hash")
-      .rewrite(bands.read(spark, schema, None), p.numBuckets)
-    foldedSibling()
-    assert(bandRows().sorted === expected)
-    assert(bands.runs(spark).nonEmpty) // the sibling was dropped, the runs kept
-    // the kill landed after the live layout (runs included) was deleted
-    foldedSibling()
-    val fs = new org.apache.hadoop.fs.Path(idx).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$idx/bands"), true)
-    assert(bandRows().sorted === expected)
-    assert(bands.runs(spark).isEmpty) // the swap completed: one base, no runs
+      .select($"id", $"band_idx").as[(Long, Int)].collect().toSeq.sorted }
+    var last = 10L
+    // two more runs, then a fold of the tier written (and committed unless `commit` is
+    // false) whose second half a kill interrupted after `moved` of its
+    // files went into the base, and after the runs' removal if `runsGone`
+    def killedFold(commit: Boolean, moved: Int, runsGone: Boolean): Unit = {
+      Seq(last + 1 to last + 4, last + 5 to last + 8).foreach(d =>
+        Dedup.minhashIndexAppend(docs(d.map(_.toLong)), "doc_id", "text", idx))
+      last += 8
+      assert(bands.runs(spark).size >= 2)
+      assert(bands.writeFold(spark, schema, p.numBuckets))
+      if (!commit) fs.delete(new Path(foldDir, TieredLayout.CommitMarker), false)
+      val files = fs.listStatus(foldDir).filter(_.isDirectory)
+        .flatMap(d => fs.listStatus(d.getPath)).filter(_.getPath.getName.startsWith("part-"))
+      assert(files.nonEmpty)
+      files.take(moved).foreach { f =>
+        val bucket = new Path(s"$idx/bands", f.getPath.getParent.getName)
+        fs.mkdirs(bucket)
+        assert(fs.rename(f.getPath, new Path(bucket, f.getPath.getName)))
+      }
+      if (runsGone) bands.runs(spark).foreach(r => fs.delete(r._1, true))
+    }
+    def expected = (1L to last).flatMap(i => (0 until p.bands).map(b => (i, b))).sorted
+    // killed before the commit marker: the fold is dropped, its runs kept
+    killedFold(commit = false, moved = 0, runsGone = false)
+    assert(bandRows() === expected)
+    assert(!fs.exists(foldDir) && bands.runs(spark).size === 2)
+    // killed after it: the fold completes, whatever share of it had moved
+    Seq((0, false), (1, false), (Int.MaxValue, false), (Int.MaxValue, true)).foreach {
+      case (moved, runsGone) =>
+        killedFold(commit = true, moved, runsGone)
+        assert(bandRows() === expected, s"moved $moved, runs gone $runsGone")
+        assert(!fs.exists(foldDir) && bands.runs(spark).isEmpty)
+    }
     // the index still dedups: a copy of an appended doc finds its source
     val pairs = Dedup.deltaNearDupsIndexedAudited(
       docs(Seq(12L)).select(($"doc_id" + 100).as("doc_id"), $"text"), "doc_id", "text", idx,
