@@ -644,7 +644,7 @@ object SparkEntry {
     // ---- similarity: IVF coarse-quantizer ANN. Quantizer here is the deterministic
     // init (unit embeddings of the 16 smallest ids, iters=0) so DuckDB can rebuild the
     // exact cells; the trained path (driver k-means on a sample + persisted index) is
-    // ivfBuildIndex, recall-tested in OpsSpec — training never runs inside a query. ----
+    // ivfTrain + ivfBuildIndexWith, recall-tested in OpsSpec — training never runs inside a query. ----
     "q_ann_ivf" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
       val q = e.filter(col("vec_id") === 7)

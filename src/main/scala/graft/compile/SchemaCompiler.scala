@@ -202,14 +202,18 @@ object SchemaCompiler {
     (values, triggers, viols)
   }
 
-  /** All violations of a row as one array<struct<constraint_id,reason>> column.
+  /** The schema compiled once over `df`: the coerced (cast + default +
+    * derive + map) values keyed by field name, and all violations of a row
+    * as one array<struct<constraint_id,reason>> column.
     *
     * Hot-path shape: all scalar triggers are OR'd into one boolean first, and
     * the per-trigger arrays are only built when some trigger fires — a valid
     * row (the overwhelming majority at scale) allocates NOTHING beyond the
     * shared empty-array constant. */
-  def violationsArray(spec: SchemaSpec, df: DataFrame, extraBindings: Map[String, Any] = Map.empty): Column = {
-    val (_, triggers, viols) = compileScope(spec, resolverFor(df), spec.bindings ++ extraBindings, lit(""), Map.empty)
+  def compile(spec: SchemaSpec, df: DataFrame,
+      extraBindings: Map[String, Any] = Map.empty): (Map[String, Column], Column) = {
+    val (values, triggers, viols) =
+      compileScope(spec, resolverFor(df), spec.bindings ++ extraBindings, lit(""), Map.empty)
     val scalarPart =
       if (triggers.isEmpty) None
       else {
@@ -218,12 +222,6 @@ object SchemaCompiler {
           .otherwise(emptyViols))
       }
     val parts = scalarPart.toSeq ++ viols
-    if (parts.isEmpty) emptyViols else if (parts.size == 1) parts.head else concat(parts: _*)
-  }
-
-  /** Coerced (cast+default+derive+map) values, keyed by field name. */
-  def coercedValues(spec: SchemaSpec, df: DataFrame, extraBindings: Map[String, Any] = Map.empty): Map[String, Column] = {
-    val (values, _, _) = compileScope(spec, resolverFor(df), spec.bindings ++ extraBindings, lit(""), Map.empty)
-    values
+    (values, if (parts.isEmpty) emptyViols else if (parts.size == 1) parts.head else concat(parts: _*))
   }
 }

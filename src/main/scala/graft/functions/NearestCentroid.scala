@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, I
   * static call. The Column shape (`array_max(zip_with(typedlit(centroids),
   * sequence(...), struct(dot, idx)))`) is CodegenFallback with interpreted
   * per-element lambdas; this expression keeps the full-corpus assignment scan
-  * (the one pass ivfBuildIndex makes over 10^9 vectors) inside whole-stage
+  * (the one pass ivfBuildIndexWith makes over 10^9 vectors) inside whole-stage
   * codegen.
   *
   * Semantics are bit-identical to the Column version (the q_ann_ivf oracle

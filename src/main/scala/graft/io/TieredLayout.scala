@@ -2,9 +2,10 @@ package graft.io
 
 import graft.functions.IdIn
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession, graftbridge}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions.{col, count, lit}
-import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructType}
 
 /** One bucketed index layout in two tiers: the MinHash `sigs/` (by
   * `id_bucket`) and `bands/` (by `band_bucket`) layouts and the IVF `cells/`
@@ -107,12 +108,15 @@ final case class TieredLayout(dir: String, bucketCol: String, sortCol: String) {
   }
 
   /** The Spark schema of the layout's data with `bucketCol` last, from a
-    * base or run file's footer on the driver; None when the layout holds no
-    * data file. */
+    * base or run file's footer on the driver, else from the schema
+    * [[rewrite]] stored (a layout built empty holds no data file); None for
+    * neither. */
   def dataSchema(spark: SparkSession): Option[StructType] = {
     val conf = spark.sparkContext.hadoopConfiguration
     ParquetLayout.footerSchema(conf, new Path(dir))
       .orElse(ParquetLayout.footerSchema(conf, new Path(dir, RunsDir)))
+      .orElse(MetaFile.read(fs(spark), new Path(dir, SchemaFile), s"rebuild the index at $dir")
+        .map(j => graftbridge.asNullable(DataType.fromJson(j).asInstanceOf[StructType])))
       .map(s => StructType(s.filterNot(_.name == bucketCol) :+
         StructField(bucketCol, IntegerType)))
   }
@@ -184,20 +188,29 @@ final case class TieredLayout(dir: String, bucketCol: String, sortCol: String) {
     * carry `bucketCol`), written as the base: hash-partitioned on
     * `bucketCol` into min(`numBuckets`, slots) tasks (AQE would coalesce a small write into
     * one task writing every bucket file in turn), sorted by (`bucketCol`,
-    * `sortCol`) within each bucket, into `<dir>_compacting`, commit-marked
-    * and swapped in. `rows` may read this layout: the swap comes after the
-    * write. Returns the rows written. */
+    * `sortCol`) within each bucket, into `<dir>_compacting` with `rows`'
+    * schema stored beside them ([[dataSchema]]), commit-marked and swapped
+    * in. `rows` may read this layout: the swap comes after the write.
+    * Rows the optimizer already knows to be none (an index built empty) run
+    * no job: that base holds its schema and marker only. Returns the rows
+    * written. */
   def rewrite(rows: DataFrame, numBuckets: Int): Long = {
     val spark = rows.sparkSession
     val parts = math.min(numBuckets, spark.sparkContext.defaultParallelism)
-    // per-write static overwrite: a caller's session-wide
-    // partitionOverwriteMode=dynamic would keep any bucket absent from the
-    // new rows (the checkpoint runner's staging bug, index edition)
-    val n = countingWrite(rows.repartition(parts, col(bucketCol))
-      .sortWithinPartitions(bucketCol, sortCol))(
-      _.write.mode("overwrite").option("partitionOverwriteMode", "static")
-        .partitionBy(bucketCol).parquet(tmpDir))
+    val sorted = rows.repartition(parts, col(bucketCol)).sortWithinPartitions(bucketCol, sortCol)
     val f = fs(spark)
+    val n = sorted.queryExecution.optimizedPlan match {
+      case r: LocalRelation if r.data.isEmpty =>
+        f.delete(new Path(tmpDir), true) // an earlier rewrite's uncommitted leftover
+        f.mkdirs(new Path(tmpDir))
+        0L
+      // per-write static overwrite: a caller's session-wide
+      // partitionOverwriteMode=dynamic would keep any bucket absent from
+      // the new rows (the checkpoint runner's staging bug, index edition)
+      case _ => countingWrite(sorted)(_.write.mode("overwrite")
+        .option("partitionOverwriteMode", "static").partitionBy(bucketCol).parquet(tmpDir))
+    }
+    MetaFile.write(f, new Path(tmpDir, SchemaFile), rows.schema.json)
     writeCommitMarker(f, tmpDir)
     val live = new Path(dir)
     f.delete(live, true)
@@ -215,6 +228,9 @@ object TieredLayout {
   /** A fold in progress under a layout ([[TieredLayout.fold]]), hidden the
     * same way. */
   private val FoldDir = "_fold"
+
+  /** The schema [[TieredLayout.rewrite]] stores in the base, as JSON. */
+  private val SchemaFile = "_schema"
 
   /** Graft-owned commit marker for a swapped-in directory (an index base
     * rewrite, a pipeline stage's data). Recovery must NOT key off Hadoop's

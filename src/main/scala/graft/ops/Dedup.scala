@@ -835,7 +835,10 @@ object Dedup {
 
   /** Losing NEW ids of a delta pair set: a new id loses when its connected
     * component contains any old id (old always wins) or it is not the
-    * component's minimum new id.
+    * component's minimum new id. An id flagged old in any pair row is old:
+    * a resubmitted id pairs with a new twin both as its index entry and as
+    * its delta copy, and it must keep, not lose to its own old tag (the
+    * per-pair collapse of [[lexDeltaPairs]], applied per id).
     *
     * The pairs are checkpointed once, counted by an observation on that same
     * job. At most `smallGraphEdges` rows (`Components.SmallGraphEdges`, the
@@ -864,24 +867,20 @@ object Dedup {
     val comp = Components.unionFind(rows.iterator
       .filter(r => !r.isNullAt(0) && !r.isNullAt(1) && r.get(0) != r.get(1))
       .map(r => (r.get(0), r.get(1))))
-    val hasOld = scala.collection.mutable.Set.empty[Any]
+    // one flag per id, old winning: the distributed path's per-id `tags`
+    // (a null flag counts neither way)
+    val isNew = scala.collection.mutable.LinkedHashMap.empty[Any, Boolean]
+    for (r <- rows; (i, f) <- Seq((0, 2), (1, 3))
+         if !r.isNullAt(i) && !r.isNullAt(f) && comp.contains(r.get(i)))
+      isNew(r.get(i)) = isNew.getOrElse(r.get(i), true) && r.getBoolean(f)
+    val hasOld = isNew.collect { case (id, false) => comp(id) }.toSet
     val minNew = scala.collection.mutable.Map.empty[Any, Any]
-    val newIds = scala.collection.mutable.LinkedHashSet.empty[Any]
-    // a flag tags its id wherever it appears, the distributed path's `tags`
-    def tag(id: Any, isNew: Any): Unit = comp.get(id).foreach { c =>
-      isNew match {
-        case true =>
-          newIds += id
-          if (minNew.get(c).forall(Components.ltAny(id, _))) minNew(c) = id
-        case false => hasOld += c
-        case _ => // a null flag counts neither way
-      }
+    isNew.foreach { case (id, n) =>
+      if (n && minNew.get(comp(id)).forall(Components.ltAny(id, _))) minNew(comp(id)) = id
     }
-    rows.foreach { r =>
-      if (!r.isNullAt(0)) tag(r.get(0), r.get(2))
-      if (!r.isNullAt(1)) tag(r.get(1), r.get(3))
-    }
-    newIds.iterator.filter { id => val c = comp(id); hasOld(c) || minNew(c) != id }.toSeq
+    isNew.iterator.collect {
+      case (id, true) if hasOld(comp(id)) || minNew(comp(id)) != id => id
+    }.toSeq
   }
 
   /** [[deltaLosers]] as distributed rounds and joins, for pair sets above
@@ -889,9 +888,10 @@ object Dedup {
   private def distributedDeltaLosers(pairs: DataFrame, smallGraphEdges: Long): DataFrame = {
     val comp = Components.connectedComponents(pairs, "id_a", "id_b",
       smallGraphEdges = smallGraphEdges)
+    // one flag per id, old winning (min: false < true; nulls ignored)
     val tags = pairs.select(col("id_a").as("id"), col("a_is_new").as("is_new"))
       .unionAll(pairs.select(col("id_b").as("id"), col("b_is_new").as("is_new")))
-      .distinct()
+      .groupBy("id").agg(min(col("is_new")).as("is_new"))
     val labeled = comp.join(tags, Seq("id"))
     val perComp = labeled.groupBy("component").agg(
       max(when(!col("is_new"), lit(1)).otherwise(lit(0))).as("has_old"),

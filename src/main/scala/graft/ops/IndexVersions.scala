@@ -41,8 +41,8 @@ object IndexVersions {
       .map {
         case EventName(e) => e.toLong
         case other => throw new PreChangeLayoutException(s"${dir(indexDir)}/$other",
-          s"rebuild the index at $indexDir (Dedup.minhashIndexBuild, " +
-            "Similarity.ivfBuildIndex or ivfPqBuildIndex) to start a new log")
+          s"rebuild the index at $indexDir (Dedup.minhashIndexBuild or " +
+            "Similarity.ivfBuildIndexWith) to start a new log")
       }.maxOption.getOrElse(0L)
   }
 

@@ -106,7 +106,7 @@ object Similarity {
   //  - ivfTrain: k-means on a small DETERMINISTIC SAMPLE, Lloyd on the driver.
   //    One distributed pass total (the sample take); at 10^9 vectors you train
   //    the coarse quantizer on ~10^4 samples, never the corpus.
-  //  - ivfAssign/ivfBuildIndex: assign the corpus to cells ONCE (one codegen'd
+  //  - ivfAssign/ivfBuildIndexWith: assign the corpus to cells ONCE (one codegen'd
   //    scan), persist partitioned by cell — queries partition-prune to nprobe
   //    cells.
   //  - ivfTopKCosine: centroids passed in; scans only the probed cells.
@@ -117,7 +117,7 @@ object Similarity {
     * unit-norm, and cosine order is invariant to the row's own norm — so no
     * per-row normalization is needed at assignment time at all. A native
     * codegen Expression (functions/NearestCentroid.scala): the assignment is
-    * the ONE full-corpus pass ivfBuildIndex makes, so it must not fall out of
+    * the ONE full-corpus pass ivfBuildIndexWith makes, so it must not fall out of
     * whole-stage codegen the way HOF lambdas do.
     * Ties take the larger cell index (struct-max parity with the previous
     * Column shape — the q_ann_ivf oracle depends on it). */
@@ -204,29 +204,24 @@ object Similarity {
     df.select(col(idCol).as("id"), col(embCol).as("emb"),
       nearestCentroid(col(embCol), centroids).as("cell"))
 
-  /** Build + persist the index: corpus partitioned by cell (queries
-    * partition-prune to their nprobe cells) and centroids as JSON. */
-  def ivfBuildIndex(
-      df: DataFrame, idCol: String, embCol: String, indexDir: String,
-      numCells: Int = 16, iters: Int = 3, sampleSize: Int = 4096,
-      sampleByHash: Boolean = true): Seq[Seq[Double]] = {
-    val centroids = ivfTrain(df, idCol, embCol, numCells, iters, sampleSize, sampleByHash)
-    ivfBuildIndexWith(df, idCol, embCol, indexDir, centroids)
-    centroids
-  }
-
-  /** Persist an IVF index from ALREADY-TRAINED centroids (assign + write +
-    * centroid sidecar, no training pass) — the bootstrap seam for incremental
-    * pipelines, where the persisted quantizer must be exactly the one earlier
-    * dedup decisions used (training a second time on a filtered frame would
-    * silently fork it). */
+  /** Persist an IVF index from ALREADY-TRAINED quantizers (assign + write +
+    * quantizer sidecars, no training pass): the coarse `centroids`, plus the
+    * PQ `codebooks` for an IVF-PQ index, whose cell files then carry 8-byte
+    * `codes` next to `emb` (see [[indexRows]]). Every later call reads the
+    * format from the index ([[isPqIndex]]). `df` may be empty: the pipeline
+    * builds its index empty where it trains the quantizers, so every
+    * decision and append uses exactly the stored ones. `centroids` is
+    * written last: its presence marks a complete build. */
   def ivfBuildIndexWith(
       df: DataFrame, idCol: String, embCol: String, indexDir: String,
-      centroids: Seq[Seq[Double]], epoch: Long = 0L): Unit = {
-    val n = cellsLayout(indexDir).rewrite(ivfAssign(df, idCol, embCol, centroids),
+      centroids: Seq[Seq[Double]], codebooks: Option[Seq[Seq[Seq[Double]]]] = None,
+      epoch: Long = 0L): Unit = {
+    val spark = df.sparkSession
+    val n = cellsLayout(indexDir).rewrite(indexRows(df, idCol, embCol, centroids, codebooks),
       centroids.size)
-    MetaFile.writeJson(df.sparkSession, s"$indexDir/centroids", centroids)
-    IndexVersions.record(df.sparkSession, indexDir, epoch, "build", n)
+    codebooks.foreach(MetaFile.writeJson(spark, s"$indexDir/codebooks", _))
+    IndexVersions.record(spark, indexDir, epoch, "build", n)
+    MetaFile.writeJson(spark, s"$indexDir/centroids", centroids)
   }
 
   /** Quantizer vectors (centroids, PQ codebooks) persist as one JSON file
@@ -235,14 +230,12 @@ object Similarity {
     * rebuild. */
   private def readQuantizer[T](spark: SparkSession, file: String, cls: Class[T]): T =
     MetaFile.readJson(spark, file,
-      "rebuild the index with Similarity.ivfBuildIndex or ivfPqBuildIndex", cls)
+      "rebuild the index with Similarity.ivfBuildIndexWith", cls)
       .getOrElse(throw new IllegalArgumentException(s"no IVF quantizer at $file"))
 
   def ivfLoadCentroids(spark: SparkSession, indexDir: String): Seq[Seq[Double]] =
-    readCentroids(spark, s"$indexDir/centroids")
-
-  private[ops] def readCentroids(spark: SparkSession, file: String): Seq[Seq[Double]] =
-    readQuantizer(spark, file, classOf[Array[Array[Double]]]).map(_.toSeq).toSeq
+    readQuantizer(spark, s"$indexDir/centroids", classOf[Array[Array[Double]]])
+      .map(_.toSeq).toSeq
 
   /** Which nprobe cells to scan for a query: centroids ranked by dot with the
     * unit query, descending (== nearest by angle; unit-norm both sides). */
@@ -268,80 +261,51 @@ object Similarity {
   }
 
   /** Convenience: assign inline (one scan) and query with given centroids.
-    * For repeated queries, persist with [[ivfBuildIndex]] and reuse. */
+    * For repeated queries, persist with [[ivfBuildIndexWith]] and reuse. */
   def ivfTopKCosine(
       df: DataFrame, idCol: String, embCol: String, centroids: Seq[Seq[Double]],
       query: Seq[Double], k: Int, nprobe: Int = 4): DataFrame =
     ivfTopKCosineAssigned(ivfAssign(df, idCol, embCol, centroids), centroids, query, k, nprobe)
 
-  /** IVF-PQ: the standard billion-scale layout — coarse cells prune the scan
-    * (only nprobe of numCells partitions read), PQ codes shrink what is
-    * scanned 32x, ADC scores the survivors with m lookups/adds per row. The
-    * persisted-index projection: (id, emb, cell, codes) — the raw vector
-    * rides alongside the codes for exact refinement (columnar storage:
-    * `codes` scans skip it). */
-  private def ivfPqEncodeWithEmb(
+  /** The persisted index projection: (id, emb, cell), plus the PQ `codes`
+    * when `codebooks` are given — IVF-PQ, the standard billion-scale
+    * layout: coarse cells prune the scan (only nprobe of numCells
+    * partitions read), PQ codes shrink what is scanned 32x, ADC scores the
+    * survivors with m lookups/adds per row. The raw vector rides alongside
+    * the codes, sorted by id within each cell: parquet is columnar, so scans
+    * that select `codes` never read a byte of `emb` (PlanSpec pins the
+    * pruned ReadSchema), while refine steps ([[semanticDeltaPairsPqIndexed]])
+    * fetch full-precision vectors for just their candidate ids with tight
+    * row-group min/max skipping — the FAISS IVFPQR shape: disk is cheap,
+    * scan bytes are not. */
+  private def indexRows(
       df: DataFrame, idCol: String, embCol: String, centroids: Seq[Seq[Double]],
-      codebooks: Seq[Seq[Seq[Double]]]): DataFrame =
-    df.select(col(idCol).as("id"), col(embCol).as("emb"),
-      nearestCentroid(col(embCol), centroids).as("cell"),
-      graft.functions.PqEncode(col(embCol), codebooks).as("codes"))
-
-  /** Build + persist the IVF-PQ index: cell-partitioned codes (queries
-    * partition-prune to their nprobe cells AND read 8-byte codes instead of
-    * vectors — the two compressions compose on disk too), coarse centroids
-    * as JSON (same layout [[ivfLoadCentroids]] reads), and the PQ codebooks
-    * as one more small JSON file. Train once, query forever.
-    *
-    * The cell files ALSO carry the raw vector column, sorted by id within
-    * each cell partition: parquet is columnar, so scans that select `codes`
-    * never read a byte of `emb` (PlanSpec pins the pruned ReadSchema), while
-    * refine steps ([[semanticDeltaPairsPqIndexed]]) can fetch full-precision
-    * vectors for just their candidate ids with tight row-group min/max
-    * skipping — the FAISS IVFPQR shape: disk is cheap, scan bytes are not. */
-  def ivfPqBuildIndex(
-      df: DataFrame, idCol: String, embCol: String, indexDir: String,
-      numCells: Int = 16, m: Int = 8, kSub: Int = 16, iters: Int = 3,
-      sampleSize: Int = 4096,
-      sampleByHash: Boolean = true): (Seq[Seq[Double]], Seq[Seq[Seq[Double]]]) = {
-    val centroids = ivfTrain(df, idCol, embCol, numCells, iters, sampleSize, sampleByHash)
-    val codebooks = pqTrain(df, idCol, embCol, m, kSub, iters, sampleSize, sampleByHash)
-    ivfPqBuildIndexWith(df, idCol, embCol, indexDir, centroids, codebooks)
-    (centroids, codebooks)
+      codebooks: Option[Seq[Seq[Seq[Double]]]]): DataFrame = {
+    val assigned = ivfAssign(df, idCol, embCol, centroids)
+    codebooks.fold(assigned)(b =>
+      assigned.withColumn("codes", graft.functions.PqEncode(col("emb"), b)))
   }
 
-  /** Persist an IVF-PQ index from ALREADY-TRAINED quantizers — the facade's
-    * bootstrap path, where the quantizers must be the ones the first
-    * snapshot dedup'd under (the [[ivfBuildIndexWith]] contract, PQ twin). */
-  def ivfPqBuildIndexWith(
-      df: DataFrame, idCol: String, embCol: String, indexDir: String,
-      centroids: Seq[Seq[Double]], codebooks: Seq[Seq[Seq[Double]]],
-      epoch: Long = 0L): Unit = {
-    val n = cellsLayout(indexDir).rewrite(
-      ivfPqEncodeWithEmb(df, idCol, embCol, centroids, codebooks), centroids.size)
-    val spark = df.sparkSession
-    MetaFile.writeJson(spark, s"$indexDir/centroids", centroids)
-    MetaFile.writeJson(spark, s"$indexDir/codebooks", codebooks)
-    IndexVersions.record(spark, indexDir, epoch, "build", n)
-  }
+  /** Does this index carry PQ codebooks? Every call over a persisted index
+    * reads its format here: a raw append onto a PQ index would write
+    * codes-less rows later PQ deltas can't score. */
+  private def isPqIndex(spark: SparkSession, indexDir: String): Boolean =
+    MetaFile.fs(spark, indexDir).exists(new org.apache.hadoop.fs.Path(s"$indexDir/codebooks"))
 
-  /** Does this index carry PQ codebooks? The format gate appends key off —
-    * a plain-IVF append onto a PQ index would write codes-less rows later
-    * PQ deltas can't score (silent permanent under-dedup), and vice versa. */
-  private def isPqIndex(spark: SparkSession, indexDir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexDir/codebooks")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
+  /** The PQ codebooks of an IVF-PQ index; None for a raw IVF index. */
+  private def codebooksOf(spark: SparkSession, indexDir: String): Option[Seq[Seq[Seq[Double]]]] =
+    if (!isPqIndex(spark, indexDir)) None
+    else Some(readQuantizer(spark, s"$indexDir/codebooks", classOf[Array[Array[Array[Double]]]])
+      .map(_.map(_.toSeq).toSeq).toSeq)
 
-  /** Load both quantizers back from an [[ivfPqBuildIndex]] directory. */
+  /** Load both quantizers back from an IVF-PQ index directory. */
   def ivfPqLoadIndex(
       spark: SparkSession, indexDir: String): (Seq[Seq[Double]], Seq[Seq[Seq[Double]]]) = {
-    require(isPqIndex(spark, indexDir),
-      s"index at $indexDir is plain IVF (no codebooks) — use the raw-vector " +
-        "operators (semanticDeltaDedupIndexed / ivfIndexAppend / usePqCodes=false)")
-    val codebooks = readQuantizer(spark, s"$indexDir/codebooks",
-      classOf[Array[Array[Array[Double]]]])
-    (ivfLoadCentroids(spark, indexDir), codebooks.map(_.map(_.toSeq).toSeq).toSeq)
+    val codebooks = codebooksOf(spark, indexDir)
+    require(codebooks.isDefined,
+      s"index at $indexDir is plain IVF (no codebooks) — PQ operators cannot " +
+        "score it; semanticDeltaDedupIndexed runs the raw-vector delta over it")
+    (ivfLoadCentroids(spark, indexDir), codebooks.get)
   }
 
   /** Batch k-NN join: top-k cosine neighbors in `corpus` for EVERY query row
@@ -392,7 +356,7 @@ object Similarity {
   /** IVF-accelerated batch k-NN join — the 100x-scale replacement for
     * [[knnJoinCosine]]'s cartesian: each query scores only its `nprobe`
     * nearest cells of a pre-assigned corpus (from [[ivfAssign]] or the
-    * persisted [[ivfBuildIndex]] layout) instead of every corpus row. Probe
+    * persisted [[ivfBuildIndexWith]] layout) instead of every corpus row. Probe
     * cells are computed on the driver from the collected query batch — the
     * same "queries are the small side" contract under which the brute-force
     * join broadcasts them — and the union of all probed cells becomes an
@@ -761,16 +725,17 @@ object Similarity {
   private def cellsLayout(indexDir: String) = TieredLayout(s"$indexDir/cells", "cell", "id")
 
   /** The index rows of `cells` (None: every cell), both tiers, read as the
-    * schema of a data file's footer — no listing or schema-inference job
-    * (see `graft.io.ParquetLayout`). Completes an interrupted base swap
-    * first. */
+    * layout's schema (a data file's footer, or the schema an empty build
+    * stored) — no listing or schema-inference job (see
+    * `graft.io.ParquetLayout`), and no `cells` evaluation while the index
+    * holds no row. Completes an interrupted base swap first. */
   private def cellRows(spark: SparkSession, indexDir: String,
-      cells: Option[Set[Int]]): DataFrame = {
+      cells: => Option[Set[Int]]): DataFrame = {
     val layout = cellsLayout(indexDir)
     layout.recover(spark)
     layout.dataSchema(spark) match {
       case Some(schema) => layout.read(spark, schema, cells)
-      case None => spark.read.parquet(layout.dir) // no data file: Spark names the missing schema
+      case None => spark.read.parquet(layout.dir) // no data file or stored schema: Spark names it
     }
   }
 
@@ -780,13 +745,14 @@ object Similarity {
     cellRows(spark, indexDir, None)
 
   /** The index rows of the cells `assigned`'s rows fall in: the cell ids
-    * come to the driver in one shuffle-free job (`Dedup.distinctInts`), and
-    * the base read is partition-pruned to those cells. */
+    * come to the driver in one shuffle-free job (`Dedup.distinctInts`, none
+    * for an empty index), and the base read is partition-pruned to those
+    * cells. */
   private def touchedCells(assigned: DataFrame, indexDir: String): DataFrame =
     cellRows(assigned.sparkSession, indexDir,
       Some(Dedup.distinctInts(assigned.select("cell"))))
 
-  /** Delta pairs against a PERSISTED IVF index ([[ivfBuildIndex]] layout):
+  /** Delta pairs against a PERSISTED IVF index ([[ivfBuildIndexWith]] layout):
     * the delta assigns against the index's own centroids, the touched cell
     * ids collect to the driver (≤ numCells ints), and the index read is
     * partition-pruned to exactly those cells. */
@@ -802,8 +768,8 @@ object Similarity {
     semanticDeltaPairsAudited(newAssigned, old, threshold, maxCell)
   }
 
-  /** Delta pairs against a PERSISTED IVF-PQ index ([[ivfPqBuildIndex]]
-    * layout) — the 32x-cheaper old side: the CANDIDATE scan reads the
+  /** Delta pairs against a PERSISTED IVF-PQ index ([[ivfBuildIndexWith]]
+    * with codebooks) — the 32x-cheaper old side: the CANDIDATE scan reads the
     * corpus as 8-byte PQ `codes` partition-pruned to the delta's cells,
     * never raw vectors (PlanSpec pins the pruned ReadSchema). The refine
     * fetches the index's raw `emb` for just the candidate old ids — by
@@ -863,7 +829,7 @@ object Similarity {
     // counts the same universe the indexed twin sees (it partition-prunes
     // first and can never observe an untouched oversized cell); pair output
     // is unaffected — untouched cells generate no candidates either way
-    val oldEnc = ivfPqEncodeWithEmb(old, idCol, embCol, centroids, codebooks)
+    val oldEnc = indexRows(old, idCol, embCol, centroids, Some(codebooks))
       .join(broadcast(newAssigned.select("cell").distinct()), Seq("cell"), "left_semi")
       .localCheckpoint(true) // read by the size audit, candidates, and refine
     pqDeltaPairs(newAssigned, oldEnc.select(col("id"), col("codes"), col("cell")),
@@ -928,59 +894,38 @@ object Similarity {
     AuditedPairs(newOld.unionAll(newNew), obs, recompute)
   }
 
-  /** [[semanticDeltaDedupIndexed]] over the IVF-PQ layout: delta survivors
-    * against the coded corpus (old wins; min-id keep among new-only
-    * clusters). Append survivors with [[ivfPqIndexAppend]]. */
-  def semanticDeltaDedupPqIndexed(
+  /** The delta vectors that SURVIVE semantic dedup against the indexed
+    * corpus (old wins; min-id keep among new-only clusters — the same
+    * discipline as [[graft.ops.Dedup.deltaDedup]]), over the index's own
+    * format: [[semanticDeltaPairsPqIndexed]] (`adcMargin`, `maxRefineIds`)
+    * for an IVF-PQ index, [[semanticDeltaPairsIndexed]] for a raw one.
+    * Append survivors with [[ivfIndexAppend]] to complete the round. */
+  def semanticDeltaDedupIndexed(
       newDf: DataFrame, idCol: String, embCol: String, indexDir: String,
       threshold: Double, maxCell: Int = Dedup.DefaultMaxBucket,
       adcMargin: Double = 0.2, maxRefineIds: Int = 1 << 14): DataFrame =
-    Dedup.deltaSurvivors(newDf, idCol, semanticDeltaPairsPqIndexed(newDf, idCol, embCol,
-      indexDir, threshold, maxCell, adcMargin, maxRefineIds).pairs)
+    Dedup.deltaSurvivors(newDf, idCol,
+      (if (isPqIndex(newDf.sparkSession, indexDir))
+         semanticDeltaPairsPqIndexed(newDf, idCol, embCol, indexDir, threshold, maxCell,
+           adcMargin, maxRefineIds)
+       else semanticDeltaPairsIndexed(newDf, idCol, embCol, indexDir, threshold, maxCell)).pairs)
 
-  /** Append vectors to a persisted IVF-PQ index, assigned AND encoded with
-    * the index's own stored quantizers (an append can never fork either);
-    * same (emb, codes) projection as the build, as one run. */
-  def ivfPqIndexAppend(
+  /** Append vectors to a persisted IVF index in the index's own format,
+    * assigned (and, for IVF-PQ, encoded) with its STORED quantizers, so an
+    * append can never fork them; as one run. */
+  def ivfIndexAppend(
       df: DataFrame, idCol: String, embCol: String, indexDir: String): Unit = {
-    val (centroids, codebooks) = ivfPqLoadIndex(df.sparkSession, indexDir)
-    appendCells(df.sparkSession, indexDir, centroids.size,
-      ivfPqEncodeWithEmb(df, idCol, embCol, centroids, codebooks))
-  }
-
-  /** `rows` appended to the index's `cells/` layout as one run (a tier of
-    * `numCells` runs is folded into the base first). */
-  private def appendCells(spark: SparkSession, indexDir: String, numCells: Int,
-      rows: DataFrame): Unit = {
+    val spark = df.sparkSession
+    val centroids = ivfLoadCentroids(spark, indexDir)
+    val rows = indexRows(df, idCol, embCol, centroids, codebooksOf(spark, indexDir))
     val layout = cellsLayout(indexDir)
     layout.recover(spark)
     // a fold reads the runs as the layout's own schema (a base footer's),
     // which may be wider than `rows`
-    val (n, _) = layout.appendRun(rows, numCells, layout.dataSchema(spark).getOrElse(rows.schema))
+    val (n, _) = layout.appendRun(rows, centroids.size,
+      layout.dataSchema(spark).getOrElse(rows.schema))
     IndexVersions.record(spark, indexDir,
       IndexVersions.epoch(spark, indexDir), "append", n)
-  }
-
-  /** The delta vectors that SURVIVE semantic dedup against the indexed
-    * corpus (old wins; min-id keep among new-only clusters — the same
-    * discipline as [[graft.ops.Dedup.deltaDedup]]). Append survivors with
-    * [[ivfIndexAppend]] to complete the round. */
-  def semanticDeltaDedupIndexed(
-      newDf: DataFrame, idCol: String, embCol: String, indexDir: String,
-      threshold: Double, maxCell: Int = Dedup.DefaultMaxBucket): DataFrame =
-    Dedup.deltaSurvivors(newDf, idCol,
-      semanticDeltaPairsIndexed(newDf, idCol, embCol, indexDir, threshold, maxCell).pairs)
-
-  /** Append vectors to a persisted IVF index, assigned with the index's OWN
-    * centroids (an append can never fork the quantizer), as one run. */
-  def ivfIndexAppend(
-      df: DataFrame, idCol: String, embCol: String, indexDir: String): Unit = {
-    require(!isPqIndex(df.sparkSession, indexDir),
-      s"index at $indexDir is IVF-PQ (codebooks present) — append with " +
-        "ivfPqIndexAppend (usePqCodes=true), or PQ deltas can't score the new rows")
-    val centroids = ivfLoadCentroids(df.sparkSession, indexDir)
-    appendCells(df.sparkSession, indexDir, centroids.size,
-      ivfAssign(df, idCol, embCol, centroids))
   }
 
   /** Compact a persisted IVF index to the ids in `keepIds` — the

@@ -337,8 +337,9 @@ object TrainingPipeline {
     *   split (+ optional packing).
     *
     * State lives under `workDir`: `mhidx/` (built empty on first use),
-    * `ivfidx/` (quantizer TRAINED ON THE FIRST SNAPSHOT's quality survivors
-    * and never re-trained — appends assign with the stored centroids), and
+    * `ivfidx/` (built empty on first use, with quantizers TRAINED ON THAT
+    * SNAPSHOT's quality survivors and never re-trained — every decision and
+    * append uses the stored ones; IVF-PQ when `usePqCodes`), and
     * one StageStore chain per distinct delta content. Stages per delta:
     * prepare (delta corpus checkpoint), lexdedup (survivor-id set), mhappend,
     * decontam, quality, semdedup (survivor-id set), semappend. Stage data is
@@ -543,9 +544,10 @@ object TrainingPipeline {
     val kept = qualityFilter(decon, textCol, minQualityScore, maxTopWordPct)
     val nKept = stage(sname("quality"), qualityKey)(Map("n_kept" -> rowCount(kept)))("n_kept")
 
-    // -- semantic delta dedup vs the persisted IVF index; first snapshot
-    //    trains the quantizer (on its quality survivors) and seeds the index
-    //    with its semantic survivors
+    // -- semantic delta dedup vs the persisted IVF index (born empty on
+    //    first use, where its quantizers are trained on that snapshot's
+    //    quality survivors: every snapshot, the first included, dedups and
+    //    appends under the STORED quantizers)
     val (finalKept, nSemKeep) = embCol match {
       case Some(ec) =>
         val semDir = StageStore.dataDir(workDir, sname("sem_keep"))
@@ -555,75 +557,24 @@ object TrainingPipeline {
              s"|pq=$pqM:$pqKSub|margin=$pqAdcMargin|refine=$pqMaxRefineIds"
            else "")
         val semC = stage(sname("semdedup"), semKey, Some(semDir)) {
+          if (!exists(s"$ivfDir/centroids")) {
+            val cents = Similarity.ivfTrain(kept, idCol, ec, numCells, ivfIters, ivfSampleSize)
+            val books = if (usePqCodes)
+                Some(Similarity.pqTrain(kept, idCol, ec, pqM, pqKSub, ivfIters, ivfSampleSize))
+              else None
+            Similarity.ivfBuildIndexWith(kept.limit(0), idCol, ec, ivfDir, cents, books,
+              epoch = corpusEpoch)
+          } else
+            IndexVersions.requireAtLeast(spark, ivfDir, corpusEpoch, "IVF cell index")
           val before = sc.getPersistentRDDs.keySet
-          try {
-            val (survivors, bootstrapCents) =
-              if (!exists(s"$ivfDir/centroids")) {
-                val cents = Similarity.ivfTrain(kept, idCol, ec, numCells,
-                  ivfIters, ivfSampleSize)
-                (Similarity.semanticDedup(kept, idCol, ec, cents,
-                  semanticThreshold, maxCell), Some(cents))
-              } else {
-                IndexVersions.requireAtLeast(spark, ivfDir, corpusEpoch,
-                  "IVF cell index")
-                (if (usePqCodes)
-                   Similarity.semanticDeltaDedupPqIndexed(kept, idCol, ec, ivfDir,
-                     semanticThreshold, maxCell, pqAdcMargin, pqMaxRefineIds)
-                 else
-                   Similarity.semanticDeltaDedupIndexed(kept, idCol, ec, ivfDir,
-                     semanticThreshold, maxCell), None)
-              }
-            val n = stage.write(survivors.select(col(idCol)), idCol, semDir)
-            // sidecar the trained centroids under the stage data dir (AFTER
-            // the overwrite, which clears the dir; underscore-prefixed so the
-            // parquet reader ignores it; before the stage's commit record):
-            // semappend builds with the EXACT quantizer this dedup used, no
-            // second training sample scan
-            bootstrapCents.foreach(c =>
-              MetaFile.writeJson(spark, s"$semDir/_centroids", c))
-            Map("n_sem_keep" -> n,
-              "bootstrapped" -> (if (bootstrapCents.isDefined) 1L else 0L))
-          } finally Dedup.releaseCheckpointsSince(sc, before)
+          try Map("n_sem_keep" -> stage.write(Similarity.semanticDeltaDedupIndexed(kept, idCol,
+            ec, ivfDir, semanticThreshold, maxCell, pqAdcMargin, pqMaxRefineIds)
+            .select(col(idCol)), idCol, semDir))
+          finally Dedup.releaseCheckpointsSince(sc, before)
         }
         val semKept = withIds(kept, semDir, keep = true)
         stage(sname("semappend"), semKey) {
-          // bootstrap: the index IS the seeded survivor set — built HERE,
-          // after the semdedup stage committed. Building it inside semdedup
-          // left a crash window (index written, stage not committed) whose
-          // recompute flipped onto the indexed branch against the delta's
-          // own survivors. Centroids come from semdedup's sidecar (the exact
-          // quantizer the dedup used; retrain fallback covers pre-sidecar
-          // work dirs — ivfTrain is deterministic, hash-ordered sample).
-          // Ownership guard: if ANOTHER delta seeded the index while this
-          // snapshot's redelivery was pending, never overwrite it — that
-          // would erase its survivors and fork the quantizer; append this
-          // snapshot's survivors encoded with the index's stored quantizers
-          // instead (first-come order semantics, like the append-only
-          // lexical index; any cross-snapshot dups are kept — the
-          // conservative direction).
-          val ownerFile = new Path(ivfDir, "_bootstrap_owner")
-          def ownedByUs: Boolean =
-            MetaFile.read(fs, ownerFile, "rebuild the IVF index").exists(_.trim == tag)
-          if (semC("bootstrapped") == 1L &&
-              (!exists(s"$ivfDir/centroids") || ownedByUs)) {
-            // claim BEFORE building: a kill mid-build recomputes our build
-            MetaFile.write(fs, ownerFile, s"$tag\n")
-            val cents =
-              if (exists(s"$semDir/_centroids"))
-                Similarity.readCentroids(spark, s"$semDir/_centroids")
-              else Similarity.ivfTrain(kept, idCol, ec, numCells,
-                ivfIters, ivfSampleSize)
-            if (usePqCodes) {
-              val books = Similarity.pqTrain(kept, idCol, ec, pqM, pqKSub,
-                ivfIters, ivfSampleSize)
-              Similarity.ivfPqBuildIndexWith(semKept, idCol, ec, ivfDir,
-                cents, books, epoch = corpusEpoch)
-            } else
-              Similarity.ivfBuildIndexWith(semKept, idCol, ec, ivfDir, cents,
-                epoch = corpusEpoch)
-          } else if (exists(s"$ivfDir/codebooks"))
-            Similarity.ivfPqIndexAppend(semKept, idCol, ec, ivfDir)
-          else Similarity.ivfIndexAppend(semKept, idCol, ec, ivfDir)
+          Similarity.ivfIndexAppend(semKept, idCol, ec, ivfDir)
           Map("n_appended" -> semC("n_sem_keep"))
         }
         (semKept, semC("n_sem_keep"))

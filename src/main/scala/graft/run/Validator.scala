@@ -92,8 +92,7 @@ object Validator {
 
   /** E1 `changeset/3` lifted to a whole Dataset: single narrow pass, no shuffle. */
   def validate(spec: SchemaSpec, df: DataFrame, bindings: Map[String, Any] = Map.empty): ValidationResult = {
-    val violArr = SchemaCompiler.violationsArray(spec, df, bindings)
-    val values = SchemaCompiler.coercedValues(spec, df, bindings)
+    val (values, violArr) = SchemaCompiler.compile(spec, df, bindings)
     val fieldNames = (spec.allFields.map(_.name) ++ spec.embeds.map(_.name)).toSet
     // a key column that is also a declared field is represented by its coerced
     // field column — avoids a duplicate (ambiguous) attribute in `annotated`

@@ -24,12 +24,18 @@ class MetadataSpec extends SparkSpec {
     * sets run no job. */
   private val DeltaJobBudget = 38
 
+  /** Spark jobs of the budget test's first delta, which also trains the
+    * IVF quantizer and builds both indexes empty (an empty build runs no
+    * job). */
+  private val FirstDeltaJobBudget = 36
+
   test("tiny metadata never submits a Spark job: stage records, index epochs, MinHash params, IVF centroids") {
     val w = tmp()
     val p = Dedup.MinhashIndexParams(numHashes = 32, bands = 8, numBuckets = 4)
     Dedup.minhashIndexBuild(delta(1L, 2L, 3L), "doc_id", "text", s"$w/mh", p)
     val embs = Seq((1L, Seq(1f, 0f)), (2L, Seq(0f, 1f)), (3L, Seq(1f, 1f))).toDF("id", "emb")
-    val cents = Similarity.ivfBuildIndex(embs, "id", "emb", s"$w/ivf", numCells = 2, iters = 1)
+    val cents = Similarity.ivfTrain(embs, "id", "emb", k = 2, iters = 1)
+    Similarity.ivfBuildIndexWith(embs, "id", "emb", s"$w/ivf", cents)
 
     var loaded: Option[Map[String, Long]] = None
     var epochAfter = -1L
@@ -115,11 +121,12 @@ class MetadataSpec extends SparkSpec {
     assert(params.getMessage.contains("minhashIndexBuild"), params.getMessage)
 
     val embs = Seq((1L, Seq(1f, 0f)), (2L, Seq(0f, 1f))).toDF("id", "emb")
-    Similarity.ivfBuildIndex(embs, "id", "emb", s"$w/ivf", numCells = 2, iters = 1)
+    Similarity.ivfBuildIndexWith(embs, "id", "emb", s"$w/ivf",
+      Similarity.ivfTrain(embs, "id", "emb", k = 2, iters = 1))
     fs.delete(new Path(s"$w/ivf/centroids"), true)
     Seq("[[1.0,0.0],[0.0,1.0]]").toDF("centroids").coalesce(1).write.json(s"$w/ivf/centroids")
     val cents = intercept[PreChangeLayoutException](Similarity.ivfLoadCentroids(spark, s"$w/ivf"))
-    assert(cents.getMessage.contains("ivfBuildIndex"), cents.getMessage)
+    assert(cents.getMessage.contains("ivfBuildIndexWith"), cents.getMessage)
 
     // a parquet lifecycle log cannot say which epoch the index is at
     Seq((0L, "build", 2L)).toDF("epoch", "event", "rows")
@@ -144,22 +151,26 @@ class MetadataSpec extends SparkSpec {
       (123L, leak, 123L)))               // benchmark leak
     // the second delta of a fresh work dir: every stage computes, against
     // the MinHash and IVF indexes the first delta bootstrapped
-    def deltaJobs(): (Int, DeltaPipelineReport) = {
+    def deltaJobs(): (Int, Int, DeltaPipelineReport) = {
       val w = tmp()
       def go(d: DataFrame) = TrainingPipeline.runDelta(d, "doc_id", "text", w,
         probe = Some((probe, "pid", "ptext")), embCol = Some("emb"),
         minhashThreshold = 0.8, semanticThreshold = 0.99, numCells = 4,
         ivfIters = 2, ivfSampleSize = 16)
-      go(first)
+      val (firstJobs, _) = jobsDuring(go(first))
       var report: DeltaPipelineReport = null
       val (jobs, _) = jobsDuring { report = go(next).report }
-      (jobs, report)
+      (firstJobs, jobs, report)
     }
-    val (jobs, report) = deltaJobs()
+    val (firstJobs, jobs, report) = deltaJobs()
     assert(report.nearDups === 1 && report.semanticDups === 1 && report.contaminated === 1,
       report.toString)
+    assert(firstJobs <= FirstDeltaJobBudget,
+      s"a first delta ran $firstJobs Spark jobs (budget $FirstDeltaJobBudget)")
     assert(jobs <= DeltaJobBudget, s"a delta ran $jobs Spark jobs (budget $DeltaJobBudget)")
-    assert(deltaJobs()._1 === jobs, "an identical delta ran another number of jobs")
+    val (firstAgain, again, _) = deltaJobs()
+    assert(firstAgain === firstJobs, "an identical first delta ran another number of jobs")
+    assert(again === jobs, "an identical delta ran another number of jobs")
   }
 
   test("an index read lists its bucket directories on the driver: no job with a task per directory") {
@@ -217,7 +228,8 @@ class MetadataSpec extends SparkSpec {
     Dedup.minhashIndexBuild((1L to 200L).map(doc).toDF("doc_id", "text"), "doc_id", "text",
       s"$w/mh", p)
     val embs = (1 to 40).map(i => (i.toLong, Seq((i % 5).toFloat, (i % 3).toFloat, 1f)))
-    Similarity.ivfBuildIndex(embs.toDF("id", "emb"), "id", "emb", s"$w/ivf", numCells = 8, iters = 1)
+    Similarity.ivfBuildIndexWith(embs.toDF("id", "emb"), "id", "emb", s"$w/ivf",
+      Similarity.ivfTrain(embs.toDF("id", "emb"), "id", "emb", k = 8, iters = 1))
     val layouts = Seq(s"$w/mh/sigs", s"$w/mh/bands", s"$w/ivf/cells")
     val before = layouts.map(d => d -> files(d)).toMap
     val tasks = 3
@@ -264,7 +276,8 @@ class MetadataSpec extends SparkSpec {
     val p = Dedup.MinhashIndexParams(numHashes = 32, bands = 8, numBuckets = 4)
     Dedup.minhashIndexBuild(delta(1L, 2L, 3L), "doc_id", "text", s"$w/mh", p)
     val embs = (1 to 12).map(i => (i.toLong, Seq((i % 3).toDouble, (i % 2).toDouble, 1.0)))
-    Similarity.ivfBuildIndex(embs.toDF("id", "emb"), "id", "emb", s"$w/ivf", numCells = 4, iters = 1)
+    Similarity.ivfBuildIndexWith(embs.toDF("id", "emb"), "id", "emb", s"$w/ivf",
+      Similarity.ivfTrain(embs.toDF("id", "emb"), "id", "emb", k = 4, iters = 1))
     // one append past the bucket count: the last one folds a tier of
     // narrower runs (written by the earlier appends) into the base
     for (k <- 1 to p.numBuckets + 1) {

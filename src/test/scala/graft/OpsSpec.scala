@@ -217,8 +217,7 @@ class OpsSpec extends SparkSpec {
     assert(again === centroids)
     // persisted index: build once, reload centroids + cell-pruned corpus, same answer
     val dir = java.nio.file.Files.createTempDirectory("graft-ivf").toString
-    val built = Similarity.ivfBuildIndex(embs, "vec_id", "embedding", dir, numCells = 16, iters = 3)
-    assert(built === centroids)
+    Similarity.ivfBuildIndexWith(embs, "vec_id", "embedding", dir, centroids)
     val loaded = Similarity.ivfLoadCentroids(spark, dir)
     assert(loaded === centroids)
     val fromIndex = Similarity.ivfTopKCosineAssigned(
@@ -287,12 +286,11 @@ class OpsSpec extends SparkSpec {
     // zero vector encodes without NaN/exception
     val z = Seq((1L, Seq.fill(64)(0.0))).toDF("vec_id", "embedding")
     assert(Similarity.pqEncode(z, "vec_id", "embedding", books).collect().length === 1)
-    // persisted IVF-PQ index round-trip: the build trains the same quantizers
-    // as in memory, and loading reads both back unchanged
+    // persisted IVF-PQ index round-trip: loading reads both quantizers back
+    // unchanged
     val cents = Similarity.ivfTrain(embs, "vec_id", "embedding", k = 16, iters = 3)
     val idxDir = java.nio.file.Files.createTempDirectory("graft-ivfpq").toString
-    val (cents2, books2) = Similarity.ivfPqBuildIndex(embs, "vec_id", "embedding", idxDir)
-    assert(cents2 === cents && books2 === books) // same deterministic training
+    Similarity.ivfBuildIndexWith(embs, "vec_id", "embedding", idxDir, cents, Some(books))
     val (centsL, booksL) = Similarity.ivfPqLoadIndex(spark, idxDir)
     assert(centsL === cents && booksL === books)
     enc.unpersist()
@@ -368,8 +366,8 @@ class OpsSpec extends SparkSpec {
     val twins = Seq((950L, synth), (951L, synth)).toDF("vec_id", "embedding")
     val delta = copies.unionAll(twins)
     val idx = java.nio.file.Files.createTempDirectory("graft-sem-delta").toString
-    Similarity.ivfBuildIndex(old, "vec_id", "embedding", idx, numCells = 16, iters = 0,
-      sampleSize = 16)
+    Similarity.ivfBuildIndexWith(old, "vec_id", "embedding", idx,
+      Similarity.ivfTrain(old, "vec_id", "embedding", k = 16, iters = 0, sampleSize = 16))
     val pairsIdx = Similarity.semanticDeltaPairsIndexed(
       delta, "vec_id", "embedding", idx, threshold = 0.9)
     val got = pairsIdx.pairs.select("id_a", "id_b").as[(Long, Long)].collect().toSet
@@ -410,8 +408,10 @@ class OpsSpec extends SparkSpec {
     val twins = Seq((950L, synth), (951L, synth)).toDF("vec_id", "embedding")
     val delta = copies.unionAll(twins)
     val idx = java.nio.file.Files.createTempDirectory("graft-sem-delta-pq").toString
-    Similarity.ivfPqBuildIndex(old, "vec_id", "embedding", idx,
-      numCells = 16, m = 8, kSub = 64, iters = 3, sampleSize = 512)
+    Similarity.ivfBuildIndexWith(old, "vec_id", "embedding", idx,
+      Similarity.ivfTrain(old, "vec_id", "embedding", k = 16, iters = 3, sampleSize = 512),
+      Some(Similarity.pqTrain(old, "vec_id", "embedding", m = 8, kSub = 64, iters = 3,
+        sampleSize = 512)))
     // generous margin: these synthetic vectors are near-uniform (measured
     // ADC self-scores of exact copies bottom out ~0.49 — the worst case for
     // PQ); real embedding corpora sit far closer to their codebooks
@@ -437,13 +437,13 @@ class OpsSpec extends SparkSpec {
     assert(norm(pairsOf(0.55, refine = 0).pairs
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet) === got)
     // dedup semantics: old wins; min-id twin survives
-    val kept = Similarity.semanticDeltaDedupPqIndexed(delta, "vec_id", "embedding",
+    val kept = Similarity.semanticDeltaDedupIndexed(delta, "vec_id", "embedding",
       idx, threshold = 0.9, adcMargin = 0.55)
       .select("vec_id").as[Long].collect().toSet
     assert(kept === Set(950L))
     // survivors append as codes (stored quantizers); the next twin loses to 950
-    Similarity.ivfPqIndexAppend(twins.filter($"vec_id" === 950L), "vec_id", "embedding", idx)
-    val kept2 = Similarity.semanticDeltaDedupPqIndexed(
+    Similarity.ivfIndexAppend(twins.filter($"vec_id" === 950L), "vec_id", "embedding", idx)
+    val kept2 = Similarity.semanticDeltaDedupIndexed(
       Seq((960L, synth)).toDF("vec_id", "embedding"), "vec_id", "embedding", idx,
       threshold = 0.9, adcMargin = 0.55)
       .select("vec_id").as[Long].collect().toSet
@@ -467,45 +467,89 @@ class OpsSpec extends SparkSpec {
       delta.join(kept1.toSeq.toDF("doc_id"), Seq("doc_id"), "left_semi"),
       "doc_id", "text", idx)
     assert(lexKept() === kept1)
-    // semantic twin: identical replay contract over the IVF cell index
-    val ivf = java.nio.file.Files.createTempDirectory("graft-redeliver-ivf").toString
+    // semantic twin: identical replay contract over the IVF cell index, raw
+    // and PQ. The delta also holds a new-only twin pair (3 and its copy
+    // 8003): on the redelivery 8003 pairs with 3's index entry AND with 3's
+    // delta copy, and 3 must still keep (an id flagged old in any pair is
+    // never a new loser)
     val eOld = embs.select($"vec_id", $"embedding").filter($"vec_id" % 3 =!= 0)
     val eDelta = embs.select($"vec_id", $"embedding").filter($"vec_id" % 3 === 0)
       .unionAll(eOld.filter($"vec_id" === 5L).select(($"vec_id" + 7000).as("vec_id"), $"embedding"))
-    Similarity.ivfBuildIndex(eOld, "vec_id", "embedding", ivf, numCells = 8)
-    def semKept() = Similarity.semanticDeltaDedupIndexed(
-      eDelta, "vec_id", "embedding", ivf, threshold = 0.95)
-      .select("vec_id").as[Long].collect().toSet
-    val sem1 = semKept()
-    assert(!sem1.contains(7005L) && sem1.nonEmpty) // the planted copy lost to its old source
-    Similarity.ivfIndexAppend(
-      eDelta.join(sem1.toSeq.toDF("vec_id"), Seq("vec_id"), "left_semi"),
-      "vec_id", "embedding", ivf)
-    assert(semKept() === sem1)
+      .unionAll(embs.filter($"vec_id" === 3L).select(($"vec_id" + 8000).as("vec_id"), $"embedding"))
+    val cents = Similarity.ivfTrain(eOld, "vec_id", "embedding", k = 8)
+    Seq(None, Some(Similarity.pqTrain(eOld, "vec_id", "embedding"))).foreach { books =>
+      val ivf = java.nio.file.Files.createTempDirectory("graft-redeliver-ivf").toString
+      Similarity.ivfBuildIndexWith(eOld, "vec_id", "embedding", ivf, cents, books)
+      def semKept() = Similarity.semanticDeltaDedupIndexed(
+        eDelta, "vec_id", "embedding", ivf, threshold = 0.95, adcMargin = 2.0)
+        .select("vec_id").as[Long].collect().toSet
+      val sem1 = semKept()
+      // the planted copy lost to its old source; the twin pair kept its min id
+      assert(!sem1.contains(7005L) && !sem1.contains(8003L) && sem1.contains(3L), sem1)
+      Similarity.ivfIndexAppend(
+        eDelta.join(sem1.toSeq.toDF("vec_id"), Seq("vec_id"), "left_semi"),
+        "vec_id", "embedding", ivf)
+      assert(semKept() === sem1, s"PQ index: ${books.isDefined}")
+    }
   }
 
-  test("index format guards: raw-vs-PQ mismatches fail fast instead of corrupting the index") {
+  test("an append writes the index's own format: no codes in raw, stored codes in PQ") {
     val e = embs.select($"vec_id", $"embedding")
+    val old = e.filter($"vec_id" % 2 === 0)
+    val added = e.filter($"vec_id" % 2 =!= 0 && $"vec_id" < 20L)
+    val cents = Similarity.ivfTrain(old, "vec_id", "embedding", k = 4, iters = 0, sampleSize = 4)
+    val books = Similarity.pqTrain(old, "vec_id", "embedding", iters = 0, sampleSize = 16)
     val raw = java.nio.file.Files.createTempDirectory("graft-fmt-raw").toString
     val pq = java.nio.file.Files.createTempDirectory("graft-fmt-pq").toString
-    Similarity.ivfBuildIndex(e, "vec_id", "embedding", raw, numCells = 4, iters = 0, sampleSize = 4)
-    Similarity.ivfPqBuildIndex(e, "vec_id", "embedding", pq, numCells = 4, iters = 0, sampleSize = 16)
-    // plain append onto a PQ index would write codes-less rows PQ deltas
-    // can't score — refused loudly
-    val a = intercept[IllegalArgumentException] {
-      Similarity.ivfIndexAppend(e.limit(1), "vec_id", "embedding", pq)
-    }
-    assert(a.getMessage.contains("ivfPqIndexAppend"), a.getMessage)
+    Similarity.ivfBuildIndexWith(old, "vec_id", "embedding", raw, cents)
+    Similarity.ivfBuildIndexWith(old, "vec_id", "embedding", pq, cents, Some(books))
+    Seq(raw, pq).foreach(Similarity.ivfIndexAppend(added, "vec_id", "embedding", _))
+    // the raw append's run files carry no codes column
+    val runSchema = graft.io.ParquetLayout.footerSchema(spark.sparkContext.hadoopConfiguration,
+      new org.apache.hadoop.fs.Path(s"$raw/cells/${graft.io.TieredLayout.RunsDir}"))
+    assert(runSchema.exists(s => !s.fieldNames.contains("codes")), runSchema)
+    assert(Similarity.ivfIndexLoad(spark, raw).count() === old.count() + added.count())
+    // the PQ append's rows carry the codes of the stored codebooks
+    def codes(df: org.apache.spark.sql.DataFrame) = df.select($"id", $"codes").as[(Long, Array[Byte])]
+      .collect().map { case (i, c) => i -> c.toSeq }.toMap
+    val appended = codes(Similarity.ivfIndexLoad(spark, pq).join(
+      added.select($"vec_id".as("id")), Seq("id"), "left_semi"))
+    assert(appended.size === added.count())
+    assert(appended === codes(Similarity.pqEncode(added, "vec_id", "embedding", books)))
     // PQ operators over a plain index: no codebooks to score with — refused
     val b = intercept[IllegalArgumentException] {
-      Similarity.semanticDeltaDedupPqIndexed(e.limit(1), "vec_id", "embedding",
-        raw, threshold = 0.9).collect()
+      Similarity.semanticDeltaPairsPqIndexed(e.limit(1), "vec_id", "embedding",
+        raw, threshold = 0.9).pairs.collect()
     }
     assert(b.getMessage.contains("plain IVF"), b.getMessage)
-    val c = intercept[IllegalArgumentException] {
-      Similarity.ivfPqIndexAppend(e.limit(1), "vec_id", "embedding", raw)
+  }
+
+  test("a deletions pass compacts a new, empty IVF index to 0 rows at the new epoch") {
+    import graft.ops.IndexVersions
+    def docs(ids: Seq[Long]) = ids.map(i => (i, (1 to 30).map(t => s"w${i}_$t").mkString(" "),
+      Seq.tabulate(8)(j => ((i * 7 + j * 3) % 11 - 5).toDouble))).toDF("doc_id", "text", "emb")
+    val w = java.nio.file.Files.createTempDirectory("graft-empty-ivf").toString
+    val ivf = s"$w/ivfidx"
+    def killedAt(stage: String, d: org.apache.spark.sql.DataFrame,
+        del: Option[org.apache.spark.sql.DataFrame] = None): Unit = {
+      val e = intercept[RuntimeException] {
+        TrainingPipeline.runDelta(d, "doc_id", "text", w, embCol = Some("emb"), deletions = del,
+          minhashThreshold = 0.8, numCells = 2, ivfSampleSize = 4,
+          onStageComputed = n => if (n.endsWith(stage)) throw new RuntimeException("kill"))
+      }
+      assert(e.getMessage === "kill")
     }
-    assert(c.getMessage.contains("plain IVF"), c.getMessage)
+    // killed once its semdedup committed: the index was born, nothing appended
+    killedAt("_semdedup", docs(1L to 6L))
+    val cents = Similarity.ivfLoadCentroids(spark, ivf)
+    assert(Similarity.ivfIndexLoad(spark, ivf).count() === 0L)
+    // the next delta's deletions pass compacts it (killed right after, at prepare)
+    killedAt("_prepare", docs(Seq(7L)), Some(Seq(1L).toDF("doc_id")))
+    val cells = Similarity.ivfIndexLoad(spark, ivf)
+    assert(cells.count() === 0L)
+    assert(cells.schema("id").dataType === org.apache.spark.sql.types.LongType)
+    assert(IndexVersions.epoch(spark, ivf) === 1L)
+    assert(Similarity.ivfLoadCentroids(spark, ivf) === cents)
   }
 
   test("IVF knn join: nprobe=all equals brute force exactly; pruned nprobe keeps own-vector rank 1") {
@@ -724,7 +768,8 @@ class OpsSpec extends SparkSpec {
       (1L to 20L).map(i => (i, text(i), "en", i)) ++ Seq(
         (21L, text(1), "en", 21L),               // exact dup WITHIN D1 (of 1)
         (22L, text(2, " xq1 xq2"), "en", 22L),   // near twin within D1 (of 2)
-        (23L, "spam spam spam spam spam spam spam spam", "en", 23L))) // low quality
+        (23L, "spam spam spam spam spam spam spam spam", "en", 23L), // low quality
+        (24L, text(24), "en", 6L)))              // SEMANTIC twin within D1 (of 6)
     val d2 = df(
       (101L to 110L).map(i => (i, text(i), "en", i)) ++ Seq(
         (121L, text(3), "en", 121L),             // exact copy ACROSS snapshots (of 3)
@@ -749,7 +794,7 @@ class OpsSpec extends SparkSpec {
     val r1 = go(d1)
     val r2 = go(d2)
     assert(r1.report.exactDups === 1 && r1.report.nearDups === 1) // 21; 22
-    assert(r1.report.lowQuality === 1 && r1.report.semanticDups === 0)
+    assert(r1.report.lowQuality === 1 && r1.report.semanticDups === 1) // 23; 24
     assert(r2.report.invalid === 1)                               // 126
     assert(r2.report.nearDups === 3)                              // 121, 122, 123
     assert(r2.report.contaminated === 1 && r2.report.semanticDups === 1) // 125; 124
@@ -767,13 +812,23 @@ class OpsSpec extends SparkSpec {
       .select($"doc_id").as[Long].collect().toSet
     assert(out1.union(out2) === batchIds)
     batch.unpersist()
+    // the first snapshot ran the indexed delta against its new, empty index:
+    // its survivors are the batch SemDeDup reference under the stored
+    // centroids
+    val batch1 = TrainingPipeline.run(d1, "doc_id", "text",
+      schema = spec, probe = Some((probe, "pid", "ptext")),
+      minhashThreshold = 0.8, maxTopWordPct = 60)
+    def firstSnapshotRef(centroids: Seq[Seq[Double]]) =
+      Similarity.semanticDedup(batch1.corpus, "doc_id", "emb", centroids, 0.99)
+        .select($"doc_id").as[Long].collect().toSet
+    assert(out1 === firstSnapshotRef(cents) && !out1.contains(24L))
 
     // the MinHash index holds exactly the lexical-dedup survivors (valid,
     // exact- and near-deduped — BEFORE decontam/quality, the batch-
     // equivalence choice), the IVF index exactly the final survivors
     val mhIds = Dedup.minhashIndexLoad(spark, s"$work/mhidx")._1
       .select($"id").as[Long].collect().toSet
-    val lexSurvivors = ((1L to 20L).toSet ++ (101L to 110L).toSet + 23L + 124L + 125L)
+    val lexSurvivors = ((1L to 20L).toSet ++ (101L to 110L).toSet + 23L + 24L + 124L + 125L)
     assert(mhIds === lexSurvivors)
     val ivfIds = Similarity.ivfIndexLoad(spark, s"$work/ivfidx")
       .select($"id").as[Long].collect().toSet
@@ -792,6 +847,8 @@ class OpsSpec extends SparkSpec {
         semanticThreshold = 0.99, numCells = 4, ivfIters = 2, ivfSampleSize = 16,
         usePqCodes = true, pqM = 8, pqKSub = 8, pqAdcMargin = 2.0)
     assert(goPq(d1).corpus.select($"doc_id").as[Long].collect().toSet === out1)
+    assert(out1 === firstSnapshotRef(Similarity.ivfLoadCentroids(spark, s"$workPq/ivfidx")))
+    batch1.unpersist()
     assert(goPq(d2).corpus.select($"doc_id").as[Long].collect().toSet === out2)
     val pqCells = Similarity.ivfIndexLoad(spark, s"$workPq/ivfidx")
     assert(pqCells.columns.contains("codes"))
@@ -854,26 +911,30 @@ class OpsSpec extends SparkSpec {
     assert(replayed.corpus.select($"doc_id").as[Long].collect().toSet === out1)
     assert(Dedup.minhashIndexLoad(spark, s"$work2/mhidx")._1.count() === mhCountBefore)
 
-    // interleaved bootstrap: snapshot A commits semdedup (bootstrapped=1)
-    // but dies before semappend; snapshot B then bootstraps and OWNS the
-    // index; A's redelivery must never overwrite B's index (that would erase
-    // B's survivors and fork the quantizer) — it appends under B's stored
-    // quantizers instead
+    // interleaved first snapshots: A is killed once its semdedup committed,
+    // which created the index with A's quantizer and zero rows; B dedups
+    // against that index and appends; A's redelivery loads its semdedup and
+    // appends. The quantizer is never rewritten, and both snapshots'
+    // survivors are in the index
     val work3 = java.nio.file.Files.createTempDirectory("graft-delta-pipe3").toString
     val killedSem = intercept[RuntimeException] {
       go(d1, w = work3, onStage = n => if (n.endsWith("_semdedup")) throw new RuntimeException("kill"))
     }
     assert(killedSem.getMessage === "kill")
-    assert(!new java.io.File(s"$work3/ivfidx/centroids").exists) // index unborn
+    val centsFile = java.nio.file.Paths.get(work3, "ivfidx", "centroids")
+    val centsBytes = java.nio.file.Files.readAllBytes(centsFile)
+    assert(Similarity.ivfLoadCentroids(spark, s"$work3/ivfidx") === cents) // A's quantizer
+    assert(Similarity.ivfIndexLoad(spark, s"$work3/ivfidx").count() === 0L)
     val rB = go(d2, w = work3)
     val bSem = rB.corpus.select($"doc_id").as[Long].collect().toSet
     assert(bSem.contains(124L)) // A's semantic entry wasn't there to beat it
     val rA = go(d1, w = work3)
+    assert(rA.stages.filterNot(_.loaded).map(_.name.split("_").last) === Seq("semappend"))
     assert(rA.corpus.select($"doc_id").as[Long].collect().toSet === out1)
+    assert(java.util.Arrays.equals(java.nio.file.Files.readAllBytes(centsFile), centsBytes))
     val cellIds3 = Similarity.ivfIndexLoad(spark, s"$work3/ivfidx")
       .select($"id").as[Long].collect().toSet
-    assert(bSem.subsetOf(cellIds3), s"B's survivors must survive A's redelivery: $cellIds3")
-    assert(out1.subsetOf(cellIds3))
+    assert(cellIds3 === bSem.union(out1))
 
     // deletion: withdraw doc 4 -> both indexes compact -> a fresh near-copy
     // of 4 now SURVIVES (stale signatures can no longer win)

@@ -104,8 +104,9 @@ class PlanSpec extends SparkSpec {
   test("persisted IVF index partition-prunes queries to the probed cells") {
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val dir = Files.createTempDirectory("graft-ivf-plan").toString
-    val centroids = graft.ops.Similarity.ivfBuildIndex(
-      e, "vec_id", "embedding", dir, numCells = 16, iters = 0, sampleSize = 16)
+    val centroids = graft.ops.Similarity.ivfTrain(e, "vec_id", "embedding", k = 16, iters = 0,
+      sampleSize = 16)
+    graft.ops.Similarity.ivfBuildIndexWith(e, "vec_id", "embedding", dir, centroids)
     val q = (0 until 64).map(i => math.sin(i + 1).abs)
     val indexed = spark.read.parquet(s"$dir/cells")
     val top = graft.ops.Similarity.ivfTopKCosineAssigned(indexed, centroids, q, 10, nprobe = 4)
@@ -134,8 +135,9 @@ class PlanSpec extends SparkSpec {
   test("IVF knn join over the persisted index: partition-pruned scan + broadcast hash join replace the cartesian") {
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val dir = Files.createTempDirectory("graft-ivf-knn-plan").toString
-    val centroids = graft.ops.Similarity.ivfBuildIndex(
-      e, "vec_id", "embedding", dir, numCells = 16, iters = 0, sampleSize = 16)
+    val centroids = graft.ops.Similarity.ivfTrain(e, "vec_id", "embedding", k = 16, iters = 0,
+      sampleSize = 16)
+    graft.ops.Similarity.ivfBuildIndexWith(e, "vec_id", "embedding", dir, centroids)
     val indexed = spark.read.parquet(s"$dir/cells")
     val queries = e.filter(col("vec_id") % 200 === 0) // few queries -> probed cells a real subset
     val out = graft.ops.Similarity.knnJoinCosineIvf(
@@ -294,9 +296,9 @@ class PlanSpec extends SparkSpec {
   test("semantic delta dedup: the index read partition-prunes to the delta's cells") {
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val dir = Files.createTempDirectory("graft-sem-delta-plan").toString
-    graft.ops.Similarity.ivfBuildIndex(
-      e.filter(col("vec_id") % 3 =!= 0), "vec_id", "embedding", dir,
-      numCells = 16, iters = 0, sampleSize = 16)
+    val old = e.filter(col("vec_id") % 3 =!= 0)
+    graft.ops.Similarity.ivfBuildIndexWith(old, "vec_id", "embedding", dir,
+      graft.ops.Similarity.ivfTrain(old, "vec_id", "embedding", k = 16, iters = 0, sampleSize = 16))
     // a one-vector delta touches ONE cell: the old-side scan must prune to it
     val delta = e.filter(col("vec_id") === 3).select(
       (col("vec_id") + 1000).as("vec_id"), col("embedding"))
@@ -310,9 +312,10 @@ class PlanSpec extends SparkSpec {
   test("PQ semantic delta: candidate scan reads 8-byte codes (never emb); cells partition-pruned") {
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val dir = Files.createTempDirectory("graft-sem-delta-pq-plan").toString
-    graft.ops.Similarity.ivfPqBuildIndex(
-      e.filter(col("vec_id") % 3 =!= 0), "vec_id", "embedding", dir,
-      numCells = 16, iters = 0, sampleSize = 16)
+    val old = e.filter(col("vec_id") % 3 =!= 0)
+    graft.ops.Similarity.ivfBuildIndexWith(old, "vec_id", "embedding", dir,
+      graft.ops.Similarity.ivfTrain(old, "vec_id", "embedding", k = 16, iters = 0, sampleSize = 16),
+      Some(graft.ops.Similarity.pqTrain(old, "vec_id", "embedding", iters = 0, sampleSize = 16)))
     val delta = e.filter(col("vec_id") === 3).select(
       (col("vec_id") + 1000).as("vec_id"), col("embedding"))
     val pairs = graft.ops.Similarity.semanticDeltaPairsPqIndexed(
@@ -333,8 +336,9 @@ class PlanSpec extends SparkSpec {
   test("PQ cells are columnar in BYTES, not just schema: a codes scan reads a fraction of an emb scan") {
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val dir = Files.createTempDirectory("graft-pq-bytes").toString
-    graft.ops.Similarity.ivfPqBuildIndex(
-      e, "vec_id", "embedding", dir, numCells = 4, iters = 0, sampleSize = 16)
+    graft.ops.Similarity.ivfBuildIndexWith(e, "vec_id", "embedding", dir,
+      graft.ops.Similarity.ivfTrain(e, "vec_id", "embedding", k = 4, iters = 0, sampleSize = 16),
+      Some(graft.ops.Similarity.pqTrain(e, "vec_id", "embedding", iters = 0, sampleSize = 16)))
     // measure the on-disk column chunks straight from the parquet footers:
     // a projection's scan bytes are bounded by its columns' chunk sizes
     // (the parquet reader's own guarantee), so the chunk ratio IS the

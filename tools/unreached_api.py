@@ -5,12 +5,13 @@
 
 Prints each public member declared at object level (indent <= 2) in
 `src/main/scala/graft/ops/*.scala` that nothing in `src/main` or
-`perfbench/src` reaches (comments are ignored, so a scaladoc link is not a
-caller). A member of an `object Obj` is reached by a qualified `Obj.name`
-(a line break may sit before the dot), by a bare `name` inside `Obj`'s
-own body, or by a bare `name` in a file that imports `Obj._` or
-`Obj.{..}`; a bare `name` elsewhere is some other member of that name, so
-entry points with common names (`run`) show up. Any other declaration is
+`perfbench/src` reaches (comments are ignored and string literals blanked,
+so neither a scaladoc link nor an error message is a caller). A member of
+an `object Obj` is reached by a qualified `Obj.name` (a line break may sit
+before the dot), by a bare `name` inside `Obj`'s own body, or by a bare
+`name` in a file that imports `Obj._` or `Obj.{..}`; a bare `name`
+elsewhere is some other member of that name, so entry points with common
+names (`run`) show up. Any other declaration is
 reached by its name occurring anywhere apart from its own declaration.
 Tests do not count: public API that only a test reaches is a candidate
 for deletion. Names in ALLOWED are printed with their reason instead of as
@@ -25,8 +26,10 @@ ALLOWED = {
     "cosineNearDupPairs": "brute-force reference the LSH and SemDeDup tests compare against",
     "dequantizeInt8": "reference for the int8 error bound",
     "deltaDedup": "raw-frame reference the indexed delta-dedup test compares against",
-    "deltaDedupIndexed": "the composition runDelta runs; the indexed-redelivery tests drive it",
+    "deltaDedupIndexed": "indexed lexical reference the redelivery tests drive; runDelta calls "
+                         "deltaNearDupsIndexedAudited and deltaSurvivors instead",
     "run": "batch reference the delta ≡ batch test compares against",
+    "semanticDedup": "batch SemDeDup reference the delta ≡ batch and first-snapshot tests compare against",
 }
 
 DECL = re.compile(r"^( {0,2})((?:(?:override|final|implicit|lazy)\s+)*)(def|object)\s+([A-Za-z_]\w*)")
@@ -35,14 +38,59 @@ TOP = re.compile(r"^(?:(?:final|sealed|abstract|case|implicit)\s+)*(object|class
 
 
 def strip_comments(src):
-    src = re.sub(r"/\*.*?\*/", lambda m: "\n" * m.group(0).count("\n"), src, flags=re.S)
-    out = []
-    for line in src.split("\n"):
-        i = line.find("//")
-        while i >= 0 and line[:i].count('"') % 2 == 1:  # "//" inside a string literal
-            i = line.find("//", i + 2)
-        out.append(line if i < 0 else line[:i])
-    return out
+    """`src`'s lines with comments removed and string literals blanked to
+    `""` (a name in an error message is not a caller), line breaks kept. An
+    interpolated literal (`s"..."`, `f\"""...\"""`) keeps the code of its
+    `${...}` splices, itself stripped the same way."""
+    out, i, n = [], 0, len(src)
+    while i < n:
+        c = src[i]
+        if src.startswith("/*", i):
+            j = src.find("*/", i + 2)
+            j = n if j < 0 else j + 2
+            out.append("\n" * src.count("\n", i, j))
+        elif src.startswith("//", i):
+            j = src.find("\n", i)
+            j = n if j < 0 else j
+        elif c == "'" and src[i + 2:i + 3] == "'":  # a char literal such as '"'
+            j = i + 3
+            out.append("' '")
+        elif c == "'" and src[i + 1:i + 2] == "\\":  # an escaped one such as '\''
+            j = src.find("'", i + 3) + 1
+            out.append("' '")
+        elif c == '"':
+            triple = src.startswith('"""', i)
+            interpolated = i > 0 and (src[i - 1].isalnum() or src[i - 1] == "_")
+            j = i + (3 if triple else 1)
+            body = []
+            while j < n:
+                if triple and src.startswith('"""', j):
+                    while src.startswith('""""', j):  # a closing run ends with its last three
+                        j += 1
+                    j += 3
+                    break
+                if not triple and src[j] in '"\n':
+                    j += 1
+                    break
+                if not triple and src[j] == "\\":
+                    j += 2
+                elif interpolated and src.startswith("${", j):
+                    depth, k = 1, j + 2
+                    while k < n and depth:
+                        depth += {"{": 1, "}": -1}.get(src[k], 0)
+                        k += 1
+                    body.append("\n".join(strip_comments(src[j + 2:k - 1])))
+                    j = k
+                else:
+                    if src[j] == "\n":
+                        body.append("\n")
+                    j += 1
+            out.append('"' + " ".join(body) + '"')
+        else:
+            out.append(c)
+            j = i + 1
+        i = j
+    return "".join(out).split("\n")
 
 
 def offsets(ls):
