@@ -30,7 +30,7 @@ object ParquetLayout {
 
   /** Spark's listing rule: names starting with `_` (unless they hold a
     * `key=value` pair) or `.`, and in-flight copies, are not table data. */
-  private def hidden(name: String): Boolean =
+  private[io] def hidden(name: String): Boolean =
     (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
       name.endsWith("._COPYING_")
 

@@ -18,11 +18,14 @@ import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructTyp
   *    prunes it to the buckets it needs. Builds and compactions replace it
   *    whole ([[rewrite]]), written beside it and swapped in.
   *  - The run tier (`dir/_runs/`, hidden from Spark's reader) is where every
-  *    append lands ([[appendRun]]): one directory per append holding one
-  *    file per write task, sorted by the same key, with no bucket exchange.
-  *    A bucket-partitioned append wrote one small file per bucket instead:
-  *    64 per layout per append, ~30 ms each, and the base grew by that many
-  *    files per delta.
+  *    append lands ([[appendRun]]): one directory per append, named by its
+  *    caller, holding one file per write task, sorted by the same key, with
+  *    no bucket exchange. A bucket-partitioned append wrote one small file
+  *    per bucket instead: 64 per layout per append, ~30 ms each, and the
+  *    base grew by that many files per delta. A run is written under a
+  *    hidden name and renamed into place, so a committed run is whole and
+  *    an append of a name already committed writes nothing: appends are
+  *    exactly-once, and no reader repairs duplicate rows.
   *
   * A read ([[read]]) takes the runs next to the bucket-pruned base. An
   * append that would take the tier past the layout's bucket count in runs
@@ -65,14 +68,18 @@ final case class TieredLayout(dir: String, bucketCol: String, sortCol: String) {
       .filter(_.startsWith(prefix)).map(_.stripPrefix(prefix).toInt).toSet
   }
 
-  /** The run tier's directories with their data files, listed on the
-    * driver; a run whose write never committed holds none. */
+  /** The run tier's committed directories with their data files, listed
+    * on the driver: a run still under its hidden write name
+    * ([[appendRun]]) is not listed, nor a legacy run (`run-<millis>-<id>`,
+    * written in place) whose write never finished, which holds no data
+    * file. */
   def runs(spark: SparkSession): Seq[(Path, Array[FileStatus])] = {
     val f = fs(spark)
     val root = f.makeQualified(new Path(dir, RunsDir))
     if (!f.exists(root)) Nil
-    else f.listStatus(root).toSeq.filter(_.isDirectory).map(d =>
-      d.getPath -> ParquetLayout.walk(f, d.getPath).toArray).filter(_._2.nonEmpty)
+    else f.listStatus(root).toSeq
+      .filter(d => d.isDirectory && !ParquetLayout.hidden(d.getPath.getName))
+      .map(d => d.getPath -> ParquetLayout.walk(f, d.getPath).toArray).filter(_._2.nonEmpty)
   }
 
   /** The layout's rows as `schema` (which names `bucketCol`, an int), after
@@ -121,21 +128,37 @@ final case class TieredLayout(dir: String, bucketCol: String, sortCol: String) {
         StructField(bucketCol, IntegerType)))
   }
 
-  /** Appends `rows` (which carry `bucketCol`) as a new run: each write task
-    * sorts its rows by (`bucketCol`, `sortCol`) and writes one file, with
-    * no exchange. A tier already holding `numBuckets` runs is first folded
-    * into the base ([[fold]], reading the runs as `schema`, the layout's
-    * own read schema, evaluated only for a fold: `rows` may be narrower
-    * than rows appended earlier). Returns the rows written (counted on the
-    * write job) and the run's path. */
-  def appendRun(rows: DataFrame, numBuckets: Int, schema: => StructType): (Long, String) = {
+  /** Appends `rows` (which carry `bucketCol`) as the run `name`, exactly
+    * once. Each write task sorts its rows by (`bucketCol`, `sortCol`) and
+    * writes one file, with no exchange, under the hidden `_runs/_tmp_<name>`
+    * (a killed write's leftover there is deleted first); the rename to
+    * `_runs/<name>` commits the run. An append whose run is already
+    * committed writes nothing and returns that run's row count, from its
+    * footers; a run a fold has since moved into the base is gone from the
+    * tier, so a redelivery after that fold appends again (a compaction
+    * removes the duplicate rows). A tier already holding `numBuckets` runs
+    * is first folded into the base ([[fold]], reading the runs as
+    * `schema`, the layout's own read schema, evaluated only for a fold:
+    * `rows` may be narrower than rows appended earlier). Returns the run's
+    * rows (counted on the write job) and its path. */
+  def appendRun(rows: DataFrame, name: String, numBuckets: Int,
+      schema: => StructType): (Long, String) = {
+    require(name.nonEmpty && !name.contains("/") && !ParquetLayout.hidden(name),
+      s"a run name must be a visible file name: '$name'")
     val spark = rows.sparkSession
-    if (runs(spark).size >= numBuckets) fold(spark, schema, numBuckets)
-    val run = s"$dir/$RunsDir/run-${System.currentTimeMillis()}-" +
-      java.util.UUID.randomUUID().toString.take(8)
-    val n = countingWrite(rows.sortWithinPartitions(bucketCol, sortCol))(
-      _.write.mode("errorifexists").parquet(run))
-    (n, run)
+    val f = fs(spark)
+    val run = f.makeQualified(new Path(new Path(dir, RunsDir), name))
+    if (f.exists(run))
+      (ParquetLayout.rowCount(spark.sparkContext.hadoopConfiguration, run), run.toString)
+    else {
+      if (runs(spark).size >= numBuckets) fold(spark, schema, numBuckets)
+      val tmp = new Path(run.getParent, s"_tmp_$name")
+      f.delete(tmp, true)
+      val n = countingWrite(rows.sortWithinPartitions(bucketCol, sortCol))(
+        _.write.mode("errorifexists").parquet(tmp.toString))
+      require(f.rename(tmp, run), s"run commit failed: could not rename $tmp to $run")
+      (n, run.toString)
+    }
   }
 
   /** Folds the run tier into the base: [[writeFold]], then [[finishFold]]. */

@@ -626,31 +626,31 @@ object Dedup {
   }
 
   /** Append `docs`' signatures to an existing index (call AFTER delta-dedup
-    * decided which delta docs survive — append the KEPT ones). Uses the
-    * index's own stored params, so an append can never fork the signature
-    * construction. Each layout gets one run: the signatures in `docs`' own
-    * partitions (no spread: a delta-sized append is one task, and a
-    * stage-written input already carries data-sized partitions), then the
-    * band rows derived from that run's files — one signature pass, no
-    * checkpoint, two jobs. A layout whose run tier holds `numBuckets` runs
-    * is folded into its base first. */
-  def minhashIndexAppend(
-      docs: DataFrame, idCol: String, textCol: String, indexDir: String): Unit = {
+    * decided which delta docs survive — append the KEPT ones) as the run
+    * `runName` of each layout, exactly once
+    * ([[graft.io.TieredLayout.appendRun]]): a redelivered append whose runs
+    * are committed writes nothing. Uses the index's own stored params, so an
+    * append can never fork the signature construction. Each layout gets one
+    * run: the signatures in `docs`' own partitions (no spread: a delta-sized
+    * append is one task, and a stage-written input already carries
+    * data-sized partitions), then the band rows derived from that run's
+    * files — one signature pass, no checkpoint, two jobs. A layout whose run
+    * tier holds `numBuckets` runs is folded into its base first. */
+  def minhashIndexAppend(docs: DataFrame, idCol: String, textCol: String, indexDir: String,
+      runName: String): Unit = {
     val spark = docs.sparkSession
     recoverIndex(spark, indexDir)
     val (p, idType) = loadIndexMeta(spark, indexDir)
     val (sigs, bands) = (sigsLayout(indexDir), bandsLayout(indexDir))
-    // sigs first, bands second: a kill in between leaves sig rows no band
-    // row references — they are simply never found as candidates (bounded
-    // under-dedup for ONE delta, healed when the at-least-once redelivery
-    // re-appends; duplicate rows are collapsed at the delta's sig fetch
-    // and compaction restores exactly-one on disk)
+    // sigs first, bands second, the band run derived from the committed sig
+    // run: a kill in between heals on redelivery (the sig run is found
+    // committed, the band run is written from it)
     // ids as the index's own type: `id_bucket` hashes the id's bytes, so an
     // Int id appended to a Long index would land in a bucket its Long
     // lookup never reads
     val (n, run) = sigs.appendRun(sigsRows(sigProjection(docs, idCol, textCol, p)
-      .withColumn("id", col("id").cast(idType)), p), p.numBuckets, sigsSchema(idType))
-    bands.appendRun(bandsRows(sigs.readRun(spark, run, sigsSchema(idType)), p),
+      .withColumn("id", col("id").cast(idType)), p), runName, p.numBuckets, sigsSchema(idType))
+    bands.appendRun(bandsRows(sigs.readRun(spark, run, sigsSchema(idType)), p), runName,
       p.numBuckets, bandsSchema(idType))
     IndexVersions.record(spark, indexDir,
       IndexVersions.epoch(spark, indexDir), "append", n)
@@ -684,9 +684,10 @@ object Dedup {
     // compact exists to prevent); the reverse order would leave stale BAND
     // rows whose candidates then silently drop at the sig join — also safe,
     // but this order keeps the dangerous direction impossible by design
-    // dropDuplicates doubles as the REPAIR path for a crashed append that was
-    // redelivered (at-least-once appends can leave duplicate rows per id —
-    // harmless for dedup decisions, but compaction restores exactly-one)
+    // the rewrite keeps one row per id (and band): it repairs the duplicates
+    // of an append redelivered after a fold had moved its first run into
+    // the base, and those of work dirs written before appends were
+    // exactly-once
     bands.rewrite(bands.read(spark, bandsSchema(idType), None)
       .join(keep, Seq("id"), "left_semi").dropDuplicates("id", "band_idx"), p.numBuckets)
     val nSigs = sigs.rewrite(sigs.read(spark, sigsSchema(idType), None)
@@ -752,18 +753,18 @@ object Dedup {
     *
     * Runs the one lexical delta body ([[lexDeltaPairs]]) with `oldSigs` as
     * the old side: its band rows are derived on the fly and semi-joined
-    * against the delta's bucket keys (broadcast when `broadcastNewKeys`), its
-    * signatures are semi-joined against the candidates' old ids. The old
-    * corpus text is never read. */
+    * against the delta's broadcast bucket keys, its signatures are
+    * semi-joined against the candidates' old ids. The old corpus text is
+    * never read. */
   def deltaNearDupsAudited(
       newDocs: DataFrame, idCol: String, textCol: String, oldSigs: DataFrame,
       p: MinhashIndexParams = MinhashIndexParams(), threshold: Double = 0.8,
-      maxBucket: Int = DefaultMaxBucket, broadcastNewKeys: Boolean = true): AuditedPairs =
+      maxBucket: Int = DefaultMaxBucket): AuditedPairs =
     // no stage checkpoints: the returned plan keeps the whole lineage
     // (PlanSpec pins the old-band broadcast semi-join in it), and each
     // consumer re-derives the candidate frame — the persisted index is the
     // path that stages
-    lexDeltaPairs(newDocs, idCol, textCol, p, threshold, maxBucket, broadcastNewKeys,
+    lexDeltaPairs(newDocs, idCol, textCol, p, threshold, maxBucket,
       oldBands = _ => bandRows(oldSigs, p), oldSigsOf = _ => oldSigs, stage = identity)
 
   /** [[deltaNearDupsAudited]]'s pairs. Kept as a plain entry point because
@@ -771,9 +772,8 @@ object Dedup {
   def deltaNearDups(
       newDocs: DataFrame, idCol: String, textCol: String, oldSigs: DataFrame,
       p: MinhashIndexParams = MinhashIndexParams(), threshold: Double = 0.8,
-      maxBucket: Int = DefaultMaxBucket, broadcastNewKeys: Boolean = true): DataFrame =
-    deltaNearDupsAudited(newDocs, idCol, textCol, oldSigs, p, threshold, maxBucket,
-      broadcastNewKeys).pairs
+      maxBucket: Int = DefaultMaxBucket): DataFrame =
+    deltaNearDupsAudited(newDocs, idCol, textCol, oldSigs, p, threshold, maxBucket).pairs
 
   /** The delta documents that SURVIVE dedup against the indexed corpus:
     * old documents always win (a new doc near an old one is dropped); among
@@ -784,9 +784,9 @@ object Dedup {
   def deltaDedup(
       newDocs: DataFrame, idCol: String, textCol: String, oldSigs: DataFrame,
       p: MinhashIndexParams = MinhashIndexParams(), threshold: Double = 0.8,
-      maxBucket: Int = DefaultMaxBucket, broadcastNewKeys: Boolean = true): DataFrame =
+      maxBucket: Int = DefaultMaxBucket): DataFrame =
     deltaSurvivors(newDocs, idCol, deltaNearDupsAudited(newDocs, idCol, textCol, oldSigs,
-      p, threshold, maxBucket, broadcastNewKeys).pairs)
+      p, threshold, maxBucket).pairs)
 
   /** `newDocs` minus the losing new ids of its delta pair set (id_a, id_b,
     * a_is_new, b_is_new) — the one survivors tail of every delta dedup,
@@ -916,8 +916,7 @@ object Dedup {
     * (id_a, id_b, matches, a_is_new, b_is_new) rows by construction. */
   def deltaNearDupsIndexedAudited(
       newDocs: DataFrame, idCol: String, textCol: String, indexDir: String,
-      threshold: Double = 0.8, maxBucket: Int = DefaultMaxBucket,
-      broadcastNewKeys: Boolean = true, eagerCheckpoints: Boolean = true): AuditedPairs = {
+      threshold: Double = 0.8, maxBucket: Int = DefaultMaxBucket): AuditedPairs = {
     val spark = newDocs.sparkSession
     recoverIndex(spark, indexDir)
     val (p, idType) = loadIndexMeta(spark, indexDir)
@@ -927,17 +926,12 @@ object Dedup {
     // needs
     def pruned(layout: TieredLayout, schema: StructType, keys: DataFrame): DataFrame =
       layout.read(spark, schema, Some(distinctInts(keys)), wholeRuns = true)
-    // `eagerCheckpoints = false` is a PLAN-INSPECTION seam: checkpoints
-    // truncate lineage to ExistingRDD leaves, hiding the partition-pruned
-    // parquet scans from the final executed plan — tests disable them to pin
-    // PartitionFilters, at the cost of re-executing the candidate scan per
-    // downstream consumer. Leave true in production.
-    lexDeltaPairs(newDocs, idCol, textCol, p, threshold, maxBucket, broadcastNewKeys,
+    lexDeltaPairs(newDocs, idCol, textCol, p, threshold, maxBucket,
       oldBands = nb => pruned(bandsLayout(indexDir), bandsSchema(idType),
         nb.select(bandBucket(p))),
       oldSigsOf = ids => pruned(sigsLayout(indexDir), sigsSchema(idType),
         ids.select(idBucket(p))),
-      stage = df => if (eagerCheckpoints) df.localCheckpoint(true) else df)
+      stage = _.localCheckpoint(true))
   }
 
   /** The distinct values of `keys`' one int column (bucket or cell ids) on
@@ -954,30 +948,25 @@ object Dedup {
     * because `graft.Bench`'s frozen timed regions call it. */
   def deltaNearDupsIndexed(
       newDocs: DataFrame, idCol: String, textCol: String, indexDir: String,
-      threshold: Double = 0.8, maxBucket: Int = DefaultMaxBucket,
-      broadcastNewKeys: Boolean = true): DataFrame =
-    deltaNearDupsIndexedAudited(newDocs, idCol, textCol, indexDir, threshold,
-      maxBucket, broadcastNewKeys).pairs
+      threshold: Double = 0.8, maxBucket: Int = DefaultMaxBucket): DataFrame =
+    deltaNearDupsIndexedAudited(newDocs, idCol, textCol, indexDir, threshold, maxBucket).pairs
 
   /** [[deltaDedup]] against a PERSISTED index directory, via the partition-
     * pruned [[deltaNearDupsIndexedAudited]] path (the old corpus's band rows
-    * are read, never recomputed). `broadcastNewKeys = false` for deltas too
-    * large to broadcast their bucket-key set (the prune becomes a shuffle
-    * semi-join). */
+    * are read, never recomputed). */
   def deltaDedupIndexed(
       newDocs: DataFrame, idCol: String, textCol: String, indexDir: String,
-      threshold: Double = 0.8, maxBucket: Int = DefaultMaxBucket,
-      broadcastNewKeys: Boolean = true): DataFrame =
+      threshold: Double = 0.8, maxBucket: Int = DefaultMaxBucket): DataFrame =
     deltaSurvivors(newDocs, idCol, deltaNearDupsIndexedAudited(newDocs, idCol, textCol,
-      indexDir, threshold, maxBucket, broadcastNewKeys).pairs)
+      indexDir, threshold, maxBucket).pairs)
 
   /** The one lexical delta body — candidate -> collapse -> verify. Callers
     * supply only where the OLD side's rows come from:
     *  - candidate: the delta's band rows meet the old band rows
     *    (`oldBands(newBands)`) that share one of its bucket keys — the key
-    *    prune is applied here, broadcast when `broadcastNewKeys` (the usual
-    *    case: |delta| x bands keys), so only old rows sharing a bucket with
-    *    the delta ever shuffle. Buckets are THIN (id, is_new): no signature
+    *    prune is applied here as a broadcast semi-join (|delta| x bands
+    *    keys), so only old rows sharing a bucket with the delta ever
+    *    shuffle. Buckets are THIN (id, is_new): no signature
     *    bytes ride the bucket shuffle. Buckets beyond `maxBucket` are
     *    excluded and counted in the audit ([[bucketPairs]]);
     *  - collapse: one row per (id_a, id_b). A resubmitted id makes the same
@@ -988,20 +977,19 @@ object Dedup {
     *    its flag names — the join keys on (id, is_new), so a resubmitted id's
     *    delta and index signatures never both join. Old signatures are
     *    fetched for the candidates' old ids only (`oldSigsOf(oldIds)`; the
-    *    id semi-join and the duplicate-row repair are applied here).
+    *    id semi-join is applied here).
     * `stage` marks the candidate and signature boundaries: each frame is a
     * tiny projection of an expensive scan, read by several consumers. */
   private def lexDeltaPairs(
       newDocs: DataFrame, idCol: String, textCol: String, p: MinhashIndexParams,
-      threshold: Double, maxBucket: Int, broadcastNewKeys: Boolean,
+      threshold: Double, maxBucket: Int,
       oldBands: DataFrame => DataFrame, oldSigsOf: DataFrame => DataFrame,
       stage: DataFrame => DataFrame): AuditedPairs = {
-    def bcast(df: DataFrame): DataFrame = if (broadcastNewKeys) broadcast(df) else df
     // tiny frame, read by the bucket keys, the banding union and the sig union
     val newSigs = minhashSignatures(newDocs, idCol, textCol, p).localCheckpoint(true)
     val newBands = bandRows(newSigs, p).withColumn("is_new", lit(true))
     // a semi-join's right side needs no distinct (a shuffle stage of its own)
-    val newKeys = bcast(newBands.select("band_idx", "band_hash"))
+    val newKeys = broadcast(newBands.select("band_idx", "band_hash"))
     val oldPruned = oldBands(newBands)
       .join(newKeys, Seq("band_idx", "band_hash"), "left_semi")
       .select(col("id"), lit(false).as("is_new"), col("band_idx"), col("band_hash"))
@@ -1011,12 +999,12 @@ object Dedup {
       .agg(sort_array(collect_list(struct(col("id"), col("is_new")))).as("xs"))
     val cand = bucketPairs(grouped, maxBucket)(
       _.filter(col("p.a.is_new") || col("p.b.is_new"))
-        // a resubmitted id never pairs with its own index entry — an
-        // at-least-once redelivery that recomputes this stage after its
-        // survivors were appended must keep those survivors, not drop every
-        // one as a dup of itself (same contract as the PQ path); a doc whose
-        // only duplicate link ran THROUGH a dropped non-survivor may re-keep
-        // — the conservative direction
+        // a resubmitted id never pairs with its own index entry — a
+        // redelivery that recomputes this stage after its survivors were
+        // appended must keep those survivors, not drop every one as a dup
+        // of itself (same contract as the PQ path); a doc whose only
+        // duplicate link ran THROUGH a dropped non-survivor may re-keep —
+        // the conservative direction
         .filter(col("p.a.id") =!= col("p.b.id"))
         .select(col("p.a.id").as("id_a"), col("p.a.is_new").as("a_is_new"),
           col("p.b.id").as("id_b"), col("p.b.is_new").as("b_is_new"))
@@ -1028,13 +1016,7 @@ object Dedup {
     val oldIds = candPairs.filter(!col("a_is_new")).select(col("id_a").as("id"))
       .unionAll(candPairs.filter(!col("b_is_new")).select(col("id_b").as("id")))
     val oldSigsNeeded = oldSigsOf(oldIds)
-      // same escape hatch as the bucket-key prune: a delta too large to
-      // broadcast its keys has a candidate old-id set of similar magnitude
-      .join(bcast(oldIds), Seq("id"), "left_semi")
-      // duplicate sig rows per id (a crashed-then-redelivered append) are
-      // collapsed HERE, the smallest frame, or each would re-expand every
-      // candidate pair after the sig join
-      .dropDuplicates("id")
+      .join(broadcast(oldIds), Seq("id"), "left_semi")
       .select(col("id"), col("sig"))
     val sigOf = stage(newSigs.select(col("id"), lit(true).as("is_new"), col("sig"))
       .unionAll(oldSigsNeeded.select(col("id"), lit(false).as("is_new"), col("sig"))))

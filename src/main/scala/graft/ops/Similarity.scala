@@ -710,9 +710,9 @@ object Similarity {
       maxCell)(
       _.filter(col("p.a.is_new") || col("p.b.is_new"))
         // a resubmitted id never pairs with its own index entry (cosine 1
-        // with itself) — an at-least-once redelivery that recomputes after
-        // its survivors were appended must keep those survivors, not drop
-        // every one as a dup of itself (same contract as the PQ path)
+        // with itself) — a redelivery that recomputes its stage after its
+        // survivors were appended must keep those survivors, not drop every
+        // one as a dup of itself (same contract as the PQ path)
         .filter(col("p.a.id") =!= col("p.b.id"))
         .filter(cosine(col("p.a.emb"), col("p.b.emb")) >= threshold)
         .select(col("p.a.id").as("id_a"), col("p.b.id").as("id_b"),
@@ -780,37 +780,24 @@ object Similarity {
   def semanticDeltaPairsPqIndexed(
       newDf: DataFrame, idCol: String, embCol: String, indexDir: String,
       threshold: Double, maxCell: Int = Dedup.DefaultMaxBucket,
-      adcMargin: Double = 0.2, maxRefineIds: Int = 1 << 14,
-      // PLAN-INSPECTION seam (same contract as deltaNearDupsIndexedAudited):
-      // checkpoints truncate lineage to ExistingRDD leaves, hiding the
-      // candidate scan from executedPlan — tests disable them to pin the
-      // codes-only ReadSchema; production keeps them (frames are tiny
-      // projections of expensive scans, each read by several consumers)
-      eagerCheckpoints: Boolean = true): AuditedPairs = {
-    def cp(df: DataFrame): DataFrame =
-      if (eagerCheckpoints) df.localCheckpoint(true) else df
+      adcMargin: Double = 0.2, maxRefineIds: Int = 1 << 14): AuditedPairs = {
     val spark = newDf.sparkSession
     val (centroids, codebooks) = ivfPqLoadIndex(spark, indexDir)
-    // one checkpoint read by the cell collect, the candidate join, the
-    // refine, and the within-delta pairs
-    val newAssigned = cp(pqAssign(newDf, idCol, embCol, centroids, codebooks))
+    // checkpoints: each frame is a tiny projection of an expensive scan,
+    // read by several consumers. This one is read by the cell collect, the
+    // candidate join, the refine, and the within-delta pairs
+    val newAssigned = pqAssign(newDf, idCol, embCol, centroids, codebooks).localCheckpoint(true)
     val cells = touchedCells(newAssigned, indexDir)
-    // dropDuplicates("id"): repair-at-read for duplicate rows a
-    // crashed-then-redelivered append left (the lexical indexed path's
-    // convention) — duplicates would emit duplicate pairs and inflate the
-    // maxCell audit until the next compaction
-    def touched(cols: Column*): DataFrame = cells.select(cols: _*).dropDuplicates("id")
-    pqDeltaPairs(newAssigned, touched(col("id"), col("codes"), col("cell")),
+    pqDeltaPairs(newAssigned, cells.select(col("id"), col("codes"), col("cell")),
       candIds => {
-        val oldEmb = touched(col("id"), col("emb"))
-          .select(col("id").as("id_old"), col("emb").as("emb_old"))
+        val oldEmb = cells.select(col("id").as("id_old"), col("emb").as("emb_old"))
         // one capped collect decides: literal pushdown (row-group skipping)
         // when the id set is small, a distributed semi-join above the cap
         val ids = candIds.limit(maxRefineIds + 1).collect()
         if (ids.length <= maxRefineIds) oldEmb.filter(col("id_old").isin(ids.map(_.get(0)): _*))
         else oldEmb.join(candIds, Seq("id_old"), "left_semi")
       },
-      threshold, maxCell, adcMargin, cp)
+      threshold, maxCell, adcMargin, _.localCheckpoint(true))
   }
 
   /** In-memory twin of [[semanticDeltaPairsPqIndexed]] — the same
@@ -912,9 +899,11 @@ object Similarity {
 
   /** Append vectors to a persisted IVF index in the index's own format,
     * assigned (and, for IVF-PQ, encoded) with its STORED quantizers, so an
-    * append can never fork them; as one run. */
+    * append can never fork them; as the run `runName`, exactly once
+    * ([[graft.io.TieredLayout.appendRun]]: a redelivered append whose run
+    * is committed writes nothing). */
   def ivfIndexAppend(
-      df: DataFrame, idCol: String, embCol: String, indexDir: String): Unit = {
+      df: DataFrame, idCol: String, embCol: String, indexDir: String, runName: String): Unit = {
     val spark = df.sparkSession
     val centroids = ivfLoadCentroids(spark, indexDir)
     val rows = indexRows(df, idCol, embCol, centroids, codebooksOf(spark, indexDir))
@@ -922,7 +911,7 @@ object Similarity {
     layout.recover(spark)
     // a fold reads the runs as the layout's own schema (a base footer's),
     // which may be wider than `rows`
-    val (n, _) = layout.appendRun(rows, centroids.size,
+    val (n, _) = layout.appendRun(rows, runName, centroids.size,
       layout.dataSchema(spark).getOrElse(rows.schema))
     IndexVersions.record(spark, indexDir,
       IndexVersions.epoch(spark, indexDir), "append", n)
@@ -945,7 +934,7 @@ object Similarity {
       s"compaction epoch $target would regress the index at $indexDir (currently $cur)")
     val n = cellsLayout(indexDir).rewrite(
       cells.join(keepIds.select(col(idCol).as("id")), Seq("id"), "left_semi")
-        .dropDuplicates("id"), // repair duplicate rows a redelivered append left
+        .dropDuplicates("id"), // an append redelivered after a fold, or an older work dir
       ivfLoadCentroids(spark, indexDir).size)
     IndexVersions.record(spark, indexDir, target, "compact", n)
   }

@@ -347,15 +347,21 @@ object TrainingPipeline {
     * one file for a small one), and every piece of tiny metadata — stage
     * commit records, index params and quantizers, lifecycle events, the
     * corpus epoch — is a driver-written file, so a delta's Spark jobs are
-    * the ones its data needs. A kill
-    * mid-stage resumes from the last committed stage; the appends are
-    * EFFECT stages — a kill between an append's write and its commit can
-    * redeliver it, leaving duplicate index rows (harmless for dedup
-    * decisions — duplicate candidates collapse — and repaired by the next
-    * index compaction). Submitting a byte-identical delta again REPLAYS its
-    * committed result without touching the indexes (exactly-once processing
-    * per distinct snapshot content); replay is only valid until a LATER
-    * delta commits, the same monotone discipline as the checkpoint runner.
+    * the ones its data needs. A kill mid-stage resumes from the last
+    * committed stage. The appends are EFFECT stages, exactly-once per
+    * stage: each writes its index run under the stage's name
+    * (`delta_<tag>_mhappend`, `delta_<tag>_semappend`) and commits it by
+    * rename, so a kill between an append's write and its stage commit
+    * redelivers an append that finds its run committed and writes nothing.
+    * Only a late redelivery, after a later delta's append folded the run
+    * into the index base, appends the rows again; the next index
+    * compaction removes those duplicates. The run is named by the stage,
+    * not by its survivors: a delta resubmitted under other dedup parameters
+    * keeps its first append. Submitting a byte-identical delta again
+    * REPLAYS its committed result without touching the indexes
+    * (exactly-once processing per distinct snapshot content); replay is
+    * only valid until a LATER delta commits, the same monotone discipline
+    * as the checkpoint runner.
     *
     * `deletions` (ids withdrawn from the corpus) COMPACT both indexes before
     * the delta is processed, so a new near-copy of a deleted document can
@@ -519,7 +525,7 @@ object TrainingPipeline {
     //    quality fate — appending post-quality would let a near-copy of a
     //    low-quality keeper survive where the batch pipeline drops it)
     stage(sname("mhappend"), lexKey) {
-      Dedup.minhashIndexAppend(lexKept, idCol, textCol, mhDir)
+      Dedup.minhashIndexAppend(lexKept, idCol, textCol, mhDir, sname("mhappend"))
       Map("n_appended" -> lexC("n_keep"))
     }
 
@@ -574,7 +580,7 @@ object TrainingPipeline {
         }
         val semKept = withIds(kept, semDir, keep = true)
         stage(sname("semappend"), semKey) {
-          Similarity.ivfIndexAppend(semKept, idCol, ec, ivfDir)
+          Similarity.ivfIndexAppend(semKept, idCol, ec, ivfDir, sname("semappend"))
           Map("n_appended" -> semC("n_sem_keep"))
         }
         (semKept, semC("n_sem_keep"))

@@ -1,7 +1,6 @@
 package graft.suite
 
 import graft.dsl._
-import graft.run.{ValidationResult, Validator}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -89,34 +88,4 @@ object CodeTable {
       FieldSpec("sha_fixture", FString(), virtual = true)),
     keyColumns = Seq("repo", "path"),
     bindings = Map.empty)
-
-  /** E2E suite result: row violations + table-scope check outputs. */
-  case class SuiteResult(
-      rowResult: ValidationResult,
-      profile: DataFrame,
-      uniquenessViolations: DataFrame,
-      referentialViolations: DataFrame,
-      drift: Checks.DriftReport)
-
-  /** One full constraint-suite pass (north_star): row rules (single narrow
-    * pass) + profiling + uniqueness + referential + drift. */
-  def runSuite(
-      df: DataFrame,
-      dim: DataFrame,
-      baseline: DataFrame,
-      broadcastDim: Boolean = true,
-      saltBuckets: Int = 0): SuiteResult = {
-    val withFixture = df.withColumn("sha_fixture", col("content_sha256"))
-    val row = Validator.validate(codeSchema, withFixture, Map.empty)
-    SuiteResult(
-      rowResult = row,
-      profile = Checks.profile(df, Seq("repo", "path", "commit", "lang", "content")),
-      uniquenessViolations = Checks.uniquenessViolations(df, Seq("repo", "path", "commit")),
-      referentialViolations = Checks.referentialViolations(
-        df, Seq("repo", "commit"), dim, Seq("repo", "commit"),
-        broadcastDim = broadcastDim, saltBuckets = saltBuckets,
-        keyCols = Seq("repo", "path")),
-      drift = Checks.driftCheck(
-        df, baseline, "lang", length(col("content")), 0, 600, buckets = 64))
-  }
 }

@@ -22,7 +22,7 @@ class MetadataSpec extends SparkSpec {
   /** Spark jobs of the budget test's delta (local[4], 4 shuffle partitions):
     * its survivors resolve on the driver, and its index reads and stage id
     * sets run no job. */
-  private val DeltaJobBudget = 38
+  private val DeltaJobBudget = 37
 
   /** Spark jobs of the budget test's first delta, which also trains the
     * IVF quantizer and builds both indexes empty (an empty build runs no
@@ -235,9 +235,9 @@ class MetadataSpec extends SparkSpec {
     val tasks = 3
     // `tasks` write tasks per append: an explicit partition count AQE keeps
     Dedup.minhashIndexAppend((301L to 360L).map(doc).toDF("doc_id", "text").repartition(tasks),
-      "doc_id", "text", s"$w/mh")
+      "doc_id", "text", s"$w/mh", "a1")
     Similarity.ivfIndexAppend((41 to 70).map(i => (i.toLong, Seq(1f, (i % 4).toFloat, 0f)))
-      .toDF("id", "emb").repartition(tasks), "id", "emb", s"$w/ivf")
+      .toDF("id", "emb").repartition(tasks), "id", "emb", s"$w/ivf", "a1")
     layouts.foreach { d =>
       val added = files(d) -- before(d)
       assert(added.nonEmpty && added.size <= tasks, s"$d: ${added.size} files for $tasks tasks")
@@ -256,7 +256,8 @@ class MetadataSpec extends SparkSpec {
       graft.io.TieredLayout(s"$w/mh/bands", "band_bucket", "band_hash"))
     var folded = false
     for (k <- 1 to 3 * p.numBuckets) {
-      Dedup.minhashIndexAppend(delta(100L + 2 * k, 101L + 2 * k), "doc_id", "text", s"$w/mh")
+      Dedup.minhashIndexAppend(delta(100L + 2 * k, 101L + 2 * k), "doc_id", "text", s"$w/mh",
+        s"a$k")
       layouts.foreach { l =>
         val tier = l.runs(spark).size
         assert(tier <= p.numBuckets, s"${l.dir}: $tier runs after append $k")
@@ -271,6 +272,66 @@ class MetadataSpec extends SparkSpec {
       .pairs.select("id_a").as[Long].collect().toSeq === Seq(110L))
   }
 
+  test("a redelivered index append writes nothing: lost append records, a lost band run, a killed write's hidden run") {
+    def text(i: Long, extra: String = "") = (1 to 30).map(t => s"r${i}_$t").mkString(" ") + extra
+    def emb(c: Long): Seq[Double] = Seq.tabulate(16) { j =>
+      (scala.util.hashing.MurmurHash3.productHash((c, j)) % 19 - 9).toDouble
+    }
+    def docs(rows: Seq[(Long, String)]) =
+      rows.map { case (i, t) => (i, t, emb(i)) }.toDF("doc_id", "text", "emb")
+    val w = tmp()
+    def go(d: DataFrame) = TrainingPipeline.runDelta(d, "doc_id", "text", w,
+      embCol = Some("emb"), minhashThreshold = 0.8, semanticThreshold = 0.99, numCells = 4,
+      ivfIters = 2, ivfSampleSize = 16)
+    go(docs((1L to 20L).map(i => i -> text(i))))
+    val next = docs((101L to 110L).map(i => i -> text(i)) :+ (121L -> text(3, " xq1 xq2")))
+    val r = go(next)
+    assert(r.report.nearDups === 1 && r.report.output === 10L, r.report.toString)
+    val bands = graft.io.TieredLayout(s"$w/mhidx/bands", "band_bucket", "band_hash")
+    val bandsSchema = org.apache.spark.sql.types.StructType.fromDDL(
+      "id BIGINT, band_idx INT, band_hash BIGINT, band_bucket INT")
+    // (sig rows, distinct sig ids, band rows, IVF rows)
+    def counts() = {
+      val sigs = Dedup.minhashIndexLoad(spark, s"$w/mhidx")._1
+      (sigs.count(), sigs.select("id").distinct().count(),
+        bands.read(spark, bandsSchema, None).count(), Similarity.ivfIndexLoad(spark, s"$w/ivfidx").count())
+    }
+    val clean = counts()
+    assert(clean._1 === clean._2)
+    val run = s"delta_${r.tag}_mhappend"
+    def forget(stages: String*): Unit =
+      stages.foreach(n => assert(fs.delete(new Path(s"$w/_meta/delta_${r.tag}_$n"), true), n))
+    def recomputed(res: graft.ops.DeltaPipelineResult) =
+      res.stages.filterNot(_.loaded).map(_.name.split("_").last).toSet
+
+    // both append records lost after their runs committed: the resubmission
+    // recomputes both appends, which find their runs and write nothing
+    forget("mhappend", "semappend")
+    assert(recomputed(go(next)) === Set("mhappend", "semappend"))
+    assert(counts() === clean)
+
+    // a kill between the sig run and the band run: the band rows come back
+    // once, derived from the committed sig run, and the sig rows do not double
+    assert(fs.delete(new Path(s"$w/mhidx/bands/_runs/$run"), true))
+    forget("mhappend")
+    assert(counts()._3 === clean._3 - 10L * Dedup.MinhashIndexParams().bands)
+    assert(recomputed(go(next)) === Set("mhappend"))
+    assert(counts() === clean)
+
+    // a write killed before its rename left the sig run under its hidden
+    // name: it is not read, and the redelivered append commits the run
+    val sigRuns = new Path(s"$w/mhidx/sigs/_runs")
+    assert(fs.rename(new Path(sigRuns, run), new Path(sigRuns, s"_tmp_$run")))
+    assert(fs.delete(new Path(s"$w/mhidx/bands/_runs/$run"), true))
+    forget("mhappend")
+    assert(counts()._1 === clean._1 - 10L)
+    assert(!graft.io.TieredLayout(s"$w/mhidx/sigs", "id_bucket", "id").runs(spark)
+      .exists(_._1.getName.contains(run)))
+    assert(recomputed(go(next)) === Set("mhappend"))
+    assert(counts() === clean)
+    assert(!fs.exists(new Path(sigRuns, s"_tmp_$run")))
+  }
+
   test("a fold reads the runs as the index's own types: Int ids and float vectors folded into Long and double indexes") {
     val w = tmp()
     val p = Dedup.MinhashIndexParams(numHashes = 32, bands = 8, numBuckets = 4)
@@ -282,9 +343,9 @@ class MetadataSpec extends SparkSpec {
     // narrower runs (written by the earlier appends) into the base
     for (k <- 1 to p.numBuckets + 1) {
       Dedup.minhashIndexAppend(Seq(doc(100L + k)).map { case (i, t) => (i.toInt, t) }
-        .toDF("doc_id", "text"), "doc_id", "text", s"$w/mh")
+        .toDF("doc_id", "text"), "doc_id", "text", s"$w/mh", s"a$k")
       Similarity.ivfIndexAppend(Seq((100 + k, Seq(1f, (k % 2).toFloat, 0f))).toDF("id", "emb"),
-        "id", "emb", s"$w/ivf")
+        "id", "emb", s"$w/ivf", s"a$k")
     }
     val sigs = Dedup.minhashIndexLoad(spark, s"$w/mh")._1
     assert(sigs.schema("id").dataType === org.apache.spark.sql.types.LongType)

@@ -385,7 +385,8 @@ class OpsSpec extends SparkSpec {
       threshold = 0.9).select("vec_id").as[Long].collect().toSet
     assert(kept === Set(950L))
     // survivors append into their cell partitions; next delta sees them
-    Similarity.ivfIndexAppend(twins.filter($"vec_id" === 950L), "vec_id", "embedding", idx)
+    Similarity.ivfIndexAppend(twins.filter($"vec_id" === 950L), "vec_id", "embedding", idx,
+      "survivors")
     val kept2 = Similarity.semanticDeltaDedupIndexed(
       Seq((960L, synth)).toDF("vec_id", "embedding"), "vec_id", "embedding", idx,
       threshold = 0.9).select("vec_id").as[Long].collect().toSet
@@ -442,7 +443,8 @@ class OpsSpec extends SparkSpec {
       .select("vec_id").as[Long].collect().toSet
     assert(kept === Set(950L))
     // survivors append as codes (stored quantizers); the next twin loses to 950
-    Similarity.ivfIndexAppend(twins.filter($"vec_id" === 950L), "vec_id", "embedding", idx)
+    Similarity.ivfIndexAppend(twins.filter($"vec_id" === 950L), "vec_id", "embedding", idx,
+      "survivors")
     val kept2 = Similarity.semanticDeltaDedupIndexed(
       Seq((960L, synth)).toDF("vec_id", "embedding"), "vec_id", "embedding", idx,
       threshold = 0.9, adcMargin = 0.55)
@@ -465,7 +467,7 @@ class OpsSpec extends SparkSpec {
     assert(kept1.nonEmpty && kept1.size < delta.count())
     Dedup.minhashIndexAppend(
       delta.join(kept1.toSeq.toDF("doc_id"), Seq("doc_id"), "left_semi"),
-      "doc_id", "text", idx)
+      "doc_id", "text", idx, "survivors")
     assert(lexKept() === kept1)
     // semantic twin: identical replay contract over the IVF cell index, raw
     // and PQ. The delta also holds a new-only twin pair (3 and its copy
@@ -488,7 +490,7 @@ class OpsSpec extends SparkSpec {
       assert(!sem1.contains(7005L) && !sem1.contains(8003L) && sem1.contains(3L), sem1)
       Similarity.ivfIndexAppend(
         eDelta.join(sem1.toSeq.toDF("vec_id"), Seq("vec_id"), "left_semi"),
-        "vec_id", "embedding", ivf)
+        "vec_id", "embedding", ivf, "survivors")
       assert(semKept() === sem1, s"PQ index: ${books.isDefined}")
     }
   }
@@ -503,7 +505,7 @@ class OpsSpec extends SparkSpec {
     val pq = java.nio.file.Files.createTempDirectory("graft-fmt-pq").toString
     Similarity.ivfBuildIndexWith(old, "vec_id", "embedding", raw, cents)
     Similarity.ivfBuildIndexWith(old, "vec_id", "embedding", pq, cents, Some(books))
-    Seq(raw, pq).foreach(Similarity.ivfIndexAppend(added, "vec_id", "embedding", _))
+    Seq(raw, pq).foreach(Similarity.ivfIndexAppend(added, "vec_id", "embedding", _, "added"))
     // the raw append's run files carry no codes column
     val runSchema = graft.io.ParquetLayout.footerSchema(spark.sparkContext.hadoopConfiguration,
       new org.apache.hadoop.fs.Path(s"$raw/cells/${graft.io.TieredLayout.RunsDir}"))
@@ -1314,7 +1316,7 @@ class OpsSpec extends SparkSpec {
     // append survivors; the index now covers corpus + kept delta
     val before = loadedSigs.count()
     Dedup.minhashIndexAppend(delta.join(keptIdx.toSeq.toDF("doc_id"), Seq("doc_id"), "left_semi"),
-      "doc_id", "text", idx)
+      "doc_id", "text", idx, "survivors")
     assert(Dedup.minhashIndexLoad(spark, idx)._1.count() === before + keptIdx.size)
     // compaction: drop a corpus doc from the index => a new near-copy of it
     // now SURVIVES (stale signatures can no longer win); params untouched.

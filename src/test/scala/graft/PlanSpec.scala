@@ -23,6 +23,25 @@ class PlanSpec extends SparkSpec {
 
   private def plan(df: DataFrame): String = df.queryExecution.executedPlan.toString
 
+  /** The executed plans of the SQL actions `body` ran, read by a
+    * `QueryExecutionListener`. An eager `localCheckpoint` is such an action:
+    * its plan holds the scans the checkpointed frame's own plan has
+    * truncated to an RDD leaf. */
+  private def actionPlans(body: => Unit): Seq[String] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    // the sentinel job of jobsDuring comes after every listener event of body
+    try jobsDuring(body) finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    plans.asScala.toSeq
+  }
+
   test("row validation is a single narrow pass: no exchange, whole-stage codegen") {
     val r = Validator.validate(CodeTable.codeSchema,
       table.withColumn("sha_fixture", col("content_sha256")))
@@ -318,11 +337,11 @@ class PlanSpec extends SparkSpec {
       Some(graft.ops.Similarity.pqTrain(old, "vec_id", "embedding", iters = 0, sampleSize = 16)))
     val delta = e.filter(col("vec_id") === 3).select(
       (col("vec_id") + 1000).as("vec_id"), col("embedding"))
-    val pairs = graft.ops.Similarity.semanticDeltaPairsPqIndexed(
-      delta, "vec_id", "embedding", dir, threshold = 0.9, adcMargin = 0.9,
-      eagerCheckpoints = false).pairs
-    val scans = pairs.queryExecution.executedPlan.toString
-      .split("\n").filter(_.contains("FileScan"))
+    // the candidate scan runs in the candidate frame's checkpoint job
+    val scans = actionPlans {
+      graft.ops.Similarity.semanticDeltaPairsPqIndexed(
+        delta, "vec_id", "embedding", dir, threshold = 0.9, adcMargin = 0.9).pairs.collect()
+    }.flatMap(_.split("\n")).filter(_.contains("FileScan"))
     val codeScans = scans.filter(_.contains("codes"))
     assert(codeScans.nonEmpty, s"no codes scan in:\n${scans.mkString("\n")}")
     // the candidate scan's ReadSchema must NOT drag the raw vectors — that
@@ -398,12 +417,13 @@ class PlanSpec extends SparkSpec {
     // band_bucket, and it must be the THIN layout (no sig column read)
     val delta = d.filter(col("doc_id") === 1) // doc 1 IS indexed -> a pair must surface
       .select((col("doc_id") + 100000).as("doc_id"), col("text"))
-    // eagerCheckpoints=false keeps the full lineage so the pruned parquet
-    // scans are visible in the final plan (production checkpoints truncate
-    // them to ExistingRDD leaves)
-    val pairs = graft.ops.Dedup.deltaNearDupsIndexedAudited(
-      delta, "doc_id", "text", dir, threshold = 0.8, eagerCheckpoints = false).pairs
-    val scan = pairs.queryExecution.executedPlan.collectLeaves().mkString("\n")
+    // the pruned parquet scans run in the candidate and signature frames'
+    // checkpoint jobs (the final plan reads the checkpoints)
+    var pairs = Set.empty[Seq[Any]]
+    val scan = actionPlans {
+      pairs = graft.ops.Dedup.deltaNearDupsIndexedAudited(
+        delta, "doc_id", "text", dir, threshold = 0.8).pairs.collect().map(_.toSeq).toSet
+    }.flatMap(_.split("\n")).filter(_.contains("FileScan")).mkString("\n")
     assert("PartitionFilters: \\[[^\\]]*band_bucket".r.findFirstIn(scan).isDefined,
       s"delta's band buckets must land in PartitionFilters:\n$scan")
     assert("PartitionFilters: \\[[^\\]]*id_bucket".r.findFirstIn(scan).isDefined,
@@ -417,7 +437,7 @@ class PlanSpec extends SparkSpec {
     val raw = graft.ops.Dedup.deltaNearDups(delta, "doc_id", "text", oldSigs, p)
       .collect().map(_.toSeq).toSet
     assert(raw.nonEmpty, "expected the planted delta copy to pair with its indexed source")
-    assert(pairs.collect().map(_.toSeq).toSet === raw)
+    assert(pairs === raw)
   }
 
   test("snapshot diff: partial+final fingerprint aggregates, scans pruned to the hashed columns") {

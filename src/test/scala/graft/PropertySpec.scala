@@ -478,8 +478,11 @@ class PropertySpec extends SparkSpec {
     val schema = org.apache.spark.sql.types.StructType.fromDDL("id BIGINT, v BIGINT, b INT")
     def frame(ids: Seq[Long], parts: Int) = ids.map(row).toDF("id", "v", "b").repartition(parts)
     val ids = Gen.listOf(Gen.choose(0L, 40L))
+    // "again" redelivers an earlier append (its name and rows; the first id
+    // picks which)
     val op = Gen.frequency(
       1 -> ids.map(i => ("build", i)), 5 -> ids.map(i => ("append", i)),
+      2 -> ids.map(i => ("again", i)),
       1 -> Gen.const(("fold", Nil)), 1 -> ids.map(i => ("compact", i)))
     val buckets = Gen.someOf(0 until numBuckets + 1).map(_.toSet)
     val sequences = Gen.listOfN(6, Gen.zip(Gen.oneOf(true, false), Gen.listOfN(8, Gen.zip(op, buckets))))
@@ -489,11 +492,27 @@ class PropertySpec extends SparkSpec {
       val dir = java.nio.file.Files.createTempDirectory("graft-tier").toString + "/layout"
       val layout = TieredLayout(dir, "b", "id")
       var ref = Seq.empty[(Long, Long, Int)]
-      // a base as an earlier release wrote it: Spark's partitioned write
-      // straight into the directory, no run tier
+      // every append in order, and the names of the runs the tier holds: a
+      // fold or a rewrite empties it, and a full tier folds before a write
+      var appends = Vector.empty[(String, Seq[Long])]
+      var tier = Set.empty[String]
+      def append(name: String, opIds: Seq[Long]): Unit = {
+        val (n, _) = layout.appendRun(frame(opIds, 3), name, numBuckets, schema)
+        assert(n === opIds.size, s"rows of run $name")
+        if (!tier(name)) {
+          if (tier.size >= numBuckets) tier = Set.empty
+          tier += name
+          ref = ref ++ opIds.map(row)
+        }
+      }
+      // a base as an earlier release wrote it (Spark's partitioned write
+      // straight into the directory), and one run, written in place under
+      // the name an earlier release gave a run
       if (parentBase) {
-        ref = (0L to 20L).map(row)
-        frame(ref.map(_._1), 2).write.partitionBy("b").parquet(dir)
+        ref = (0L to 24L).map(row)
+        frame(0L to 20L, 2).write.partitionBy("b").parquet(dir)
+        frame(21L to 24L, 2).write.parquet(s"$dir/${TieredLayout.RunsDir}/run-1700000000000-0a1b2c3d")
+        tier = Set("run-1700000000000-0a1b2c3d")
       }
       def read(only: Option[Set[Int]]) = {
         layout.recover(spark)
@@ -501,11 +520,16 @@ class PropertySpec extends SparkSpec {
       }
       ops.foreach { case ((kind, opIds), only) =>
         kind match {
-          case "build" => layout.rewrite(frame(opIds, 2), numBuckets); ref = opIds.map(row)
+          case "build" =>
+            layout.rewrite(frame(opIds, 2), numBuckets); ref = opIds.map(row); tier = Set.empty
           case "append" =>
-            layout.appendRun(frame(opIds, 3), numBuckets, schema); ref = ref ++ opIds.map(row)
-          case "fold" => layout.fold(spark, schema, numBuckets)
+            appends :+= (s"run${appends.size}" -> opIds); append(appends.last._1, opIds)
+          case "again" =>
+            opIds.headOption.filter(_ => appends.nonEmpty).map(i => appends((i % appends.size).toInt))
+              .foreach { case (name, again) => append(name, again) }
+          case "fold" => layout.fold(spark, schema, numBuckets); tier = Set.empty
           case _ =>
+            tier = Set.empty
             val keep = opIds.toSet
             layout.rewrite(layout.read(spark, schema, None)
               .join(opIds.distinct.toDF("id"), Seq("id"), "left_semi").dropDuplicates("id"),
@@ -540,7 +564,7 @@ class PropertySpec extends SparkSpec {
     // files went into the base, and after the runs' removal if `runsGone`
     def killedFold(commit: Boolean, moved: Int, runsGone: Boolean): Unit = {
       Seq(last + 1 to last + 4, last + 5 to last + 8).foreach(d =>
-        Dedup.minhashIndexAppend(docs(d.map(_.toLong)), "doc_id", "text", idx))
+        Dedup.minhashIndexAppend(docs(d.map(_.toLong)), "doc_id", "text", idx, s"d${d.head}"))
       last += 8
       assert(bands.runs(spark).size >= 2)
       assert(bands.writeFold(spark, schema, p.numBuckets))

@@ -1,12 +1,14 @@
 #!/usr/bin/env python3
-"""Public `def`s and `object`s of graft.ops that no other code reaches.
+"""Public `def`s, `object`s, `class`es and `trait`s of graft's library
+packages that no other code reaches.
 
     python3 tools/unreached_api.py [repo_root]
 
-Prints each public member declared at object level (indent <= 2) in
-`src/main/scala/graft/ops/*.scala` that nothing in `src/main` or
-`perfbench/src` reaches (comments are ignored and string literals blanked,
-so neither a scaladoc link nor an error message is a caller). A member of
+Prints each public member declared at top or object level (indent <= 2) in
+`src/main/scala/graft/{ops,io,checkpoint,run,suite}/*.scala` that nothing
+in `src/main` or `perfbench/src` reaches (comments are ignored and string
+literals blanked, so neither a scaladoc link nor an error message is a
+caller). A member of
 an `object Obj` is reached by a qualified `Obj.name` (a line break may sit
 before the dot), by a bare `name` inside `Obj`'s own body, or by a bare
 `name` in a file that imports `Obj._` or `Obj.{..}`; a bare `name`
@@ -23,7 +25,12 @@ import sys
 
 # kept on purpose although nothing outside tests calls them
 ALLOWED = {
+    "orThrow": "Flint changeset parity (ValidatorSpec pins it)",
+    "partitionSummary": "Flint changeset parity (ValidatorSpec pins it)",
+    "runHistory": "the per-invocation lineage view of a checkpointed run",
+    "validRows": "Flint changeset parity (ValidatorSpec pins it)",
     "cosineNearDupPairs": "brute-force reference the LSH and SemDeDup tests compare against",
+    "driftCheck": "the N7 drift check (PSI + KS against a baseline snapshot); SuiteSpec pins it",
     "dequantizeInt8": "reference for the int8 error bound",
     "deltaDedup": "raw-frame reference the indexed delta-dedup test compares against",
     "deltaDedupIndexed": "indexed lexical reference the redelivery tests drive; runDelta calls "
@@ -32,7 +39,9 @@ ALLOWED = {
     "semanticDedup": "batch SemDeDup reference the delta ≡ batch and first-snapshot tests compare against",
 }
 
-DECL = re.compile(r"^( {0,2})((?:(?:override|final|implicit|lazy)\s+)*)(def|object)\s+([A-Za-z_]\w*)")
+DECL = re.compile(r"^( {0,2})((?:(?:override|final|implicit|lazy|sealed|abstract|case)\s+)*)"
+                  r"(def|object|class|trait)\s+([A-Za-z_]\w*)")
+PACKAGES = ("ops", "io", "checkpoint", "run", "suite")
 PRIVATE = re.compile(r"^\s*(private|protected)\b")
 TOP = re.compile(r"^(?:(?:final|sealed|abstract|case|implicit)\s+)*(object|class|trait)\s+([A-Za-z_]\w*)")
 
@@ -114,7 +123,7 @@ def main():
     texts = {f: "\n".join(ls) for f, ls in lines.items()}
     at = {f: offsets(ls) for f, ls in lines.items()}
     decls = []  # (name, kind, file, line number, name's offset, declaring object or None)
-    for f in sorted((root / "src/main/scala/graft/ops").glob("*.scala")):
+    for f in sorted(f for p in PACKAGES for f in (root / "src/main/scala/graft" / p).glob("*.scala")):
         tops = [(n, TOP.match(line)) for n, line in enumerate(lines[f]) if TOP.match(line)]
         for n, line in enumerate(lines[f]):
             m = DECL.match(line)
