@@ -2,7 +2,7 @@ package graft.checkpoint
 
 import com.fasterxml.jackson.databind.JsonNode
 import graft.functions.IdIn
-import graft.io.{MetaFile, ParquetLayout}
+import graft.io.{InputIdentity, MetaFile, ParquetLayout}
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
@@ -10,9 +10,6 @@ import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.UserDefinedExpression
-import org.apache.spark.sql.catalyst.plans.logical.{AppendColumns, LeafNode, ObjectConsumer, ObjectProducer, TypedFilter}
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, SparkToParquetSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -67,17 +64,12 @@ import org.apache.spark.sql.types._
   * [[incrementalRun]] falls back to scanning the staged data and the next
   * re-stage rewrites everything. No path can skip a changed bucket.
   *
-  * Input identity: a SHA-256 over the canonical optimized plan of the
-  * bucketed input with the caller's `rowHash` (printed untruncated), the
-  * options of its file relations, the session time zone, and the sorted
-  * (path, length, modification time) of every file those relations listed.
-  * It is defined only for a deterministic plan whose every leaf is a listed
-  * file relation and which runs no user code (UDFs, typed Dataset
-  * functions); otherwise the record carries none and every re-stage takes
-  * the aggregate. Contract: input files are immutable once listed, which
-  * is every table format's contract. An in-place rewrite that keeps path,
-  * length and modification time is not detected; any other change to the
-  * files, the plan or the hash falls back to the aggregate.
+  * Input identity: [[graft.io.InputIdentity]] of the bucketed input with
+  * the caller's `rowHash` as a column, so the plan covers the hash. Without
+  * one (UDFs, typed Dataset functions, a non-file leaf) the record carries
+  * none and every re-stage takes the aggregate. Contract: input files are
+  * immutable once listed; any change to the files, the plan or the hash
+  * falls back to the aggregate.
   *
   * Manifest format: an append-only directory of parquet files with rows of
   * [[manifestSchema]], one file per commit, written and read on the driver
@@ -181,7 +173,8 @@ object CheckpointedRunner {
       case f if f.name != "bucket" => f.copy(nullable = true)
     })
     val identity = StagingIdentity(keyCols, numBuckets, dataSchema.json)
-    val input = inputIdentity(bucketed, h)
+    // Spark 4.1's Column has no `.expr`: `h` enters through the plan
+    val input = InputIdentity.of(bucketed.withColumn("__graft_h", h))
     val fs = MetaFile.fs(spark, stagingDir)
     val recordPath = new Path(stagingDir, StagingRecord)
     // the files on disk, read with the recorded schema (no inference job);
@@ -224,42 +217,6 @@ object CheckpointedRunner {
               bucketStats(onDisk().filter(col("bucket").isin(changed: _*)), h)
           writeRecord(spark, stagingDir, identity, stats, input)
         }
-    }
-  }
-
-  /** SHA-256 identity of `bucketed` with row hash `h` (see the object doc),
-    * computed on the driver from the plan and its relations' file listings;
-    * None when the plan's output could change while both stay the same. */
-  private def inputIdentity(bucketed: DataFrame, h: Column): Option[String] = {
-    // Spark 4.1's Column has no `.expr`: `h` enters through the plan
-    val plan = bucketed.withColumn("__graft_h", h).queryExecution.optimizedPlan
-    val nodes = plan.collectWithSubqueries { case p => p }
-    val userCode = nodes.exists {
-      case _: ObjectProducer | _: ObjectConsumer | _: TypedFilter | _: AppendColumns => true
-      case n => n.expressions.exists(_.exists(_.isInstanceOf[UserDefinedExpression]))
-    }
-    val relations = nodes.collect { case l: LeafNode => l }.map {
-      case LogicalRelation(r: HadoopFsRelation, _, _, false, _) => r.location match {
-        case index: PartitioningAwareFileIndex => Some(r -> index.allFiles())
-        case _ => None
-      }
-      case _ => None
-    }
-    if (userCode || !nodes.forall(_.deterministic) || relations.contains(None)) None
-    else {
-      val digest = java.security.MessageDigest.getInstance("SHA-256")
-      def add(s: String): Unit = digest.update((s + "\n").getBytes("UTF-8"))
-      // untruncated: a default treeString elides fields past 25 and would
-      // let two plans differing only there share an identity
-      add(plan.canonicalized.treeString(
-        verbose = true, addSuffix = false, maxFields = Int.MaxValue, printOperatorId = false))
-      add(bucketed.sparkSession.conf.get("spark.sql.session.timeZone"))
-      relations.flatten.map { case (r, _) => r.options.toSeq.sorted.mkString(",") }
-        .sorted.foreach(add)
-      relations.flatten.flatMap(_._2)
-        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).distinct.sorted
-        .foreach { case (p, len, mtime) => add(s"$p\t$len\t$mtime") }
-      Some(digest.digest().map("%02x".format(_)).mkString)
     }
   }
 

@@ -653,7 +653,7 @@ object Dedup {
     bands.appendRun(bandsRows(sigs.readRun(spark, run, sigsSchema(idType)), p), runName,
       p.numBuckets, bandsSchema(idType))
     IndexVersions.record(spark, indexDir,
-      IndexVersions.epoch(spark, indexDir), "append", n)
+      IndexVersions.epoch(spark, indexDir), "append", n, name = runName)
   }
 
   /** Compact a signature index to the ids in `keepIds`: the index is

@@ -8,7 +8,9 @@ import org.apache.spark.sql.SparkSession
   * inside the index dir, underscore-prefixed so data reads skip it): one
   * small driver-written file per build / append / compact event
   * ([[graft.io.MetaFile]], no Spark job), named by the index's compaction
-  * EPOCH and holding the row count after the event.
+  * EPOCH and holding the row count after the event. An append's file is
+  * named by its run, so `_versions` holds one append event per run however
+  * often the append is redelivered.
   *
   * The epoch is the staleness contract between an index and the corpus it
   * shadows: every corpus deletion pass bumps the corpus manifest epoch and
@@ -24,7 +26,7 @@ object IndexVersions {
 
   val Sidecar = "_versions"
 
-  /** Event files: `e<epoch>-<event>-<unique>.json`, so the epoch is read off
+  /** Event files: `e<epoch>-<event>-<name>.json`, so the epoch is read off
     * the listing without opening a file. */
   private val EventName = """e(\d+)-\w+-[\w-]+\.json""".r
 
@@ -46,12 +48,13 @@ object IndexVersions {
       }.maxOption.getOrElse(0L)
   }
 
-  /** Record one lifecycle event: a new file, never a rewrite, so a
-    * concurrent reader can't lose history. */
+  /** Record one lifecycle event as the file named by `name` (unique by
+    * default): a new name never rewrites, so a concurrent reader can't lose
+    * history, and an event recorded again under its name (an append, named
+    * by its run, redelivered) replaces its own file instead of adding one. */
   def record(spark: SparkSession, indexDir: String, epoch: Long, event: String,
-      rows: Long): Unit =
-    MetaFile.writeJson(spark,
-      s"${dir(indexDir)}/e$epoch-$event-${java.util.UUID.randomUUID()}.json",
+      rows: Long, name: String = java.util.UUID.randomUUID().toString): Unit =
+    MetaFile.writeJson(spark, s"${dir(indexDir)}/e$epoch-$event-$name.json",
       Map("epoch" -> epoch, "event" -> event, "rows" -> rows))
 
   /** Refuse an index whose compaction epoch is behind the corpus manifest

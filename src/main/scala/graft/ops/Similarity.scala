@@ -914,7 +914,7 @@ object Similarity {
     val (n, _) = layout.appendRun(rows, runName, centroids.size,
       layout.dataSchema(spark).getOrElse(rows.schema))
     IndexVersions.record(spark, indexDir,
-      IndexVersions.epoch(spark, indexDir), "append", n)
+      IndexVersions.epoch(spark, indexDir), "append", n, name = runName)
   }
 
   /** Compact a persisted IVF index to the ids in `keepIds` — the

@@ -2,7 +2,7 @@ package graft.ops
 
 import graft.checkpoint.StageStore
 import graft.dsl.SchemaSpec
-import graft.io.{MetaFile, ParquetLayout, TieredLayout}
+import graft.io.{InputIdentity, MetaFile, ParquetLayout, TieredLayout}
 import graft.run.Validator
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
@@ -363,6 +363,18 @@ object TrainingPipeline {
     * only valid until a LATER delta commits, the same monotone discipline
     * as the checkpoint runner.
     *
+    * A replay costs a file listing and metadata reads, no scan. The
+    * content fingerprints that key the stages (the delta's fingerprinted
+    * columns, the probe's id and text) are memoized in
+    * `workDir/_meta/fp-<identity>`, keyed by the [[graft.io.InputIdentity]]
+    * of the fingerprinted columns, so a redelivery of the same files
+    * through the same plan runs no Spark job here, and a new delta against
+    * an unchanged probe does not scan the probe. The memo's contract is the
+    * identity's: input files are immutable once listed. An input without an
+    * identity (in-memory rows, a UDF, a non-file leaf) is scanned for its
+    * fingerprint on every call; the same bytes under another path get
+    * another identity, are scanned once, and replay by their fingerprint.
+    *
     * `deletions` (ids withdrawn from the corpus) COMPACT both indexes before
     * the delta is processed, so a new near-copy of a deleted document can
     * survive (stale index entries would otherwise keep winning) — run-once
@@ -463,7 +475,7 @@ object TrainingPipeline {
     // re-embedded snapshot (same ids and text, new vectors) must recompute
     // its semantic stages, not load results scored against the old vectors
     val baseKey =
-      s"v2|in=${contentFp(delta, Seq(idCol, textCol) ++ embCol ++ extraFingerprintCols)}|" +
+      s"v2|in=${memoizedFp(delta, Seq(idCol, textCol) ++ embCol ++ extraFingerprintCols, workDir)}|" +
         s"schema=${schema.isDefined}|user=$paramsKey"
     // per-delta stage namespace: successive snapshots never overwrite each
     // other's committed state, so an identical resubmission replays cleanly
@@ -533,7 +545,8 @@ object TrainingPipeline {
     val contamDir = StageStore.dataDir(workDir, sname("contaminated_ids"))
     val (decontamKey, deconAndCount) = probe match {
       case Some((p, pid, ptext)) =>
-        val key = s"$lexKey|probe=${contentFp(p, Seq(pid, ptext))}|n=$decontamN|minHits=$decontamMinHits"
+        val key = s"$lexKey|probe=${memoizedFp(p, Seq(pid, ptext), workDir)}|n=$decontamN|" +
+          s"minHits=$decontamMinHits"
         val c = stage(sname("decontam"), key, Some(contamDir)) {
           val probeHashed = Decontaminate.probeHashes(p, pid, ptext, decontamN)
           Map("n_contam" -> stage.write(Decontaminate
@@ -635,6 +648,26 @@ object TrainingPipeline {
     val sumMod = sum.mod(java.math.BigInteger.valueOf(Long.MaxValue))
     s"${folds.map(_._1).sum}:${folds.map(_._2).foldLeft(0L)(_ ^ _)}:$sumMod"
   }
+
+  /** [[contentFp]] of `df`'s `cols`, memoized in `workDir/_meta/fp-<id>`
+    * by the [[graft.io.InputIdentity]] `id` of `df.select(cols)`: an input
+    * fingerprinted before costs a file listing and a plan print, no job.
+    * Without an identity, or with a memo that does not parse, the fold
+    * runs; only an identified input's fold is memoized (driver-written,
+    * temp file + rename). */
+  private def memoizedFp(df: DataFrame, cols: Seq[String], workDir: String): String = {
+    val fs = MetaFile.fs(df.sparkSession, workDir)
+    val memo = InputIdentity.of(df.select(cols.map(col): _*))
+      .map(id => new Path(s"$workDir/_meta/fp-$id"))
+    memo.flatMap(MetaFile.read(fs, _, "")).filter(FpShape.matches).getOrElse {
+      val fp = contentFp(df, cols)
+      memo.foreach(MetaFile.write(fs, _, fp))
+      fp
+    }
+  }
+
+  /** [[contentFp]]'s string: rows, xor, sum mod Long.MaxValue. */
+  private val FpShape = """\d+:-?\d+:\d+""".r
 
   /** `df`'s row count in one job: per-partition counts summed on the
     * driver, where `count()` is a global aggregate (under AQE a shuffle-map

@@ -5,6 +5,7 @@ import graft.io.{ParquetLayout, PreChangeLayoutException}
 import graft.ops.{Adaptive, DeltaPipelineReport, Dedup, IndexVersions, Similarity, TrainingPipeline}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{lit, udf}
 
 /** graft's small metadata (stage commit records, index params, quantizers,
   * lifecycle events) is driver-side file I/O: no Spark job, no dependence on
@@ -135,28 +136,49 @@ class MetadataSpec extends SparkSpec {
     assert(log.getMessage.contains("rebuild the index"), log.getMessage)
   }
 
+  // the job-budget fixtures: a first delta that bootstraps both indexes,
+  // and a next one with one near twin, one semantic twin and one leak
+  private def budgetText(i: Long, extra: String = "") =
+    (1 to 30).map(t => s"w${i}_$t").mkString(" ") + extra
+  private def budgetDocs(rows: Seq[(Long, String, Long)]) = // (id, text, embedding concept)
+    rows.map { case (i, t, c) =>
+      (i, t, Seq.tabulate(16)(j => (scala.util.hashing.MurmurHash3.productHash((c, j)) % 19 - 9).toDouble))
+    }.toDF("doc_id", "text", "emb")
+  private val leak = "the quick brown fox jumps over the lazy dog once more for the benchmark row"
+  private def budgetProbe = Seq((900L, leak)).toDF("pid", "ptext")
+  private def budgetFirst = budgetDocs((1L to 20L).map(i => (i, budgetText(i), i)))
+  private def budgetNext = budgetDocs((101L to 110L).map(i => (i, budgetText(i), i)) ++ Seq(
+    (121L, budgetText(3, " xq1 xq2"), 121L), // near twin of an indexed doc
+    (122L, budgetText(122), 5L),             // semantic twin of an indexed doc
+    (123L, leak, 123L)))                     // benchmark leak
+  private def budgetDelta(w: String, d: DataFrame, probe: DataFrame) =
+    TrainingPipeline.runDelta(d, "doc_id", "text", w,
+      probe = Some((probe, "pid", "ptext")), embCol = Some("emb"),
+      minhashThreshold = 0.8, semanticThreshold = 0.99, numCells = 4,
+      ivfIters = 2, ivfSampleSize = 16)
+
+  /** The content-fingerprint memos in a work dir. */
+  private def fpMemos(w: String): Set[String] = {
+    val meta = new Path(s"$w/_meta")
+    if (!fs.exists(meta)) Set.empty
+    else fs.listStatus(meta).map(_.getPath.getName).filter(_.startsWith("fp-")).toSet
+  }
+
+  /** `df` written as parquet under a new directory, read back as a file
+    * relation: what `graft.RunPipeline` hands `runDelta`. */
+  private def onDisk(df: DataFrame): String = {
+    val p = s"${tmp()}/data"
+    df.write.parquet(p)
+    p
+  }
+
   test("a pipeline delta against bootstrapped indexes stays within its job budget, the same count every run") {
-    def text(i: Long, extra: String = "") = (1 to 30).map(t => s"w${i}_$t").mkString(" ") + extra
-    def emb(c: Long): Seq[Double] = Seq.tabulate(16) { j =>
-      (scala.util.hashing.MurmurHash3.productHash((c, j)) % 19 - 9).toDouble
-    }
-    def docs(rows: Seq[(Long, String, Long)]) = // (id, text, embedding concept)
-      rows.map { case (i, t, c) => (i, t, emb(c)) }.toDF("doc_id", "text", "emb")
-    val leak = "the quick brown fox jumps over the lazy dog once more for the benchmark row"
-    val probe = Seq((900L, leak)).toDF("pid", "ptext")
-    val first = docs((1L to 20L).map(i => (i, text(i), i)))
-    val next = docs((101L to 110L).map(i => (i, text(i), i)) ++ Seq(
-      (121L, text(3, " xq1 xq2"), 121L), // near twin of an indexed doc
-      (122L, text(122), 5L),             // semantic twin of an indexed doc
-      (123L, leak, 123L)))               // benchmark leak
+    val (probe, first, next) = (budgetProbe, budgetFirst, budgetNext)
     // the second delta of a fresh work dir: every stage computes, against
     // the MinHash and IVF indexes the first delta bootstrapped
     def deltaJobs(): (Int, Int, DeltaPipelineReport) = {
       val w = tmp()
-      def go(d: DataFrame) = TrainingPipeline.runDelta(d, "doc_id", "text", w,
-        probe = Some((probe, "pid", "ptext")), embCol = Some("emb"),
-        minhashThreshold = 0.8, semanticThreshold = 0.99, numCells = 4,
-        ivfIters = 2, ivfSampleSize = 16)
+      def go(d: DataFrame) = budgetDelta(w, d, probe)
       val (firstJobs, _) = jobsDuring(go(first))
       var report: DeltaPipelineReport = null
       val (jobs, _) = jobsDuring { report = go(next).report }
@@ -171,6 +193,93 @@ class MetadataSpec extends SparkSpec {
     val (firstAgain, again, _) = deltaJobs()
     assert(firstAgain === firstJobs, "an identical first delta ran another number of jobs")
     assert(again === jobs, "an identical delta ran another number of jobs")
+  }
+
+  test("a byte-identical redelivery of a parquet delta and probe runs no Spark job inside runDelta") {
+    val (first, next, probe) = (onDisk(budgetFirst), onDisk(budgetNext), onDisk(budgetProbe))
+    val w = tmp()
+    // each call reads the files anew, as a new submission does (reading
+    // infers the schema, a job outside runDelta)
+    def go(d: DataFrame) = budgetDelta(w, d, spark.read.parquet(probe))
+    go(spark.read.parquet(first))
+    val r = go(spark.read.parquet(next))
+    assert(r.report.nearDups === 1 && r.report.semanticDups === 1 && r.report.contaminated === 1,
+      r.report.toString)
+    var again: graft.ops.DeltaPipelineResult = null
+    val (d, p) = (spark.read.parquet(next), spark.read.parquet(probe))
+    val (jobs, _) = jobsDuring { again = budgetDelta(w, d, p) }
+    assert(jobs === 0, s"a redelivered delta ran $jobs Spark jobs")
+    assert(again.stages.forall(_.loaded))
+    assert(again.report === r.report && again.tag === r.tag)
+  }
+
+  test("a new delta against an unchanged parquet probe writes no probe memo and runs one job fewer than with an in-memory probe") {
+    val (first, next, probe) = (onDisk(budgetFirst), onDisk(budgetNext), onDisk(budgetProbe))
+    // the next delta's jobs and the memos it added; every frame is read
+    // before the count (reading a file infers its schema, a job)
+    def nextJobs(probeDf: () => DataFrame): (Int, Set[String]) = {
+      val w = tmp()
+      budgetDelta(w, spark.read.parquet(first), probeDf())
+      val memos = fpMemos(w)
+      val (d, p) = (spark.read.parquet(next), probeDf())
+      val (jobs, _) = jobsDuring(budgetDelta(w, d, p))
+      (jobs, fpMemos(w) -- memos)
+    }
+    val (onFile, fileMemos) = nextJobs(() => spark.read.parquet(probe))
+    val (inMemory, memMemos) = nextJobs(() => budgetProbe)
+    // the delta's own memo in both: the probe's was written by the first
+    // delta, and in-memory rows have none
+    assert(fileMemos.size === 1 && memMemos.size === 1)
+    assert(onFile === inMemory - 1, s"parquet probe: $onFile jobs, in-memory probe: $inMemory")
+  }
+
+  test("the fingerprint memo: rewritten files and another column list recompute, a copy replays, in-memory rows, a UDF and a garbage memo scan") {
+    val w = tmp()
+    val rows = delta(1L to 12L: _*).withColumn("lang", lit("en"))
+    val path = onDisk(rows)
+    def go(d: DataFrame, extra: Seq[String] = Nil) = TrainingPipeline.runDelta(d, "doc_id", "text", w,
+      minhashThreshold = 0.8, extraFingerprintCols = extra)
+    def content(memo: String) = {
+      val in = fs.open(new Path(s"$w/_meta/$memo"))
+      try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    }
+    val r = go(spark.read.parquet(path))
+    val Seq(first) = fpMemos(w).toSeq
+    val fp = content(first)
+
+    // the same rows rewritten at the same path: new part files, a new
+    // identity, a scan that finds the same content and replays
+    rows.write.mode("overwrite").parquet(path)
+    val rewritten = go(spark.read.parquet(path))
+    assert(fpMemos(w).size === 2)
+    assert(rewritten.tag === r.tag && rewritten.stages.forall(_.loaded))
+
+    // another --require list fingerprints other columns: a new snapshot
+    assert(go(spark.read.parquet(path), extra = Seq("lang")).tag !== r.tag)
+    assert(fpMemos(w).size === 3)
+
+    // the same bytes under another path: a new identity, replayed by its
+    // fingerprint
+    val copy = s"${tmp()}/copy"
+    org.apache.hadoop.fs.FileUtil.copy(fs, new Path(path), fs, new Path(copy), false,
+      spark.sparkContext.hadoopConfiguration)
+    val before = fpMemos(w)
+    val copied = go(spark.read.parquet(copy))
+    val Seq(copyMemo) = (fpMemos(w) -- before).toSeq
+    assert(copied.tag === r.tag && copied.stages.forall(_.loaded))
+    assert(content(copyMemo) === fp)
+
+    // no identity, no memo: in-memory rows, a UDF over file rows
+    val same = udf((t: String) => t)
+    assert(go(rows).tag === r.tag)
+    assert(go(spark.read.parquet(copy).withColumn("text", same($"text"))).tag === r.tag)
+    assert(fpMemos(w).size === 4)
+
+    // a memo that does not parse is ignored: the fold runs and rewrites it
+    graft.io.MetaFile.write(fs, new Path(s"$w/_meta/$copyMemo"), "not a fingerprint")
+    val (jobs, _) = jobsDuring(assert(go(spark.read.parquet(copy)).tag === r.tag))
+    assert(jobs > 0)
+    assert(content(copyMemo) === fp)
   }
 
   test("an index read lists its bucket directories on the driver: no job with a task per directory") {
@@ -283,7 +392,7 @@ class MetadataSpec extends SparkSpec {
     def go(d: DataFrame) = TrainingPipeline.runDelta(d, "doc_id", "text", w,
       embCol = Some("emb"), minhashThreshold = 0.8, semanticThreshold = 0.99, numCells = 4,
       ivfIters = 2, ivfSampleSize = 16)
-    go(docs((1L to 20L).map(i => i -> text(i))))
+    val r0 = go(docs((1L to 20L).map(i => i -> text(i))))
     val next = docs((101L to 110L).map(i => i -> text(i)) :+ (121L -> text(3, " xq1 xq2")))
     val r = go(next)
     assert(r.report.nearDups === 1 && r.report.output === 10L, r.report.toString)
@@ -330,6 +439,15 @@ class MetadataSpec extends SparkSpec {
     assert(recomputed(go(next)) === Set("mhappend"))
     assert(counts() === clean)
     assert(!fs.exists(new Path(sigRuns, s"_tmp_$run")))
+
+    // each index logs one append event per committed run, however often
+    // the append was redelivered
+    def appendEvents(index: String) =
+      fs.listStatus(new Path(s"$w/$index/${IndexVersions.Sidecar}")).map(_.getPath.getName)
+        .filter(_.contains("-append-")).toSet
+    def events(stage: String) = Set(r0.tag, r.tag).map(t => s"e0-append-delta_${t}_$stage.json")
+    assert(appendEvents("mhidx") === events("mhappend"))
+    assert(appendEvents("ivfidx") === events("semappend"))
   }
 
   test("a fold reads the runs as the index's own types: Int ids and float vectors folded into Long and double indexes") {

@@ -33,7 +33,10 @@ compiles a plan's classes on the driver just before it submits the plan's
 job): to that job's graft call site (as in `jobs_by_callsite.py`) and, with
 `--results` of a `--trace 1` run, to the traced CLI call whose span the job
 ran in, labelled `<kind>#<n>` as in `tools/span_table.py`. Jobs outside the
-traced calls (the untimed half of a run, setup, checks) are `(untraced)`.
+traced calls (the untimed half of a run, setup, checks) are `(untraced)`. With
+`--results`, a job with no graft frame is charged to its span's name in
+brackets (e.g. `[suite.uniqueness]`), and a third table crosses the two: per
+CLI call, in run order, its call sites by compile ms.
 `--variants N` prints, for the first N literal variants, the first line that
 differs from the earlier source.
 
@@ -57,7 +60,7 @@ import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-from jobs_by_callsite import NO_FRAME, call_site, event_lines  # noqa: E402
+from jobs_by_callsite import NO_FRAME, call_site, event_lines, site_or_span, span_names  # noqa: E402
 
 CODEGEN_LOGGER = "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator"
 SPAN_PROP = "graft.perfbench.span"
@@ -118,8 +121,9 @@ def first_difference(a, b):
     return None
 
 
-def jobs(path, depth):
-    """(submission ms, call site, span id or None) per job, by submission."""
+def jobs(path, depth, names):
+    """(submission ms, call site, span id or None) per job, by submission; a
+    job with no graft frame is charged to its span's name (`names`)."""
     sql_stack = {}
     out = []
     for line in event_lines(path):
@@ -134,7 +138,7 @@ def jobs(path, depth):
             if call_site(stack, 1) == NO_FRAME:
                 stack = sql_stack.get(props.get("spark.sql.execution.id"), stack)
             span = props.get(SPAN_PROP)
-            out.append((e["Submission Time"], call_site(stack, depth),
+            out.append((e["Submission Time"], site_or_span(call_site(stack, depth), span, names),
                         int(span) if span not in (None, "") else None))
     return sorted(out, key=lambda j: j[0])
 
@@ -181,13 +185,14 @@ def main():
                     help="list the N largest distinct generated classes")
     a = ap.parse_args()
 
-    job_list = jobs(a.event_log, a.depth)
+    job_list = jobs(a.event_log, a.depth, span_names(a.results) if a.results else {})
     starts = [j[0] for j in job_list]
     labels = call_labels(a.results) if a.results else {}
 
     exact, loose = set(), {}
     per_site = collections.defaultdict(lambda: {k: [0, 0.0] for k in KINDS})
     per_call = collections.defaultdict(lambda: {k: [0, 0.0] for k in KINDS})
+    per_call_site = collections.defaultdict(lambda: {k: [0, 0.0] for k in KINDS})
     call_order = []
     classes = {}  # source digest -> [java bytes, compiles, ms, first site, first call]
     shown = 0
@@ -226,7 +231,7 @@ def main():
         c = classes.setdefault(key, [java_bytes(lines), 0, 0.0, site, call])
         c[1] += 1
         c[2] += ms
-        for rows, k in ((per_site, site), (per_call, call)):
+        for rows, k in ((per_site, site), (per_call, call), (per_call_site, (call, site))):
             rows[k][kind][0] += 1
             rows[k][kind][1] += ms
         if call not in call_order:
@@ -243,6 +248,10 @@ def main():
     table("call site", per_site, sites[:a.top])
     if a.results:
         table("CLI call", per_call, call_order)
+        # each call's sites by compile ms, the calls in run order
+        pairs = sorted(per_call_site, key=lambda cs: (call_order.index(cs[0]), -total_ms(per_call_site[cs])))
+        table("CLI call  call site", {f"{c:<12} {s}": v for (c, s), v in per_call_site.items()},
+              [f"{c:<12} {s}" for c, s in pairs])
     totals = {k: [sum(per_site[s][k][0] for s in per_site), sum(per_site[s][k][1] for s in per_site)]
               for k in KINDS}
     print("total: " + ", ".join(f"{k} {c} ({ms:.0f} ms)" for k, (c, ms) in totals.items()))

@@ -2,7 +2,7 @@
 """Spark jobs, tasks and job wall time per graft call site, from an event log.
 
     python3 tools/jobs_by_callsite.py <event log> [--depth 2] [--top 40]
-        [--results <results.json> --span <name>[#k]]
+        [--results <results.json> [--span <name>[#k]]]
 
 The log is a file Spark wrote with `spark.eventLog.enabled=true`: plain JSON
 lines, or `.zstd`-compressed (Spark's default codec), which is read through
@@ -19,13 +19,16 @@ is charged to the running job that submitted it; tasks are counted from
 `SparkListenerTaskEnd`. Wall is a job's submission to completion; the share
 is of the summed wall of all jobs in the log.
 
-With `--results` (the results file of the same `--trace 1` perfbench run)
-and `--span`, only the jobs of one traced call's span are charged: a
-perfbench job carries the id of the span open when it was submitted (the
-`graft.perfbench.span` job property; ids index the results file's `spans`),
-and a job counts when that span is an instance named `<name>` or one of its
-descendants. `<name>#k` keeps only the k-th instance (from 0), e.g.
-`cli.pipeline#0` is the first traced pipeline call, a delta.
+A perfbench job carries the id of the span open when it was submitted (the
+`graft.perfbench.span` job property; ids index the results file's `spans`).
+With `--results` (the results file of the same `--trace 1` perfbench run), a
+job with no graft frame is charged to its span's name in brackets, e.g.
+`[suite.uniqueness]`: the traced CLI calls run their actions from the
+harness, whose frames are skipped. With `--span` as well, only the jobs of
+one traced call's span are charged: a job counts when its span is an
+instance named `<name>` or one of its descendants. `<name>#k` keeps only the
+k-th instance (from 0), e.g. `cli.pipeline#0` is the first traced pipeline
+call, a delta.
 
 Recording a log without touching the benchmark (the JVM reads `spark.*`
 system properties into its SparkConf):
@@ -90,6 +93,21 @@ def call_site(stack, depth):
     return " < ".join(frames) if frames else NO_FRAME
 
 
+def span_names(results_path):
+    """Span id (as the job property prints it) -> span name, from a
+    perfbench results file."""
+    with open(results_path) as fh:
+        return {str(i): s["name"] for i, s in enumerate(json.load(fh)["spans"])}
+
+
+def site_or_span(site, span, names):
+    """`site`, or the bracketed name of the job's span when the job has no
+    graft frame and ran in a known span."""
+    if site == NO_FRAME and span is not None and str(span) in names:
+        return f"[{names[str(span)]}]"
+    return site
+
+
 def span_ids(results_path, spec):
     """Ids of the span instances `spec` names (`name` or `name#k`) and of
     all their descendants, from a perfbench results file."""
@@ -116,9 +134,10 @@ def main():
     ap.add_argument("--results", help="perfbench results JSON of the same --trace 1 run")
     ap.add_argument("--span", help="charge only this span's jobs: name or name#k (needs --results)")
     a = ap.parse_args()
-    if bool(a.results) != bool(a.span):
-        ap.error("--results and --span go together")
+    if a.span and not a.results:
+        ap.error("--span needs --results")
     only = span_ids(a.results, a.span) if a.span else None
+    names = span_names(a.results) if a.results else {}
 
     sql_stack = {}            # execution id -> call stack
     job_site = {}             # job id -> call site
@@ -142,7 +161,7 @@ def main():
             if call_site(stack, 1) == NO_FRAME:
                 exec_id = props.get("spark.sql.execution.id")
                 stack = sql_stack.get(exec_id, stack)
-            site = call_site(stack, a.depth)
+            site = site_or_span(call_site(stack, a.depth), props.get("graft.perfbench.span"), names)
             job_site[jid] = site
             job_start[jid] = e["Submission Time"]
             job_stages[jid] = set(e.get("Stage IDs", []))
